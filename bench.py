@@ -256,7 +256,7 @@ HEADLINE = [
 # Index-serving queries whose FIRST run in this process pays the
 # one-time index build (ANN codebook training, coarse cells, residual
 # books, the trigram posting table — cached per app+sf by
-# clustering._INDEX_CACHE). The headline `queries` number is
+# substrates.cached_substrates). The headline `queries` number is
 # min-of-runs (warm serving throughput, what the index exists for);
 # `cold` records that first run so the build-vs-serve split is
 # recorded evidence, not a commit message (r6 verdict #3). Queries
@@ -287,7 +287,7 @@ INDEX_COLD = (
     "q_trigram_multi_search",
     # r13 (r12 verdict #5): the CACHE-SUBSTRATE queries — their first
     # run in this process builds a persisted per-sf substrate
-    # (clustering.cached_substrates / _INDEX_CACHE: rfm_base, the
+    # (substrates.cached_substrates: rfm_base, the
     # BM25/TF-IDF index stats, SRP bands, IVF centroids, graph edge
     # sets, the DSIR hashed-TF table). min-of-runs reports warm
     # serving; this records what a fresh session pays, as evidence

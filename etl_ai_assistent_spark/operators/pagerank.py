@@ -43,7 +43,7 @@ def pagerank_int(
     table derived from it) and `nodes` once, so CALLERS with a non-
     trivial edge derivation must pass a cached/persisted edges plan —
     q_pagerank_nations routes its 4-way fact-table projection through
-    the bounded per-sf substrate cache (clustering.cached_substrates),
+    the bounded per-sf substrate cache (substrates.cached_substrates),
     the same convention as the LPA and k-core callers. The r12 version
     persisted internally and needed an eager count() + unpersist pair
     per call (one extra driver job, and a pinned-entry leak when the

@@ -18,6 +18,7 @@ from .. import io
 from .. import store as ST
 from ..operators import kmeans as KM
 from ..registry import register
+from ..substrates import cached_substrates
 
 K = 8
 DIM = 64
@@ -201,93 +202,8 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench pattern)."""
     from ..operators import pq as PQ
 
-    _, _, codes, tables, _ = _pq_index(spark, sf_dir)
+    _, codes, tables, _ = _pq_index(spark, sf_dir)
     return PQ.adc_topk(codes, tables, k=PQ_TOPK)
-
-
-# Trained ANN index artifacts, cached per (Spark app, sf_dir). A real
-# deployment trains codebooks / the coarse quantizer ONCE and serves
-# many queries; caching makes repeated calls (bench min-of-runs, parity
-# re-checks) pay query-time scoring only. Everything cached is
-# deterministic (integer Lloyd's is partition-invariant), so a cache
-# hit can never change a result — and a clearCache() between bench
-# queries merely evicts blocks that recompute lazily to the same values.
-_INDEX_CACHE: dict = {}
-
-
-def _evict_other_sfs(sf_dir: str) -> None:
-    """Bound _INDEX_CACHE (r6 verdict #7): a long-lived session touching
-    many sf_dirs would otherwise accumulate pinned index storage without
-    eviction. Index artifacts for OTHER sf_dirs are dead weight once the
-    session moves on — unpersist their DataFrames (also inside list/dict
-    entries) and drop the keys. Entries keyed by a PREVIOUS
-    applicationId (a process that recreated its SparkSession) are also
-    dropped (ADVICE r12): their storage died with the old context, so
-    only the dict entry survives — unpersisting would throw against the
-    dead context, dropping the key is the whole cleanup. Bench/driver
-    runs touch one sf_dir in one app and pay nothing here."""
-    from pyspark.sql import SparkSession
-
-    active = SparkSession.getActiveSession()
-    app = active.sparkContext.applicationId if active is not None else None
-    dead = [k for k in _INDEX_CACHE if app is not None and k[1] != app]
-    for k in dead:
-        _INDEX_CACHE.pop(k)  # storage died with the old SparkContext
-    stale = [k for k in _INDEX_CACHE if k[2] != sf_dir]
-    for k in stale:
-        entry = _INDEX_CACHE.pop(k)
-        items = entry if isinstance(entry, (tuple, list)) else (entry,)
-        for item in items:
-            inner = (
-                item.values()
-                if isinstance(item, dict)
-                else item
-                if isinstance(item, list)
-                else (item,)
-            )
-            for x in inner:
-                if isinstance(x, DataFrame):
-                    x.unpersist()
-
-
-def _repersist(*dfs) -> None:
-    """catalog.clearCache() (the bench isolation step) UNREGISTERS
-    cached plans — after it, a cached-index DataFrame silently
-    recomputes its full lineage on every use. persist() is idempotent
-    (a no-op warn when still cached), so re-marking on each index
-    access restores build-once/serve-many: the first post-clear run
-    re-materializes, later runs serve from memory."""
-    for df in dfs:
-        df.persist()
-
-
-def cached_substrates(name, spark, sf_dir, build):
-    """Build-once/serve-many persisted substrate(s), bounded per sf_dir.
-
-    The generic form of the _INDEX_CACHE convention (r11 verdict #2):
-    a deterministic derived DataFrame that several consumers (or
-    several bench runs of the same query) re-read must be persisted
-    ONCE per (app, sf_dir), not once per call — a bare per-call
-    ``df.persist()`` with no unpersist leaks one pinned cache entry
-    per invocation, and across a 126-query × 3-run bench session those
-    hundreds of never-released entries compete with execution memory
-    (the adjudicated cause of q_rag_rerank's 72 s in-bench vs 4-5 s
-    isolated in r11). ``build`` returns a tuple of DataFrames; each is
-    persisted at the default level and re-marked on every cache hit
-    (clearCache() between bench queries unregisters plans —
-    _repersist restores them lazily)."""
-    key = (name, spark.sparkContext.applicationId, sf_dir)
-    _evict_other_sfs(sf_dir)
-    if key not in _INDEX_CACHE:
-        dfs = build()
-        if isinstance(dfs, DataFrame):
-            dfs = (dfs,)
-        for df in dfs:
-            df.persist()
-        _INDEX_CACHE[key] = tuple(dfs)
-    ent = _INDEX_CACHE[key]
-    _repersist(*ent)
-    return ent if len(ent) > 1 else ent[0]
 
 
 def _probe_vector(sf_dir: str) -> list[int]:
@@ -540,31 +456,22 @@ def _build_ann_store(spark: SparkSession, sf_dir: str, tmp: str) -> None:
 
 
 def _pq_index(spark: SparkSession, sf_dir: str):
-    """(emb plan, codebook ROWS, persisted codes, ADC tables for
-    query 0, q0) — the flat-PQ serving handle, loaded from the on-disk
-    store (adopt-or-build). `emb` is the lazy quantized scan (probe
-    slicing only — training never runs here anymore). The adoption
-    path runs ZERO Spark jobs: codebooks/probe/tables are driver-side
-    footer reads + arithmetic; the codes handle is a schema-pinned
-    lazy scan. Consumers needing codebook DataFrames lift the rows via
-    _literal_codebooks."""
+    """(codebook ROWS, persisted codes, ADC tables for query 0, q0) —
+    the flat-PQ serving handle, loaded from the on-disk store
+    (adopt-or-build). The adoption path runs ZERO Spark jobs:
+    codebooks/probe/tables are driver-side footer reads + arithmetic;
+    the codes handle is a schema-pinned lazy scan. Consumers needing
+    codebook DataFrames lift the rows via _literal_codebooks."""
     from ..operators import pq as PQ
 
-    key = ("pq", spark.sparkContext.applicationId, sf_dir)
-    _evict_other_sfs(sf_dir)  # every index path funnels through here
-    if key not in _INDEX_CACHE:
+    def _build():
         path = ann_store(spark, sf_dir)
         cb_rows = _load_codebook_rows(path, "codebooks")
-        codes = _read_artifact(spark, path, "codes").persist()
+        codes = _read_artifact(spark, path, "codes")
         q0 = _probe_vector(sf_dir)
-        tables = PQ.adc_table_rows(q0, cb_rows)
-        emb = io.load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", KM.quantize("embedding").alias("qv")
-        )
-        _INDEX_CACHE[key] = (emb, cb_rows, codes, tables, q0)
-    ent = _INDEX_CACHE[key]
-    _repersist(ent[2])
-    return ent
+        return cb_rows, codes, PQ.adc_table_rows(q0, cb_rows), q0
+
+    return cached_substrates("pq", spark, sf_dir, _build)
 
 
 def _ivf_coarse(spark: SparkSession, sf_dir: str):
@@ -572,14 +479,12 @@ def _ivf_coarse(spark: SparkSession, sf_dir: str):
     the index, served from the on-disk store. The partition column
     reads back as its directory-inferred type, so it is re-cast to the
     bigint the downstream arithmetic expects."""
-    key = ("ivf", spark.sparkContext.applicationId, sf_dir)
-    if key not in _INDEX_CACHE:
+
+    def _build():
         path = ann_store(spark, sf_dir)
-        coarse = _read_artifact(spark, path, "coarse").persist()
-        _INDEX_CACHE[key] = (coarse, _load_centroid_rows(path))
-    ent = _INDEX_CACHE[key]
-    _repersist(ent[0])
-    return ent
+        return _read_artifact(spark, path, "coarse"), _load_centroid_rows(path)
+
+    return cached_substrates("ivf", spark, sf_dir, _build)
 
 
 # --- IVF-PQ composition: coarse pruning + compressed ADC scoring -----------
@@ -657,7 +562,7 @@ def _ivfpq_pipeline(spark: SparkSession, sf_dir: str):
     candidate semi-join + ADC scoring."""
     from ..operators import pq as PQ
 
-    _, _, codes, tables, q0 = _pq_index(spark, sf_dir)
+    _, codes, tables, q0 = _pq_index(spark, sf_dir)
     coarse_assign, cents = _ivf_coarse(spark, sf_dir)
     # nprobe cell selection: packed (dist, cid) over K centroid rows —
     # bounded driver arithmetic, same tie-break as kmeans.assign
@@ -818,9 +723,9 @@ def q_pq_multiquery_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_pq_adc_topk)."""
     from ..operators import pq as PQ
 
-    _, _, codes, _, _ = _pq_index(spark, sf_dir)
-    key = ("pq_mq", spark.sparkContext.applicationId, sf_dir)
-    if key not in _INDEX_CACHE:
+    cb_rows, codes, _, _ = _pq_index(spark, sf_dir)
+
+    def _build():
         # the serving batch's lookup MAPS are a pure function of
         # (probes, codebooks) — index-build work, persisted once, so
         # each serving call pays only the map attach + top-k. r13:
@@ -835,7 +740,6 @@ def q_pq_multiquery_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # exactly (pinned in tests/test_pq.py). Unbounded probe
         # streams keep the executor path — queries/streaming.py's
         # serve loop builds maps from probe_tables_flat per trigger.
-        _, cb_rows, *_ = _pq_index(spark, sf_dir)
         entries = []
         for vid, qv in _probe_vectors(sf_dir, NQ_PQ):
             tabs = PQ.adc_table_rows(qv, cb_rows)
@@ -845,12 +749,12 @@ def q_pq_multiquery_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for cid, d in t.items()
             }
             entries.append((vid, tbl))
-        t = spark.createDataFrame(
+        return spark.createDataFrame(
             entries, "query_id bigint, tbl map<bigint,bigint>"
-        ).persist()
-        _INDEX_CACHE[key] = t
-    _repersist(_INDEX_CACHE[key])
-    return PQ.adc_topk_multi_maps(codes, _INDEX_CACHE[key], m=M_SUB, k=PQ_TOPK)
+        )
+
+    maps = cached_substrates("pq_mq", spark, sf_dir, _build)
+    return PQ.adc_topk_multi_maps(codes, maps, m=M_SUB, k=PQ_TOPK)
 
 
 # --- residual-encoded IVF-PQ (the faithful FAISS IVFADC formulation) -------
@@ -874,11 +778,10 @@ def _ivfpq_res_index(spark: SparkSession, sf_dir: str):
     corpus-sized."""
     from ..operators import pq as PQ
 
-    key = ("ivfpq_res", spark.sparkContext.applicationId, sf_dir)
-    if key not in _INDEX_CACHE:
+    def _build():
         path = ann_store(spark, sf_dir)
         res_rows = _load_codebook_rows(path, "res_codebooks")
-        codes = _read_artifact(spark, path, "res_codes").persist()
+        codes = _read_artifact(spark, path, "res_codes")
         cents = _load_centroid_rows(path)
         *_, q0 = _pq_index(spark, sf_dir)
         packed = sorted(
@@ -900,10 +803,9 @@ def _ivfpq_res_index(spark: SparkSession, sf_dir: str):
         }
         # first slot holds the driver-resident codebook ROWS (serving
         # uses only the precomputed tables; nothing needs DataFrames)
-        _INDEX_CACHE[key] = (res_rows, codes, probe_cells, tables_by_cell)
-    ent = _INDEX_CACHE[key]
-    _repersist(ent[1])
-    return ent
+        return res_rows, codes, probe_cells, tables_by_cell
+
+    return cached_substrates("ivfpq_res", spark, sf_dir, _build)
 
 
 def _res_query_ctes(i: int) -> str:

@@ -20,6 +20,7 @@ from .. import io
 from ..functions import text as TX
 from ..operators.dedup import md5_bucket
 from ..registry import register
+from ..substrates import cached_substrates
 
 # DuckDB twins of functions.text.tokens / the md5 bucket (dedup.py)
 _TOKS = """
@@ -1102,28 +1103,22 @@ DSIR_BUCKETS = 1 << 20
 
 def _dsir_tf(spark: SparkSession, sf_dir: str, docs: DataFrame) -> DataFrame:
     """The hashed-bucket TF substrate (doc_id, tok_b, c), persisted
-    through clustering's bounded per-sf _INDEX_CACHE so (a) the
+    through the per-corpus substrates.cached_substrates so (a) the
     explode+count lineage materializes once per corpus even though two
     consumers (LM fit + scoring join) read it, and (b) a session
     walking multiple sf_dirs (the scale-trend sweep) evicts the
     previous decade's pinned blocks instead of accumulating them
     (ADVICE r10: the bare per-call persist leaked one cached tf per
     sf_dir for the life of the session)."""
-    from .clustering import _INDEX_CACHE, _evict_other_sfs, _repersist
 
-    key = ("dsir_tf", spark.sparkContext.applicationId, sf_dir)
-    _evict_other_sfs(sf_dir)
-    if key not in _INDEX_CACHE:
-        tf = (
+    def _build():
+        return (
             docs.select("doc_id", F.explode(TX.tokens(F.lower(F.col("text")))).alias("tok"))
             .groupBy("doc_id", (md5_bucket(F.col("tok")) % DSIR_BUCKETS).alias("tok_b"))
             .agg(F.count("*").alias("c"))
-            .persist()
         )
-        _INDEX_CACHE[key] = (tf,)
-    ent = _INDEX_CACHE[key]
-    _repersist(ent[0])
-    return ent[0]
+
+    return cached_substrates("dsir_tf", spark, sf_dir, _build)
 
 
 @register(
@@ -1197,8 +1192,8 @@ def q_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = io.load_table(spark, sf_dir, "documents").select("doc_id", "text")
     is_tgt = F.col("doc_id") % DSIR_MOD == DSIR_REM
     # tf is the shared substrate of the LM fit AND the scoring join —
-    # persisted through the bounded per-sf cache (clustering's
-    # _INDEX_CACHE convention) so the explode+count lineage runs once
+    # persisted through the bounded per-sf cache
+    # (substrates.cached_substrates) so the explode+count lineage runs once
     # per consumer AND switching sf_dirs evicts the previous corpus's
     # pinned blocks instead of accumulating one per decade (measured:
     # decade-2 ratio 11.7 -> ~linear with one pass)

@@ -21,6 +21,7 @@ from .relational import _money_units, _units_to_double
 from ..operators.asof import asof_join
 from ..operators.sessionize import sessionize
 from ..registry import register
+from ..substrates import cached_substrates
 
 SESSION_GAP_S = 1800
 
@@ -782,20 +783,17 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     finding that the previous divisors were
     sized to the fixture; rank.py's MAX_BUCKETS in-plan raise remains
     as the backstop. The user-keyed base feeds three ranking branches;
-    it is persisted through the bounded clustering._INDEX_CACHE (one
-    entry per sf_dir, evicted on sf change, re-marked after
+    it is persisted through the per-corpus substrates.cached_substrates
+    (one entry per sf_dir, evicted on sf change, re-marked after
     clearCache) so repeated invocations in a long session reuse one
     pinned copy instead of accumulating leaked cache entries (ADVICE
     r8), and so the stats pass reads memory, not the scan. Oracle
     stays the plain triple ntile()."""
     from ..operators import rank as RK
-    from .clustering import _INDEX_CACHE, _evict_other_sfs, _repersist
 
-    key = ("rfm_base", spark.sparkContext.applicationId, sf_dir)
-    _evict_other_sfs(sf_dir)
-    if key not in _INDEX_CACHE:
+    def _build():
         e = io.load_events(spark, sf_dir)
-        base = e.groupBy("user_id").agg(
+        return e.groupBy("user_id").agg(
             F.max("ts_us").alias("last_us"),
             F.count("*").cast("bigint").alias("frequency"),
             F.sum(
@@ -808,10 +806,9 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("bigint")
             .alias("monetary_cents"),
-        ).persist()
-        _INDEX_CACHE[key] = (base,)
-    base = _INDEX_CACHE[key][0]
-    _repersist(base)
+        )
+
+    base = cached_substrates("rfm_base", spark, sf_dir, _build)
 
     # All three quintile axes rank in ONE grouped pass (a per-axis
     # ranked branch + user_id join each measured 0.67 → 2.38 s at

@@ -14,6 +14,7 @@ from pyspark.sql.window import Window
 from .. import io
 from ..operators.pagerank import SCALE, pagerank_fold
 from ..registry import register
+from ..substrates import cached_substrates
 
 PR_ITERS = 5
 
@@ -52,7 +53,6 @@ def _trade_dir_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    from .clustering import cached_substrates
 
     return cached_substrates(
         "trade_dir_edges", spark, sf_dir, lambda: edges_raw
@@ -199,8 +199,6 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fact-table scale. Both persists ride the bounded per-sf cache
     # (r11 verdict #2: bare per-call persists leaked two pinned
     # entries per bench run).
-    from .clustering import cached_substrates
-
     def _build():
         u = (
             dir_edges.filter(F.col("src") != F.col("dst"))
@@ -322,8 +320,6 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-round aggregations it existed for — it was also the named
     # suspect in the r13 verdict's unresolved 32-core 16.9 s anomaly
     # (adjudication in OPTIMIZATION_r14.md).
-    from .clustering import cached_substrates
-
     sym = cached_substrates("lpa_sym", spark, sf_dir, lambda: sym_raw)
     nodes = nation.select(F.col("n_nationkey").alias("node"))
     labels = label_propagation_fold(sym, nodes, iterations=LP_ITERS)
@@ -429,8 +425,6 @@ def q_kcore_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # joins against sym. Both persists ride the bounded per-sf cache
     # (r11 verdict #2: the bare per-call persists pinned two new
     # entries per bench run and were never released).
-    from .clustering import cached_substrates
-
     def _build():
         u = (
             a.join(

@@ -38,6 +38,7 @@ from .. import io
 from .. import store as ST
 from ..functions import text as TX
 from ..registry import register
+from ..substrates import cached_substrates
 
 N_PROBES = 150
 TOP_K = 5
@@ -287,12 +288,11 @@ def _doc_probe_tf(
     re-tokenized the corpus to rebuild it (the dominant cold cost of
     the retrieval family at sf10); now the build is once per corpus
     version and apps adopt the files. The persist rides the bounded
-    per-sf cache (r11 verdict #2: the old per-call persist pinned one
-    new cache entry per retrieval query per bench run, never released
-    — the prime suspect for q_rag_rerank's in-bench 72 s vs 4-5 s
-    isolated). The probe side stays in-plan: it is N_PROBES documents,
-    scan-pruned by the doc_id predicate."""
-    from .clustering import cached_substrates
+    per-sf cache in substrates.py (r11 verdict #2: the old per-call
+    persist pinned one new cache entry per retrieval query per bench
+    run, never released — the prime suspect for q_rag_rerank's
+    in-bench 72 s vs 4-5 s isolated). The probe side stays in-plan: it
+    is N_PROBES documents, scan-pruned by the doc_id predicate."""
 
     doc_tf = cached_substrates(
         "rag_doc_tf", spark, sf_dir, lambda: doc_tf_table(spark, sf_dir)
@@ -478,8 +478,6 @@ def _scored(
     # (one agg over the cached posting index) consumed by five
     # retrieval queries — cache it beside doc_tf instead of re-running
     # the aggregation per call
-    from .clustering import cached_substrates
-
     doc_norm = cached_substrates(
         "rag_doc_norm", spark, sf_dir, lambda: _norm(doc_tf, "doc_id")
     )
@@ -600,8 +598,6 @@ def q_tfidf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-sf substrate cache leaves the serve path as one broadcast
     # probe join + groupBy + top-k window. Same expressions, same
     # left-to-right float folds — cached values are bit-identical.
-    from .clustering import cached_substrates
-
     def _build_tfidf_index():
         n_row = F.broadcast(
             io.load_table(spark, sf_dir, "documents").agg(
@@ -881,8 +877,6 @@ def _bm25_ranked(
     # additionally referenced twice per call — stats + the term join).
     # Cached once per sf beside doc_tf, leaving the serve path as the
     # broadcast probe join + score + top-k window.
-    from .clustering import cached_substrates
-
     def _build_bm25_stats():
         dl = doc_tf.groupBy("doc_id").agg(
             F.sum("c").cast("bigint").alias("dl")
@@ -1248,7 +1242,6 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is |probes| rows riding a broadcast join. Nothing here
     touches the corpus beyond the posting-list joins the ranking
     already did."""
-    from .clustering import cached_substrates
 
     full = cached_substrates(
         "bm25_full_ranking",

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from .. import io
 from ..registry import register
+from ..substrates import cached_substrates
 
 
 def _dec(c: str, prec: int = 12, scale: int = 2) -> F.Column:
@@ -1642,7 +1643,6 @@ def q_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     window appears anywhere. The shipdate band pushes to the parquet
     scan. The shared rev substrate rides the bounded per-sf cache
     (it feeds both the max and the winner join)."""
-    from .clustering import cached_substrates
 
     def _build():
         li = io.load_table(spark, sf_dir, "lineitem").select(

@@ -23,6 +23,7 @@ from .. import io
 from ..functions import vector as V
 from ..operators import similarity
 from ..registry import register
+from ..substrates import cached_substrates
 
 # DuckDB fragment: dot(a, b) with the same DOUBLE left-to-right fold Spark
 # uses in functions.vector.dot (zip_with + aggregate from 0.0).
@@ -175,7 +176,6 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         params=[_os.path.join(sf_dir, "embeddings.parquet"), QUERY_VEC_ID],
     ).fetchall()
     q_vec = [float(x) for x in q_raw]
-    from .clustering import cached_substrates
 
     cents = cached_substrates(
         "ivf_cents", spark, sf_dir, lambda: similarity.centroids(emb)
@@ -296,8 +296,6 @@ def q_srp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # verify; the probe side reuses the same table filtered to the
     # probe ids (signing is per-row deterministic, so the filtered
     # cache is value-identical to signing the probes directly)
-    from .clustering import cached_substrates
-
     ib = cached_substrates(
         "srp_bands", spark, sf_dir, lambda: similarity.srp_bands(emb)
     )
@@ -903,56 +901,63 @@ def q_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r13: the centroid table is the shared IVF coarse index — same
     # cached substrate q_ivf_topk serves from
-    from .clustering import cached_substrates
-
     cents = cached_substrates(
         "ivf_cents", spark, sf_dir, lambda: similarity.centroids(emb)
     )
-    w_c = Window.partitionBy("probe_id").orderBy(
-        F.desc("cscore"), F.asc("label")
-    )
-    crank = (
-        cents.crossJoin(F.broadcast(probes))
-        .select(
-            "probe_id",
-            "label",
-            F.round(V.cosine("centroid", "pv"), 6).alias("cscore"),
+
+    def _build():
+        # the probe×centroid ranking, the exact baseline and the
+        # max-nprobe candidate set feed every sweep point; all three are
+        # pure functions of the corpus, so they are cached with it
+        w_c = Window.partitionBy("probe_id").orderBy(
+            F.desc("cscore"), F.asc("label")
         )
-        .withColumn("rk", F.row_number().over(w_c))
-        .select("probe_id", "label", "rk")
-        .persist()  # feeds every sweep point
-    )
-    exact = (
-        similarity.knn_join(emb, probes.select(F.col("probe_id").alias("vec_id"), F.col("pv").alias("embedding")), k=KNN_K)
-        .select("query_id", "item_id")
-        .persist()  # shared baseline for every sweep point
-    )
+        crank = (
+            cents.crossJoin(F.broadcast(probes))
+            .select(
+                "probe_id",
+                "label",
+                F.round(V.cosine("centroid", "pv"), 6).alias("cscore"),
+            )
+            .withColumn("rk", F.row_number().over(w_c))
+            .select("probe_id", "label", "rk")
+        )
+        exact = similarity.knn_join(
+            emb,
+            probes.select(
+                F.col("probe_id").alias("vec_id"), F.col("pv").alias("embedding")
+            ),
+            k=KNN_K,
+        ).select("query_id", "item_id")
+        # r14 (guide §2.4/§1.2): the per-point candidate sets NEST —
+        # point np's candidates are exactly the rows of the max-nprobe
+        # set whose cluster rank ≤ np (crk is unique per (probe, label),
+        # so carrying it through the join preserves the per-point
+        # membership test). Score the max-nprobe set ONCE and filter per
+        # point: the r13 form re-joined and re-scored the corpus per
+        # sweep point (3 corpus-side joins + 3 cosine passes); this
+        # computes one. Per-point top-k windows are unchanged, so ranks,
+        # hits, and recall are identical.
+        pl_all = crank.filter(F.col("rk") <= max(NPROBE_SWEEP)).select(
+            "probe_id", "label", F.col("rk").alias("crk")
+        )
+        cand_all = (
+            emb.join(pl_all, "label")
+            .join(F.broadcast(probes), "probe_id")
+            .filter(F.col("vec_id") != F.col("probe_id"))
+            .select(
+                "probe_id",
+                F.col("vec_id").alias("item_id"),
+                F.round(V.cosine("embedding", "pv"), 6).alias("score"),
+                "crk",
+            )
+        )
+        return crank, exact, cand_all
+
+    _, exact, cand_all = cached_substrates("ivf_sweep", spark, sf_dir, _build)
     nx = exact.agg(F.count("*").cast("bigint").alias("n_expected"))
     w_r = Window.partitionBy("probe_id").orderBy(
         F.desc("score"), F.asc("item_id")
-    )
-    # r14 (guide §2.4/§1.2): the per-point candidate sets NEST — point
-    # np's candidates are exactly the rows of the max-nprobe set whose
-    # cluster rank ≤ np (crk is unique per (probe, label), so carrying
-    # it through the join preserves the per-point membership test).
-    # Score the max-nprobe set ONCE and filter per point: the r13 form
-    # re-joined and re-scored the corpus per sweep point (3 corpus-side
-    # joins + 3 cosine passes); this computes one. Per-point top-k
-    # windows are unchanged, so ranks, hits, and recall are identical.
-    pl_all = crank.filter(F.col("rk") <= max(NPROBE_SWEEP)).select(
-        "probe_id", "label", F.col("rk").alias("crk")
-    )
-    cand_all = (
-        emb.join(pl_all, "label")
-        .join(F.broadcast(probes), "probe_id")
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            F.col("vec_id").alias("item_id"),
-            F.round(V.cosine("embedding", "pv"), 6).alias("score"),
-            "crk",
-        )
-        .persist()  # feeds every sweep point, like crank/exact above
     )
     rows = []
     for np_ in NPROBE_SWEEP:

@@ -14,6 +14,7 @@ contract only needs directed rows)."""
 from __future__ import annotations
 
 import random
+import re
 
 from pyspark.sql import functions as F
 
@@ -142,7 +143,9 @@ def test_connected_components_no_retention(spark):
     assert sorted(map(tuple, r2.collect()))
     try:
         again = sorted(map(tuple, r1.collect()))
-    except Exception:
+    except Exception as exc:  # noqa: BLE001 — only the documented error passes
+        if not re.search(r"Checkpoint block .* not found", str(exc)):
+            raise
         return  # loud failure: the documented outcome
     assert again == rows1, (
         "retained result re-executed to DIFFERENT rows after a later "

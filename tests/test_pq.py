@@ -129,21 +129,33 @@ def test_probe_vector_matches_spark_quantize(spark, sf_small):
 
 
 def test_index_cache_evicts_other_sf_dirs(spark, sf_small):
-    """_INDEX_CACHE is bounded (r6 verdict #7): touching a second
-    sf_dir unpersists and drops the first one's index artifacts."""
+    """The substrate cache is bounded (r6 verdict #7): touching a second
+    sf_dir unpersists and drops every substrate of the first one — the
+    PQ codes and the other queries' substrates (rfm_base, bm25_stats)
+    alike."""
+    from etl_ai_assistent_spark import substrates as S
     from etl_ai_assistent_spark.queries import clustering as C
+    from etl_ai_assistent_spark.registry import queries
 
-    emb1, _, codes1, _, _ = C._pq_index(spark, sf_small)
-    assert any(k[2] == sf_small for k in C._INDEX_CACHE)
-    assert codes1.storageLevel.useMemory
+    _, codes1, _, _ = C._pq_index(spark, sf_small)
+    queries()["q_rfm_segments"](spark, sf_small)
+    queries()["q_bm25_retrieval"](spark, sf_small)
+    assert S._sf_dir == sf_small
+    rfm_base = S._entries["rfm_base"]
+    dl, stats, df_tbl = S._entries["bm25_stats"]
+    held = [codes1, rfm_base, dl, stats, df_tbl]
+    assert all(df.storageLevel.useMemory for df in held)
 
     other = sf_small.replace("sf0.001", "sf0.01")
     C._pq_index(spark, other)
-    assert not any(k[2] == sf_small for k in C._INDEX_CACHE)
-    assert not codes1.storageLevel.useMemory  # storage released
+    assert S._sf_dir == other
+    assert set(S._entries) == {"pq"}
+    assert not any(df.storageLevel.useMemory for df in held)  # released
     # moving back works and in turn evicts the other sf_dir
+    _, codes2, _, _ = C._pq_index(spark, other)
     C._pq_index(spark, sf_small)
-    assert not any(k[2] == other for k in C._INDEX_CACHE)
+    assert S._sf_dir == sf_small
+    assert not codes2.storageLevel.useMemory
 
 
 def test_adc_table_rows_matches_adc_table(spark, sf_small):
@@ -165,10 +177,11 @@ def test_adc_table_rows_matches_adc_table(spark, sf_small):
 
 def test_ann_store_adopted_without_rebuild(spark, sf_small):
     """The on-disk ANN store (r9 verdict #1): artifacts exist after the
-    first index use, and a 'fresh app' (cleared _INDEX_CACHE) re-serves
+    first index use, and a 'fresh app' (cleared substrate cache) re-serves
     by ADOPTING the files — no artifact is rewritten."""
     import os
 
+    from etl_ai_assistent_spark import substrates as S
     from etl_ai_assistent_spark.queries import clustering as C
 
     C._pq_index(spark, sf_small)
@@ -179,8 +192,8 @@ def test_ann_store_adopted_without_rebuild(spark, sf_small):
     marker = os.path.join(path, "codes", "_SUCCESS")
     mtime = os.path.getmtime(marker)
 
-    C._INDEX_CACHE.clear()
-    _, _, codes, tables, _ = C._pq_index(spark, sf_small)
+    S._entries.clear()
+    _, codes, tables, _ = C._pq_index(spark, sf_small)
     assert PQ.adc_topk(codes, tables, k=TOPK).count() == TOPK
     assert os.path.getmtime(marker) == mtime, "store was rebuilt"
 
@@ -311,7 +324,7 @@ def test_driver_built_probe_maps_match_executor_path(spark, sf_small):
         _probe_vectors,
     )
 
-    _, cb_rows, _, _, _ = _pq_index(spark, sf_small)
+    cb_rows, _, _, _ = _pq_index(spark, sf_small)
     # driver path (exactly q_pq_multiquery_topk's build)
     entries = []
     for vid, qv in _probe_vectors(sf_small, NQ_PQ):

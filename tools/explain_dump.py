@@ -35,7 +35,7 @@ def _stream_ann_lookup_surrogate(spark, sf_dir):
         DIM, M_SUB, NQ_PQ, PQ_TOPK, _literal_codebooks, _pq_index,
     )
 
-    _, cb_rows, codes, _, _ = _pq_index(spark, sf_dir)
+    cb_rows, codes, _, _ = _pq_index(spark, sf_dir)
     cbs = _literal_codebooks(spark, cb_rows)
     cb_table = PQ.codebook_table(cbs)
     batch = (
