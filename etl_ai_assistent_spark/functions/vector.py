@@ -1,7 +1,41 @@
-"""Vector-math column functions — pure built-in Spark SQL expressions.
+"""Vector math as Spark SQL text — the one place where dot, norm,
+cosine and squared-L2 expressions are built.
 
-Everything here stays JVM-side; no Python UDFs in the hot path. NOTE:
-higher-order functions (zip_with/aggregate/transform lambdas) evaluate
+Every function here takes each operand as either SQL text (a column
+name, or an expression such as ``slice(qv, 1, 16)``) or a constant
+Python vector, and returns ONE ``F.expr``. A constant is inlined as an
+``array(...)`` literal inside that one string.
+
+Why text: every Column node composed in Python — each ``F.lit``, each
+Python-lambda ``zip_with``/``aggregate`` — is at least one py4j round
+trip to the JVM, so a query vector written as ``F.array(F.lit(...))``
+made a request's plan cost O(dim) round trips to build. On a 4-core VM
+that was ~250 ms of plan-building time for one exact top-k request at dim 64,
+against ~120 ms as text (most of what remains is Catalyst analysing
+each DataFrame operation). As text, building a request plan costs the
+same number of round trips at dim 1024 as at dim 8
+(tests/test_vector.py counts them).
+
+Exactness: results are bit-identical to the Column form's.
+- For column operands the text is the same expression tree the Column
+  form built. Floating-point math is done in DOUBLE regardless of
+  storage type (embeddings are ARRAY<FLOAT>; float->double widening is
+  exact) as an elementwise product folded LEFT TO RIGHT from 0.0 by
+  ``aggregate(zip_with(...))`` — the order the DuckDB oracle's
+  ``list_transform`` + ``list_reduce`` uses, so scores hash-match it
+  without tolerance.
+- A constant is inlined as one ``array(...)`` literal wherever it is
+  used (cosine names it three times). A finite double is written
+  ``repr(x) + 'D'``: Python's repr is the shortest string that
+  round-trips, and Spark parses DOUBLE literals with Java's
+  correctly-rounded ``Double.parseDouble``, so the JVM sees the
+  identical bits (signed zero and subnormals included). NaN and ±inf
+  have no literal syntax and are written ``CAST('NaN' AS DOUBLE)`` /
+  ``'Infinity'`` / ``'-Infinity'``. An integer is written ``<n>L``
+  (BIGINT), the type of the integer-lattice vectors it meets
+  (operators/kmeans.py).
+
+Higher-order functions (zip_with/aggregate lambdas) evaluate
 INTERPRETED on the JVM — they are not whole-stage-codegen'd — and
 Catalyst's CollapseProject will re-inline a staged expensive input into
 every lambda use site. When a dot/norm feeds many expressions (LSH
@@ -9,11 +43,7 @@ signing, minhash), persist() the staged column as a barrier (see
 operators/dedup.minhash_bands, operators/similarity.srp_bands); where
 profiling shows the interpreter itself is the bottleneck, the
 Arrow-batched pandas-UDF twin (operators/embedder.hash_embed_pandas) is
-the faster path. All arithmetic is done in DOUBLE regardless of the storage
-type (embeddings are stored ARRAY<FLOAT>; float->double widening is exact)
-and folds left-to-right, which makes results bit-reproducible and lets the
-DuckDB oracle (list_transform + list_reduce, same order, same doubles)
-hash-match without tolerance.
+the faster path.
 
 Reference semantics covered:
 - cosine top-k retrieval math (reference scripts/test.out.py:14-19,
@@ -23,8 +53,64 @@ Reference semantics covered:
 
 from __future__ import annotations
 
+import math
+import numbers
+from collections.abc import Sequence
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+# A str operand is SQL text, pasted into the expression as-is: a plain
+# column name works, a name that needs quoting (a reserved word, a dot,
+# a space) must be backticked by the caller. Anything else is a constant
+# vector. A Column is rejected.
+Operand = str | Sequence[float]
+
+
+def literal_sql(x) -> str:
+    """One scalar as a SQL literal of exactly its value: ``<n>L`` for an
+    integer, ``repr(x)D`` for a finite double, a string cast for NaN and
+    ±inf (which have no literal syntax)."""
+    if isinstance(x, numbers.Integral):
+        return f"{int(x)}L"
+    x = float(x)
+    if math.isfinite(x):
+        return repr(x) + "D"
+    name = "NaN" if math.isnan(x) else ("Infinity" if x > 0 else "-Infinity")
+    return f"CAST('{name}' AS DOUBLE)"
+
+
+def _operand(v: Operand) -> str:
+    if isinstance(v, str):
+        return v
+    if isinstance(v, Column):
+        raise TypeError(
+            "vector operands are SQL text or a constant vector, not a"
+            " Column; pass the column name (backticked if it needs it)"
+        )
+    return "array(" + ", ".join(literal_sql(x) for x in v) + ")"
+
+
+def _dot_sql(a: Operand, b: Operand) -> str:
+    return (
+        f"aggregate(zip_with(CAST({_operand(a)} AS ARRAY<DOUBLE>),"
+        f" CAST({_operand(b)} AS ARRAY<DOUBLE>), (x, y) -> x * y),"
+        " 0.0D, (acc, x) -> acc + x)"
+    )
+
+
+def _norm_sql(v: Operand) -> str:
+    return f"sqrt({_dot_sql(v, v)})"
+
+
+def dist2_sql(a: Operand, b: Operand) -> str:
+    """SQL text of the exact integer squared L2 between two BIGINT
+    vectors, folded left to right from a BIGINT zero."""
+    return (
+        f"aggregate(zip_with({_operand(a)}, {_operand(b)},"
+        " (x, y) -> (x - y) * (x - y)),"
+        " CAST(0 AS BIGINT), (acc, d) -> acc + d)"
+    )
 
 
 def as_double(v: Column | str) -> Column:
@@ -32,32 +118,24 @@ def as_double(v: Column | str) -> Column:
     return v.cast("array<double>")
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    """Elementwise product then left-to-right fold — deterministic order.
-
-    Compiles to ZipWith + ArrayAggregate (interpreted JVM expressions —
-    see the module docstring), no shuffle, no UDF.
-    """
-    prod = F.zip_with(as_double(a), as_double(b), lambda x, y: x * y)
-    return F.aggregate(prod, F.lit(0.0), lambda acc, x: acc + x)
+def dot(a: Operand, b: Operand) -> Column:
+    """Elementwise DOUBLE product, then a left-to-right fold from 0.0.
+    No shuffle, no UDF."""
+    return F.expr(_dot_sql(a, b))
 
 
-def norm(v: Column | str) -> Column:
-    return F.sqrt(dot(v, v))
+def norm(v: Operand) -> Column:
+    return F.expr(_norm_sql(v))
 
 
-def l2_normalize(v: Column | str) -> Column:
-    """v / ||v||; null-safe for zero vectors (returns nulls, which a
-    cosine against them propagates — callers filter on score anyway)."""
-    n = norm(v)
-    return F.transform(as_double(v), lambda x: x / n)
+def cosine(a: Operand, b: Operand) -> Column:
+    """Cosine similarity in [-1, 1]: dot(a, b) / (norm(a) * norm(b))."""
+    return F.expr(f"{_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)})")
 
 
-def cosine(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity in [-1, 1]. At write time we L2-normalize stored
-    embeddings so cosine degrades to a plain dot product (SURVEY.md §4
-    physical-design note); this general form is for ad-hoc inputs."""
-    return dot(a, b) / (norm(a) * norm(b))
+def dist2(a: Operand, b: Operand) -> Column:
+    """Exact integer squared L2 between two ARRAY<BIGINT> operands."""
+    return F.expr(dist2_sql(a, b))
 
 
 def pad_truncate(v: Column | str, dim: int) -> Column:

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import vector as V
+
 Q_SCALE = 1000
 Q_OFFSET = 1000  # keeps quantized coords non-negative (|x| < 1 in testdata)
 PACK = 16  # cluster-id packing base; requires k <= PACK
@@ -41,15 +43,6 @@ def quantize(vec_col) -> "F.Column":
     )
 
 
-def dist2(a, b) -> "F.Column":
-    """Exact integer squared L2 between two ARRAY<BIGINT> columns."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("bigint"),
-        lambda acc, d: acc + d,
-    )
-
-
 def assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """Nearest-centroid assignment: broadcast the K centroid rows across
     the vector scan, pack (dist, cid) into one bigint (dist·PACK + cid —
@@ -58,7 +51,7 @@ def assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
 
     vectors: (vec_id, qv ARRAY<BIGINT>); centroids: (cid, cv).
     Returns (vec_id, cluster, dist)."""
-    packed = dist2(F.col("qv"), F.col("cv")) * PACK + F.col("cid")
+    packed = V.dist2("qv", "cv") * PACK + F.col("cid")
     return (
         vectors.crossJoin(F.broadcast(centroids))
         .select("vec_id", packed.alias("p"))

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .pagerank import fold_edges
+
 LP_PACK = 1 << 20  # label < LP_PACK; count < LP_MAXC
 LP_MAXC = 1 << 40
 
@@ -143,15 +145,10 @@ def label_propagation_fold(
       distributed form's inner vote join did the same;
     - the label < 2^20 packed-domain guard is the same raise_error,
       applied to every vote's label lookup.
+    At most FOLD_MAX_EDGES edges, enforced in the plan
+    (pagerank.fold_edges): the vote count is O(|E|²) per node-round.
     """
-    es = edges.agg(
-        F.collect_list(
-            F.struct(
-                F.col("src").cast("bigint").alias("s"),
-                F.col("dst").cast("bigint").alias("d"),
-            )
-        ).alias("es")
-    )
+    es = fold_edges(edges, "label_propagation_fold")
     ns = nodes.agg(
         F.collect_list(F.col("node").cast("bigint")).alias("ns")
     )

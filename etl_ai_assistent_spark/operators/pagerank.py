@@ -28,6 +28,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SCALE = 1_000_000_000  # rank unit: ppb of total mass
+# Largest edge array the one-row folds accept. The nation graph has at
+# most 625 edges; label_propagation_fold counts votes in O(|E|²) per
+# node-round, so a larger graph belongs to the distributed forms.
+FOLD_MAX_EDGES = 4096
 D_NUM, D_DEN = 85, 100  # damping 0.85 as an integer ratio
 
 
@@ -81,6 +85,29 @@ def pagerank_int(
     return ranks.withColumnRenamed("r", "rank_ppb")
 
 
+def fold_edges(edges: DataFrame, op: str) -> DataFrame:
+    """The (src, dst) edge set as ONE row: es = array of (s, d) bigint
+    structs. The folds' size precondition is enforced in the plan: an
+    edge set larger than FOLD_MAX_EDGES fails the job with
+    "<op>: <n> edges exceed FOLD_MAX_EDGES" instead of running the
+    fold's quadratic inner loops on one executor thread."""
+    es = edges.agg(
+        F.collect_list(
+            F.struct(
+                F.col("src").cast("bigint").alias("s"),
+                F.col("dst").cast("bigint").alias("d"),
+            )
+        ).alias("es")
+    )
+    return es.select(
+        F.expr(
+            f"IF(size(es) > {FOLD_MAX_EDGES}, raise_error(concat('{op}: ',"
+            f" size(es), ' edges exceed FOLD_MAX_EDGES = {FOLD_MAX_EDGES};"
+            " use the distributed form')), es)"
+        ).alias("es")
+    )
+
+
 def pagerank_fold(
     edges: DataFrame, nodes: DataFrame, iterations: int = 5
 ) -> DataFrame:
@@ -116,15 +143,9 @@ def pagerank_fold(
 
     The input contract matches pagerank_int: (src, dst) distinct edges,
     (node) vertex set; returns (node, rank_ppb). No driver action at
-    all (pagerank_int needs nodes.count(); here n lives in the plan)."""
-    es = edges.agg(
-        F.collect_list(
-            F.struct(
-                F.col("src").cast("bigint").alias("s"),
-                F.col("dst").cast("bigint").alias("d"),
-            )
-        ).alias("es")
-    )
+    all (pagerank_int needs nodes.count(); here n lives in the plan).
+    At most FOLD_MAX_EDGES edges, enforced in the plan (fold_edges)."""
+    es = fold_edges(edges, "pagerank_fold")
     ns = nodes.agg(
         F.collect_list(F.col("node").cast("bigint")).alias("ns")
     )

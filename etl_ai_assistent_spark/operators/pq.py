@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import vector as V
 from . import kmeans as KM
 
 
@@ -80,20 +81,6 @@ def encode(
     return out
 
 
-def _dist2_sql(vec_sql: str, cv: list) -> str:
-    """KM.dist2 as a SQL snippet against a LITERAL centroid array —
-    the same aggregate(zip_with(...)) expression, built as one string
-    so the whole argmin ships to the JVM in a single parse instead of
-    hundreds of py4j lambda round-trips (the Column-composed form cost
-    1.8 s of driver chatter per encode_rows call, r13 measured)."""
-    arr = "array(" + ",".join(f"{int(x)}L" for x in cv) + ")"
-    return (
-        f"aggregate(zip_with({vec_sql}, {arr},"
-        f" (x, y) -> (x - y) * (x - y)),"
-        f" CAST(0 AS BIGINT), (acc, d) -> acc + d)"
-    )
-
-
 def argmin_code_sql(vec_sql: str, cb_rows_one: list) -> str:
     """Nearest-centroid id for one subspace slice against DRIVER-
     RESIDENT codebook rows [(cid, cv), ...], as a PURE EXPRESSION:
@@ -106,7 +93,7 @@ def argmin_code_sql(vec_sql: str, cb_rows_one: list) -> str:
     if any(int(cid) >= KM.PACK for cid, _ in cb_rows_one):
         raise ValueError(f"centroid id >= packing base {KM.PACK}")
     packed = [
-        f"({_dist2_sql(vec_sql, cv)} * {KM.PACK} + {int(cid)})"
+        f"({V.dist2_sql(vec_sql, cv)} * {KM.PACK} + {int(cid)})"
         for cid, cv in cb_rows_one
     ]
     inner = packed[0] if len(packed) == 1 else (
@@ -188,18 +175,23 @@ def adc_topk(
     codes: DataFrame, tables: list[dict], k: int = 10
 ) -> DataFrame:
     """ADC top-k: approximate distance = Σ_i table_i[code_i], computed
-    as a chain of map-literal lookups over the codes table (no floats,
-    no shuffle of vectors — one codes scan + TakeOrderedAndProject).
-    Ties break on vec_id."""
-    m = len(tables)
-    dist = None
-    for i, tbl in enumerate(tables):
-        lookup = F.create_map(
-            *[F.lit(x) for pair in tbl.items() for x in pair]
-        )[F.col(f"code_{i}")]
-        dist = lookup if dist is None else dist + lookup
+    as ONE expression of M inlined map-literal lookups over the codes
+    table (no floats, no shuffle of vectors — one codes scan +
+    TakeOrderedAndProject). Keys and values are BIGINT literals, so the
+    M-term sum is 64-bit. Ties break on vec_id."""
+    lookups = " + ".join(
+        "map("
+        + ", ".join(
+            f"{V.literal_sql(int(c))}, {V.literal_sql(int(d))}"
+            for c, d in tbl.items()
+        )
+        + f")[code_{i}]"
+        for i, tbl in enumerate(tables)
+    )
     return (
-        codes.select("vec_id", dist.cast("bigint").alias("adc_dist"))
+        codes.select(
+            "vec_id", F.expr(f"CAST({lookups} AS BIGINT)").alias("adc_dist")
+        )
         .orderBy(F.asc("adc_dist"), F.asc("vec_id"))
         .limit(k)
     )
@@ -225,7 +217,7 @@ def probe_tables(
                 "query_id",
                 F.lit(i).cast("int").alias("subspace"),
                 "cid",
-                KM.dist2(F.col("qv"), F.col("cv")).alias("d"),
+                V.dist2("qv", "cv").alias("d"),
             )
         )
         out = t if out is None else out.unionByName(t)
@@ -285,7 +277,7 @@ def probe_tables_flat(
         "query_id",
         "subspace",
         "cid",
-        KM.dist2(F.col("qslice"), F.col("cv")).alias("d"),
+        V.dist2("qslice", "cv").alias("d"),
     )
 
 

@@ -38,11 +38,6 @@ from pyspark.sql import functions as F
 from ..functions import vector as V
 
 
-def _score(vec_col: str, query: Sequence[float]) -> "F.Column":
-    q = F.array(*[F.lit(float(x)) for x in query]).cast("array<double>")
-    return V.cosine(F.col(vec_col), q)
-
-
 def topk_cosine(
     items: DataFrame,
     query: Sequence[float],
@@ -55,9 +50,11 @@ def topk_cosine(
     """Exact top-k cosine retrieval (Q1).
 
     Emits the item columns + `score`, highest first; ties broken by the
-    first non-vector column for determinism.
+    first non-vector column for determinism. ``vec_col`` is SQL text
+    (see functions/vector.py): a name that needs quoting must come
+    backticked.
     """
-    score = _score(vec_col, query)
+    score = V.cosine(vec_col, query)
     if score_decimals is not None:
         score = F.round(score, score_decimals)
     other = [c for c in items.columns if c != vec_col]
@@ -85,6 +82,8 @@ def knn_join(
     The query side is broadcast (it is the small side by contract), so
     scoring is a map-side nested loop over each item partition; the only
     shuffle carries (query_id, item_id, score) for the per-query rank.
+    ``item_vec`` and ``query_vec`` are SQL text (see functions/vector.py):
+    a name that needs quoting must come backticked.
     """
     # norms computed once per row BEFORE the join (columns cross the join
     # materialized): dot/(ni*nq) folds one O(d) pass per pair instead of
@@ -92,14 +91,14 @@ def knn_join(
     q = queries.select(
         F.col(query_id).alias("query_id"),
         F.col(query_vec).alias("__qvec"),
-        F.sqrt(V.dot(query_vec, query_vec)).alias("__qn"),
+        V.norm(query_vec).alias("__qn"),
     )
     it = items.select(
         F.col(item_id).alias("item_id"),
         F.col(item_vec).alias("__ivec"),
-        F.sqrt(V.dot(item_vec, item_vec)).alias("__in"),
+        V.norm(item_vec).alias("__in"),
     )
-    score = V.dot(F.col("__ivec"), F.col("__qvec")) / (
+    score = V.dot("__ivec", "__qvec") / (
         F.col("__in") * F.col("__qn")
     )
     if score_decimals is not None:
@@ -160,11 +159,12 @@ def ivf_topk(
     nprobe/nlist of the data. Recall is tunable via nprobe. ``cents``
     lets the caller supply the (cached) centroid table — it is the IVF
     coarse index, an offline build artifact, not per-serve work.
+    ``vec_col`` is SQL text, as in ``topk_cosine``.
     """
     if cents is None:
         cents = centroids(items, vec_col=vec_col, cluster_col=cluster_col)
     probed = (
-        cents.withColumn("cscore", _score("centroid", query))
+        cents.withColumn("cscore", V.cosine("centroid", query))
         .orderBy(F.desc("cscore"))
         .limit(nprobe)
         .select(cluster_col)

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from .. import io
 from .. import store as ST
+from ..functions import vector as V
 from ..operators import kmeans as KM
 from ..registry import register
 from ..substrates import cached_substrates
@@ -638,9 +639,8 @@ def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = io.load_table(spark, sf_dir, "embeddings").select(
         "vec_id", KM.quantize("embedding").alias("qv")
     )
-    qlit = F.array(*[F.lit(int(x)) for x in q0])
     exact = (
-        emb.select("vec_id", KM.dist2(F.col("qv"), qlit).alias("d"))
+        emb.select("vec_id", V.dist2("qv", q0).alias("d"))
         .orderBy(F.asc("d"), F.asc("vec_id"))
         .limit(PQ_TOPK)
         .select("vec_id")
@@ -945,9 +945,8 @@ def q_ivfpq_residual_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", KM.quantize("embedding").alias("qv")
     )
     *_, q0 = _pq_index(spark, sf_dir)
-    qlit = F.array(*[F.lit(int(x)) for x in q0])
     exact = (
-        emb.select("vec_id", KM.dist2(F.col("qv"), qlit).alias("d"))
+        emb.select("vec_id", V.dist2("qv", q0).alias("d"))
         .orderBy(F.asc("d"), F.asc("vec_id"))
         .limit(PQ_TOPK)
         .select("vec_id")

@@ -352,7 +352,7 @@ def embedding_near_dup_allpairs(
     normed = io.load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "embedding",
-        F.sqrt(V.dot("embedding", "embedding")).alias("nrm"),
+        V.norm("embedding").alias("nrm"),
     )
     a = normed.select(
         F.col("vec_id").alias("id_a"),
@@ -400,7 +400,7 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     normed = emb.select(
         "vec_id",
         "embedding",
-        F.sqrt(V.dot("embedding", "embedding")).alias("nrm"),
+        V.norm("embedding").alias("nrm"),
     )
     a = normed.select(
         F.col("vec_id").alias("id_a"),
@@ -762,7 +762,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "cluster",
             "embedding",
-            F.sqrt(V.dot("embedding", "embedding")).alias("nr"),
+            V.norm("embedding").alias("nr"),
         )
         .persist()
     )

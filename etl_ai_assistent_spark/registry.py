@@ -62,57 +62,57 @@ _loaded = False
 # --- BEGIN DRIVER_FIRST (generated by tools/rotate_window.py) ---
 DRIVER_FIRST: tuple[str, ...] = (
     # plan/semantics changed this round
-    "q_pagerank_nations",  # last r13
-    "q_label_propagation",  # last r13
-    "q_kcore_prune",  # last r13
-    "q_curation_pipeline",  # last r13
-    "q_token_stats",  # last r9
-    "q_corpus_profile",  # last r10
-    "q_doc_surprisal",  # last r11
-    "q_mix_weights",  # last r8
-    "q_token_shards",  # last r9
-    "q_sequence_pack",  # last r13
-    "q_vectorize_lines",  # last r10
-    "q_triangle_count",  # last r12
-    "q_ivf_nprobe_sweep",  # last r13
+    "q_pq_adc_topk",  # last r10
+    "q_ivfpq_topk",  # last r10
+    "q_ivfpq_recall",  # last r10
+    "q_ivfpq_residual_topk",  # last r10
+    "q_ivfpq_residual_recall",  # last r10
+    "q_ann_grown_topk",  # last r13
+    "q_pagerank_nations",  # last r14
+    "q_label_propagation",  # last r14
     # stalest driver verdicts first
-    "q_event_transitions",  # last r8
-    "q_ewma_user_value",  # last r8
-    "q_except_event_hours",  # last r8
-    "q_group_regression",  # last r8
-    "q_interval_union",  # last r8
-    "q_kmeans_step",  # last r8
-    "q_lang_id",  # last r8
-    "q_latest_event_per_user",  # last r8
-    "q_minhash_near_dup",  # last r8
-    "q_pii_scrub",  # last r8
-    "q_props_variant",  # last r8
-    "q_purchases_after_signup",  # last r8
-    "q_quality_score",  # last r8
-    "q_repetition_stats",  # last r8
-    "q_resize_plan",  # last r8
-    "q_salted_skew_join",  # last r8
-    "q_scd2_intervals",  # last r8
-    "q_sectionize_docs",  # last r8
-    "q_sentence_stats",  # last r8
-    "q_stream_dedup",  # last r8
-    "q_stream_doc_ingest",  # last r8
-    "q_stream_stateful_totals",  # last r8
-    "q_topk_cosine",  # last r8
-    "q_value_anomalies",  # last r8
-    "q_active_machinery_customers",  # last r9
-    "q_array_functions",  # last r9
-    "q_bpe_pairs",  # last r9
-    "q_caption_classify",  # last r9
-    "q_caption_pairing",  # last r9
-    "q_cdc_merge",  # last r9
-    "q_chunk_fixed",  # last r9
-    "q_corrupt_quarantine",  # last r9
-    "q_customers_without_orders",  # last r9
-    "q_daily_gapfill",  # last r9
-    "q_dedup_survivors",  # last r9
-    "q_exact_dedup",  # last r9
-    "q_fingerprint",  # last r9
+    "q_fuzzy_match_names",  # last r9
+    "q_grouping_sets",  # last r9
+    "q_hash_embed_profile",  # last r9
+    "q_hash_split",  # last r9
+    "q_nation_intersect",  # last r9
+    "q_ngram_jaccard_pairs",  # last r9
+    "q_ntile_segments",  # last r9
+    "q_orders_above_cust_avg",  # last r9
+    "q_pad_truncate",  # last r9
+    "q_point_records",  # last r9
+    "q_priority_stats",  # last r9
+    "q_sanitized_asset_names",  # last r9
+    "q_schema_evolution",  # last r9
+    "q_simhash_near_dup",  # last r9
+    "q_simhash_signatures",  # last r9
+    "q_sink_roundtrip",  # last r9
+    "q_skew_stats",  # last r9
+    "q_stream_dedup_watermarked",  # last r9
+    "q_stream_join",  # last r9
+    "q_table_stats",  # last r9
+    "q_top_orders_per_customer",  # last r9
+    "q_unpivot_part_metrics",  # last r9
+    "q_ann_recall",  # last r10
+    "q_asset_catalog",  # last r10
+    "q_bigram_surprisal",  # last r10
+    "q_bloom_join",  # last r10
+    "q_byte_features",  # last r10
+    "q_cdc_mor",  # last r10
+    "q_chunk_recursive",  # last r10
+    "q_client_embed_profile",  # last r10
+    "q_compaction_stats",  # last r10
+    "q_countmin_heavy",  # last r10
+    "q_posting_index_build",  # last r10
+    "q_rag_judged",  # last r10
+    "q_rfm_segments",  # last r10
+    "q_source_sample",  # last r10
+    "q_stream_profile_lookup",  # last r10
+    "q_synthetic_source",  # last r10
+    "q_table_fingerprint",  # last r10
+    "q_testset_generate",  # last r10
+    "q_title_text",  # last r10
+    "q_trigram_index_build",  # last r10
 )
 # --- END DRIVER_FIRST ---
 

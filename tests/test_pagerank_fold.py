@@ -23,6 +23,7 @@ from etl_ai_assistent_spark.operators.labelprop import (
     label_propagation_fold,
 )
 from etl_ai_assistent_spark.operators.pagerank import (
+    FOLD_MAX_EDGES,
     pagerank_fold,
     pagerank_int,
 )
@@ -151,3 +152,34 @@ def test_connected_components_no_retention(spark):
         "retained result re-executed to DIFFERENT rows after a later "
         "connected_components call — silent corruption, contract broken"
     )
+
+
+def _grid_edges(spark, n_edges: int):
+    """n_edges distinct (src, dst) rows over 100-wide node ids."""
+    return spark.range(n_edges).select(
+        (F.col("id") % 100).alias("src"),
+        (F.col("id") / 100).cast("bigint").alias("dst"),
+    )
+
+
+def test_folds_reject_edge_sets_over_the_bound(spark):
+    import pytest
+    from pyspark.errors import SparkRuntimeException
+
+    edges = _grid_edges(spark, FOLD_MAX_EDGES + 1)
+    nodes = spark.range(100).select(F.col("id").alias("node"))
+    over = f"{FOLD_MAX_EDGES + 1} edges exceed FOLD_MAX_EDGES = {FOLD_MAX_EDGES}"
+    with pytest.raises(SparkRuntimeException, match=f"pagerank_fold: {over}"):
+        pagerank_fold(edges, nodes, 1).collect()
+    with pytest.raises(
+        SparkRuntimeException, match=f"label_propagation_fold: {over}"
+    ):
+        label_propagation_fold(edges, nodes, 1).collect()
+
+
+def test_pagerank_fold_accepts_edge_set_at_the_bound(spark):
+    edges = _grid_edges(spark, FOLD_MAX_EDGES)
+    nodes = spark.range(100).select(F.col("id").alias("node"))
+    a = sorted(map(tuple, pagerank_int(edges, nodes, 1).collect()))
+    b = sorted(map(tuple, pagerank_fold(edges, nodes, 1).collect()))
+    assert a == b

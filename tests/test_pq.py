@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_ai_assistent_spark import io
+from etl_ai_assistent_spark.functions import vector as V
 from etl_ai_assistent_spark.operators import kmeans as KM
 from etl_ai_assistent_spark.operators import pq as PQ
 
@@ -50,10 +51,9 @@ def test_pq_adc_recall_beats_random(spark, sf_small):
         r["vec_id"] for r in PQ.adc_topk(codes, tables, k=TOPK).collect()
     }
 
-    qlit = F.array(*[F.lit(int(x)) for x in q])
     exact = {
         r["vec_id"]
-        for r in v.select("vec_id", KM.dist2(F.col("qv"), qlit).alias("d"))
+        for r in v.select("vec_id", V.dist2("qv", list(q)).alias("d"))
         .orderBy(F.asc("d"), F.asc("vec_id"))
         .limit(TOPK)
         .collect()

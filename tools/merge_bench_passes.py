@@ -18,14 +18,36 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> None:
-    passes = {}
-    for arg in sys.argv[1:]:
-        tag, path = arg.split("=", 1)
-        with open(path) as f:
-            passes[tag] = json.load(f)
-    tags = sorted(passes)
-    base = dict(passes[tags[0]])  # structure from the first pass
+# Measurements of one pass's run, never of the merged minima: kept per
+# pass under merge_protocol.passes[tag], whatever their values.
+PER_PASS = (
+    "reconciliation_vs_committed",
+    "storm_telemetry",
+    "max_query_stage_window",
+    "stage_window_warning",
+    "errors",
+)
+# Recomputed from all passes below.
+MERGED = {
+    "queries", "value", "runs_min_mean_max", "cold", "runs_actual",
+    "warm_run_bytes_sw_spill_in", "quiet", "storm_residual",
+    "merge_protocol",
+}
+
+
+def merge(passes: dict[str, dict]) -> dict:
+    """The merged artifact of full bench passes keyed by tag. A field
+    that is neither merged nor in PER_PASS stays top-level only when
+    every pass carries it with the same value (sf, runs per query, the
+    embedded trend files); otherwise it is pass-specific metadata and
+    moves under merge_protocol.passes[tag] with the PER_PASS fields."""
+    first = passes[sorted(passes)[0]]
+    other = {k for p in passes.values() for k in p} - MERGED
+    shared = {
+        k for k in other - set(PER_PASS)
+        if k in first and all(k in p and p[k] == first[k] for p in passes.values())
+    }
+    base = {k: v for k, v in first.items() if k in shared}
 
     names = set()
     for p in passes.values():
@@ -70,14 +92,13 @@ def main() -> None:
     base["quiet"] = not residual
     if residual:
         base["storm_residual"] = residual
-    else:
-        base.pop("storm_residual", None)
     base["merge_protocol"] = {
         "passes": {
             t: {
                 "headline": p["value"],
                 "quiet": p.get("quiet"),
                 "storm_residual": sorted(p.get("storm_residual", {})),
+                **{k: p[k] for k in sorted(other - shared) if k in p},
             }
             for t, p in passes.items()
         },
@@ -85,15 +106,26 @@ def main() -> None:
             "per-query minima merged across full bench passes on identical"
             " code (the r12 min-of-passes protocol); spread = [min of mins,"
             " mean of pass means, max of maxes], cold = min of first-run"
-            " times per pass, bytes = the min's source pass"
+            " times per pass, bytes = the min's source pass; fields that"
+            " describe one pass are under passes[tag]"
         ),
         "min_source_pass": src,
     }
+    return base
+
+
+def main() -> None:
+    passes = {}
+    for arg in sys.argv[1:]:
+        tag, path = arg.split("=", 1)
+        with open(path) as f:
+            passes[tag] = json.load(f)
+    merged = merge(passes)
     with open(os.path.join(REPO, "BENCH_LOCAL.json"), "w") as f:
-        json.dump(base, f, indent=1)
+        json.dump(merged, f, indent=1)
     print(
-        "merged", len(queries), "queries; headline",
-        base["value"], "from passes",
+        "merged", len(merged["queries"]), "queries; headline",
+        merged["value"], "from passes",
         {t: p["value"] for t, p in passes.items()},
     )
 
