@@ -17,16 +17,6 @@ from . import schemas
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def fixture_tag(sf_dir: str, table: str) -> str:
-    """Cache key for /tmp fixtures derived from a testdata table:
-    sf name + source parquet mtime/size — so regenerated testdata (same
-    row count, different values) never pairs with a stale fixture. The
-    shared form of streaming/pipeline._fixture_tag's convention."""
-    base = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-    return f"{base}_{int(st.st_mtime)}_{st.st_size}"
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one testdata parquet table (S6-style full scan; columnar,
     predicate-pushdown capable — the Spark analogue of the reference's

@@ -25,11 +25,6 @@ from .. import io
 from .. import store as ST
 
 
-def bucketed_root() -> str:
-    # _v2: fingerprinted key + atomic publish (FIXTURES.md rule)
-    return os.path.join(ST.store_root(), "spark_graft_bucketed_v2")
-
-
 def bucketed_table(
     spark: SparkSession,
     sf_dir: str,
@@ -41,12 +36,18 @@ def bucketed_table(
     use for this source-table version. sortBy(key) inside each bucket
     lets the join skip its sort too (SortMergeJoin over pre-sorted
     buckets)."""
-    tag, n_rows, fp = ST.corpus_key(sf_dir, table)
-    store_key = f"{tag}_{table}_{n_rows}_{fp}_{buckets}"
-    name = f"bkt_{store_key}"
+    # _v2: fingerprinted key + atomic publish (FIXTURES.md rule)
+    path = ST.corpus_path(
+        "spark_graft_bucketed_v2",
+        sf_dir,
+        table,
+        f"_{buckets}",
+        name_table=True,
+    )
+    name = f"bkt_{os.path.basename(path)}"
     if spark.catalog.tableExists(name):
         return spark.table(name)
-    path = os.path.join(bucketed_root(), store_key)
+    n_rows = ST.table_rows(sf_dir, table)
     src = io.load_table(spark, sf_dir, table)
 
     def build(tmp: str) -> None:

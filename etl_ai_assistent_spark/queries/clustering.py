@@ -305,13 +305,11 @@ def _read_artifact(spark: SparkSession, path: str, name: str) -> DataFrame:
     )
 
 
-def ann_store_root() -> str:
-    return os.path.join(ST.store_root(), "spark_graft_ann_store_v1")
-
-
 def _ann_store_path(sf_dir: str) -> tuple[str, int]:
-    tag, n, fp = ST.corpus_key(sf_dir, "embeddings")
-    return os.path.join(ann_store_root(), f"{tag}_{n}_{fp}"), n
+    return (
+        ST.corpus_path("spark_graft_ann_store_v1", sf_dir, "embeddings"),
+        ST.table_rows(sf_dir, "embeddings"),
+    )
 
 
 def _ann_store_valid(path: str, n_vecs: int) -> bool:
@@ -1098,7 +1096,7 @@ def q_ann_delta_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import pq as PQ
 
     path = ann_store(spark, sf_dir)
-    _, n = _ann_store_path(sf_dir)
+    n = ST.table_rows(sf_dir, "embeddings")
     split = (n * 4) // 5
     delta = (
         io.load_table(spark, sf_dir, "embeddings")
@@ -1132,10 +1130,6 @@ def q_ann_delta_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so a reader sees pre- or post-commit state, never a torn one.
 
 ANN_GROW_NUM, ANN_GROW_DEN = 4, 5  # base corpus = first 80% of vec_ids
-
-
-def ann_grow_root() -> str:
-    return os.path.join(ST.store_root(), "spark_graft_ann_grow_v1")
 
 
 def _grow_manifest(path: str) -> dict:
@@ -1192,7 +1186,8 @@ def ann_grow_store(spark: SparkSession, sf_dir: str) -> str:
     only through segment adds + manifest swaps."""
     from ..operators import pq as PQ
 
-    path, n = _ann_grow_path(sf_dir)
+    path = ST.corpus_path("spark_graft_ann_grow_v1", sf_dir, "embeddings")
+    n = ST.table_rows(sf_dir, "embeddings")
     split = _grow_split(n)
 
     def build(tmp: str) -> None:
@@ -1220,11 +1215,6 @@ def ann_grow_store(spark: SparkSession, sf_dir: str) -> str:
     return path
 
 
-def _ann_grow_path(sf_dir: str) -> tuple[str, int]:
-    tag, n, fp = ST.corpus_key(sf_dir, "embeddings")
-    return os.path.join(ann_grow_root(), f"{tag}_{n}_{fp}"), n
-
-
 def ann_commit_delta(spark: SparkSession, sf_dir: str) -> str:
     """The append COMMIT: encode the arrived cohort (vec_id >= 4n/5)
     against the STORED base codebooks — no retraining, no touch of
@@ -1237,7 +1227,7 @@ def ann_commit_delta(spark: SparkSession, sf_dir: str) -> str:
     from ..operators import pq as PQ
 
     path = ann_grow_store(spark, sf_dir)
-    _, n = _ann_grow_path(sf_dir)
+    n = ST.table_rows(sf_dir, "embeddings")
     split = _grow_split(n)
     man = _grow_manifest(path)
     if man["n_vecs"] >= n:

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import io
+from .. import store as ST
 from ..operators.sectionizer import sectionize
 from ..registry import register
 from ..sources import docx as DX
@@ -28,32 +29,28 @@ CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
 """
 
 
-def _fixture_dir(sf_dir: str) -> str:
-    # v3: the source mtime+size tag is part of the DIRECTORY path, not
-    # just the completion marker — regenerated testdata (possibly with a
-    # smaller doc_id set) lands in a fresh directory, so the binaryFile
-    # glob can never pick up stale doc_{id}.docx files from an old corpus
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return f"/tmp/spark_graft_docx_{tag}_{io.fixture_tag(sf_dir, 'documents')}_v3"
-
-
 def docx_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per source-tag) the deterministic .docx fixture
-    corpus derived from the documents table. The write is DISTRIBUTED
-    (foreachPartition; doc_{id}.docx names are id-disjoint across
-    partitions) so no unbounded `.collect()` ever reaches the driver —
-    at a larger sf_dir the fixture generation scales with the executors.
-    The directory itself is keyed on the source mtime+size tag."""
-    out = _fixture_dir(sf_dir)
-    docs = io.load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    marker = os.path.join(out, ".complete")
-    if not os.path.exists(marker):
+    """Publish (once per documents version) the deterministic .docx
+    fixture corpus derived from the documents table. The write is
+    DISTRIBUTED (foreachPartition; doc_{id}.docx names are id-disjoint
+    across partitions) so no unbounded `.collect()` ever reaches the
+    driver — at a larger sf_dir the fixture generation scales with the
+    executors. The corpus lands in a temp dir published by one rename,
+    so the binaryFile glob never sees a partial corpus or stale files
+    from an older documents version."""
+    out = ST.corpus_path("spark_graft_docx_v1", sf_dir, "documents")
+
+    def build(tmp: str) -> None:
+        docs = io.load_table(spark, sf_dir, "documents")
+        os.makedirs(tmp)
 
         def _write(rows) -> None:
-            DX.write_corpus([(r["doc_id"], r["text"]) for r in rows], out)
+            DX.write_corpus([(r["doc_id"], r["text"]) for r in rows], tmp)
 
-        docs.foreachPartition(_write)
-        open(marker, "w").close()
+        docs.select("doc_id", "text").foreachPartition(_write)
+
+    n_docs = ST.table_rows(sf_dir, "documents")
+    ST.publish(out, build, validate=lambda p: len(os.listdir(p)) == n_docs)
     return out
 
 

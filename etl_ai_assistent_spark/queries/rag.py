@@ -139,20 +139,24 @@ def _norm(df: DataFrame, key: str) -> DataFrame:
 POSTING_BUCKETS = 32
 
 
+# _v2: bucket key switched tok_h → doc_id (writer change, FIXTURES rule)
+POSTING_FAMILY = "spark_graft_posting_store_v2"
+
+
 def posting_store_root() -> str:
-    # _v2: bucket key switched tok_h → doc_id (writer change, FIXTURES rule)
-    return os.path.join(ST.store_root(), "spark_graft_posting_store_v2")
+    return os.path.join(ST.store_root(), POSTING_FAMILY)
 
 
 def _publish_bucketed_tf(
-    spark: SparkSession, name: str, path: str, build_tf
+    spark: SparkSession, path: str, build_tf
 ) -> DataFrame:
     """Publish a (doc_id, tok_h, c) posting table bucketed+sorted by
     doc_id under the store contract (atomic temp-dir publish, validated
-    adoption) and register it as a bucketed catalog table. `build_tf`
-    is a thunk returning the DataFrame to materialize — called only
-    when this process actually builds (an adopting app pays catalog
-    DDL, never the tf lineage)."""
+    adoption) and register it as a bucketed catalog table named after
+    the store key. `build_tf` is a thunk returning the DataFrame to
+    materialize — called only when this process actually builds (an
+    adopting app pays catalog DDL, never the tf lineage)."""
+    name = f"doc_tf_{os.path.basename(path)}"
     if spark.catalog.tableExists(name):
         return spark.table(name)
 
@@ -185,8 +189,9 @@ def _publish_bucketed_tf(
 def doc_tf_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (doc_id, tok_h, c) posting table as a STORAGE artifact,
     built once per corpus version (store contract: see FIXTURES.md)."""
-    tag, n_docs, fp = ST.corpus_key(sf_dir, "documents")
-    key = f"{tag}_{n_docs}_{fp}_{POSTING_BUCKETS}"
+    path = ST.corpus_path(
+        POSTING_FAMILY, sf_dir, "documents", f"_{POSTING_BUCKETS}"
+    )
 
     def build_tf() -> DataFrame:
         docs = io.load_table(spark, sf_dir, "documents").select(
@@ -194,12 +199,7 @@ def doc_tf_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return _tf_all(docs, "doc_id", TX.tokens(F.lower(F.col("text"))))
 
-    return _publish_bucketed_tf(
-        spark,
-        f"doc_tf_{key}",
-        os.path.join(posting_store_root(), key),
-        build_tf,
-    )
+    return _publish_bucketed_tf(spark, path, build_tf)
 
 
 @register(
@@ -378,10 +378,11 @@ def posting_base_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     cohort arrived. Published under its own fingerprint-keyed
     directory (the cohort spec rides the key, so it can never be
     confused with the full-corpus table)."""
-    tag, n_docs, fp = ST.corpus_key(sf_dir, "documents")
-    key = (
-        f"{tag}_{n_docs}_{fp}_{POSTING_BUCKETS}"
-        f"_base{COMPACT_MOD}x{COMPACT_REM}"
+    path = ST.corpus_path(
+        POSTING_FAMILY,
+        sf_dir,
+        "documents",
+        f"_{POSTING_BUCKETS}_base{COMPACT_MOD}x{COMPACT_REM}",
     )
 
     def build_tf() -> DataFrame:
@@ -392,12 +393,7 @@ def posting_base_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return _tf_all(docs, "doc_id", TX.tokens(F.lower(F.col("text"))))
 
-    return _publish_bucketed_tf(
-        spark,
-        f"doc_tf_{key}",
-        os.path.join(posting_store_root(), key),
-        build_tf,
-    )
+    return _publish_bucketed_tf(spark, path, build_tf)
 
 
 def compact_posting_build_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -456,13 +452,11 @@ def q_posting_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit, auditable artifact commit. Periodic leveled compaction
     bounds the base-rewrite amplification; the read path between
     commits is q_posting_delta_merge."""
-    tag, n_docs, fp = ST.corpus_key(sf_dir, "documents")
-    key = f"{tag}_{n_docs}_{fp}_{POSTING_BUCKETS}_compacted"
+    path = ST.corpus_path(
+        POSTING_FAMILY, sf_dir, "documents", f"_{POSTING_BUCKETS}_compacted"
+    )
     compacted = _publish_bucketed_tf(
-        spark,
-        f"doc_tf_{key}",
-        os.path.join(posting_store_root(), key),
-        lambda: compact_posting_build_tf(spark, sf_dir),
+        spark, path, lambda: compact_posting_build_tf(spark, sf_dir)
     )
     return _posting_audit(compacted)
 

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import io
+from .. import store as ST
 from ..registry import register
 from ..substrates import cached_substrates
 
@@ -883,19 +884,23 @@ def q_cdc_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import mor as MOR
 
     c = io.load_table(spark, sf_dir, "customer")
-    root = f"/tmp/spark_graft_mor_{io.fixture_tag(sf_dir, 'customer')}_v1"
-    marker = os.path.join(root, ".log_complete")
-    if not os.path.exists(marker):
-        # one OVERWRITTEN directory per commit (never a shared-dir
-        # append): a crash mid-loop leaves directories a rerun simply
-        # rewrites, so duplicate (key, seq) rows cannot accrete — the
-        # same replay-safety rule as the streaming twins' versioning
-        for seq, batch in enumerate(cdc_change_batches(c), start=1):
-            MOR.stamp_batch(batch, seq).write.mode("overwrite").parquet(
-                os.path.join(root, "log", f"batch_{seq}")
+    root = ST.corpus_path("spark_graft_mor_v1", sf_dir, "customer")
+    batches = cdc_change_batches(c)
+
+    def build(tmp: str) -> None:
+        for seq, batch in enumerate(batches, start=1):
+            MOR.stamp_batch(batch, seq).write.parquet(
+                os.path.join(tmp, f"batch_{seq}")
             )
-        open(marker, "w").close()
-    log = spark.read.parquet(os.path.join(root, "log", "batch_*"))
+
+    ST.publish(
+        root,
+        build,
+        validate=lambda p: ST.has_success(
+            p, *(f"batch_{seq}" for seq in range(1, len(batches) + 1))
+        ),
+    )
+    log = spark.read.parquet(os.path.join(root, "batch_*"))
     return MOR.resolve(c, log, key="c_custkey")
 
 

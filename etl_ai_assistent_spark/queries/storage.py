@@ -3,12 +3,12 @@ round-trips — driver-checkable proofs for the table-maintenance operator
 (operators/compaction.py) and the K1/K2/K5-family sinks (io.py) that
 were previously covered by pytest only.
 
-Both queries follow the fixture pattern of queries/docx.py: a bounded,
-idempotent /tmp materialization keyed on the source mtime+size tag,
-then a fully declarative read-back whose values a DuckDB oracle derives
-from the ORIGINAL parquet tables. Any loss anywhere in the write→read
-chain (type mangling, quoting, timestamp formatting, footer statistics)
-breaks the value hash.
+Both queries follow the fixture pattern of queries/docx.py: a bounded
+materialization published under the store contract (store.corpus_path
+key, atomic store.publish), then a fully declarative read-back whose
+values a DuckDB oracle derives from the ORIGINAL parquet tables. Any
+loss anywhere in the write→read chain (type mangling, quoting,
+timestamp formatting, footer statistics) breaks the value hash.
 """
 
 from __future__ import annotations
@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import io
+from .. import store as ST
 from ..operators import compaction as CP
 from ..registry import register
 
@@ -35,14 +36,15 @@ _TS_OPTS = {"timestampFormat": TS_FMT, "timestampNTZFormat": TS_FMT}
 
 
 def _compacted_orders_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per sf) the fixed-width compacted rewrite of
-    the orders table on o_orderkey. partitionBy's _SUCCESS marker plus
-    the row count in the dir name make the fixture idempotent and
-    regeneration-safe."""
-    o = io.load_table(spark, sf_dir, "orders")
-    out = f"/tmp/spark_graft_compact_{io.fixture_tag(sf_dir, 'orders')}"
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        CP.compact_fixed_width(o, out, "o_orderkey", N_FILES)
+    """Publish (once per orders version) the fixed-width compacted
+    rewrite of the orders table on o_orderkey."""
+    out = ST.corpus_path("spark_graft_compact_v1", sf_dir, "orders")
+
+    def build(tmp: str) -> None:
+        o = io.load_table(spark, sf_dir, "orders")
+        CP.compact_fixed_width(o, tmp, "o_orderkey", N_FILES)
+
+    ST.publish(out, build, validate=ST.has_success)
     return out
 
 
@@ -110,23 +112,28 @@ def q_compaction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sink_rt_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per sf) the CSV/JSON/ORC sink outputs of a
-    deterministic orders slice (bigint, varchar, double, timestamp —
-    the four type classes the text formats can mangle)."""
-    o = io.load_table(spark, sf_dir, "orders")
-    out = f"/tmp/spark_graft_sinkrt_{io.fixture_tag(sf_dir, 'orders')}"
-    slice_df = o.filter(F.col("o_orderkey") < 200).select(
-        "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
+    """Publish (once per orders version) the CSV/JSON/ORC sink outputs
+    of a deterministic orders slice (bigint, varchar, double, timestamp
+    — the four type classes the text formats can mangle)."""
+    out = ST.corpus_path("spark_graft_sinkrt_v1", sf_dir, "orders")
+
+    def build(tmp: str) -> None:
+        slice_df = (
+            io.load_table(spark, sf_dir, "orders")
+            .filter(F.col("o_orderkey") < 200)
+            .select(
+                "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
+            )
+        )
+        io.write_csv(slice_df, os.path.join(tmp, "csv"), **_TS_OPTS)
+        io.write_json(slice_df, os.path.join(tmp, "json"), **_TS_OPTS)
+        io.write_orc(slice_df, os.path.join(tmp, "orc"))
+
+    ST.publish(
+        out,
+        build,
+        validate=lambda p: ST.has_success(p, "csv", "json", "orc"),
     )
-    specs = {
-        "csv": lambda p: io.write_csv(slice_df, p, **_TS_OPTS),
-        "json": lambda p: io.write_json(slice_df, p, **_TS_OPTS),
-        "orc": lambda p: io.write_orc(slice_df, p),
-    }
-    for fmt, write in specs.items():
-        p = os.path.join(out, fmt)
-        if not os.path.exists(os.path.join(p, "_SUCCESS")):
-            write(p)
     return out
 
 
@@ -191,9 +198,10 @@ def _corrupt_json_fixture(spark: SparkSession, sf_dir: str) -> str:
     """JSON-lines fixture with every {CORRUPT_EVERY}th record truncated
     mid-object — the deterministic bad-feed twin of the S5 JSON source.
     Written distributed (one map over documents, text sink)."""
-    docs = io.load_table(spark, sf_dir, "documents")
-    out = f"/tmp/spark_graft_corrupt_{io.fixture_tag(sf_dir, 'documents')}"
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    out = ST.corpus_path("spark_graft_corrupt_v1", sf_dir, "documents")
+
+    def build(tmp: str) -> None:
+        docs = io.load_table(spark, sf_dir, "documents")
         line = F.concat(
             F.lit('{"doc_id": '),
             F.col("doc_id").cast("string"),
@@ -206,11 +214,9 @@ def _corrupt_json_fixture(spark: SparkSession, sf_dir: str) -> str:
             F.col("doc_id") % CORRUPT_EVERY == 0,
             F.substring(line, 1, 11),
         ).otherwise(line)
-        (
-            docs.select(corrupted.alias("value"))
-            .write.mode("overwrite")
-            .text(out)
-        )
+        docs.select(corrupted.alias("value")).write.text(tmp)
+
+    ST.publish(out, build, validate=ST.has_success)
     return out
 
 
@@ -267,16 +273,18 @@ def _evolved_parquet_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Two parquet batches with evolved schemas: batch v1 carries
     (doc_id, n_chars); batch v2 (the later writer version) adds a
     `lang` column. The split is doc_id parity — deterministic."""
-    docs = io.load_table(spark, sf_dir, "documents")
-    out = f"/tmp/spark_graft_evolve_{io.fixture_tag(sf_dir, 'documents')}"
-    if not os.path.exists(os.path.join(out, ".complete")):
+    out = ST.corpus_path("spark_graft_evolve_v1", sf_dir, "documents")
+
+    def build(tmp: str) -> None:
+        docs = io.load_table(spark, sf_dir, "documents")
         v1 = docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "n_chars")
         v2 = docs.filter(F.col("doc_id") % 2 == 1).select(
             "doc_id", "n_chars", "lang"
         )
-        v1.write.mode("overwrite").parquet(os.path.join(out, "b1"))
-        v2.write.mode("overwrite").parquet(os.path.join(out, "b2"))
-        open(os.path.join(out, ".complete"), "w").close()
+        v1.write.parquet(os.path.join(tmp, "b1"))
+        v2.write.parquet(os.path.join(tmp, "b2"))
+
+    ST.publish(out, build, validate=lambda p: ST.has_success(p, "b1", "b2"))
     return out
 
 
@@ -327,12 +335,17 @@ _Z_SQL = _z_value_sql("o_custkey", "o_orderkey", Z_BITS)
 def _zordered_orders_dir(spark: SparkSession, sf_dir: str) -> str:
     from ..operators import zorder as ZO
 
-    o = io.load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
-    out = f"/tmp/spark_graft_zorder_{io.fixture_tag(sf_dir, 'orders')}"
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        ZO.write_zordered(
-            o, out, "o_custkey", "o_orderkey", n_files=Z_FILES, bits=Z_BITS
+    out = ST.corpus_path("spark_graft_zorder_v1", sf_dir, "orders")
+
+    def build(tmp: str) -> None:
+        o = io.load_table(spark, sf_dir, "orders").select(
+            "o_custkey", "o_orderkey"
         )
+        ZO.write_zordered(
+            o, tmp, "o_custkey", "o_orderkey", n_files=Z_FILES, bits=Z_BITS
+        )
+
+    ST.publish(out, build, validate=ST.has_success)
     return out
 
 

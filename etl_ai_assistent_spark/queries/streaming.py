@@ -15,12 +15,17 @@ Streaming-specific constraints shape the designs:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import io
+from .. import store as ST
 from ..registry import register
 from ..streaming import pipeline as SP
 from .relational import CDC_MERGE_ORACLE as _CDC_ORACLE
+from .relational import LATE_MOD, cdc_change_batches
 from .text_etl import CHUNK_SIZE, OVERLAP, STRIDE
 
 GAP_US = 1_800_000_000  # 30 minutes
@@ -294,31 +299,92 @@ _CDC_SCHEMA = (
 )
 
 
+_CDC_BATCHES = 3  # update, delete, insert: one file, one micro-batch each
+
+
 def _cdc_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Three single-file change batches (update / delete / insert — the
     SAME deterministic batches as q_cdc_merge, via the shared
-    relational.cdc_change_batches builder). Keys are DISJOINT across
-    batches, so the final maintained snapshot is independent of
-    micro-batch arrival order — which is what lets the shared batch
-    oracle verify a streaming run."""
-    import os
+    relational.cdc_change_batches builder), published as one landing
+    dir. Keys are DISJOINT across batches, so the final maintained
+    snapshot is independent of micro-batch arrival order — which is
+    what lets the shared batch oracle verify a streaming run. The
+    batches are appended inside the build's temp dir, so a build that
+    dies mid-loop is discarded whole and never appended to again."""
+    path = ST.corpus_path("spark_graft_cdc_v1", sf_dir, "customer")
 
-    from .. import io
-    from .relational import cdc_change_batches
+    def build(tmp: str) -> None:
+        c = io.load_table(spark, sf_dir, "customer")
+        for batch in cdc_change_batches(c):
+            batch.coalesce(1).write.mode("append").parquet(tmp)
 
-    c = io.load_table(spark, sf_dir, "customer")
-    # v2: insert keys moved beyond every SF's key range (custkey + 1e8)
-    # so batches stay key-disjoint at any scale factor; keyed on the
-    # customer parquet mtime+size so regenerated testdata rebuilds it
-    root = f"/tmp/spark_graft_cdc_{io.fixture_tag(sf_dir, 'customer')}_v2"
-    out = os.path.join(root, "changes")
-    done = os.path.join(root, ".changes_complete")
-    if os.path.exists(done):
-        return root
-    for batch in cdc_change_batches(c):
-        batch.coalesce(1).write.mode("append").parquet(out)
-    open(done, "w").close()
-    return root
+    ST.publish(
+        path, build, validate=lambda p: ST.parquet_files(p) == _CDC_BATCHES
+    )
+    return path
+
+
+def _drain_foreach(stream: DataFrame, apply_batch, ckpt: str) -> None:
+    """Run `stream` through foreachBatch(apply_batch), checkpointed at
+    `ckpt`, until every available input is processed."""
+    q = (
+        stream.writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def _cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The CDC landing dir as a file stream, one batch per micro-batch."""
+    return (
+        spark.readStream.schema(_CDC_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(_cdc_fixture(spark, sf_dir))
+    )
+
+
+def _cow_chain(spark: SparkSession, sf_dir: str) -> str:
+    """Publish the CoW snapshot chain snap_v0..snap_v{_CDC_BATCHES}
+    that draining the CDC stream commits: snap_v0 is the customer
+    table, and micro-batch b reads snap_v{b}, merges its batch and
+    writes snap_v{b+1}. The whole chain is one store artifact."""
+    from ..operators.merge import merge_apply
+
+    path = ST.corpus_path("spark_graft_cdc_cow_v1", sf_dir, "customer")
+
+    def build(tmp: str) -> None:
+        io.load_table(spark, sf_dir, "customer").write.parquet(
+            os.path.join(tmp, "snap_v0")
+        )
+
+        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+            # Version is a pure function of the deterministic batch id:
+            # batch b reads committed snap_v{b} and OVERWRITES snap_v{b+1}.
+            # A checkpoint replay after a committed snapshot (crash between
+            # snapshot commit and checkpoint commit) therefore rewrites its
+            # own version instead of stacking a duplicate apply — replay
+            # idempotence holds for ANY change batch, not just key-disjoint
+            # full-row-image ones.
+            cur = spark.read.parquet(os.path.join(tmp, f"snap_v{batch_id}"))
+            merged = merge_apply(cur, batch_df, key="c_custkey")
+            merged.write.mode("overwrite").parquet(
+                os.path.join(tmp, f"snap_v{batch_id + 1}")
+            )
+
+        _drain_foreach(
+            _cdc_stream(spark, sf_dir), apply_batch, os.path.join(tmp, "ckpt")
+        )
+
+    ST.publish(
+        path,
+        build,
+        validate=lambda p: ST.has_success(p, f"snap_v{_CDC_BATCHES}"),
+    )
+    return path
 
 
 @register("q_stream_cdc_merge", oracle=_CDC_ORACLE)
@@ -338,67 +404,8 @@ def q_stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     (AQE broadcasts the batch side); checkpointed offsets make replays
     exactly-once at the snapshot level (a replayed batch rewrites the
     same version)."""
-    import os
-
-    from .. import io
-    from ..operators.merge import merge_apply
-
-    root = _cdc_fixture(spark, sf_dir)
-    final_marker = os.path.join(root, ".snap_final")
-
-    if not os.path.exists(final_marker):
-        snap0 = os.path.join(root, "snap_v0")
-        if not os.path.exists(os.path.join(snap0, "_SUCCESS")):
-            io.load_table(spark, sf_dir, "customer").write.mode(
-                "overwrite"
-            ).parquet(snap0)
-
-        def committed_versions() -> list:
-            # only _SUCCESS-committed snapshots count: a crash mid-write
-            # leaves a partial snap_v{n+1} dir that a checkpoint REPLAY
-            # must overwrite, not read — replay idempotence depends on
-            # resolving "latest" to the last COMMITTED version
-            return sorted(
-                int(d.rsplit("_v", 1)[1])
-                for d in os.listdir(root)
-                if d.startswith("snap_v")
-                and os.path.exists(os.path.join(root, d, "_SUCCESS"))
-            )
-
-        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-            # Version is a pure function of the deterministic batch id:
-            # batch b reads committed snap_v{b} and OVERWRITES snap_v{b+1}.
-            # A checkpoint replay after a committed snapshot (crash between
-            # snapshot commit and checkpoint commit) therefore rewrites its
-            # own version instead of stacking a duplicate apply — replay
-            # idempotence holds for ANY change batch, not just key-disjoint
-            # full-row-image ones.
-            cur = spark.read.parquet(os.path.join(root, f"snap_v{batch_id}"))
-            merged = merge_apply(cur, batch_df, key="c_custkey")
-            merged.write.mode("overwrite").parquet(
-                os.path.join(root, f"snap_v{batch_id + 1}")
-            )
-
-        stream = (
-            spark.readStream.schema(_CDC_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(root, "changes"))
-        )
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        latest = committed_versions()[-1]
-        with open(final_marker, "w") as f:
-            f.write(str(latest))
-
-    latest = int(open(final_marker).read())
-    return spark.read.parquet(os.path.join(root, f"snap_v{latest}"))
+    chain = _cow_chain(spark, sf_dir)
+    return spark.read.parquet(os.path.join(chain, f"snap_v{_CDC_BATCHES}"))
 
 
 @register("q_stream_cdc_mor", oracle=_CDC_ORACLE)
@@ -422,38 +429,27 @@ def q_stream_cdc_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches MoR is the only affordable write path, paying instead one
     keyed shuffle over base ∪ log per read (log kept bounded by
     mor.compact)."""
-    import os
-
-    from .. import io
     from ..operators import mor as MOR
 
-    root = _cdc_fixture(spark, sf_dir)
-    log_root = os.path.join(root, "mor_log")
-    done = os.path.join(root, ".mor_log_complete")
+    log_root = ST.corpus_path("spark_graft_cdc_mor_log_v1", sf_dir, "customer")
 
-    if not os.path.exists(done):
-
+    def build(tmp: str) -> None:
         def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
             MOR.stamp_batch(batch_df, batch_id + 1).write.mode(
                 "overwrite"
-            ).parquet(os.path.join(log_root, f"batch_{batch_id}"))
+            ).parquet(os.path.join(tmp, f"batch_{batch_id}"))
 
-        stream = (
-            spark.readStream.schema(_CDC_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(root, "changes"))
+        _drain_foreach(
+            _cdc_stream(spark, sf_dir), apply_batch, os.path.join(tmp, "ckpt")
         )
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", os.path.join(root, "mor_ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        open(done, "w").close()
 
+    ST.publish(
+        log_root,
+        build,
+        validate=lambda p: ST.has_success(
+            p, *(f"batch_{b}" for b in range(_CDC_BATCHES))
+        ),
+    )
     log = spark.read.parquet(os.path.join(log_root, "batch_*"))
     base = io.load_table(spark, sf_dir, "customer")
     return MOR.resolve(base, log, key="c_custkey")
@@ -497,10 +493,8 @@ def q_snapshot_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     data pages, no Spark job beyond the fixture build."""
     from ..operators import retention as RT
 
-    # materialize (idempotently) the CoW fixture this plan audits
-    q_stream_cdc_merge(spark, sf_dir)
-    root = _cdc_fixture(spark, sf_dir)
-    plan = RT.retention_plan(RT.snapshot_versions(root), keep_last=2)
+    chain = _cow_chain(spark, sf_dir)
+    plan = RT.retention_plan(RT.snapshot_versions(chain), keep_last=2)
     return spark.createDataFrame(
         [(int(v), int(n), bool(k)) for v, n, k in plan],
         "version int, n_rows bigint, kept boolean",
@@ -561,23 +555,16 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained state's raw estimate is bit-equal to the BATCH sketch over
     the whole table (merge associativity), which is what the shared
     oracle construction checks, alongside the exact per-type distinct."""
-    import os
-
-    from .. import io
     from ..operators import sketch as SK
-    from ..streaming import pipeline as SP
 
-    tag = io.fixture_tag(sf_dir, "events")
-    root = f"/tmp/spark_graft_stream_hll_{tag}"
-    done = os.path.join(root, ".hll_complete")
+    root = ST.corpus_path("spark_graft_stream_hll_v1", sf_dir, "events")
     n_parts = 4
 
-    if not os.path.exists(done):
-
+    def build(tmp: str) -> None:
         def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
             regs_b = SK.hll_registers(batch_df, "user_id", ["event_type"])
-            prev_dir = os.path.join(root, f"reg_v{batch_id}")
-            if os.path.exists(os.path.join(prev_dir, "_SUCCESS")):
+            prev_dir = os.path.join(tmp, f"reg_v{batch_id}")
+            if ST.has_success(prev_dir):
                 prev = batch_df.sparkSession.read.parquet(prev_dir)
                 regs_b = (
                     prev.unionByName(regs_b)
@@ -585,22 +572,19 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .agg(F.max("max_rho").alias("max_rho"))
                 )
             regs_b.write.mode("overwrite").parquet(
-                os.path.join(root, f"reg_v{batch_id + 1}")
+                os.path.join(tmp, f"reg_v{batch_id + 1}")
             )
 
         stream = SP.read_events_stream_split(spark, sf_dir, parts=n_parts)
-        q = (
-            stream.select("user_id", "event_type")
-            .writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
+        _drain_foreach(
+            stream.select("user_id", "event_type"),
+            apply_batch,
+            os.path.join(tmp, "ckpt"),
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        open(done, "w").close()
 
+    ST.publish(
+        root, build, validate=lambda p: ST.has_success(p, f"reg_v{n_parts}")
+    )
     regs = spark.read.parquet(os.path.join(root, f"reg_v{n_parts}"))
     est = SK.hll_estimate(regs, ["event_type"])
     exact = (
@@ -619,43 +603,38 @@ _DJ_SCHEMA = "custkey bigint, rev_cents bigint"
 _DJ_BATCHES = 3
 
 
-def _delta_join_fixture(spark: SparkSession, sf_dir: str) -> str:
+def _dj_change_batches(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
     """The late-arriving fact batches of q_delta_join_view
-    (o_orderkey % LATE_MOD == 0) split into {_DJ_BATCHES} single-file
-    parquet batches by orderkey residue — each order lands in exactly
-    one batch, and the maintained view is a sum, so the drained result
-    is independent of micro-batch arrival order."""
-    import os
-
-    from .. import io
-    from .relational import LATE_MOD
-
-    root = f"/tmp/spark_graft_dj_{io.fixture_tag(sf_dir, 'orders')}_v1"
-    out = os.path.join(root, "changes")
-    done = os.path.join(root, ".changes_complete")
-    if os.path.exists(done):
-        return root
+    (o_orderkey % LATE_MOD == 0) split into {_DJ_BATCHES} batches by
+    orderkey residue — each order lands in exactly one batch, and the
+    maintained view is a sum, so the drained result is independent of
+    micro-batch arrival order."""
     o = io.load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % LATE_MOD == 0
     )
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
-    for i in range(_DJ_BATCHES):
-        (
-            o.filter(
-                F.expr(
-                    f"(o_orderkey div {LATE_MOD}) % {_DJ_BATCHES} = {i}"
-                )
-            )
-            .select(
-                F.col("o_custkey").alias("custkey"),
-                cents.alias("rev_cents"),
-            )
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(out)
-        )
-    open(done, "w").close()
-    return root
+    return [
+        o.filter(
+            F.expr(f"(o_orderkey div {LATE_MOD}) % {_DJ_BATCHES} = {i}")
+        ).select(F.col("o_custkey").alias("custkey"), cents.alias("rev_cents"))
+        for i in range(_DJ_BATCHES)
+    ]
+
+
+def _delta_join_fixture(spark: SparkSession, sf_dir: str) -> str:
+    """The late-order batches published as one landing dir of
+    {_DJ_BATCHES} single-file parquet batches, appended inside the
+    build's temp dir (a build that dies mid-loop is discarded whole)."""
+    path = ST.corpus_path("spark_graft_dj_v1", sf_dir, "orders")
+
+    def build(tmp: str) -> None:
+        for batch in _dj_change_batches(spark, sf_dir):
+            batch.coalesce(1).write.mode("append").parquet(tmp)
+
+    ST.publish(
+        path, build, validate=lambda p: ST.parquet_files(p) == _DJ_BATCHES
+    )
+    return path
 
 
 @register(
@@ -691,45 +670,35 @@ def q_stream_delta_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per micro-batch one batch×dimension equi-join (batch side
     broadcasts) + a groups-sized rewrite; the fact table is never
     rescanned after the initial view build."""
-    import os
+    from ..operators.incremental import delta_join, empty_delta
 
-    from .. import io
-    from ..operators.incremental import delta_join
-    from .relational import LATE_MOD
-
-    root = _delta_join_fixture(spark, sf_dir)
-    final_marker = os.path.join(root, ".view_final")
-
+    changes = _delta_join_fixture(spark, sf_dir)
+    view = ST.corpus_path("spark_graft_dj_view_v1", sf_dir, "orders")
     cust = io.load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("custkey"), "c_nationkey"
     )
 
-    if not os.path.exists(final_marker):
-        view0_dir = os.path.join(root, "view_v0")
-        if not os.path.exists(os.path.join(view0_dir, "_SUCCESS")):
-            cents = F.floor(
-                F.col("o_totalprice") * 100 + F.lit(0.5)
-            ).cast("bigint")
-            base_a = (
-                io.load_table(spark, sf_dir, "orders")
-                .filter(F.col("o_orderkey") % LATE_MOD != 0)
-                .select(
-                    F.col("o_custkey").alias("custkey"),
-                    cents.alias("rev_cents"),
-                )
+    def build(tmp: str) -> None:
+        cents = F.floor(
+            F.col("o_totalprice") * 100 + F.lit(0.5)
+        ).cast("bigint")
+        base_a = (
+            io.load_table(spark, sf_dir, "orders")
+            .filter(F.col("o_orderkey") % LATE_MOD != 0)
+            .select(
+                F.col("o_custkey").alias("custkey"),
+                cents.alias("rev_cents"),
             )
-            (
-                base_a.join(cust, "custkey")
-                .groupBy("c_nationkey")
-                .agg(
-                    F.count("*").cast("bigint").alias("n_orders"),
-                    F.sum("rev_cents").cast("bigint").alias("revenue_cents"),
-                )
-                .write.mode("overwrite")
-                .parquet(view0_dir)
+        )
+        (
+            base_a.join(cust, "custkey")
+            .groupBy("c_nationkey")
+            .agg(
+                F.count("*").cast("bigint").alias("n_orders"),
+                F.sum("rev_cents").cast("bigint").alias("revenue_cents"),
             )
-
-        from ..operators.incremental import empty_delta
+            .write.parquet(os.path.join(tmp, "view_v0"))
+        )
 
         empty_a = empty_delta(spark, _DJ_SCHEMA)
         empty_db = empty_delta(
@@ -745,9 +714,7 @@ def q_stream_delta_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("bigint")
                 .alias("dm"),
             )
-            cur = spark.read.parquet(
-                os.path.join(root, f"view_v{batch_id}")
-            )
+            cur = spark.read.parquet(os.path.join(tmp, f"view_v{batch_id}"))
             merged = cur.join(dvagg, "c_nationkey", "full_outer").select(
                 "c_nationkey",
                 (
@@ -764,36 +731,21 @@ def q_stream_delta_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("revenue_cents"),
             )
             merged.write.mode("overwrite").parquet(
-                os.path.join(root, f"view_v{batch_id + 1}")
+                os.path.join(tmp, f"view_v{batch_id + 1}")
             )
 
         stream = (
             spark.readStream.schema(_DJ_SCHEMA)
             .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(root, "changes"))
+            .parquet(changes)
         )
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        latest = max(
-            int(d.rsplit("_v", 1)[1])
-            for d in os.listdir(root)
-            if d.startswith("view_v")
-            and os.path.exists(os.path.join(root, d, "_SUCCESS"))
-        )
-        with open(final_marker, "w") as f:
-            f.write(str(latest))
+        _drain_foreach(stream, apply_batch, os.path.join(tmp, "ckpt"))
 
-    latest = int(open(final_marker).read())
-    return spark.read.parquet(
-        os.path.join(root, f"view_v{latest}")
-    ).filter(F.col("n_orders") > 0)
+    final = f"view_v{_DJ_BATCHES}"
+    ST.publish(view, build, validate=lambda p: ST.has_success(p, final))
+    return spark.read.parquet(os.path.join(view, final)).filter(
+        F.col("n_orders") > 0
+    )
 
 
 @register(
@@ -952,14 +904,7 @@ def q_stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays rewrite instead of double-count (and counts, unlike max,
     would NOT forgive a double-merge — the versioning is load-bearing
     here, proven by the same fixture the CDC tier uses)."""
-    import os
-
-    from .. import io
-    from ..streaming import pipeline as SP
-
-    tag = io.fixture_tag(sf_dir, "events")
-    root = f"/tmp/spark_graft_stream_quant_{tag}"
-    done = os.path.join(root, ".quant_complete")
+    root = ST.corpus_path("spark_graft_stream_quant_v1", sf_dir, "events")
     n_parts = 4
 
     cents = (
@@ -968,8 +913,7 @@ def q_stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents")
     )
 
-    if not os.path.exists(done):
-
+    def build(tmp: str) -> None:
         def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
             hist_b = (
                 batch_df.select("event_type", cents)
@@ -979,8 +923,8 @@ def q_stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .agg(F.count("*").cast("bigint").alias("cnt"))
             )
-            prev_dir = os.path.join(root, f"hist_v{batch_id}")
-            if os.path.exists(os.path.join(prev_dir, "_SUCCESS")):
+            prev_dir = os.path.join(tmp, f"hist_v{batch_id}")
+            if ST.has_success(prev_dir):
                 prev = batch_df.sparkSession.read.parquet(prev_dir)
                 hist_b = (
                     prev.unionByName(hist_b)
@@ -988,21 +932,19 @@ def q_stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .agg(F.sum("cnt").cast("bigint").alias("cnt"))
                 )
             hist_b.write.mode("overwrite").parquet(
-                os.path.join(root, f"hist_v{batch_id + 1}")
+                os.path.join(tmp, f"hist_v{batch_id + 1}")
             )
 
         stream = SP.read_events_stream_split(spark, sf_dir, parts=n_parts)
-        q = (
-            stream.select("event_type", "value")
-            .writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
+        _drain_foreach(
+            stream.select("event_type", "value"),
+            apply_batch,
+            os.path.join(tmp, "ckpt"),
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        open(done, "w").close()
+
+    ST.publish(
+        root, build, validate=lambda p: ST.has_success(p, f"hist_v{n_parts}")
+    )
 
     from pyspark.sql import Window
 
@@ -1162,10 +1104,8 @@ def q_stream_ann_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (so /tmp never grows monotonically — r10 verdict #3's 60 orphan
     uuid dirs), and stale pairs from dead sessions are vacuumed by
     store.gc_runs on the way in."""
-    import os
     import shutil
 
-    from .. import store as ST
     from ..operators import kmeans as KM
     from ..operators import pq as PQ
     from .clustering import (
@@ -1214,13 +1154,5 @@ def q_stream_ann_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per shuffle partition
         res.coalesce(1).write.mode("append").parquet(out)
 
-    q = (
-        probes.writeStream.foreachBatch(serve)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain_foreach(probes, serve, ckpt)
     return spark.read.parquet(out)

@@ -791,10 +791,11 @@ NEEDLES: dict[int, str] = {
 # honors SPARK_GRAFT_STORE_ROOT; _vN bumps when the writer changes
 # (FIXTURES.md rule — _v2: fingerprinted key + atomic publish).
 TRIGRAM_BUCKETS = 16
+TRIGRAM_FAMILY = "spark_graft_trigram_store_v2"
 
 
 def trigram_store_root() -> str:
-    return os.path.join(ST.store_root(), "spark_graft_trigram_store_v2")
+    return os.path.join(ST.store_root(), TRIGRAM_FAMILY)
 
 
 def _corpus_version(sf_dir: str) -> tuple[str, int, str]:
@@ -831,12 +832,12 @@ def trigram_posting_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     marker + a footer row count before the DDL registers the files."""
     import os
 
-    tag, n_docs, fp = _corpus_version(sf_dir)
-    key = f"{tag}_{n_docs}_{fp}_{TRIGRAM_BUCKETS}"
-    name = f"trigram_posting_{key}"
+    path = ST.corpus_path(
+        TRIGRAM_FAMILY, sf_dir, "documents", f"_{TRIGRAM_BUCKETS}"
+    )
+    name = f"trigram_posting_{os.path.basename(path)}"
     if spark.catalog.tableExists(name):
         return spark.table(name)
-    path = os.path.join(trigram_store_root(), key)
 
     def build(tmp: str) -> None:
         docs = io.load_table(spark, sf_dir, "documents").select(

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import io
+from .. import store as ST
 from ..functions import vector as V
 from ..operators import similarity
 from ..registry import register
@@ -365,22 +366,14 @@ def _lines_fixture(spark: SparkSession, sf_dir: str) -> str:
     line order across part files is irrelevant — every consumer
     deduplicates/aggregates order-insensitively (and so does the
     oracle's DISTINCT)."""
-    import os
+    path = ST.corpus_path("spark_graft_lines_v1", sf_dir, "documents")
 
-    # source mtime+size in the name: regenerated testdata under the
-    # same sf tag invalidates the cache even at an unchanged row count
-    path = f"/tmp/spark_graft_lines_{io.fixture_tag(sf_dir, 'documents')}_v2"
-    # _SUCCESS is Spark's own job-commit marker: a crash mid-write leaves
-    # no marker and the next run overwrites the partial output
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            io.load_table(spark, sf_dir, "documents")
-            .select(
-                F.trim(F.regexp_replace("text", "\n", " ")).alias("value")
-            )
-            .write.mode("overwrite")
-            .text(path)
-        )
+    def build(tmp: str) -> None:
+        io.load_table(spark, sf_dir, "documents").select(
+            F.trim(F.regexp_replace("text", "\n", " ")).alias("value")
+        ).write.text(tmp)
+
+    ST.publish(path, build, validate=ST.has_success)
     return path
 
 

@@ -1,10 +1,13 @@
-"""On-disk store contract for materialized infrastructure artifacts.
+"""On-disk store contract for every corpus-derived artifact.
 
 Operators that maintain physical design as infrastructure (the trigram
 posting store, bucketed join tables, ANN codebooks/codes — the pattern
 the reference delegates to Qdrant's persistent collections,
-scripts/services/qdrant_service.py:24-42) share one adoption contract,
-the hardened form of the FIXTURES.md "/tmp artifact" convention:
+scripts/services/qdrant_service.py:24-42) and the queries that
+materialize derived corpora (stream landing dirs, sink round-trips,
+the state a drained stream commits) share one contract: `corpus_path`
+decides where an artifact lives and `publish` decides when it is
+adopted (FIXTURES.md "Materialized artifacts"):
 
 - **Configurable root** (`SPARK_GRAFT_STORE_ROOT`, default `/tmp`): at
   100 TB the store root is an object-store prefix; locally it stays
@@ -32,6 +35,7 @@ the hardened form of the FIXTURES.md "/tmp artifact" convention:
 
 from __future__ import annotations
 
+import glob
 import os
 import re
 import shutil
@@ -69,6 +73,15 @@ def table_fingerprint(parquet_path: str) -> str:
     return fp[:12]
 
 
+def table_rows(sf_dir: str, table: str) -> int:
+    """Row count of one fixture table (DuckDB footer read, no Spark job)."""
+    [(n,)] = duckdb.sql(
+        "SELECT count(*) FROM read_parquet(?)",
+        params=[os.path.join(sf_dir, f"{table}.parquet")],
+    ).fetchall()
+    return int(n)
+
+
 def corpus_key(sf_dir: str, table: str) -> tuple[str, int, str]:
     """(sf tag, row count, content fingerprint) — the version key for
     stores derived from one fixture table. All three components go into
@@ -79,10 +92,29 @@ def corpus_key(sf_dir: str, table: str) -> tuple[str, int, str]:
         r"[^0-9A-Za-z_]", "_", os.path.basename(os.path.normpath(sf_dir))
     )
     path = os.path.join(sf_dir, f"{table}.parquet")
-    [(n,)] = duckdb.sql(
-        "SELECT count(*) FROM read_parquet(?)", params=[path]
-    ).fetchall()
-    return tag, int(n), table_fingerprint(path)
+    return tag, table_rows(sf_dir, table), table_fingerprint(path)
+
+
+def corpus_path(
+    family: str,
+    sf_dir: str,
+    table: str,
+    suffix: str = "",
+    *,
+    name_table: bool = False,
+) -> str:
+    """Where the `family` artifact derived from `sf_dir`'s `table`
+    lives: `<store_root>/<family>/<tag>_<n>_<fp><suffix>`, the three
+    parts of corpus_key. `suffix` carries build parameters that ride
+    the key (bucket counts, split widths, cohort specs). A family that
+    holds artifacts of several source tables sets `name_table`, which
+    puts the table after the tag: `<tag>_<table>_<n>_<fp><suffix>`.
+    Every corpus-derived artifact is placed here and built through
+    `publish`; the family name carries a `_vN` that bumps when its
+    writer changes."""
+    tag, n, fp = corpus_key(sf_dir, table)
+    label = f"{tag}_{table}" if name_table else tag
+    return os.path.join(store_root(), family, f"{label}_{n}_{fp}{suffix}")
 
 
 def publish(
@@ -245,10 +277,19 @@ def _newest_mtime(path: str) -> float:
     return newest
 
 
-def has_success(path: str) -> bool:
+def has_success(path: str, *subdirs: str) -> bool:
     """The Spark `_SUCCESS` completion marker check used by validators
-    (one per written parquet directory inside a store)."""
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
+    (one per written parquet directory inside a store): on `path`
+    itself, or on each of the named `subdirs` under it."""
+    dirs = [os.path.join(path, d) for d in subdirs] or [path]
+    return all(os.path.exists(os.path.join(d, "_SUCCESS")) for d in dirs)
+
+
+def parquet_files(path: str) -> int:
+    """Number of parquet files directly under `path`: the adoption
+    probe for landing dirs a file stream consumes one file per
+    micro-batch."""
+    return len(glob.glob(os.path.join(path, "*.parquet")))
 
 
 def parquet_rows(path: str) -> int:

@@ -45,10 +45,7 @@ def user_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch job that maintains it runs once per events version; live
     traffic adopts the files. Money is integer cents
     (floor(v*100 + 0.5)) so enrichment sums are exact across engines."""
-    tag, n_rows, fp = ST.corpus_key(sf_dir, "events")
-    path = os.path.join(
-        ST.store_root(), "spark_graft_profile_store_v1", f"{tag}_{n_rows}_{fp}"
-    )
+    path = ST.corpus_path("spark_graft_profile_store_v1", sf_dir, "events")
 
     def build(tmp: str) -> None:
         ev = io.load_table(spark, sf_dir, "events")
@@ -90,11 +87,11 @@ def profile_base_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     history MINUS the arriving batch (event_id % 10 == 7) — yesterday's
     published feature store. Its own fingerprint-keyed version under
     the profile family (the batch spec rides the key)."""
-    tag, n_rows, fp = ST.corpus_key(sf_dir, "events")
-    path = os.path.join(
-        ST.store_root(),
+    path = ST.corpus_path(
         "spark_graft_profile_store_v1",
-        f"{tag}_{n_rows}_{fp}_base{PROFILE_BATCH_MOD}x{PROFILE_BATCH_REM}",
+        sf_dir,
+        "events",
+        f"_base{PROFILE_BATCH_MOD}x{PROFILE_BATCH_REM}",
     )
 
     def build(tmp: str) -> None:
@@ -132,16 +129,10 @@ def maintain_profile_table(spark: SparkSession, sf_dir: str) -> str:
     the O(|batch|+|groups|) claim). Returns the published path."""
     from ..operators.incremental import incremental_group_sums
 
-    tag, n_rows, fp = ST.corpus_key(sf_dir, "events")
-    path = os.path.join(
-        ST.store_root(),
-        # v2: insert-only maintenance plan (v1 artifacts are value-
-        # identical but were built by the history-scanning plan; the
-        # family bump makes the published artifact the product of the
-        # code that claims it)
-        "spark_graft_profile_maint_v2",
-        f"{tag}_{n_rows}_{fp}",
-    )
+    # v2: insert-only maintenance plan (v1 artifacts are value-identical
+    # but were built by the history-scanning plan; the family bump makes
+    # the published artifact the product of the code that claims it)
+    path = ST.corpus_path("spark_graft_profile_maint_v2", sf_dir, "events")
 
     def build(tmp: str) -> None:
         base_prof = profile_base_table(spark, sf_dir).select(
@@ -326,60 +317,47 @@ def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     )
 
 
-def _fixture_tag(sf_dir: str) -> str:
-    """Cache key for /tmp event fixtures: sf name + source parquet
-    mtime/size, so driver-regenerated testdata never pairs with a stale
-    pre-split fixture built from the previous data."""
-    base = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    return f"{base}_{int(st.st_mtime)}_{st.st_size}"
+def _write_mod_split(
+    t, key: str, parts: int, dest: str, copies: int = 1
+) -> None:
+    """Write pyarrow table `t` split by `key % parts` into
+    `dest/part_{i}.parquet`, one file per residue. With `copies` > 1
+    each split is written again as part_{i + parts}, part_{i + 2·parts},
+    … (the at-least-once replay shape), copies of a split back to back."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
 
-
-def _publish_fixture(out: str, build) -> str:
-    """Build-or-adopt a /tmp landing-dir fixture under the store
-    contract (ADVICE r10: the old build-in-place + marker-last pattern
-    let two racing processes interleave writes to the same part files,
-    and a winner's stream could read a torn parquet). `build(tmp)`
-    writes the COMPLETE fixture (parts + `_complete` marker) into a
-    unique temp dir; publication is one atomic os.rename, and a lost
-    race adopts the winner — exactly store.publish's semantics, reused
-    here. Pre-contract dirs already on disk validate by their marker
-    and are adopted unchanged."""
-    ST.publish(
-        out,
-        build,
-        validate=lambda p: os.path.exists(os.path.join(p, "_complete")),
-    )
-    return out
+    os.makedirs(dest, exist_ok=True)
+    part_key = [int(v) % parts for v in t.column(key).to_pylist()]
+    t2 = t.append_column("__part", pa.array(part_key, type=pa.int32()))
+    for i in range(parts):
+        sub = t2.filter(pc.equal(t2.column("__part"), i)).drop(["__part"])
+        for c in range(copies):
+            pq.write_table(
+                sub, os.path.join(dest, f"part_{i + c * parts}.parquet")
+            )
 
 
 def split_events_fixture(spark: SparkSession, sf_dir: str, parts: int = 4) -> str:
     """Split the single events parquet into `parts` files (by
-    event_id % parts — deterministic) under /tmp, so a
-    maxFilesPerTrigger=1 stream replays it as `parts` micro-batches:
-    real cross-batch state store traffic instead of a single batch.
-    The cache tag includes the source file's mtime+size so a regenerated
-    testdata file invalidates stale fixtures automatically."""
-    tag = _fixture_tag(sf_dir)
-    out = f"/tmp/spark_graft_events_split_{tag}_{parts}"
+    event_id % parts — deterministic), published under the store
+    contract, so a maxFilesPerTrigger=1 stream replays it as `parts`
+    micro-batches: real cross-batch state store traffic instead of a
+    single batch. Keyed by the events corpus_key, so regenerated
+    testdata gets a fresh landing dir."""
+    import pyarrow.parquet as pq
+
+    out = ST.corpus_path(
+        "spark_graft_events_split_v1", sf_dir, "events", f"_{parts}"
+    )
 
     def build(tmp: str) -> None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        os.makedirs(tmp, exist_ok=True)
         t = pq.read_table(os.path.join(sf_dir, "events.parquet"))
-        part_key = [int(v) % parts for v in t.column("event_id").to_pylist()]
-        t2 = t.append_column("__part", pa.array(part_key, type=pa.int32()))
-        for i in range(parts):
-            sub = t2.filter(pa.compute.equal(t2.column("__part"), i)).drop(
-                ["__part"]
-            )
-            pq.write_table(sub, os.path.join(tmp, f"part_{i}.parquet"))
-        open(os.path.join(tmp, "_complete"), "w").close()
+        _write_mod_split(t, "event_id", parts, tmp)
 
-    return _publish_fixture(out, build)
+    ST.publish(out, build, validate=lambda p: ST.parquet_files(p) == parts)
+    return out
 
 
 def read_events_stream_split(
@@ -402,33 +380,22 @@ def split_embeddings_fixture(
     spark: SparkSession, sf_dir: str, parts: int = 4
 ) -> str:
     """Split the embeddings parquet into `parts` files by
-    vec_id % parts (deterministic) under /tmp so a
-    maxFilesPerTrigger=1 stream replays it as `parts` micro-batches —
-    the probe-traffic landing dir for streaming ANN serving. Cache tag
-    includes the source mtime+size (regenerated testdata invalidates
-    stale fixtures)."""
-    base = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    tag = f"{base}_{int(st.st_mtime)}_{st.st_size}"
-    out = f"/tmp/spark_graft_emb_split_{tag}_{parts}"
+    vec_id % parts (deterministic), published under the store contract,
+    so a maxFilesPerTrigger=1 stream replays it as `parts`
+    micro-batches — the probe-traffic landing dir for streaming ANN
+    serving."""
+    import pyarrow.parquet as pq
+
+    out = ST.corpus_path(
+        "spark_graft_emb_split_v1", sf_dir, "embeddings", f"_{parts}"
+    )
 
     def build(tmp: str) -> None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+        t = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+        _write_mod_split(t, "vec_id", parts, tmp)
 
-        os.makedirs(tmp, exist_ok=True)
-        t = pq.read_table(src)
-        part_key = [int(v) % parts for v in t.column("vec_id").to_pylist()]
-        t2 = t.append_column("__part", pa.array(part_key, type=pa.int32()))
-        for i in range(parts):
-            sub = t2.filter(pa.compute.equal(t2.column("__part"), i)).drop(
-                ["__part"]
-            )
-            pq.write_table(sub, os.path.join(tmp, f"part_{i}.parquet"))
-        open(os.path.join(tmp, "_complete"), "w").close()
-
-    return _publish_fixture(out, build)
+    ST.publish(out, build, validate=lambda p: ST.parquet_files(p) == parts)
+    return out
 
 
 def read_embeddings_stream_split(
@@ -454,26 +421,16 @@ def dup_events_fixture(spark: SparkSession, sf_dir: str) -> str:
     maxFilesPerTrigger=1 every duplicate arrives in a LATER micro-batch
     than its original, so eliminating it requires dedup state that
     survives across batches — the at-least-once-upstream shape."""
-    tag = _fixture_tag(sf_dir)
-    out = f"/tmp/spark_graft_events_dup_{tag}"
+    import pyarrow.parquet as pq
+
+    out = ST.corpus_path("spark_graft_events_dup_v1", sf_dir, "events")
 
     def build(tmp: str) -> None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        os.makedirs(tmp, exist_ok=True)
         t = pq.read_table(os.path.join(sf_dir, "events.parquet"))
-        part_key = [int(v) % 2 for v in t.column("event_id").to_pylist()]
-        t2 = t.append_column("__part", pa.array(part_key, type=pa.int32()))
-        for i in range(2):
-            sub = t2.filter(pa.compute.equal(t2.column("__part"), i)).drop(
-                ["__part"]
-            )
-            pq.write_table(sub, os.path.join(tmp, f"part_{i}.parquet"))
-            pq.write_table(sub, os.path.join(tmp, f"part_{i + 2}.parquet"))
-        open(os.path.join(tmp, "_complete"), "w").close()
+        _write_mod_split(t, "event_id", 2, tmp, copies=2)
 
-    return _publish_fixture(out, build)
+    ST.publish(out, build, validate=lambda p: ST.parquet_files(p) == 4)
+    return out
 
 
 def read_events_stream_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -694,8 +651,9 @@ def heartbeat_split_events_fixture(
     forced strictly increasing because FileStreamSource orders pending
     files by modification time — the heartbeat MUST be the last
     micro-batch or everything after it would be dropped as late."""
-    tag = _fixture_tag(sf_dir)
-    out = f"/tmp/spark_graft_events_hb_{tag}_{parts}_v1"
+    out = ST.corpus_path(
+        "spark_graft_events_hb_v1", sf_dir, "events", f"_{parts}"
+    )
 
     def build(tmp: str) -> None:
         from datetime import timedelta
@@ -704,13 +662,8 @@ def heartbeat_split_events_fixture(
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        os.makedirs(tmp, exist_ok=True)
         t = pq.read_table(os.path.join(sf_dir, "events.parquet"))
-        part_key = [int(v) % parts for v in t.column("event_id").to_pylist()]
-        t2 = t.append_column("__part", pa.array(part_key, type=pa.int32()))
-        for i in range(parts):
-            sub = t2.filter(pc.equal(t2.column("__part"), i)).drop(["__part"])
-            pq.write_table(sub, os.path.join(tmp, f"part_{i}.parquet"))
+        _write_mod_split(t, "event_id", parts, tmp)
         hb_ts = pc.max(t.column("ts")).as_py() + timedelta(days=90)
         cols = []
         for field in t.schema:
@@ -740,9 +693,9 @@ def heartbeat_split_events_fixture(
             os.utime(p, (base + 10 * i, base + 10 * i))
         hb = os.path.join(tmp, f"part_{parts}_hb.parquet")
         os.utime(hb, (base + 10 * parts, base + 10 * parts))
-        open(os.path.join(tmp, "_complete"), "w").close()
 
-    return _publish_fixture(out, build)
+    ST.publish(out, build, validate=lambda p: ST.parquet_files(p) == parts + 1)
+    return out
 
 
 def read_events_stream_hb(
@@ -839,16 +792,13 @@ def late_events_fixture(spark: SparkSession, sf_dir: str) -> str:
     that state is evicted, so wave 2 REBUILDS the same hours from
     zero. File membership keys on (event_id, a fixed time cutoff) so
     both engines recompute it exactly."""
-    import os
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    tag = _fixture_tag(sf_dir)
-    out = f"/tmp/spark_graft_events_late_{tag}_v3"
-    marker = os.path.join(out, "_complete")
-    if not os.path.exists(marker):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    out = ST.corpus_path("spark_graft_events_late_v1", sf_dir, "events")
 
-        os.makedirs(out, exist_ok=True)
+    def build(tmp: str) -> None:
+        os.makedirs(tmp, exist_ok=True)
         t = pq.read_table(os.path.join(sf_dir, "events.parquet"))
         # plain-python masks (pyarrow.compute lacks mod)
         ids = t.column("event_id").to_pylist()
@@ -867,22 +817,21 @@ def late_events_fixture(spark: SparkSession, sf_dir: str) -> str:
         prev_mtime = None
         for w in (0, 1, 2):
             mask = pa.array([v == w for v in wave], type=pa.bool_())
-            path = os.path.join(out, f"part_{w}.parquet")
+            path = os.path.join(tmp, f"part_{w}.parquet")
             pq.write_table(t.filter(mask), path)
             st = os.stat(path)
             if prev_mtime is not None:
                 os.utime(path, (prev_mtime + 10, prev_mtime + 10))
                 st = os.stat(path)
             prev_mtime = st.st_mtime
-        open(marker, "w").close()
+
+    ST.publish(out, build, validate=lambda p: ST.parquet_files(p) == 3)
     return out
 
 
 def read_events_stream_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming scan over the late fixture, one file per micro-batch
     (2 batches: on-time bulk, then the weeks-late stragglers)."""
-    import os
-
     path = late_events_fixture(spark, sf_dir)
     schema = _events_stream_schema(spark, os.path.join(path, "part_0.parquet"))
     raw = (

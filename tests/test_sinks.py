@@ -280,24 +280,3 @@ def test_xml_sink_source_roundtrip(spark, tmp_path):
     assert got[2] == ("Methods & Results", ["x < y", "z"])  # escaped+restored
     assert 3 in got
 
-
-def test_fixture_tag_tracks_source_changes(tmp_path):
-    """io.fixture_tag must change when the source parquet is rewritten
-    (same row count, new bytes) — the stale-fixture guard every /tmp
-    materialization keys on."""
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from etl_ai_assistent_spark import io as IO
-
-    sf = str(tmp_path)
-    p = os.path.join(sf, "orders.parquet")
-    pq.write_table(pa.table({"k": [1, 2, 3]}), p)
-    t1 = IO.fixture_tag(sf, "orders")
-    time.sleep(1.1)  # ensure mtime moves even on 1s-resolution filesystems
-    pq.write_table(pa.table({"k": [4, 5, 6]}), p)  # same count, new data
-    t2 = IO.fixture_tag(sf, "orders")
-    assert t1 != t2
