@@ -29,6 +29,7 @@ integers, and hit@5 / MRR match exactly.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -155,8 +156,12 @@ def _publish_bucketed_tf(
     adoption) and register it as a bucketed catalog table named after
     the store key. `build_tf` is a thunk returning the DataFrame to
     materialize — called only when this process actually builds (an
-    adopting app pays catalog DDL, never the tf lineage)."""
-    name = f"doc_tf_{os.path.basename(path)}"
+    adopting app pays catalog DDL, never the tf lineage). The name
+    carries a hash of the family dir, so a session whose store root
+    changes publishes and registers the new root's table instead of
+    serving the old one."""
+    root_h = hashlib.md5(os.path.dirname(path).encode()).hexdigest()[:8]
+    name = f"doc_tf_{os.path.basename(path)}_{root_h}"
     if spark.catalog.tableExists(name):
         return spark.table(name)
 
@@ -186,12 +191,17 @@ def _publish_bucketed_tf(
     return spark.table(name)
 
 
+def posting_store_path(sf_dir: str) -> str:
+    """Where the posting store of `sf_dir`'s corpus is published."""
+    return ST.corpus_path(
+        POSTING_FAMILY, sf_dir, "documents", f"_{POSTING_BUCKETS}"
+    )
+
+
 def doc_tf_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (doc_id, tok_h, c) posting table as a STORAGE artifact,
     built once per corpus version (store contract: see FIXTURES.md)."""
-    path = ST.corpus_path(
-        POSTING_FAMILY, sf_dir, "documents", f"_{POSTING_BUCKETS}"
-    )
+    path = posting_store_path(sf_dir)
 
     def build_tf() -> DataFrame:
         docs = io.load_table(spark, sf_dir, "documents").select(
@@ -297,12 +307,17 @@ def _doc_probe_tf(
     doc_tf = cached_substrates(
         "rag_doc_tf", spark, sf_dir, lambda: doc_tf_table(spark, sf_dir)
     )
+    return doc_tf, _probe_tf(spark, sf_dir)
+
+
+def _probe_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(probe_id, tok_h, c) of the N_PROBES probes: tokens 3..12 of each
+    of the first N_PROBES documents."""
     docs = io.load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = TX.tokens(F.lower(F.col("text")))
-    probe_tf = _tf_all(
+    return _tf_all(
         docs.filter(F.col("doc_id") < N_PROBES), "probe_id", F.slice(toks, 3, 10)
     )
-    return doc_tf, probe_tf
 
 
 @register(
@@ -791,9 +806,26 @@ def q_rag_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # with S = 1e6. All factors are positive BIGINTs (floor == trunc on both
 # engines); the per-(probe,doc) score is an exact SUM of term integers,
-# so ranking is bit-deterministic. Magnitude check: S·(N+1)·44·tf·avgdl
-# ~ 8e14 at sf0.1 — bigint-safe; at web scale rescale S or widen to
-# DECIMAL(38,0).
+# so ranking is bit-deterministic.
+#
+# Everything but qtf is a function of the corpus version, so it is
+# published once per corpus as the BM25 IMPACT STORE: one row per
+# posting, (tok_h, doc_id, num, den) with
+#
+#   num = S * (N+1) * 44 * tf * avgdl
+#   den = (df+1) * (20*tf*avgdl + 6*avgdl + 18*dl)
+#
+# and a request's term score is (qtf * num) div den — the same integer
+# product regrouped before the one division, so scores and ranks are
+# bit-identical to the expanded formula the oracles compute.
+#
+# Magnitude bound: qtf * num = S·(N+1)·44·qtf·tf·avgdl must stay below
+# 2^63 ≈ 9.2e18, i.e. (N+1)·qtf·tf·avgdl < 2.1e11 at S = 1e6. At sf0.1
+# (N = 5000, avgdl = 54, tf ≤ 14, qtf ≤ 10) it is ~1.7e15. Past the
+# bound the BIGINT multiply fails with ARITHMETIC_OVERFLOW (ANSI mode,
+# the Spark 4 default): in the store build if num alone overflows, in
+# the request if qtf * num does. A score never wraps; at web scale
+# rescale S or widen to DECIMAL(38,0).
 BM25_SCALE = 1_000_000
 
 
@@ -843,9 +875,8 @@ def q_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic (rational k1/b folded into one bigint division per term;
     see the derivation above) so distributed partial-sum order cannot
     perturb ranks. Plan shape: the probe TF side broadcasts onto the
-    posting lists, document length and df attach by equi-join, and the
-    corpus stats (N, avgdl) ride a 1-row broadcast — the same bounded
-    join set as q_tfidf_retrieval with one extra doc-keyed join."""
+    published impact store, whose rows already carry every corpus
+    factor (df, dl, N, avgdl); one join, one sum, one rank window."""
     ranked = _bm25_ranked(spark, sf_dir)
     return ranked.filter(F.col("rank") <= TOP_K).select(
         "probe_id", "rank", "doc_id", "score_scaled"
@@ -858,58 +889,97 @@ def _bm25_ranked(
     tf_pair: "tuple[DataFrame, DataFrame] | None" = None,
 ) -> DataFrame:
     """(probe_id, doc_id, score_scaled, rank) — the full BM25 ranking,
-    shared by q_bm25_retrieval (top-5) and q_rag_fusion (depth-20).
-    `tf_pair` threads ONE shared posting index through multi-ranker
-    consumers (q_rag_fusion, q_hard_negatives) explicitly, instead of
-    leaning on CacheManager plan-equality to dedup two independently
-    persisted identical lineages (r7 verdict #4)."""
-    doc_tf, probe_tf = (
-        tf_pair if tf_pair is not None else _doc_probe_tf(spark, sf_dir)
+    shared by q_bm25_retrieval (top-5), q_rag_fusion (depth-20) and
+    q_hard_negatives. Scores come off the corpus's published impact
+    store (bm25_impact_view), so a request is the broadcast probe join,
+    one integer sum and the rank window. `tf_pair` is (doc_tf,
+    probe_tf) as the multi-ranker consumers thread it; only its
+    probe_tf is read here, its doc_tf is not (the impact store already
+    holds every corpus factor)."""
+    probe_tf = tf_pair[1] if tf_pair is not None else _probe_tf(spark, sf_dir)
+    view = cached_substrates(
+        "bm25_impact", spark, sf_dir, lambda: bm25_impact_view(spark, sf_dir)
     )
-    # r13: document lengths, corpus stats, and document frequencies are
-    # BM25 index artifacts (pure functions of the posting store; dl was
-    # additionally referenced twice per call — stats + the term join).
-    # Cached once per sf beside doc_tf, leaving the serve path as the
-    # broadcast probe join + score + top-k window.
-    def _build_bm25_stats():
-        dl = doc_tf.groupBy("doc_id").agg(
-            F.sum("c").cast("bigint").alias("dl")
-        )
-        stats = dl.agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.expr("sum(dl) div count(*)").cast("bigint").alias("avgdl"),
-        )
-        df_tbl = doc_tf.groupBy("tok_h").agg(
-            F.count("*").cast("bigint").alias("dfb")
-        )
-        return dl, stats, df_tbl
+    return bm25_rank(probe_tf, spark.table(view))
 
-    dl, stats, df_tbl = cached_substrates(
-        "bm25_stats", spark, sf_dir, _build_bm25_stats
-    )
-    term = (
-        F.broadcast(probe_tf.withColumnRenamed("c", "qtf"))
-        .join(doc_tf.withColumnRenamed("c", "tf"), "tok_h")
-        .join(df_tbl, "tok_h")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "probe_id",
-            "doc_id",
-            F.expr(
-                f"CAST(({BM25_SCALE} * (n_docs + 1) * 44 * qtf * tf * avgdl)"
-                " div ((dfb + 1) * (20 * tf * avgdl + 6 * avgdl + 18 * dl))"
-                " AS BIGINT)"
-            ).alias("ts"),
-        )
+
+def bm25_rank(probe_tf: DataFrame, impact: DataFrame) -> DataFrame:
+    """Rank every (probe, doc) pair sharing a term: the probe's
+    (probe_id, tok_h, c) broadcast onto the impact rows of its terms,
+    term scores (qtf * num) div den summed per pair, then row_number by
+    (score DESC, doc_id) per probe."""
+    term = F.broadcast(probe_tf.withColumnRenamed("c", "qtf")).join(
+        impact, "tok_h"
     )
     bm = term.groupBy("probe_id", "doc_id").agg(
-        F.sum("ts").cast("bigint").alias("score_scaled")
+        F.sum(F.expr("(qtf * num) div den")).cast("bigint").alias("score_scaled")
     )
     w = Window.partitionBy("probe_id").orderBy(
         F.desc("score_scaled"), F.asc("doc_id")
     )
     return bm.withColumn("rank", F.row_number().over(w).cast("int"))
+
+
+# _v1: (tok_h, doc_id, num, den) in BM25_IMPACT_FILES files
+BM25_IMPACT_FAMILY = "spark_graft_bm25_impact_v1"
+BM25_IMPACT_SCHEMA = "tok_h BIGINT, doc_id BIGINT, num BIGINT, den BIGINT"
+# Files per impact store, hash-split on doc_id, each sorted by tok_h. A
+# request's join runs one task per scan split and small files pack into
+# about one split per core, so the file count caps its parallelism;
+# each file also costs every request a footer read. Measured at
+# local[4]: one file range-split on tok_h (a skewed, low-cardinality
+# key here, the posting-store lesson above) ran q_bm25_retrieval at
+# sf0.1 in one task, 3.2 s against 1.4 s over the posting store's 32
+# buckets; 32 bucketed files cost every small retrieve request one task
+# per file, and its p90 rose from ~0.7 s to ~0.9 s; 8 files gave 1.5 s
+# at sf0.1 and a retrieve p90 within run-to-run spread of one file's.
+BM25_IMPACT_FILES = 8
+
+
+def bm25_impact_view(spark: SparkSession, sf_dir: str) -> str:
+    """Publish the BM25 impact store of `sf_dir`'s corpus (store
+    contract, keyed like the posting store it is built from) and
+    register it as a temp view; returns the view's name. Callers hold
+    the name in the substrate cache, so a request resolves the view —
+    file listing and schema included — without a footer read or a job
+    of its own."""
+    doc_tf = doc_tf_table(spark, sf_dir)  # the source: adopted or built first
+    n_postings = ST.parquet_rows(posting_store_path(sf_dir))
+    path = ST.corpus_path(BM25_IMPACT_FAMILY, sf_dir, "documents")
+
+    def build(tmp: str) -> None:
+        dl = doc_tf.groupBy("doc_id").agg(F.sum("c").cast("bigint").alias("dl"))
+        n_docs, total = dl.agg(F.count("*"), F.sum("dl")).first()
+        avgdl = total // n_docs
+        df = doc_tf.groupBy("tok_h").agg(F.count("*").cast("bigint").alias("df"))
+        (
+            doc_tf.join(df, "tok_h")
+            .join(dl, "doc_id")
+            .select(
+                "tok_h",
+                "doc_id",
+                F.expr(
+                    f"{BM25_SCALE}L * {n_docs + 1}L * 44L * c * {avgdl}L"
+                ).alias("num"),
+                F.expr(
+                    f"(df + 1) * (20L * c * {avgdl}L + {6 * avgdl}L + 18L * dl)"
+                ).alias("den"),
+            )
+            .repartition(BM25_IMPACT_FILES, "doc_id")
+            .sortWithinPartitions("tok_h", "doc_id")
+            .write.parquet(tmp)
+        )
+
+    ST.publish(
+        path,
+        build,
+        validate=lambda p: ST.has_success(p) and ST.parquet_rows(p) == n_postings,
+    )
+    name = f"bm25_impact_{os.path.basename(path)}"
+    spark.read.schema(BM25_IMPACT_SCHEMA).parquet(path).createOrReplaceTempView(
+        name
+    )
+    return name
 
 
 # --- LLM-judged per-row metrics (the RAGAS dataset scorer seam) ------------
@@ -1138,12 +1208,13 @@ def q_rag_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     fusion bit-identical across engines (the float 1/(k+r) would be,
     too, but the integer form needs no rounding discipline at all).
 
-    Scale: both input rankings come off the SAME persisted posting
-    index (_doc_probe_tf) — the fusion itself touches only
-    2·{RRF_DEPTH} rows per probe, so the combiner costs nothing
-    against the rankers it merges; rankers can be added by union
-    rather than schema change."""
-    tf_pair = _doc_probe_tf(spark, sf_dir)  # ONE index for both rankers
+    Scale: the TF-cosine ranking comes off the persisted posting index
+    (_doc_probe_tf), BM25 off the impact store built from that same
+    posting store, and both share one probe TF — the fusion itself
+    touches only 2·{RRF_DEPTH} rows per probe, so the combiner costs
+    nothing against the rankers it merges; rankers can be added by
+    union rather than schema change."""
+    tf_pair = _doc_probe_tf(spark, sf_dir)  # ONE probe TF for both rankers
     bm = (
         _bm25_ranked(spark, sf_dir, tf_pair=tf_pair)
         .filter(F.col("rank") <= RRF_DEPTH)
@@ -1234,16 +1305,14 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     entry per bench run, r11 verdict #2), candidates bounded to
     rank <= {HN_K + 1} before the per-probe re-rank, and the gold
     table is |probes| rows riding a broadcast join. Nothing here
-    touches the corpus beyond the posting-list joins the ranking
+    touches the corpus beyond the impact-store join the ranking
     already did."""
 
     full = cached_substrates(
         "bm25_full_ranking",
         spark,
         sf_dir,
-        lambda: _bm25_ranked(
-            spark, sf_dir, tf_pair=_doc_probe_tf(spark, sf_dir)
-        ),
+        lambda: _bm25_ranked(spark, sf_dir),
     )
     gold = (
         full.filter(F.col("doc_id") == F.col("probe_id"))

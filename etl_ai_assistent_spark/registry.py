@@ -62,6 +62,9 @@ _loaded = False
 # --- BEGIN DRIVER_FIRST (generated by tools/rotate_window.py) ---
 DRIVER_FIRST: tuple[str, ...] = (
     # plan/semantics changed this round
+    "q_bm25_retrieval",  # last r13
+    "q_rag_fusion",  # last r13
+    "q_hard_negatives",  # last r13
     "q_pq_adc_topk",  # last r10
     "q_ivfpq_topk",  # last r10
     "q_ivfpq_recall",  # last r10
@@ -110,9 +113,6 @@ DRIVER_FIRST: tuple[str, ...] = (
     "q_stream_profile_lookup",  # last r10
     "q_synthetic_source",  # last r10
     "q_table_fingerprint",  # last r10
-    "q_testset_generate",  # last r10
-    "q_title_text",  # last r10
-    "q_trigram_index_build",  # last r10
 )
 # --- END DRIVER_FIRST ---
 

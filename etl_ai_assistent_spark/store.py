@@ -132,10 +132,17 @@ def publish(
     discarded and the winner adopted — both callers end up serving one
     consistent artifact. `validate(final_path)` (cheap: markers,
     footer row counts) guards adoption; a published-but-damaged store
-    is torn down and rebuilt rather than served.
+    is torn down and rebuilt rather than served, and a validator that
+    cannot read the store (a truncated footer, a file gone) counts it
+    as damaged.
     """
     def _valid(p: str) -> bool:
-        return os.path.isdir(p) and (validate is None or validate(p))
+        if not os.path.isdir(p):
+            return False
+        try:
+            return validate is None or validate(p)
+        except (duckdb.Error, OSError):
+            return False  # footer unreadable or file gone: damaged
 
     if os.path.isdir(final_path):
         if _valid(final_path):

@@ -35,10 +35,7 @@ ALLOWED_CROSS = {
     "q_ivfpq_topk",  # coarse + per-subspace K-row centroid broadcasts
     "q_ivfpq_recall",  # same pipeline + k-row exact-vs-approx overlap join
     "q_pq_multiquery_topk",  # probe-slice × K-row codebook lookup tables
-    "q_bm25_retrieval",  # 1-row broadcast of corpus stats (N, avgdl)
     "q_tfidf_retrieval",  # 1-row broadcast of the corpus count (N+1)
-    "q_rag_fusion",  # inherits q_bm25_retrieval's 1-row stats broadcast
-    "q_hard_negatives",  # inherits q_bm25_retrieval's 1-row stats broadcast
     "q_dq_constraints",  # 1-row orphan-count x 1-row checked-count joins
     "q_skew_stats",  # 1-row totals x 1-row hot-key-count joins
     "q_doc_surprisal",  # 1-row corpus-count broadcast onto the token scan

@@ -131,8 +131,8 @@ def test_probe_vector_matches_spark_quantize(spark, sf_small):
 def test_index_cache_evicts_other_sf_dirs(spark, sf_small):
     """The substrate cache is bounded (r6 verdict #7): touching a second
     sf_dir unpersists and drops every substrate of the first one — the
-    PQ codes and the other queries' substrates (rfm_base, bm25_stats)
-    alike."""
+    PQ codes and the other queries' substrates (rfm_base, the BM25
+    impact store's handle) alike."""
     from etl_ai_assistent_spark import substrates as S
     from etl_ai_assistent_spark.queries import clustering as C
     from etl_ai_assistent_spark.registry import queries
@@ -142,8 +142,8 @@ def test_index_cache_evicts_other_sf_dirs(spark, sf_small):
     queries()["q_bm25_retrieval"](spark, sf_small)
     assert S._sf_dir == sf_small
     rfm_base = S._entries["rfm_base"]
-    dl, stats, df_tbl = S._entries["bm25_stats"]
-    held = [codes1, rfm_base, dl, stats, df_tbl]
+    assert spark.catalog.tableExists(S._entries["bm25_impact"])  # a view
+    held = [codes1, rfm_base]
     assert all(df.storageLevel.useMemory for df in held)
 
     other = sf_small.replace("sf0.001", "sf0.01")
@@ -151,6 +151,7 @@ def test_index_cache_evicts_other_sf_dirs(spark, sf_small):
     assert S._sf_dir == other
     assert set(S._entries) == {"pq"}
     assert not any(df.storageLevel.useMemory for df in held)  # released
+    assert "bm25_impact" not in S._entries  # released
     # moving back works and in turn evicts the other sf_dir
     _, codes2, _, _ = C._pq_index(spark, other)
     C._pq_index(spark, sf_small)

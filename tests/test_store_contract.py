@@ -22,7 +22,6 @@ import pytest
 
 from etl_ai_assistent_spark import parity
 from etl_ai_assistent_spark import store as ST
-from etl_ai_assistent_spark.queries import clustering as CL
 from etl_ai_assistent_spark.queries import streaming as SQ
 from etl_ai_assistent_spark.registry import queries
 
@@ -159,10 +158,6 @@ def test_store_root_holds_every_fixture(
 ):
     """With SPARK_GRAFT_STORE_ROOT set, every fixture the 22 queries
     publish lands under it, and none appears in /tmp."""
-    # q_stream_ann_lookup serves from the session's PQ substrate over
-    # the ANN store (not a fixture here); take it at the default root
-    # so this test does not retrain the index
-    CL._pq_index(spark, sf_small)
     monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", store_root)
     published = []
     publish = ST.publish
