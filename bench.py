@@ -11,6 +11,7 @@ collect) — wall-clock reflects the distributed plan, not result transfer.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -18,6 +19,10 @@ import sys
 import time
 
 import pandas as pd
+
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from docbench import trace  # noqa: E402 — the one status-store reader
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -318,86 +323,6 @@ def _sf_from_dir(path: str) -> float:
     return float(m.group(1)) if m else -1.0
 
 
-def _stage_list(spark):
-    store = spark._jsparkSession.sparkContext().statusStore()
-    gw = spark.sparkContext._gateway
-    empty = gw.jvm.java.util.ArrayList()
-    darr = gw.new_array(gw.jvm.double, 0)
-    return store.stageList(empty, False, False, darr, empty)
-
-
-def _stage_watermark(spark) -> int | None:
-    """Highest stageId currently in the UI status store (-1 when
-    empty). Attribution by WATERMARK, not by cumulative-counter
-    subtraction: the status store EVICTS old stages once
-    spark.ui.retainedStages is exceeded, so cumulative before/after
-    deltas go non-monotonic over a 117-query bench — r10's
-    BENCH_LOCAL.json recorded negative byte counts for 7 queries that
-    way (ADVICE r10, medium). Stages with stageId > the watermark are
-    exactly the measured run's stages regardless of what eviction did
-    to older entries; retainedStages is also raised for the bench
-    session so the window itself cannot be evicted mid-measure."""
-    try:
-        it = _stage_list(spark).iterator()
-        mx = -1
-        while it.hasNext():
-            mx = max(mx, it.next().stageId())
-        return mx
-    except Exception:  # noqa: BLE001 — observability must not break bench
-        return None
-
-
-def _stage_totals_since(spark, min_id: int) -> tuple[int, int, int, int] | None:
-    """(shuffle write bytes, disk spill bytes, input bytes, n_stages)
-    summed over stages with stageId > min_id — the physical cost of
-    everything run after the watermark. Sums of non-negative per-stage
-    counters, so a negative 'measurement' can no longer be recorded.
-    n_stages backs the retainedStages sizing assertion (r11 verdict
-    #7: retention only needs to cover ONE query's window). Best-effort:
-    the py4j surface is version-specific, any failure degrades to None
-    (bench still records wall clock)."""
-    try:
-        sw = sp = inb = n = 0
-        it = _stage_list(spark).iterator()
-        while it.hasNext():
-            s = it.next()
-            if s.stageId() > min_id:
-                sw += s.shuffleWriteBytes()
-                sp += s.diskBytesSpilled()
-                inb += s.inputBytes()
-                n += 1
-        return sw, sp, inb, n
-    except Exception:  # noqa: BLE001 — observability must not break bench
-        return None
-
-
-def _drain_listener_bus(spark) -> None:
-    """Flush the async listener bus before reading the AppStatusStore.
-    The store is fed asynchronously: stage entries from the PRECEDING
-    run that flush after the watermark read get stageId > mark and are
-    misattributed to the warm run, and the warm run's last stage may
-    not be flushed at readback (r11 ADVICE). waitUntilEmpty is
-    Scala-private[spark] (public bytecode, callable via py4j); fall
-    back to a short settle loop on the max stageId when the surface
-    shifts."""
-    try:
-        bus = spark.sparkContext._jsc.sc().listenerBus()
-        try:
-            bus.waitUntilEmpty()
-            return
-        except Exception:  # noqa: BLE001 — older arity
-            bus.waitUntilEmpty(5000)
-            return
-    except Exception:  # noqa: BLE001 — settle loop fallback
-        prev = -2
-        for _ in range(40):
-            cur = _stage_watermark(spark)
-            if cur == prev:
-                return
-            prev = cur
-            time.sleep(0.05)
-
-
 # --- co-tenant storm detection (r11 verdict #1) ------------------------------
 #
 # This host is shared: r11's committed bench recorded q_rag_rerank at a
@@ -509,106 +434,77 @@ class _StormProbe:
         return out
 
 
-def main() -> None:
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from etl_ai_assistent_spark.registry import queries
-    from etl_ai_assistent_spark.session import get_spark
+# Per-query layer record of the traced run (docbench/trace.py's keys):
+# a bench regression is traced to builder, planning or execution from
+# the artifact alone.
+LAYER_KEYS = (
+    "builder.s", "builder.jobs", "plan.s", "exec.s", "exec.stages",
+    "exec.tasks", "exec.shuffle_write_bytes", "exec.spill_bytes",
+    "exec.input_bytes", "plan.exchanges", "plan.smj", "plan.bhj",
+)
 
-    spark = get_spark(
-        "etl-ai-assistent-spark-bench",
-        driver_memory="64g",
-        # the stage-byte attribution reads the UI status store; the
-        # watermark only needs the CURRENT query's window retained
-        # (hundreds of stages at most — measured per query below and
-        # asserted against this bound). r11 #7 retired the 20k
-        # belt-and-suspenders: retaining 20k stage rows across a
-        # 126-query session added steady driver-heap/listener pressure
-        # in exactly the session whose timings are the product.
-        extra_conf={"spark.ui.retainedStages": "2000"},
-    )
-    qs = queries()
-    names = [n for n in HEADLINE if n in qs]
-    # triage hook: SPARK_GRAFT_BENCH_ONLY=q_a,q_b times just those
-    # queries with the identical harness (storm probes, watermark
-    # attribution) — the quiet-window re-measure protocol runs through
-    # this instead of ad-hoc scripts so its numbers are comparable
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    if only:
-        wanted = {s.strip() for s in only.split(",") if s.strip()}
-        names = [n for n in names if n in wanted]
 
-    # warm the JVM + parquet footer cache with one cheap action, and the
-    # Python worker pool with one trivial Arrow-batched UDF — several
-    # headline queries ride pandas UDFs, and the first one otherwise
-    # pays the one-time spin-up of $SPARK_GRAFT_CPUS workers (~4-6 s)
-    # that a long-lived cluster never re-pays per query
-    spark.read.parquet(os.path.join(SF_DIR, "region.parquet")).count()
+def _noop_write(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
 
-    from pyspark.sql import functions as F
 
-    @F.pandas_udf("double")
-    def _warm(s: pd.Series) -> pd.Series:
-        return s * 1.0
+def _timed_run(spark, build, traced: bool) -> tuple[float, dict | None]:
+    """One forced run of `build()`: (timed seconds, layers or None).
 
-    (
-        spark.range(200_000)
-        .select(_warm(F.col("id").cast("double")))
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
+    A traced run goes through trace.run_query. Its timed seconds are
+    builder.s + exec.s: the noop write plans the query again inside
+    exec.s, so the sum is what an untraced run measures. The tracer's
+    own planning pass (plan.s) and its status-store reads fall outside."""
+    if not traced:
+        t0 = time.perf_counter()
+        _noop_write(build())
+        return time.perf_counter() - t0, None
+    tracer = trace.Tracer(True)
+    trace.run_query(spark, tracer, build, _noop_write)
+    c = tracer.counters
+    layers = {k: round(c[k], 3) if k.endswith(".s") else int(c[k]) for k in LAYER_KEYS}
+    return c["builder.s"] + c["exec.s"], layers
 
-    # Per-query wall clock = MIN of `runs` executions: single-shot
-    # timings on this shared host swing up to 4x from noisy-neighbor
-    # contention; the minimum is the reproducible cost of the plan.
-    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    timings: dict[str, float] = {}
-    spread: dict[str, list[float]] = {}
-    n_runs_actual: dict[str, int] = {}
-    cold: dict[str, float] = {}
-    shuffle: dict[str, list[int]] = {}
-    stage_counts: dict[str, int] = {}
-    storms: dict[str, list[dict]] = {}
-    storm_residual: dict[str, bool] = {}
-    errors: dict[str, str] = {}
-    # committed reference minima, read BEFORE this run overwrites the
-    # artifact — the base for the self-adjudicating reconciliation
-    # block (r12 verdict #2c)
-    ref_queries: dict = {}
-    try:
-        _ref_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"
-        )
-        if os.path.exists(_ref_path):
-            with open(_ref_path) as _f:
-                ref_queries = json.load(_f).get("queries", {}) or {}
-    except Exception:  # noqa: BLE001 — reconciliation is best-effort
-        ref_queries = {}
-    for name in names:
+
+def measure(spark, builders: dict, runs: int) -> dict[str, dict]:
+    """Time each query of `builders` (name -> zero-argument DataFrame
+    builder) as the min of `runs` noop-write runs, the last one traced.
+
+    Returns the artifact's per-query sections, each keyed by query name:
+    queries, runs_min_mean_max, runs_actual, cold, layers,
+    storm_telemetry, storm_residual and errors. A failed traced run is
+    re-run once untraced, so a measurement failure leaves only `layers`
+    missing; a query that fails untraced too lands in `errors`."""
+    out: dict[str, dict] = {
+        k: {} for k in ("queries", "runs_min_mean_max", "runs_actual", "cold",
+                        "layers", "storm_telemetry", "storm_residual", "errors")
+    }
+    storms = out["storm_telemetry"]
+    for name, build in builders.items():
         # Fail-soft: one broken query must never zero the whole round's
         # perf signal — record the error and keep timing the rest.
         run_times: list[float] = []
         run_stormy: list[bool] = []  # parallel: accepted-run storm flag
+        traced = True  # until a traced run of this query fails
+        layers = None
         try:
             # don't start the timed runs inside a visible storm — the
             # retry budget is for storms that BEGIN mid-run
             _quiet_gate()
-            mark = None
             retries_left = STORM_RETRIES
             disp_left = DISPERSION_RETRIES
             i = 0
             while i < runs:
-                if i == runs - 1:
-                    # drain the async listener bus so stage entries
-                    # from the PRECEDING run can't flush past the
-                    # watermark and be misattributed (r11 ADVICE)
-                    _drain_listener_bus(spark)
-                    mark = _stage_watermark(spark)
+                last = traced and i == runs - 1
                 probe = _StormProbe(spark)
-                t0 = time.perf_counter()
-                df = qs[name](spark, SF_DIR)
-                df.write.format("noop").mode("overwrite").save()
-                dt = time.perf_counter() - t0
+                try:
+                    dt, run_layers = _timed_run(spark, build, last)
+                except Exception:  # noqa: BLE001 — untraced re-run below
+                    if not last:
+                        raise
+                    traced = False
+                    probe = _StormProbe(spark)
+                    dt, run_layers = _timed_run(spark, build, False)
                 tel = probe.read()
                 stormy = tel.pop("stormy")
                 if stormy and retries_left > 0:
@@ -628,17 +524,8 @@ def main() -> None:
                     )
                 run_times.append(dt)
                 run_stormy.append(stormy)
+                layers = run_layers
                 i += 1
-            # read the warm run's stage attribution BEFORE any
-            # dispersion reruns — their stages would otherwise inflate
-            # the watermark window's byte totals
-            if mark is not None:
-                _drain_listener_bus(spark)
-                totals = _stage_totals_since(spark, mark)
-                if totals is not None:
-                    shuffle[name] = list(totals[:3])
-                    stage_counts[name] = totals[3]
-                mark = None
             # dispersion backstop: a slow-but-unflagged storm (the
             # kernel-CPU signature can evade tick sampling when the
             # window also contains quiet stretches) shows up as an
@@ -651,10 +538,7 @@ def main() -> None:
                 disp_left -= 1
                 _quiet_gate()
                 probe = _StormProbe(spark)
-                t0 = time.perf_counter()
-                df = qs[name](spark, SF_DIR)
-                df.write.format("noop").mode("overwrite").save()
-                dt = time.perf_counter() - t0
+                dt, _ = _timed_run(spark, build, False)
                 tel = probe.read()
                 storms.setdefault(name, []).append(
                     {"sec": round(dt, 3), "dispersion_rerun": True,
@@ -663,32 +547,98 @@ def main() -> None:
                 )
                 run_times.append(dt)
                 run_stormy.append(bool(tel.get("stormy")))
-            timings[name] = round(min(run_times), 3)
+            out["queries"][name] = round(min(run_times), 3)
             # r12 verdict #2: say per query whether the ACCEPTED min
             # came from a storm-flagged window (retry budget spent) —
             # a consumer reading only this artifact must see which
             # minima are measurements of the neighbor, not the plan
             if run_stormy[run_times.index(min(run_times))]:
-                storm_residual[name] = True
+                out["storm_residual"][name] = True
             # [min, mean, max] per query (r8 verdict #7): lets the judge
             # separate host scatter (wide spread, min in band) from a
             # plan regression (tight spread, min shifted) without a
             # rerun request. Written to BENCH_LOCAL.json only — the
             # stdout contract line stays min-of-runs.
-            spread[name] = [
+            out["runs_min_mean_max"][name] = [
                 round(min(run_times), 3),
                 round(sum(run_times) / len(run_times), 3),
                 round(max(run_times), 3),
             ]
-            n_runs_actual[name] = len(run_times)
+            out["runs_actual"][name] = len(run_times)
             if name in INDEX_COLD:
-                cold[name] = round(run_times[0], 3)
+                out["cold"][name] = round(run_times[0], 3)
+            if layers is not None:
+                out["layers"][name] = layers
         except Exception as exc:  # noqa: BLE001 — report, don't crash
-            errors[name] = f"{type(exc).__name__}: {exc}"[:500]
+            out["errors"][name] = f"{type(exc).__name__}: {exc}"[:500]
         # Drop persisted intermediates (histogram stats, pagerank edges,
         # …) so later queries aren't timed under earlier queries' cached
         # blocks — each timing reflects a cold, isolated plan.
         spark.catalog.clearCache()
+    return out
+
+
+def main() -> None:
+    from etl_ai_assistent_spark.registry import queries
+    from etl_ai_assistent_spark.session import get_spark
+
+    spark = get_spark(
+        "etl-ai-assistent-spark-bench",
+        driver_memory="64g",
+        # the traced run reads the UI status store by stage-id
+        # watermark; retention only needs the CURRENT query's window
+        # (hundreds of stages at most — measured per query below and
+        # asserted against this bound). r11 #7 retired the 20k
+        # belt-and-suspenders: retaining 20k stage rows across a
+        # 126-query session added steady driver-heap/listener pressure
+        # in exactly the session whose timings are the product.
+        extra_conf={"spark.ui.retainedStages": "2000"},
+    )
+    qs = queries()
+    names = [n for n in HEADLINE if n in qs]
+    # triage hook: SPARK_GRAFT_BENCH_ONLY=q_a,q_b times just those
+    # queries with the identical harness (storm probes, traced last
+    # run) — the quiet-window re-measure protocol runs through this
+    # instead of ad-hoc scripts so its numbers are comparable
+    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
+    if only:
+        wanted = {s.strip() for s in only.split(",") if s.strip()}
+        names = [n for n in names if n in wanted]
+
+    # warm the JVM + parquet footer cache with one cheap action, and the
+    # Python worker pool with one trivial Arrow-batched UDF — several
+    # headline queries ride pandas UDFs, and the first one otherwise
+    # pays the one-time spin-up of $SPARK_GRAFT_CPUS workers (~4-6 s)
+    # that a long-lived cluster never re-pays per query
+    spark.read.parquet(os.path.join(SF_DIR, "region.parquet")).count()
+
+    from pyspark.sql import functions as F
+
+    @F.pandas_udf("double")
+    def _warm(s: pd.Series) -> pd.Series:
+        return s * 1.0
+
+    _noop_write(spark.range(200_000).select(_warm(F.col("id").cast("double"))))
+
+    # Per-query wall clock = MIN of `runs` executions: single-shot
+    # timings on this shared host swing up to 4x from noisy-neighbor
+    # contention; the minimum is the reproducible cost of the plan.
+    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
+    # committed reference minima, read BEFORE this run overwrites the
+    # artifact — the base for the self-adjudicating reconciliation
+    # block (r12 verdict #2c)
+    ref_queries: dict = {}
+    try:
+        _ref_path = os.path.join(
+            os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"
+        )
+        if os.path.exists(_ref_path):
+            with open(_ref_path) as _f:
+                ref_queries = json.load(_f).get("queries", {}) or {}
+    except Exception:  # noqa: BLE001 — reconciliation is best-effort
+        ref_queries = {}
+    m = measure(spark, {n: functools.partial(qs[n], spark, SF_DIR) for n in names}, runs)
+    timings, cold, storm_residual = m["queries"], m["cold"], m["storm_residual"]
 
     out = {
         "metric": "headline_query_total",
@@ -702,21 +652,20 @@ def main() -> None:
         # same query's entry under "queries"
         "cold": cold,
     }
-    if errors:
-        out["errors"] = errors
+    if m["errors"]:
+        out["errors"] = m["errors"]
 
     # The per-round driver keeps only the LAST 2000 CHARS of stdout and
     # parses the final line — with 100+ headline queries the full JSON
     # line overflowed that window in round 7 (BENCH_r07.json:
-    # parsed=null). So: the COMPLETE record (plus the committed scale
-    # trend, when present) goes to BENCH_LOCAL.json at the repo root,
-    # and stdout's final line is the same contract JSON with `queries`
-    # trimmed to the slowest entries that fit the tail window — `value`
-    # still totals ALL queries; full per-query detail is in the file.
+    # parsed=null). So: the COMPLETE record goes to BENCH_LOCAL.json at
+    # the repo root, and stdout's final line is the same contract JSON
+    # with `queries` trimmed to the slowest entries that fit the tail
+    # window — `value` still totals ALL queries; full per-query detail
+    # is in the file.
     here = os.path.dirname(os.path.abspath(__file__))
-    trend_path = os.path.join(here, "SCALE_TREND.json")
     full = dict(out)
-    full["runs_min_mean_max"] = spread
+    full["runs_min_mean_max"] = m["runs_min_mean_max"]
     # r12 verdict #2: the artifact adjudicates itself. quiet=true means
     # no accepted minimum came from a storm-flagged window; every query
     # whose min IS flagged carries storm_residual; and each fresh min
@@ -752,40 +701,29 @@ def main() -> None:
     # ADVICE r12: dispersion-backstop reruns extend run_times past the
     # fixed run count, so mean/max are not like-for-like across queries
     # — record the actual count so readers can tell
-    full["runs_actual"] = n_runs_actual
-    if storms:
+    full["runs_actual"] = m["runs_actual"]
+    if m["storm_telemetry"]:
         # every run whose window crossed the steal/GC storm threshold:
         # discarded=true slots were re-run; discarded=false ones are in
         # the timings and should be read with suspicion (r11 verdict #1)
-        full["storm_telemetry"] = storms
-    if stage_counts:
+        full["storm_telemetry"] = m["storm_telemetry"]
+    if m["layers"]:
         # retainedStages sizing evidence (r11 verdict #7): the largest
         # single-query stage window must sit well inside the 2000
         # retention or the watermark attribution can be evicted
         # mid-measure
-        biggest = max(stage_counts.items(), key=lambda kv: kv[1])
-        full["max_query_stage_window"] = {biggest[0]: biggest[1]}
-        if biggest[1] > 1600:
+        biggest = max(m["layers"], key=lambda n: m["layers"][n]["exec.stages"])
+        n_stages = m["layers"][biggest]["exec.stages"]
+        full["max_query_stage_window"] = {biggest: n_stages}
+        if n_stages > 1600:
             full["stage_window_warning"] = (
-                f"{biggest[0]} used {biggest[1]} stages — raise "
+                f"{biggest} used {n_stages} stages — raise "
                 "spark.ui.retainedStages"
             )
-    if shuffle:
-        # measured physical cost of the warm run, per query:
-        # [shuffle write bytes, disk spill bytes, input bytes] — the
-        # "minimize shuffles / spill-aware" posture as recorded
-        # numbers. A spill > 0 or a shuffle far above input size is a
-        # plan problem regardless of wall clock.
-        full["warm_run_bytes_sw_spill_in"] = shuffle
-    if os.path.exists(trend_path):
-        with open(trend_path) as f:
-            full["scale_trend"] = json.load(f)
-    # quiet-machine rerun evidence (swing classification protocol):
-    # committed separately, embedded so the bench artifact is complete
-    quiet_path = os.path.join(here, "QUIET_RERUN.json")
-    if os.path.exists(quiet_path):
-        with open(quiet_path) as f:
-            full["quiet_rerun"] = json.load(f)
+        # the traced warm run's layers, per query (LAYER_KEYS). A spill
+        # > 0 or a shuffle far above input size is a plan problem
+        # regardless of wall clock.
+        full["layers"] = m["layers"]
     with open(os.path.join(here, "BENCH_LOCAL.json"), "w") as f:
         json.dump(full, f, indent=1)
 

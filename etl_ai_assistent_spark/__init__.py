@@ -14,7 +14,6 @@ Layout:
     operators/   composite dataflow operators (sectionize, chunk, embed,
                  dedup, similarity, as-of join, sessionize, multimodal)
     streaming/   Structured Streaming pipelines
-    plans/       physical planning helpers (exact-vs-ANN top-k chooser)
     registry     the queries()/oracle_sql() registry consumed by
                  __spark_entry__.py
 """

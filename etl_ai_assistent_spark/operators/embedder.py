@@ -52,20 +52,37 @@ def token_bucket_expr(tok: Column, dim: int) -> Column:
     return F.conv(F.substring(F.md5(tok), 1, 8), 16, 10).cast("bigint") % dim
 
 
+def _bind(value: Column, body) -> Column:
+    """`body(v)` with `value` bound once as the lambda variable v. A
+    Column captured inside a higher-order-function lambda is evaluated
+    again for every array element; a bound variable is evaluated once."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
 def hash_embed_expr(text: Column | str, dim: int = DEFAULT_DIM) -> Column:
-    """ARRAY<DOUBLE> L2-normalized hashed-TF embedding, built-ins only."""
+    """ARRAY<DOUBLE> L2-normalized hashed-TF embedding, built-ins only.
+    `buckets`, `tf` and the norm are each bound once (_bind), so a row
+    hashes each token once instead of once per (bucket, element) pair."""
     toks = TX.tokens(F.lower(F.col(text) if isinstance(text, str) else text))
     buckets = F.transform(toks, lambda t: token_bucket_expr(t, dim))
-    tf = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda b: F.size(F.filter(buckets, lambda x: x == b.cast("bigint"))).cast(
-            "double"
-        ),
-    )
-    norm = F.sqrt(F.aggregate(tf, F.lit(0.0), lambda a, x: a + x * x))
-    return F.when(
-        norm > 0, F.transform(tf, lambda x: x / norm)
-    ).otherwise(tf)
+
+    def counts(bs: Column) -> Column:
+        return F.transform(
+            F.sequence(F.lit(0), F.lit(dim - 1)),
+            lambda b: F.size(F.filter(bs, lambda x: x == b.cast("bigint"))).cast(
+                "double"
+            ),
+        )
+
+    def normalize(tf: Column) -> Column:
+        return _bind(
+            F.sqrt(F.aggregate(tf, F.lit(0.0), lambda a, x: a + x * x)),
+            lambda norm: F.when(
+                norm > 0, F.transform(tf, lambda x: x / norm)
+            ).otherwise(tf),
+        )
+
+    return _bind(buckets, lambda bs: _bind(counts(bs), normalize))
 
 
 def _bucket(token: str, dim: int) -> int:

@@ -83,3 +83,12 @@ def test_per_pass_fields_never_top_level_even_when_equal():
     )
     assert "reconciliation_vs_committed" not in merged
     assert merged["merge_protocol"]["passes"]["B"]["reconciliation_vs_committed"] == recon
+
+
+def test_layers_come_from_each_minimums_pass():
+    la = {"q_a": {"exec.s": 0.9, "exec.stages": 3}, "q_b": {"exec.s": 3.9, "exec.stages": 7}}
+    lb = {"q_a": {"exec.s": 1.9, "exec.stages": 4}, "q_b": {"exec.s": 2.8, "exec.stages": 8}}
+    merged = MB.merge({"A": _pass(1.0, 4.0, layers=la), "B": _pass(2.0, 3.0, layers=lb)})
+    assert merged["merge_protocol"]["min_source_pass"] == {"q_a": "A", "q_b": "B"}
+    assert merged["layers"] == {"q_a": la["q_a"], "q_b": lb["q_b"]}
+    assert "layers" not in merged["merge_protocol"]["passes"]["A"]

@@ -1,9 +1,11 @@
-"""Dump .explain("formatted") for named queries to plans/<tag>/<name>_<suffix>.txt.
+"""Dump .explain("formatted") for named queries to <outdir>/<name>_<suffix>.txt.
 
-Usage: python tools/explain_dump.py <tag> <suffix> q_a,q_b,...
-Builds each query DataFrame at $SPARK_GRAFT_SF_DIR (default sf0.1) and writes
-the formatted physical plan — the judge-checkable evidence for plan-shape
-claims (Exchange counts, join strategies, PushedFilters) in OPTIMIZATION_*.md.
+Usage: python tools/explain_dump.py <outdir> <suffix> q_a,q_b,...
+Builds each query DataFrame at $SPARK_GRAFT_SF_DIR (default sf0.1), writes
+the formatted physical plan under <outdir> (outside the repo: plans are
+diffed, not committed) and prints one JSON line per query with its
+docbench.trace.plan_shape counts (Exchanges, SortMergeJoins,
+BroadcastHashJoins) — the plan-shape evidence for a change.
 
 Streaming queries that execute inside their builder (foreachBatch) cannot be
 explained without running; for those, registry entries listed in _SURROGATES
@@ -13,11 +15,15 @@ dump the plan of the per-trigger batch computation instead (noted in-file).
 from __future__ import annotations
 
 import io
+import json
 import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from docbench import trace  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -56,15 +62,16 @@ _SURROGATES = {
 
 
 def main() -> None:
-    tag, suffix, names_csv = sys.argv[1], sys.argv[2], sys.argv[3]
+    outdir, suffix, names_csv = sys.argv[1], sys.argv[2], sys.argv[3]
+    outdir = os.path.realpath(outdir)
+    if os.path.commonpath([outdir, REPO]) == REPO:
+        sys.exit(f"explain_dump: {outdir} is inside the repo; plans are not committed")
     names = [n.strip() for n in names_csv.split(",") if n.strip()]
     from etl_ai_assistent_spark.registry import queries
     from etl_ai_assistent_spark.session import get_spark
 
     spark = get_spark("explain-dump")
     qs = queries()
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    outdir = os.path.join(here, "plans", tag)
     os.makedirs(outdir, exist_ok=True)
     for name in names:
         try:
@@ -83,9 +90,10 @@ def main() -> None:
             path = os.path.join(outdir, f"{name}_{suffix}.txt")
             with open(path, "w") as f:
                 f.write(note + buf.getvalue())
-            print(f"wrote {path}")
+            rec = {"query": name, **trace.plan_shape(df), "path": path}
         except Exception as exc:  # noqa: BLE001 — keep dumping the rest
-            print(f"FAILED {name}: {type(exc).__name__}: {exc}")
+            rec = {"query": name, "error": f"{type(exc).__name__}: {exc}"[:500]}
+        print(json.dumps(rec), flush=True)
     spark.stop()
 
 

@@ -30,7 +30,7 @@ PER_PASS = (
 # Recomputed from all passes below.
 MERGED = {
     "queries", "value", "runs_min_mean_max", "cold", "runs_actual",
-    "warm_run_bytes_sw_spill_in", "quiet", "storm_residual",
+    "layers", "quiet", "storm_residual",
     "merge_protocol",
 }
 
@@ -52,8 +52,7 @@ def merge(passes: dict[str, dict]) -> dict:
     names = set()
     for p in passes.values():
         names |= set(p["queries"])
-    queries, src, spread, cold, runs_actual = {}, {}, {}, {}, {}
-    sw = {}
+    queries, src, spread, cold, runs_actual, layers = {}, {}, {}, {}, {}, {}
     for n in sorted(names):
         cands = [(p["queries"][n], t) for t, p in passes.items() if n in p["queries"]]
         best, tag = min(cands)
@@ -73,17 +72,16 @@ def merge(passes: dict[str, dict]) -> dict:
         ra = [x for x in ra if x]
         if ra:
             runs_actual[n] = max(ra)
-        # byte attribution: take the source pass's warm-run record
-        rec = passes[tag].get("warm_run_bytes_sw_spill_in", {}).get(n)
-        if rec:
-            sw[n] = rec
+        # layers describe the traced run of the pass that gave the min
+        if n in passes[tag].get("layers", {}):
+            layers[n] = passes[tag]["layers"][n]
     base["queries"] = queries
     base["value"] = round(sum(queries.values()), 3)
     base["runs_min_mean_max"] = spread
     base["cold"] = cold
     base["runs_actual"] = runs_actual
-    if sw:
-        base["warm_run_bytes_sw_spill_in"] = sw
+    if layers:
+        base["layers"] = layers
     residual = {}
     for n in sorted(names):
         # a merged min is storm-flagged only if its SOURCE pass flagged it
@@ -106,7 +104,7 @@ def merge(passes: dict[str, dict]) -> dict:
             "per-query minima merged across full bench passes on identical"
             " code (the r12 min-of-passes protocol); spread = [min of mins,"
             " mean of pass means, max of maxes], cold = min of first-run"
-            " times per pass, bytes = the min's source pass; fields that"
+            " times per pass, layers = the min's source pass; fields that"
             " describe one pass are under passes[tag]"
         ),
         "min_source_pass": src,

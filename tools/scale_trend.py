@@ -6,9 +6,8 @@ the missing third leg (r7 verdict #3): MEASURED time-vs-sf slopes. It
 builds an sf1-equivalent dataset by replicating the sf0.1 tables 10×
 with per-replica key offsets (DuckDB, one-time, /tmp fixture with a
 marker file), then times a family-spanning subset of the headline
-queries at all three scales and writes SCALE_TREND.json — bench.py
-embeds it into BENCH_LOCAL.json so the round's bench artifact carries
-the slopes.
+queries at all three scales and writes SCALE_TREND.json, committed
+beside the bench artifact BENCH_LOCAL.json.
 
 Replication preserves per-entity cardinality (orders per customer,
 events per user, text per doc): every key column gets +rep·STRIDE, so

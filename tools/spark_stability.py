@@ -13,8 +13,6 @@ nondeterminism.
 
 Usage: python tools/spark_stability.py [sf_dir]   (default sf0.01)
 Must not run concurrently with another Spark session on this host.
-NOTE at sf0.1: q_vectorize_lines takes minutes per run BY DESIGN (the
-bit-exact interpreted-HOF embedding) — expect a long stall there.
 """
 
 from __future__ import annotations
