@@ -434,35 +434,31 @@ class _StormProbe:
         return out
 
 
-# Per-query layer record of the traced run (docbench/trace.py's keys):
-# a bench regression is traced to builder, planning or execution from
-# the artifact alone.
-LAYER_KEYS = (
-    "builder.s", "builder.jobs", "plan.s", "exec.s", "exec.stages",
-    "exec.tasks", "exec.shuffle_write_bytes", "exec.spill_bytes",
-    "exec.input_bytes", "plan.exchanges", "plan.smj", "plan.bhj",
-)
-
-
 def _noop_write(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
 def _timed_run(spark, build, traced: bool) -> tuple[float, dict | None]:
-    """One forced run of `build()`: (timed seconds, layers or None).
+    """One forced run of `build()` through trace.run_query: (timed
+    seconds, layers or None).
 
-    A traced run goes through trace.run_query. Its timed seconds are
+    An untraced run is timed whole. A traced run's timed seconds are
     builder.s + exec.s: the noop write plans the query again inside
-    exec.s, so the sum is what an untraced run measures. The tracer's
-    own planning pass (plan.s) and its status-store reads fall outside."""
+    exec.s, so the sum is what an untraced run measures; the tracer's
+    own planning pass (plan.s) and its status-store reads fall outside.
+    Its layers hold the tracer's counters plus run.* totals over every
+    stage of the run, builder jobs included, so a regression is traced
+    to builder, planning or execution from the artifact alone."""
+    tracer = trace.Tracer(traced)
     if not traced:
         t0 = time.perf_counter()
-        _noop_write(build())
+        trace.run_query(spark, tracer, build, _noop_write)
         return time.perf_counter() - t0, None
-    tracer = trace.Tracer(True)
+    mark = trace.stage_watermark(spark)
     trace.run_query(spark, tracer, build, _noop_write)
-    c = tracer.counters
-    layers = {k: round(c[k], 3) if k.endswith(".s") else int(c[k]) for k in LAYER_KEYS}
+    c = dict(tracer.counters)
+    c.update({f"run.{k}": v for k, v in trace.stage_totals_since(spark, mark).items()})
+    layers = {k: round(v, 3) if k.endswith(".s") else int(v) for k, v in c.items()}
     return c["builder.s"] + c["exec.s"], layers
 
 
@@ -712,15 +708,15 @@ def main() -> None:
         # single-query stage window must sit well inside the 2000
         # retention or the watermark attribution can be evicted
         # mid-measure
-        biggest = max(m["layers"], key=lambda n: m["layers"][n]["exec.stages"])
-        n_stages = m["layers"][biggest]["exec.stages"]
+        biggest = max(m["layers"], key=lambda n: m["layers"][n]["run.stages"])
+        n_stages = m["layers"][biggest]["run.stages"]
         full["max_query_stage_window"] = {biggest: n_stages}
         if n_stages > 1600:
             full["stage_window_warning"] = (
                 f"{biggest} used {n_stages} stages — raise "
                 "spark.ui.retainedStages"
             )
-        # the traced warm run's layers, per query (LAYER_KEYS). A spill
+        # the traced warm run's layers, per query. A spill
         # > 0 or a shuffle far above input size is a plan problem
         # regardless of wall clock.
         full["layers"] = m["layers"]

@@ -62,6 +62,17 @@ _loaded = False
 # --- BEGIN DRIVER_FIRST (generated by tools/rotate_window.py) ---
 DRIVER_FIRST: tuple[str, ...] = (
     # plan/semantics changed this round
+    "q_bm25_retrieval",  # last r13
+    "q_rag_fusion",  # last r13
+    "q_hard_negatives",  # last r13
+    "q_pq_adc_topk",  # last r10
+    "q_ivfpq_topk",  # last r10
+    "q_ivfpq_recall",  # last r10
+    "q_ivfpq_residual_topk",  # last r10
+    "q_ivfpq_residual_recall",  # last r10
+    "q_ann_grown_topk",  # last r13
+    "q_pagerank_nations",  # last r14
+    "q_label_propagation",  # last r14
     "q_vectorize_lines",  # last r14
     "q_hash_embed_profile",  # last r9
     # stalest driver verdicts first
@@ -96,23 +107,12 @@ DRIVER_FIRST: tuple[str, ...] = (
     "q_client_embed_profile",  # last r10
     "q_compaction_stats",  # last r10
     "q_countmin_heavy",  # last r10
-    "q_ivfpq_recall",  # last r10
-    "q_ivfpq_residual_recall",  # last r10
-    "q_ivfpq_residual_topk",  # last r10
-    "q_ivfpq_topk",  # last r10
     "q_posting_index_build",  # last r10
-    "q_pq_adc_topk",  # last r10
     "q_rag_judged",  # last r10
     "q_rfm_segments",  # last r10
     "q_source_sample",  # last r10
     "q_stream_profile_lookup",  # last r10
     "q_synthetic_source",  # last r10
-    "q_table_fingerprint",  # last r10
-    "q_testset_generate",  # last r10
-    "q_title_text",  # last r10
-    "q_trigram_index_build",  # last r10
-    "q_trigram_multi_search",  # last r10
-    "q_trigram_search",  # last r10
 )
 # --- END DRIVER_FIRST ---
 
