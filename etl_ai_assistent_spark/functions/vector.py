@@ -36,12 +36,11 @@ Exactness: results are bit-identical to the Column form's.
   (operators/kmeans.py).
 
 Higher-order functions (zip_with/aggregate lambdas) evaluate
-INTERPRETED on the JVM — they are not whole-stage-codegen'd — and
-Catalyst's CollapseProject will re-inline a staged expensive input into
-every lambda use site. When a dot/norm feeds many expressions (LSH
-signing, minhash), persist() the staged column as a barrier (see
-operators/dedup.minhash_bands, operators/similarity.srp_bands); where
-profiling shows the interpreter itself is the bottleneck, the
+INTERPRETED on the JVM — they are not whole-stage-codegen'd — and a
+Column captured inside a lambda is evaluated again per array element.
+When a dot/norm feeds many expressions (LSH signing, minhash), bind it
+once with functions.bind (see operators/dedup.minhash_bands,
+operators/similarity.srp_bands); where profiling shows the interpreter itself is the bottleneck, the
 Arrow-batched pandas-UDF twin (operators/embedder.hash_embed_pandas) is
 the faster path.
 

@@ -12,10 +12,11 @@ the driver loops over until fixpoint:
 
 Each iteration is one equi-join + one aggregation on the edge list
 (shuffle on vertex id); iterations needed = graph diameter (near-dup
-clusters are shallow — copies of copies — so typically 2-4). State per
-iteration is persisted and the previous one unpersisted: nothing grows
-with iteration count. Convergence is detected by counting changed
-labels (a cheap aggregate), not by comparing full snapshots.
+clusters are shallow — copies of copies — so typically 2-4). Each
+round's state is a lineage barrier (substrates.per_call), so the plan
+stays flat as rounds grow, and the next registered call releases every
+round's blocks. Convergence is detected by counting changed labels (a
+cheap aggregate), not by comparing full snapshots.
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .iterate import barrier, begin
+from ..substrates import per_call
 
 
 def connected_components(
@@ -36,34 +37,24 @@ def connected_components(
     """(node, component) for every node in `pairs`, component = min node
     id reachable through the pair graph. Deterministic.
 
-    Each round ends at a lineage barrier (operators/iterate.py): labels
-    is referenced by both the neighbor join and its own rebuild, so the
-    previous persist() chain kept the ANALYZED plan growing per round
-    even though execution was deduplicated. The convergence collect
-    materializes the round's storage-backed checkpoint, so the next
-    round (and the final result) read cached blocks; nothing stays
-    pinned after the caller drops the result.
-
-    NO-RETENTION CONTRACT (r13 ADVICE, pinned by
-    tests/test_pagerank_fold.py::test_connected_components_no_retention):
-    fully consume (collect/write) this result BEFORE calling
-    connected_components again in the same process. The next call's
-    begin() evicts prior-generation checkpoint blocks — localCheckpoint
-    removes the recompute path, so RE-EXECUTING a retained result (or a
-    DataFrame derived from it) after a later call either serves
-    still-cached blocks or fails LOUDLY with a missing-checkpoint-block
-    error; it can never return silently wrong rows. Callers that need a
-    result to outlive later calls must materialize it first."""
-    begin(pairs.sparkSession)
-    edges = barrier(
+    Each round ends at a lineage barrier: labels is referenced by both
+    the neighbor join and its own rebuild, so a persist() chain kept the
+    ANALYZED plan growing per round even though execution was
+    deduplicated. The convergence collect materializes the round's
+    storage-backed checkpoint, so the next round (and the final result)
+    read cached blocks. The result follows substrates.py's
+    NO-RETENTION CONTRACT."""
+    edges = per_call(
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
+        .distinct(),
+        barrier=True,
     )
-    labels = barrier(
+    labels = per_call(
         edges.select(F.col("u").alias("node"))
         .distinct()
-        .withColumn("component", F.col("node"))
+        .withColumn("component", F.col("node")),
+        barrier=True,
     )
     for _ in range(max_iter):
         neighbor_min = (
@@ -71,7 +62,7 @@ def connected_components(
             .groupBy(F.col("u").alias("node"))
             .agg(F.min("component").alias("nbr_min"))
         )
-        new_labels = barrier(
+        new_labels = per_call(
             labels.join(neighbor_min, "node", "left")
             .select(
                 "node",
@@ -82,7 +73,8 @@ def connected_components(
                     F.coalesce("nbr_min", F.col("component"))
                     < F.col("component")
                 ).cast("int").alias("changed"),
-            )
+            ),
+            barrier=True,
         )
         changed = new_labels.agg(F.sum("changed")).collect()[0][0] or 0
         labels = new_labels.drop("changed")

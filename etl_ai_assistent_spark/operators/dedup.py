@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import bind
 from ..functions import text as TX
 
 MERSENNE31 = 2_147_483_647
@@ -72,9 +73,9 @@ def minhash_from_buckets(buckets: Column, k: int = 8) -> Column:
     array column: mh_j = min over buckets x of (a_j*x + c_j) mod 2^31-1
     with a_j=(2j+1)*1000003, c_j=7919j+1 (universal-hash family; one md5
     per shingle total, not per (j, shingle) — and `buckets` must be a
-    real column reference so the plan evaluates it once per row, not
-    once per lambda iteration). No 64-bit overflow: a_j < 2^24 and
-    x < 2^32 keep a_j*x < 2^56."""
+    column reference or a bound variable (functions.bind) so the plan
+    evaluates it once per row, not once per lambda iteration). No
+    64-bit overflow: a_j < 2^24 and x < 2^32 keep a_j*x < 2^56."""
     return F.transform(
         F.sequence(F.lit(0), F.lit(k - 1)),
         lambda j: F.array_min(
@@ -99,45 +100,41 @@ def minhash_bands(
     hash => candidate pair. rows_per_band = k/bands tunes the
     sensitivity curve (P[candidate] = 1-(1-j^r)^b).
 
-    The shingle-bucket stage is persisted: without the cache barrier,
-    Catalyst's project-collapsing re-inlines the md5-per-shingle pass
-    into every one of the k minhash lambdas (higher-order functions run
-    interpreted, so that k× recomputation is the dominant cost). With
-    it, md5 runs once per shingle and the k affine transforms read the
-    cached array — the same one-hash-pass discipline a 100 TB run gets
-    by materializing the signature table to parquet."""
-    from pyspark.storagelevel import StorageLevel
-
+    The shingle buckets and the minhash signature are each bound once
+    per row (functions.bind): captured inside the k minhash lambdas or
+    the banding lambda, either would be re-evaluated per array element
+    (higher-order functions run interpreted, so that recomputation is
+    the dominant cost). md5 runs once per shingle and the k affine
+    transforms read the bound array — the same one-hash-pass discipline
+    a 100 TB run gets by materializing the signature table to parquet.
+    A document without shingles has a null signature and no bands."""
     r = k // bands
-    sb = df.select(
-        F.col(id_col).alias("id"), shingle_buckets(text_col).alias("sb")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    mh = (
-        sb.select("id", minhash_from_buckets(F.col("sb"), k).alias("mh"))
-        .filter(F.col("mh")[0].isNotNull())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )  # same barrier logic: banding's element_at would re-inline the mh
-    # transform once per extracted element otherwise
-    banded = mh.select(
-        "id",
-        F.posexplode(
+
+    def band_hashes(mh: Column) -> Column:
+        return F.when(
+            mh[0].isNotNull(),
             F.transform(
                 F.sequence(F.lit(0), F.lit(bands - 1)),
                 lambda b: F.md5(
                     F.concat_ws(
                         ",",
                         *[
-                            F.element_at(F.col("mh"), F.lit(i + 1) + b * r).cast(
-                                "string"
-                            )
+                            F.element_at(mh, F.lit(i + 1) + b * r).cast("string")
                             for i in range(r)
                         ],
                     )
                 ),
-            )
-        ).alias("band_idx", "band_hash"),
+            ),
+        )
+
+    signature = bind(
+        shingle_buckets(text_col),
+        lambda sb: bind(minhash_from_buckets(sb, k), band_hashes),
     )
-    return banded
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.posexplode(signature).alias("band_idx", "band_hash"),
+    )
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -158,18 +155,12 @@ def minhash_near_dup_pairs(
     never a cross product), then true-Jaccard verification on candidates
     only. Output: (id_a < id_b, jaccard >= threshold).
 
-    The banded-signature and shingle tables are persisted
-    (MEMORY_AND_DISK): each feeds both sides of a self-join, and without
-    materialization Spark would re-derive the full hash pipeline per
-    side (and Catalyst re-inlines the staged projections, compounding
-    it). At 100 TB the same move is writing the signature table to
-    parquet before the candidate join — one hash pass over the corpus,
-    ever."""
-    from pyspark.storagelevel import StorageLevel
-
-    banded = minhash_bands(
-        df, text_col=text_col, id_col=id_col, k=k, bands=bands
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    The banded-signature table feeds both sides of the candidate
+    self-join; the two sides' identical exchanges are reused, so the
+    hash pipeline runs once. At 100 TB the same move is writing the
+    signature table to parquet before the candidate join — one hash
+    pass over the corpus, ever."""
+    banded = minhash_bands(df, text_col=text_col, id_col=id_col, k=k, bands=bands)
     a, b = banded.alias("a"), banded.alias("b")
     cands = (
         a.join(
@@ -183,7 +174,7 @@ def minhash_near_dup_pairs(
     )
     sh = df.select(
         F.col(id_col).alias("id"), TX.word_shingles(text_col).alias("sh")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     verified = (
         cands.join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
         .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
@@ -321,7 +312,6 @@ def jaccard_prefix_pairs(
         ex.join(dfs, "g")
         .groupBy("id")
         .agg(F.array_sort(F.collect_list(F.struct("df", "g"))).alias("arr"))
-        .persist()  # feeds prefix candidates AND the verify arrays
     )
     n = F.size("arr")
     pref_len = n - F.expr(f"({num} * size(arr) + {den - 1}) div {den}") + 1
@@ -397,7 +387,6 @@ def shared_span_stats(docs: DataFrame, k: int) -> DataFrame:
             .alias("gram_h"),
         )
         .distinct()
-        .persist()  # feeds the frequency agg AND the join back
     )
     freq = grams.groupBy("gram_h").agg(
         F.count("*").cast("bigint").alias("n_docs")

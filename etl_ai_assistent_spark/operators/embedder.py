@@ -13,10 +13,9 @@ Two equivalent implementations (tested equal):
 - ``hash_embed_expr``    pure built-in column expression — JVM-side and
   mirrorable in DuckDB SQL for the oracle gate. NOTE: the higher-order
   functions (transform/filter/aggregate) run INTERPRETED, not
-  whole-stage-codegen'd, and CollapseProject re-inlines staged
-  projections into every lambda use site — stage expensive inputs
-  behind a persist() barrier when reusing them (see
-  operators/dedup.minhash_bands for the pattern and the measured 7×).
+  whole-stage-codegen'd, and a Column captured inside a lambda is
+  re-evaluated per array element — bind expensive inputs once with
+  functions.bind (operators/dedup.minhash_bands does the same).
 - ``hash_embed_pandas``  Arrow-batched pandas UDF (numpy bincount) — the
   shape an external model plugs into (SCALAR batching per partition);
   also the faster path at very high token counts.
@@ -40,6 +39,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions import bind
 from ..functions import text as TX
 
 DEFAULT_DIM = 64  # testdata embedding dim; reference uses 1024
@@ -52,17 +52,10 @@ def token_bucket_expr(tok: Column, dim: int) -> Column:
     return F.conv(F.substring(F.md5(tok), 1, 8), 16, 10).cast("bigint") % dim
 
 
-def _bind(value: Column, body) -> Column:
-    """`body(v)` with `value` bound once as the lambda variable v. A
-    Column captured inside a higher-order-function lambda is evaluated
-    again for every array element; a bound variable is evaluated once."""
-    return F.element_at(F.transform(F.array(value), body), 1)
-
-
 def hash_embed_expr(text: Column | str, dim: int = DEFAULT_DIM) -> Column:
     """ARRAY<DOUBLE> L2-normalized hashed-TF embedding, built-ins only.
-    `buckets`, `tf` and the norm are each bound once (_bind), so a row
-    hashes each token once instead of once per (bucket, element) pair."""
+    `buckets`, `tf` and the norm are each bound once (functions.bind), so
+    a row hashes each token once instead of once per (bucket, element) pair."""
     toks = TX.tokens(F.lower(F.col(text) if isinstance(text, str) else text))
     buckets = F.transform(toks, lambda t: token_bucket_expr(t, dim))
 
@@ -75,14 +68,14 @@ def hash_embed_expr(text: Column | str, dim: int = DEFAULT_DIM) -> Column:
         )
 
     def normalize(tf: Column) -> Column:
-        return _bind(
+        return bind(
             F.sqrt(F.aggregate(tf, F.lit(0.0), lambda a, x: a + x * x)),
             lambda norm: F.when(
                 norm > 0, F.transform(tf, lambda x: x / norm)
             ).otherwise(tf),
         )
 
-    return _bind(buckets, lambda bs: _bind(counts(bs), normalize))
+    return bind(buckets, lambda bs: bind(counts(bs), normalize))
 
 
 def _bucket(token: str, dim: int) -> int:

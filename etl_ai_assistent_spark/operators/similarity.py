@@ -32,9 +32,10 @@ from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import bind
 from ..functions import vector as V
 
 
@@ -240,25 +241,23 @@ def srp_bands(
         out = (acc >= 0).astype(np.int32)
         return pd.Series(list(out))
 
-    from pyspark.storagelevel import StorageLevel
+    def band_vals(bits: Column) -> Column:
+        return F.array(
+            *[
+                sum(
+                    F.element_at(bits, b * r + i + 1) * (1 << (r - 1 - i))
+                    for i in range(r)
+                )
+                for b in range(bands)
+            ]
+        )
 
-    # cache barrier: the banded table is self-joined (and CollapseProject
-    # would otherwise duplicate the signing into every band expression —
-    # same pattern as operators/dedup.minhash_bands)
-    sig = items.select(
-        F.col(id_col).alias("id"), _sign_bits(F.col(vec_col)).alias("bits")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    band_vals = F.array(
-        *[
-            sum(
-                F.element_at(F.col("bits"), b * r + i + 1) * (1 << (r - 1 - i))
-                for i in range(r)
-            )
-            for b in range(bands)
-        ]
-    )
-    return sig.select(
-        "id", F.posexplode(band_vals).alias("band_idx", "band_val")
+    # the signature is bound once (functions.bind), so every band
+    # reads one signing result per row
+    signature = bind(_sign_bits(F.col(vec_col)), band_vals)
+    return items.select(
+        F.col(id_col).alias("id"),
+        F.posexplode(signature).alias("band_idx", "band_val"),
     )
 
 

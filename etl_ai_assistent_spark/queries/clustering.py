@@ -19,7 +19,7 @@ from .. import store as ST
 from ..functions import vector as V
 from ..operators import kmeans as KM
 from ..registry import register
-from ..substrates import cached_substrates
+from ..substrates import cached_substrates, per_call
 
 K = 8
 DIM = 64
@@ -385,73 +385,67 @@ def _build_ann_store(spark: SparkSession, sf_dir: str, tmp: str) -> None:
     benign and the DuckDB oracle able to audit the disk."""
     from ..operators import pq as PQ
 
-    emb = (
-        io.load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", KM.quantize("embedding").alias("qv"))
-        .persist()
+    emb = per_call(
+        io.load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", KM.quantize("embedding").alias("qv")
+        )
     )
-    try:
-        # flat PQ family
-        cbs = PQ.train_codebooks(emb, m=M_SUB, k=PQ_K, iters=1, dim=DIM)
-        cb_rows = [
-            [(int(r["cid"]), [int(x) for x in r["cv"]]) for r in cb.collect()]
-            for cb in cbs
-        ]
-        _write_codebooks(spark, cb_rows, os.path.join(tmp, "codebooks"))
-        # r13: encode via the single-projection expression form (zero
-        # exchanges) — bit-equal to PQ.encode, pinned in tests/test_pq.py
-        PQ.encode_rows(emb, cb_rows, dim=DIM).write.parquet(
-            os.path.join(tmp, "codes")
+    # flat PQ family
+    cbs = PQ.train_codebooks(emb, m=M_SUB, k=PQ_K, iters=1, dim=DIM)
+    cb_rows = [
+        [(int(r["cid"]), [int(x) for x in r["cv"]]) for r in cb.collect()]
+        for cb in cbs
+    ]
+    _write_codebooks(spark, cb_rows, os.path.join(tmp, "codebooks"))
+    # r13: encode via the single-projection expression form (zero
+    # exchanges) — bit-equal to PQ.encode, pinned in tests/test_pq.py
+    PQ.encode_rows(emb, cb_rows, dim=DIM).write.parquet(
+        os.path.join(tmp, "codes")
+    )
+    # IVF coarse quantizer
+    coarse_assign, cents = KM.lloyd(emb, k=K, iters=1)
+    coarse_assign = per_call(coarse_assign.select("vec_id", "cluster"))
+    cent_rows = [
+        (int(r["cid"]), [int(x) for x in r["cv"]]) for r in cents.collect()
+    ]
+    spark.createDataFrame(
+        cent_rows, "cid bigint, cv array<bigint>"
+    ).coalesce(1).write.parquet(os.path.join(tmp, "centroids"))
+    # one directory per IVF cell: cell-pruned serving = partition
+    # pruning at the scan (the inverted-list layout on disk)
+    coarse_assign.write.partitionBy("cluster").parquet(
+        os.path.join(tmp, "coarse")
+    )
+    # residual family (FAISS IVFADC): codebooks trained on
+    # re-offset residuals, codes carry their cell for per-cell ADC
+    cents_df = spark.createDataFrame(
+        cent_rows, "cid bigint, cv array<bigint>"
+    )
+    rv = per_call(
+        emb.join(coarse_assign, "vec_id")
+        .join(F.broadcast(cents_df), F.col("cluster") == F.col("cid"))
+        .select(
+            "vec_id",
+            "cluster",
+            F.zip_with(
+                "qv", "cv", lambda a, b: a - b + F.lit(RES_OFFSET)
+            ).alias("qv"),
         )
-        # IVF coarse quantizer
-        coarse_assign, cents = KM.lloyd(emb, k=K, iters=1)
-        coarse_assign = coarse_assign.select("vec_id", "cluster").persist()
-        cent_rows = [
-            (int(r["cid"]), [int(x) for x in r["cv"]]) for r in cents.collect()
-        ]
-        spark.createDataFrame(
-            cent_rows, "cid bigint, cv array<bigint>"
-        ).coalesce(1).write.parquet(os.path.join(tmp, "centroids"))
-        # one directory per IVF cell: cell-pruned serving = partition
-        # pruning at the scan (the inverted-list layout on disk)
-        coarse_assign.write.partitionBy("cluster").parquet(
-            os.path.join(tmp, "coarse")
-        )
-        # residual family (FAISS IVFADC): codebooks trained on
-        # re-offset residuals, codes carry their cell for per-cell ADC
-        cents_df = spark.createDataFrame(
-            cent_rows, "cid bigint, cv array<bigint>"
-        )
-        rv = (
-            emb.join(coarse_assign, "vec_id")
-            .join(F.broadcast(cents_df), F.col("cluster") == F.col("cid"))
-            .select(
-                "vec_id",
-                "cluster",
-                F.zip_with(
-                    "qv", "cv", lambda a, b: a - b + F.lit(RES_OFFSET)
-                ).alias("qv"),
-            )
-            .persist()
-        )
-        res_cbs = PQ.train_codebooks(
-            rv.select("vec_id", "qv"), m=M_SUB, k=PQ_K, iters=1, dim=DIM
-        )
-        res_rows = [
-            [(int(r["cid"]), [int(x) for x in r["cv"]]) for r in cb.collect()]
-            for cb in res_cbs
-        ]
-        _write_codebooks(spark, res_rows, os.path.join(tmp, "res_codebooks"))
-        (
-            PQ.encode_rows(rv.select("vec_id", "qv"), res_rows, dim=DIM)
-            .join(coarse_assign, "vec_id")
-            .write.partitionBy("cluster")
-            .parquet(os.path.join(tmp, "res_codes"))
-        )
-        rv.unpersist()
-        coarse_assign.unpersist()
-    finally:
-        emb.unpersist()
+    )
+    res_cbs = PQ.train_codebooks(
+        rv.select("vec_id", "qv"), m=M_SUB, k=PQ_K, iters=1, dim=DIM
+    )
+    res_rows = [
+        [(int(r["cid"]), [int(x) for x in r["cv"]]) for r in cb.collect()]
+        for cb in res_cbs
+    ]
+    _write_codebooks(spark, res_rows, os.path.join(tmp, "res_codebooks"))
+    (
+        PQ.encode_rows(rv.select("vec_id", "qv"), res_rows, dim=DIM)
+        .join(coarse_assign, "vec_id")
+        .write.partitionBy("cluster")
+        .parquet(os.path.join(tmp, "res_codes"))
+    )
 
 
 def _pq_index(spark: SparkSession, sf_dir: str):
@@ -1191,25 +1185,21 @@ def ann_grow_store(spark: SparkSession, sf_dir: str) -> str:
     split = _grow_split(n)
 
     def build(tmp: str) -> None:
-        emb = (
+        emb = per_call(
             io.load_table(spark, sf_dir, "embeddings")
             .filter(F.col("vec_id") < split)
             .select("vec_id", KM.quantize("embedding").alias("qv"))
-            .persist()
         )
-        try:
-            cbs = PQ.train_codebooks(emb, m=M_SUB, k=PQ_K, iters=1, dim=DIM)
-            cb_rows = [
-                [(int(r["cid"]), [int(x) for x in r["cv"]]) for r in cb.collect()]
-                for cb in cbs
-            ]
-            _write_codebooks(spark, cb_rows, os.path.join(tmp, "codebooks"))
-            PQ.encode_rows(emb, cb_rows, dim=DIM).write.parquet(
-                os.path.join(tmp, "codes", "seg_0")
-            )
-            _write_grow_manifest(tmp, {"n_vecs": split, "segments": ["seg_0"]})
-        finally:
-            emb.unpersist()
+        cbs = PQ.train_codebooks(emb, m=M_SUB, k=PQ_K, iters=1, dim=DIM)
+        cb_rows = [
+            [(int(r["cid"]), [int(x) for x in r["cv"]]) for r in cb.collect()]
+            for cb in cbs
+        ]
+        _write_codebooks(spark, cb_rows, os.path.join(tmp, "codebooks"))
+        PQ.encode_rows(emb, cb_rows, dim=DIM).write.parquet(
+            os.path.join(tmp, "codes", "seg_0")
+        )
+        _write_grow_manifest(tmp, {"n_vecs": split, "segments": ["seg_0"]})
 
     ST.publish(path, build, validate=_grow_valid)
     return path

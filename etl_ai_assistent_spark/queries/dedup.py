@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from .. import io
 from ..operators import dedup as D
 from ..registry import register
+from ..substrates import per_call
 
 BUCKET = "CAST(('0x' || substr(md5({x}), 1, 8)) AS BIGINT)"
 
@@ -387,7 +388,7 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import srp_bands
 
     emb = io.load_table(spark, sf_dir, "embeddings")
-    bands = srp_bands(emb)  # (id, band_idx, band_val); persists signatures
+    bands = srp_bands(emb)  # (id, band_idx, band_val)
     cands = (
         bands.withColumnRenamed("id", "id_a")
         .join(bands.withColumnRenamed("id", "id_b"), ["band_idx", "band_val"])
@@ -753,18 +754,9 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import kmeans as KM
 
     emb, a1 = _sem_assign(spark, sf_dir)
-    # the clustered+normed table feeds BOTH sides of the pair join —
-    # persist it or the quantize/assign chain executes twice per run
-    # (build-once/scan-twice, the _doc_probe_tf reasoning)
-    normed = (
-        emb.join(a1, "vec_id")
-        .select(
-            "vec_id",
-            "cluster",
-            "embedding",
-            V.norm("embedding").alias("nr"),
-        )
-        .persist()
+    # the clustered+normed table feeds BOTH sides of the pair join
+    normed = emb.join(a1, "vec_id").select(
+        "vec_id", "cluster", "embedding", V.norm("embedding").alias("nr")
     )
     a = normed.select(
         "cluster",
@@ -1057,12 +1049,14 @@ def q_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") < NEAR_LIMIT)
         .select(F.col("doc_id").alias("id"), "text")
     )
-    corpus = docs.unionByName(
-        docs.select(
-            (F.col("id") + 100000).alias("id"),
-            F.concat(F.col("text"), F.lit(" zza zzb zzc zzd")).alias("text"),
+    corpus = per_call(  # feeds BOTH the truth and LSH branches
+        docs.unionByName(
+            docs.select(
+                (F.col("id") + 100000).alias("id"),
+                F.concat(F.col("text"), F.lit(" zza zzb zzc zzd")).alias("text"),
+            )
         )
-    ).persist()  # feeds BOTH the truth and LSH branches
+    )
     truth = D.jaccard_prefix_pairs(corpus, MHR_NUM, MHR_DEN).select(
         "id_a", "id_b"
     )
@@ -1160,7 +1154,6 @@ def q_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ex.join(dfs, "g")
         .groupBy("id")
         .agg(F.array_sort(F.collect_list(F.struct("df", "g"))).alias("arr"))
-        .persist()  # feeds probe prefixes, the index side, and verify
     )
     n = F.size("arr")
     pref_len = n - F.expr(f"({CJ_NUM} * size(arr) + {CJ_DEN - 1}) div {CJ_DEN}") + 1
@@ -1301,7 +1294,7 @@ def q_linkage_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_mktsegment").alias("seg"),
         F.floor(F.col("c_acctbal") / 1000).cast("bigint").alias("bal_band"),
         h.alias("h"),
-    ).persist()  # feeds BOTH sides of the block join
+    )
     a = base.select("id", "code", "nation", "seg", "bal_band")
     b = base.select(
         (F.col("id") + FS_B_OFFSET).alias("id"),

@@ -1157,9 +1157,7 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("ts_s").alias("end_s"),
         )
         # feeds THREE branches (bounds agg → promos, plus the banded
-        # join side) — persist or the sessionize window executes per
-        # branch
-        .persist()
+        # join side), which reuse its exchange
     )
     b = sessions.agg(
         F.expr(f"min(start_s) div {DAY_S}").alias("d0"),

@@ -1433,7 +1433,7 @@ def q_order_waiters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: lineitem is scanned and shuffled ONCE — the (order,
     supplier) pre-aggregate collapses it before anything is reused; the
-    persisted per_os table (bounded by distinct order×supplier pairs,
+    per_os table (bounded by distinct order×supplier pairs,
     a fraction of lineitem) feeds both the per-order quantifier
     aggregate and the winner join, so the textbook plan's two extra
     lineitem exchanges never happen. Orders' status filter pushes to
@@ -1457,17 +1457,11 @@ def q_order_waiters(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("is_late"),
     )
     # (order, supplier) granularity first: everything downstream needs
-    # only late-row counts per pair, and this table feeds TWO branches
-    # (the per-order quantifiers and the winner join) — persist it or
-    # the lineitem⋈orders join above executes twice
-    per_os = (
-        late_li.groupBy("l_orderkey", "l_suppkey")
-        .agg(
-            F.count(F.when(F.col("is_late"), 1))
-            .cast("bigint")
-            .alias("n_late_rows")
-        )
-        .persist()
+    # only late-row counts per pair. This table feeds TWO branches (the
+    # per-order quantifiers and the winner join), which reuse its
+    # exchange, so the lineitem⋈orders join above executes once
+    per_os = late_li.groupBy("l_orderkey", "l_suppkey").agg(
+        F.count(F.when(F.col("is_late"), 1)).cast("bigint").alias("n_late_rows")
     )
     per_order = per_os.groupBy("l_orderkey").agg(
         F.count("*").alias("n_supp"),
@@ -1726,8 +1720,7 @@ def q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches only those parts' line items (at 100 TB a runtime bloom /
     DPP filter does this scan-side — the q_bloom_join pattern
     composes). The pre-aggregate and the join-back shuffle on the
-    SAME key (l_partkey), so the exchange is reused; the brand slice
-    persists because it feeds both branches."""
+    SAME key (l_partkey), so the exchange is reused."""
     part = io.load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     li = io.load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice"
@@ -1743,7 +1736,6 @@ def q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("price_c"),
         )
-        .persist()  # feeds the per-part pre-aggregate AND the join-back
     )
     avgq = pli.groupBy("l_partkey").agg(
         F.sum("q_c").cast("bigint").alias("sum_q"),

@@ -300,10 +300,9 @@ def q_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE stats pass (r13): min/max/count AND the exact percentiles in
     # a single aggregate over a single scan — the r12 split kept them
     # apart because the stats row fans into three downstream subtrees
-    # and an UNPERSISTED combined row re-ran the percentile sort per
-    # use (observed 4x at sf0.1); the persist() barrier already
-    # prevents that, so the split's second full scan of x was pure
-    # waste. Still ONE percentile call with an array of quantiles:
+    # and the combined row re-ran the percentile sort per use (observed
+    # 4x at sf0.1); the subtrees now reuse one exchange, so the split's
+    # second full scan of x was pure waste. Still ONE percentile call with an array of quantiles:
     # each separate percentile(x, q) expression keeps its own
     # full-column sort buffer (3 buffers = 3x the work — observed
     # 6.4s vs 2.0s at sf0.1); the array form shares one buffer.
@@ -315,7 +314,6 @@ def q_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("bigint").alias("n"),
             F.expr(f"percentile(x, array({qs_sql}))").alias("ps"),
         )
-        .persist()
     )
     pct = s.select(
         *[
@@ -845,7 +843,7 @@ def q_two_pass_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("bigint").alias("cnt"))
     )
     wb = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, 0)
-    n_row = c.agg(F.count("*").cast("bigint").alias("n")).persist()
+    n_row = c.agg(F.count("*").cast("bigint").alias("n"))
     cum = (
         buckets.withColumn("cum", F.sum("cnt").over(wb))
         .crossJoin(F.broadcast(n_row))
@@ -962,7 +960,7 @@ def q_hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_orderpriority", "o_custkey")
         .filter(F.col("o_orderpriority").isin(HLL_SEG_A, HLL_SEG_B))
     )
-    regs = SK.hll_registers(segs, "o_custkey", ["o_orderpriority"]).persist()
+    regs = SK.hll_registers(segs, "o_custkey", ["o_orderpriority"])
     est = SK.hll_estimate(regs, ["o_orderpriority"])
     wide = est.agg(
         F.max(
@@ -1057,7 +1055,7 @@ def q_grouped_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count("*").cast("bigint").alias("cnt"))
     ngrp = c.groupBy("o_orderpriority").agg(
         F.count("*").cast("bigint").alias("n")
-    ).persist()  # feeds the rank targets AND the final report
+    )  # feeds the rank targets AND the final report
     wb = (
         Window.partitionBy("o_orderpriority")
         .orderBy("b")

@@ -22,6 +22,7 @@ from .. import io
 from .. import store as ST
 from ..functions import text as TX
 from ..registry import register
+from ..substrates import per_call
 
 # DuckDB twin of functions.text.tokens (same as queries/dedup.py)
 _TOKS = """
@@ -524,15 +525,11 @@ def q_doc_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded), a posting-list equi-join of tokens to df (same shape as
     the q_rag_retrieval index join), and a per-doc sum. The 1-row
     corpus count broadcasts."""
-    from pyspark import StorageLevel
-
     docs = io.load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # tok feeds three branches (df table, corpus count, posting join) —
-    # persist the tokenize pass instead of re-exploding the corpus per
-    # branch (same materialized-index reasoning as rag._doc_probe_tf)
+    # tok feeds three branches (df table, corpus count, posting join)
     tok = docs.select(
         "doc_id", F.explode(TX.tokens(F.lower(F.col("text")))).alias("tok")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     df_tbl = tok.groupBy("tok").agg(
         F.countDistinct("doc_id").cast("bigint").alias("df")
     )
@@ -612,10 +609,8 @@ def q_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     UDF); the (bigram → c12) and (prefix → c1) aggregates are bounded
     by the OBSERVED bigram vocabulary, far below |tokens|²; scoring is
     two posting-list equi-joins (the q_rag_retrieval shape) and a
-    per-doc sum. The exploded bigram table feeds three branches, so it
-    persists once (the _doc_probe_tf reasoning)."""
-    from pyspark import StorageLevel
-
+    per-doc sum. The exploded bigram table feeds three branches; each
+    re-derives it with one narrow map over the scan."""
     docs = io.load_table(spark, sf_dir, "documents").select("doc_id", "text")
     arrs = docs.select(
         "doc_id", TX.tokens(F.lower(F.col("text"))).alias("arr")
@@ -628,7 +623,7 @@ def q_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " i -> concat(arr[i - 1], ' ', arr[i]))"
             )
         ).alias("bg"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     c12 = big.groupBy("bg").agg(F.count("*").cast("bigint").alias("c12"))
     c1 = (
         big.select(F.split_part(F.col("bg"), F.lit(" "), F.lit(1)).alias("w1"))
@@ -703,10 +698,10 @@ def q_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary (deterministic ties on the token) prunes the doc-token
     table BEFORE the per-doc self-join, capping pairs per document at
     C({PMI_VOCAB},2) regardless of document length. One distinct-
-    tokenize pass feeds df, N, and the join (persisted); the self-join
-    keys on doc_id, so co-located rows pair without a second shuffle.
+    tokenize pass feeds df, N, and the join (its exchange is reused);
+    the self-join keys on doc_id, so co-located rows pair without a
+    second shuffle.
     The 1-row corpus count broadcasts."""
-    from pyspark import StorageLevel
     from pyspark.sql.window import Window as W
 
     docs = io.load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -715,7 +710,6 @@ def q_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", F.explode(TX.tokens(F.lower(F.col("text")))).alias("tok")
         )
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     n = tok.agg(F.countDistinct("doc_id").cast("bigint").alias("n_docs"))
     df_tbl = tok.groupBy("tok").agg(F.count("*").cast("bigint").alias("df"))
@@ -1119,16 +1113,13 @@ def q_bpe_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: the weighted distinct-token formulation (see q_bpe_train) —
     # one corpus-sized groupBy(tok), then both count passes and the
     # merge run over the vocabulary with cnt-weighted sums. The token
-    # table feeds iteration-1 counts AND the merge stream; the persist
-    # is per-call but vocabulary-sized (released with the session, and
-    # the bench clears caches between queries).
+    # table feeds iteration-1 counts AND the merge stream.
     docs = io.load_table(spark, sf_dir, "documents").select("text")
     toks = (
         docs.select(F.explode(TX.tokens(F.lower(F.col("text")))).alias("tok"))
         .filter(F.length("tok") >= 2)
         .groupBy("tok")
         .agg(F.count("*").cast("bigint").alias("cnt"))
-        .persist()
     )
     # iteration 1's counts → the winning pair (1 row, broadcast)
     top1 = (
@@ -1321,8 +1312,8 @@ def q_split_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: token counts per split are one exploded groupBy (map-side
     partial agg \u2014 shuffle is |vocab| keys, not |tokens| rows); both
     splits count in the SAME aggregate via conditional sums, so the
-    splits never join. The per-token table is persisted (it feeds the
-    totals row and the deviation sum); the totals ride 1-row
+    splits never join. The per-token table feeds the totals row and the
+    deviation sum, which reuse its exchange; the totals ride 1-row
     broadcasts. Bigint products hold to ~1e18; at web scale the same
     expression widens to DECIMAL(38,0)."""
     docs = io.load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1354,8 +1345,7 @@ def q_split_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_b"),
         )
-        .persist()  # feeds the totals row AND the deviation sum
-    )
+    )  # feeds the totals row AND the deviation sum
     tot = cnt.agg(
         F.sum("n_a").cast("bigint").alias("na"),
         F.sum("n_b").cast("bigint").alias("nb"),
@@ -1438,8 +1428,9 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines agree on. Scale: per iteration one vocabulary-bounded
     count shuffle + a 1-row broadcast + a narrow map over tokens; the
     symbol stream shrinks monotonically. Each merged stream feeds the
-    next count AND the next merge, so it persists (a production run
-    checkpoints here instead — same plan shape)."""
+    next count AND the next merge, so it is cached for the call
+    (substrates.per_call; a production run checkpoints here instead —
+    same plan shape)."""
     # r13: train on the DISTINCT-TOKEN FREQUENCY TABLE, the standard
     # BPE formulation — pair counts over token instances equal
     # cnt-weighted pair counts over distinct tokens (every instance of
@@ -1463,7 +1454,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     merges = []
     for i in range(1, BPE_ITERS + 1):
-        spaced = spaced.persist()  # feeds this count AND the next merge
+        spaced = per_call(spaced)  # feeds this count AND the next merge
         top = (
             spaced.select(
                 F.split(F.trim(F.col("sp")), " ").alias("arr"), "cnt"
@@ -1544,7 +1535,7 @@ def q_bpe_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same engine-exact loop as q_bpe_train (integer counts,
     (count DESC, pair) argmax, shared replace() semantics); each
     stage's symbol total is one narrow map + partial-agg'd sum over
-    the persisted merged stream, so the curve costs one extra
+    the call-cached merged stream, so the curve costs one extra
     aggregate per stage on top of training itself."""
     # r13: same weighted distinct-token formulation as q_bpe_train —
     # per-stage symbol totals are cnt-weighted sums over the vocabulary
@@ -1566,7 +1557,7 @@ def q_bpe_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("bigint")
     stages = []
     for i in range(0, BPE_ITERS + 1):
-        spaced = spaced.persist()  # feeds this count, the argmax, the merge
+        spaced = per_call(spaced)  # feeds this count, the argmax, the merge
         stages.append(
             spaced.agg(n_sym.alias("n_symbols")).select(
                 F.lit(i).cast("bigint").alias("stage"), "n_symbols"
@@ -1779,7 +1770,7 @@ def q_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cp = cps[0]
     for c in cps[1:]:
         cp = cp.unionByName(c)
-    cp = cp.persist()  # feeds the regression AND the output rows
+    # cp feeds the regression AND the output rows
     xy = cp.select(
         "eighths",
         "n_tokens",

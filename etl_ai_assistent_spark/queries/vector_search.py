@@ -21,10 +21,11 @@ from pyspark.sql import functions as F
 
 from .. import io
 from .. import store as ST
+from ..functions import bind
 from ..functions import vector as V
 from ..operators import similarity
 from ..registry import register
-from ..substrates import cached_substrates
+from ..substrates import cached_substrates, per_call
 
 # DuckDB fragment: dot(a, b) with the same DOUBLE left-to-right fold Spark
 # uses in functions.vector.dot (zip_with + aggregate from 0.0).
@@ -421,18 +422,7 @@ def q_vectorize_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.embedder import hash_embed_expr
 
     path = _lines_fixture(spark, sf_dir)
-    # AQE coalesces the tiny post-distinct shuffle (a few MB) down to ONE
-    # partition — byte-cheap but compute-fatal here, because the
-    # downstream interpreted-HOF embedding then runs on a single task
-    # (observed: minutes at sf0.1 on one core vs seconds across 32). An
-    # explicit user repartition AFTER the distinct is respected by AQE
-    # and spreads the narrow embed; its own shuffle is a few MB.
-    lines = (
-        io.read_text_lines(spark, path)
-        .filter(F.col("line") != "")
-        .distinct()
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    lines = io.read_text_lines(spark, path).filter(F.col("line") != "").distinct()
     recs = lines.select(
         F.md5("line").alias("point_id"),
         F.lit("hash-64").alias("model"),
@@ -501,13 +491,17 @@ def q_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = VX.as_double("embedding")
     mn = F.array_min(v)
     mx = F.array_max(v)
-    codes = F.transform(
-        v,
-        lambda x: F.floor((x - mn) * F.lit(255.0) / (mx - mn) + F.lit(0.5)).cast(
-            "int"
+    # bound once (functions.bind): captured in the lambda, the min and
+    # max would be recomputed per element, O(dim²) per row
+    codes = bind(
+        F.struct(v.alias("v"), mn.alias("lo"), mx.alias("hi")),
+        lambda b: F.transform(
+            b["v"],
+            lambda x: F.floor(
+                (x - b["lo"]) * F.lit(255.0) / (b["hi"] - b["lo"]) + F.lit(0.5)
+            ).cast("int"),
         ),
     )
-    scale = (mx - mn) / F.lit(255.0)
     base = emb.select(
         "vec_id",
         v.alias("v"),
@@ -734,8 +728,8 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     greedy loop, so each unrolled round is an anti-join + a
     (probe-bounded × selected-bounded) similarity join + one argmax —
     probes × {MMR_CAND} × round rows, never corpus-sized. The
-    selected set persists per round (it feeds the anti-join AND the
-    sim join). The candidate fetch itself is the q_knn_join plan
+    selected set is cached per round for the call (substrates.per_call;
+    it feeds the anti-join AND the sim join). The candidate fetch itself is the q_knn_join plan
     (broadcast probes, TakeOrdered per probe)."""
     emb = io.load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
@@ -749,7 +743,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_rel = Window.partitionBy("probe_id").orderBy(
         F.desc("rel_ppm"), F.asc("item_id")
     )
-    cand = (
+    cand = per_call(  # feeds every greedy round
         emb.select(F.col("vec_id").alias("item_id"), F.col("embedding").alias("vec"))
         .crossJoin(F.broadcast(probes))
         .filter(F.col("item_id") != F.col("probe_id"))
@@ -757,9 +751,8 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(w_rel))
         .filter(F.col("rn") <= MMR_CAND)
         .drop("rn")
-        .persist()  # feeds every greedy round
     )
-    sel = (
+    sel = per_call(
         cand.withColumn("rn", F.row_number().over(w_rel))
         .filter(F.col("rn") == 1)
         .select(
@@ -770,7 +763,6 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1).cast("bigint").alias("pos"),
             "vec",
         )
-        .persist()
     )
     simppm = (
         F.round(V.cosine("vec", "svec") * 1000000).cast("bigint")
@@ -801,7 +793,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "vec",
             )
         )
-        sel = sel.unionByName(pick).persist()
+        sel = per_call(sel.unionByName(pick))
     return sel.select("probe_id", "pos", "item_id", "rel_ppm", "maxsim_ppm")
 
 

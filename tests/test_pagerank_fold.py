@@ -14,7 +14,6 @@ contract only needs directed rows)."""
 from __future__ import annotations
 
 import random
-import re
 
 from pyspark.sql import functions as F
 
@@ -115,43 +114,6 @@ def test_lpa_fold_packed_domain_guard_fires(spark):
     nodes = spark.createDataFrame([(0,), (big,)], "node bigint")
     with pytest.raises(Exception, match="packed-bigint"):
         label_propagation_fold(edges, nodes, 2).collect()
-
-
-def test_connected_components_no_retention(spark):
-    """r13 ADVICE (iterate.py begin() eviction): a connected_components
-    result retained across a LATER connected_components call may lose
-    its checkpoint blocks to generation eviction. The documented
-    contract (operators/components.py) is never-silently-wrong:
-    re-executing the retained result either reproduces the identical
-    rows (blocks still cached) or fails loudly with a missing-
-    checkpoint-block error — it must not return different rows."""
-    from pyspark.sql import functions as F
-
-    from etl_ai_assistent_spark.operators.components import (
-        connected_components,
-    )
-
-    p1 = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "id_a bigint, id_b bigint"
-    )
-    p2 = spark.createDataFrame(
-        [(5, 6), (6, 7)], "id_a bigint, id_b bigint"
-    )
-    r1 = connected_components(p1)
-    rows1 = sorted(map(tuple, r1.collect()))
-    assert rows1  # consumed before the second call — the supported use
-    r2 = connected_components(p2)
-    assert sorted(map(tuple, r2.collect()))
-    try:
-        again = sorted(map(tuple, r1.collect()))
-    except Exception as exc:  # noqa: BLE001 — only the documented error passes
-        if not re.search(r"Checkpoint block .* not found", str(exc)):
-            raise
-        return  # loud failure: the documented outcome
-    assert again == rows1, (
-        "retained result re-executed to DIFFERENT rows after a later "
-        "connected_components call — silent corruption, contract broken"
-    )
 
 
 def _grid_edges(spark, n_edges: int):

@@ -4,9 +4,12 @@ row count, column names, and order-insensitive values."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from etl_ai_assistent_spark import parity
+from etl_ai_assistent_spark import substrates as S
 from etl_ai_assistent_spark.registry import oracle_sql, queries
 
 
@@ -20,10 +23,28 @@ def test_query_matches_oracle(spark, sf_small, name):
     assert res.ok, str(res)
 
 
+def _pinned(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _held() -> int:
+    """DataFrames the per-corpus substrate cache holds."""
+    return sum(len(S._dataframes(v)) for v in S._entries.values())
+
+
 def test_every_query_runs_at_smoke_sf(spark, sf_small):
+    """Every query runs, and the leak gate over every query: after its
+    action and the next call's entry (substrates.start_call), the
+    pinned RDDs are at most the DataFrames substrates.py holds, so no
+    per-call intermediate outlives its call."""
+    leaks = {}
     for name, fn in queries().items():
         df = fn(spark, sf_small)
         assert df.count() >= 0, name
+        S.start_call(spark)
+        if _pinned(spark) > _held():
+            leaks[name] = (_pinned(spark), _held())
+    assert not leaks, f"pinned RDDs > substrate DataFrames after: {leaks}"
 
 
 def test_oracles_have_matching_queries():
@@ -102,20 +123,117 @@ def test_rotation_consumed_latest_correctness_files():
         )
 
 
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _kind(e) -> str:
+    return e.getClass().getSimpleName()
+
+
+# a column read, or a lambda (a function, evaluated only when applied)
+PLAIN = ("AttributeReference", "LambdaFunction")
+
+
+def lambda_captures(df) -> list[str]:
+    """Subtrees of `df`'s analyzed plan that sit in a higher-order
+    function's lambda body, reference no lambda variable and are
+    neither foldable nor a plain column: each is evaluated again for
+    every array element (the quadratic hash embedding). Bind such a
+    value once with functions.bind instead."""
+    hits: list[str] = []
+
+    def free(e) -> set:
+        """Ids of the lambda variables `e` references but does not bind;
+        records `e`'s captured children when it has any."""
+        kind = _kind(e)
+        if kind == "NamedLambdaVariable":
+            return {e.exprId().id()}
+        kids = _seq(e.children())
+        per_kid = [free(k) for k in kids]
+        out = set().union(*per_kid)
+        if out:
+            for k, f in zip(kids, per_kid):
+                if not f and not k.foldable() and _kind(k) not in PLAIN:
+                    hits.append(re.sub(r"#\d+L?", "", k.toString()))
+        if kind == "LambdaFunction":
+            out -= {a.exprId().id() for a in _seq(e.arguments())}
+        return out
+
+    def plan(p) -> None:
+        for e in _seq(p.expressions()):
+            if "lambdafunction" in e.toString():
+                free(e)
+        for c in _seq(p.children()):
+            plan(c)
+
+    analyzed = df._jdf.queryExecution().analyzed()
+    if "lambdafunction" in analyzed.toString():
+        plan(analyzed)
+    return hits
+
+
+# Lambda captures that stay, with the most each query may hold: each is
+# O(1) or bounded per element, not a re-run of a per-row pass.
+LAMBDA_CAPTURE_ALLOWED = {
+    # size(ns) of the collected node array: an O(1) length read
+    "q_pagerank_nations": 6,
+    # the packed-domain raise_error guard: evaluated only when it fires
+    "q_label_propagation": 3,
+    # length(code) of a 4-character name code
+    "q_fuzzy_match_names": 6,
+    "q_levenshtein_match": 7,
+    # (mx - mn) / 255.0 over two row attributes: O(1) arithmetic
+    "q_int8_quantize": 1,
+    # the 300-character truncation each fixed chunk slices
+    "q_version_diff": 1,
+}
+
+
+def test_lambda_capture_guard_catches_reinlined_buckets(spark):
+    """Test-of-the-test: hash_embed_expr with `buckets` captured in the
+    per-bucket lambda again (the quadratic form) is flagged; the bound
+    form is not."""
+    from pyspark.sql import functions as F
+
+    from etl_ai_assistent_spark.functions import text as TX
+    from etl_ai_assistent_spark.operators import embedder as E
+
+    df = spark.createDataFrame([("a b a",)], "text string")
+    assert not lambda_captures(df.select(E.hash_embed_expr("text", 8)))
+    buckets = F.transform(
+        TX.tokens(F.lower(F.col("text"))), lambda t: E.token_bucket_expr(t, 8)
+    )
+    tf = F.transform(
+        F.sequence(F.lit(0), F.lit(7)),
+        lambda b: F.size(F.filter(buckets, lambda x: x == b.cast("bigint"))),
+    )
+    hits = lambda_captures(df.select(tf))
+    assert hits and all("md5" in h for h in hits), hits
+
+
 def test_no_complex_columns_in_registered_output(spark, sf_small):
     """The driver's canonicalizer crashes on list-valued cells (round 1:
     q_label_centroids / q_vectorize_lines got no verdict at all). Every
     registered query must emit scalar columns only — re-project arrays
-    to exploded rows or canonical strings before registering."""
+    to exploded rows or canonical strings before registering.
+
+    The same loop is the lambda-capture guard: no query's plan holds
+    more lambda_captures than LAMBDA_CAPTURE_ALLOWED grants it."""
     from pyspark.sql import types as T
 
-    bad = {}
+    bad, captured = {}, {}
     for name, fn in queries().items():
+        df = fn(spark, sf_small)
         complex_cols = [
             f.name
-            for f in fn(spark, sf_small).schema.fields
+            for f in df.schema.fields
             if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType))
         ]
         if complex_cols:
             bad[name] = complex_cols
+        hits = lambda_captures(df)
+        if len(hits) > LAMBDA_CAPTURE_ALLOWED.get(name, 0):
+            captured[name] = sorted(set(hits))
     assert not bad, f"registered queries with non-scalar output columns: {bad}"
+    assert not captured, f"lambdas capture per-row expressions: {captured}"

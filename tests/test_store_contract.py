@@ -3,9 +3,10 @@
 store.py decides where such an artifact lives (`corpus_path`: the store
 root, a family, and the corpus_key of the source table) and when it is
 adopted (`publish`: build in a temp dir, one atomic rename, validated
-adoption). The guard below fails if a module grows a second contract
-again: a hard-coded /tmp path, the deleted mtime+size key helpers, or a
-key formatted from os.stat of a source table. The other tests pin what
+adoption). The guard below fails if a module of the package or of
+tools/ grows a second contract again: a hard-coded /tmp path, the
+deleted mtime+size key helpers, or a key formatted from os.stat of a
+source table. The other tests pin what
 the contract buys: a build that dies mid-loop leaves nothing a rerun
 appends to, and SPARK_GRAFT_STORE_ROOT moves every fixture.
 """
@@ -57,7 +58,8 @@ def _stat_keys(tree: ast.AST) -> list[int]:
 
 def test_no_second_artifact_contract():
     offenders = []
-    for path in sorted(PKG.rglob("*.py")):
+    tools = sorted((PKG.parent / "tools").glob("*.py"))
+    for path in sorted(PKG.rglob("*.py")) + tools:
         if path.name == "store.py":
             continue
         src = path.read_text()

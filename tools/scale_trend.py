@@ -4,8 +4,8 @@ The 100×-scale claims rest on plan shape (tests/test_plans.py) and
 measured candidate ratios (tests/test_scale_evidence.py); this tool adds
 the missing third leg (r7 verdict #3): MEASURED time-vs-sf slopes. It
 builds an sf1-equivalent dataset by replicating the sf0.1 tables 10×
-with per-replica key offsets (DuckDB, one-time, /tmp fixture with a
-marker file), then times a family-spanning subset of the headline
+with per-replica key offsets (DuckDB, one-time, a fixture under the
+store root with a marker file), then times a family-spanning subset of the headline
 queries at all three scales and writes SCALE_TREND.json, committed
 beside the bench artifact BENCH_LOCAL.json.
 
@@ -34,9 +34,14 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from etl_ai_assistent_spark.store import store_root  # noqa: E402
+
 SRC = "/root/testdata/sf0.1"
-FIXTURE = "/tmp/spark_graft_scale/sf1_v1"
-FIXTURE10 = "/tmp/spark_graft_scale/sf10_v1"
+SCALE_ROOT = os.path.join(store_root(), "spark_graft_scale")
+FIXTURE = os.path.join(SCALE_ROOT, "sf1_v1")
+FIXTURE10 = os.path.join(SCALE_ROOT, "sf10_v1")
 REPS = 10
 STRIDE = 10_000_000  # > every key's max at sf0.1 (100 reps stay < 1e9)
 
@@ -282,7 +287,6 @@ def run_sf10(only: list[str] | None = None) -> None:
     """Append the 100×-of-sf0.1 point to an existing SCALE_TREND.json.
     `only` restricts to a subset of TREND10 (e.g. newly added queries)
     so existing measured points aren't re-timed."""
-    sys.path.insert(0, REPO)
     path = os.path.join(REPO, "SCALE_TREND.json")
     with open(path) as f:
         trend = json.load(f)
@@ -334,7 +338,7 @@ def run_sf10(only: list[str] | None = None) -> None:
     spark.stop()
 
 
-FIXTURE100 = "/tmp/spark_graft_scale/sf100_v1"
+FIXTURE100 = os.path.join(SCALE_ROOT, "sf100_v1")
 
 # The THIRD decade (sf100-equivalent: 1000 replicas of sf0.1 — 2M
 # vectors / 5M documents; the 600M-lineitem scale point, r10 verdict
@@ -342,8 +346,8 @@ FIXTURE100 = "/tmp/spark_graft_scale/sf100_v1"
 # that SERVING stays flat while data grows, and three decades of
 # store-served evidence is the strongest local answer. The fixture is
 # PARTIAL by design: these queries touch only the two corpus tables,
-# and replicating the relational facts 1000× would cost ~20 GB of /tmp
-# for no additional evidence.
+# and replicating the relational facts 1000× would cost ~20 GB of the store
+# root for no additional evidence.
 TREND100 = [
     "q_pq_adc_topk",  # PQ ADC serving off the stored codes
     "q_trigram_search",  # posting-index serving off the trigram store
@@ -358,7 +362,6 @@ def run_sf100(only: list[str] | None = None) -> None:
     codebooks/codes, trigram postings) — recorded separately as
     `cold_100.0` so the build-vs-serve split at this scale is evidence
     too; the timed point is the warm store-served run."""
-    sys.path.insert(0, REPO)
     path = os.path.join(REPO, "SCALE_TREND.json")
     with open(path) as f:
         trend = json.load(f)
@@ -411,7 +414,6 @@ def run_sf100(only: list[str] | None = None) -> None:
 
 
 def main(only: list[str] | None = None) -> None:
-    sys.path.insert(0, REPO)
     build_fixture()
 
     from etl_ai_assistent_spark.registry import queries
