@@ -2,7 +2,7 @@
 
 Reference-parity scalar ops (SURVEY.md §2.3) plus the text-analysis
 building blocks the LLM-data-pipeline extensions need (token counting,
-quality ratios, language-ID scoring, fingerprinting). All pure built-in
+word shingles, language-ID scoring). All pure built-in
 expressions — JVM-side, codegen'd, no UDFs.
 """
 
@@ -16,12 +16,6 @@ CAPTION_PREFIX_RE = r"^(рис|figure|рисунок|таблица|table)"
 TABLE_PREFIX_RE = r"^(таблица|table)"
 
 _c = lambda c: F.col(c) if isinstance(c, str) else c  # noqa: E731
-
-
-def non_empty(text: Column | str) -> Column:
-    """P1-P3 (docx_parser.py:68-70 etc.): keep rows whose text is not
-    whitespace-only."""
-    return F.length(F.trim(_c(text))) > 0
 
 
 def is_heading(style: Column | str, prefix: str = "Heading") -> Column:
@@ -130,17 +124,10 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 CJK_RE_JAVA = "[\\u4e00-\\u9fff]"
 
 
-def stopword_hits(text: Column | str, stopwords: tuple[str, ...]) -> Column:
-    """Occurrence count (not distinct) of profile stopwords in the
-    lowercased token stream — one language-ID score channel. When
-    scoring several profiles over one text column, tokenize ONCE and use
-    stopword_hits_in (otherwise each channel re-splits the document)."""
-    toks = tokens(F.lower(_c(text)))
-    return F.size(F.filter(toks, lambda x: x.isin(*stopwords)))
-
-
 def stopword_hits_in(tok_col: Column | str, stopwords: tuple[str, ...]) -> Column:
-    """stopword_hits over an already-materialized token array column."""
+    """Occurrence count (not distinct) of profile stopwords in an
+    already-tokenized array column — one language-ID score channel.
+    Tokenize once and score every profile over that column."""
     return F.size(F.filter(_c(tok_col), lambda x: x.isin(*stopwords)))
 
 
@@ -149,17 +136,3 @@ def cjk_char_count(text: Column | str) -> Column:
     instead of stopwords)."""
     t = _c(text)
     return F.length(t) - F.length(F.regexp_replace(t, CJK_RE_JAVA, ""))
-
-
-def punct_ratio(text: Column | str) -> Column:
-    t = _c(text)
-    stripped = F.regexp_replace(t, r"[^\w\s]", "")
-    return (F.length(t) - F.length(stripped)) / F.greatest(
-        F.length(t), F.lit(1)
-    )
-
-
-def stopword_ratio(text: Column | str, stopwords: tuple[str, ...]) -> Column:
-    toks = tokens(F.lower(_c(text)))
-    hits = F.size(F.filter(toks, lambda x: x.isin(*stopwords)))
-    return hits / F.greatest(F.size(toks), F.lit(1))

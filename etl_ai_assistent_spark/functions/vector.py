@@ -40,9 +40,7 @@ INTERPRETED on the JVM — they are not whole-stage-codegen'd — and a
 Column captured inside a lambda is evaluated again per array element.
 When a dot/norm feeds many expressions (LSH signing, minhash), bind it
 once with functions.bind (see operators/dedup.minhash_bands,
-operators/similarity.srp_bands); where profiling shows the interpreter itself is the bottleneck, the
-Arrow-batched pandas-UDF twin (operators/embedder.hash_embed_pandas) is
-the faster path.
+operators/similarity.srp_bands).
 
 Reference semantics covered:
 - cosine top-k retrieval math (reference scripts/test.out.py:14-19,

@@ -120,7 +120,13 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert_ts_unit_sane(path)
     except (OSError, KeyError, ValueError):
         pass  # multi-file/remote layout — the dtype dispatch still applies
-    df = load_table(spark, sf_dir, "events")
+    return with_ts_us(load_table(spark, sf_dir, "events"))
+
+
+def with_ts_us(df: DataFrame) -> DataFrame:
+    """`df` with its events `ts` replaced, in place, by the canonical
+    `ts_us` epoch-µs BIGINT (ts_us_col) — the one normalization the
+    batch scan and the streaming scans share."""
     ts_us = ts_us_col(dict(df.dtypes)["ts"]).cast("bigint").alias("ts_us")
     return df.select(
         *[ts_us if c == "ts" else F.col(c) for c in df.columns]
@@ -151,16 +157,6 @@ def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
 def read_json_dataset(spark: SparkSession, path: str) -> DataFrame:
     """S5 QA JSON source (make_ragas_dataset.py:61-69), explicit schema."""
     return spark.read.json(path, schema=schemas.QA_DATASET, multiLine=True)
-
-
-def read_binary_files(spark: SparkSession, path_glob: str) -> DataFrame:
-    """S1 ingest edge: binary files (e.g. *.docx) one row per file.
-
-    Columns: path, modificationTime, length, content (BinaryType).
-    At scale each file is one task; parsing happens in mapInPandas
-    (see operators.multimodal / sources.docx).
-    """
-    return spark.read.format("binaryFile").load(path_glob)
 
 
 # --- sinks (SURVEY.md §2.2) ----------------------------------------------

@@ -10,22 +10,16 @@ Reference semantics (imperative state machine):
   default name downstream); a caption never followed by an asset is
   dropped.
 
-Two implementations:
-
-- ``pair_captions_window`` — declarative twin: for every asset, take the
-  last preceding caption (last ignorenulls over block order), then keep
-  only the FIRST asset per caption (row_number). Equivalent to the state
-  machine for the above cases; one window pass partitioned by doc, no
-  cross-doc shuffle. The oracle-checkable scale path.
-- ``pair_captions_pandas`` — applyInPandas per document running the
-  literal sequential algorithm; docs are KB-sized so per-doc pandas is
-  safe at any corpus scale (SURVEY.md §7 hard-part 1). Ground truth for
-  tests.
+``pair_captions_window`` is the declarative twin: for every asset, take
+the last preceding caption (last ignorenulls over block order), then keep
+only the FIRST asset per caption (row_number). Equivalent to the state
+machine for the above cases; one window pass partitioned by doc, no
+cross-doc shuffle, oracle-checkable. tests/test_text_operators.py pins it
+against a pure-Python replica of the state machine.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -66,41 +60,3 @@ def pair_captions_window(
             F.when(F.col("__use"), F.col("__cap.t")).alias("caption_text"),
         )
     )
-
-
-def pair_captions_pandas(
-    blocks: DataFrame,
-    *,
-    doc_col: str = "doc_id",
-    order_col: str = "block_idx",
-) -> DataFrame:
-    """Literal sequential state machine, one pandas group per document."""
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
-        out = []
-        pending: tuple[int, str] | None = None
-        for row in pdf.itertuples(index=False):
-            d = row._asdict()
-            if d["is_caption"]:
-                pending = (d[order_col], d["text"])  # later caption overwrites
-            elif d["is_asset"]:
-                out.append(
-                    {
-                        doc_col: d[doc_col],
-                        "asset_block_idx": d[order_col],
-                        "caption_block_idx": pending[0] if pending else None,
-                        "caption_text": pending[1] if pending else None,
-                    }
-                )
-                pending = None  # consumed
-        return pd.DataFrame(
-            out,
-            columns=[doc_col, "asset_block_idx", "caption_block_idx", "caption_text"],
-        )
-
-    schema = (
-        f"{doc_col} long, asset_block_idx int, "
-        "caption_block_idx int, caption_text string"
-    )
-    return blocks.groupBy(doc_col).applyInPandas(run, schema=schema)

@@ -1,17 +1,15 @@
 """Sorted file compaction — the lakehouse table-maintenance operator.
 
 A 100 TB table accumulates small, unordered files (streaming ingest,
-per-batch appends — e.g. the foreachBatch parquet sink in
-streaming/pipeline.py writes one file set per micro-batch). Compaction
-rewrites it as N range-partitioned, key-sorted files whose parquet
+per-batch appends). Compaction rewrites it as N range-partitioned,
+key-sorted files whose parquet
 footer min/max statistics have DISJOINT key ranges — so any engine's
 zone-map / row-group skipping turns a key-range predicate into a
 subset-of-files scan instead of a full-table scan.
 
-Spark-first: `repartitionByRange` (sampled range exchange) +
-`sortWithinPartitions` keeps the whole rewrite distributed and
-shuffle-optimal (one range exchange, no global sort barrier); the file
-count is the explicit scale knob (files ~ table_bytes / target_file_size).
+Spark-first: fixed-width key buckets + one hash exchange keep the whole
+rewrite distributed (no global sort barrier); the file count is the
+explicit scale knob (files ~ table_bytes / target_file_size).
 """
 
 from __future__ import annotations
@@ -20,31 +18,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def compact_sorted(
-    df: DataFrame, path: str, key: str, n_files: int, mode: str = "overwrite"
-) -> None:
-    """Rewrite `df` as `n_files` key-clustered parquet files: a sampled
-    range repartition on `key` (disjoint per-file key ranges) followed
-    by an in-partition sort (monotone pages inside each file, so
-    page-level indexes work too)."""
-    (
-        df.repartitionByRange(n_files, F.col(key))
-        .sortWithinPartitions(key)
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
 def compact_fixed_width(
     df: DataFrame, path: str, key: str, n_files: int, mode: str = "overwrite"
 ) -> None:
-    """Deterministic compaction variant: EXPLICIT fixed-width key-range
-    buckets (bucket = (key - min) div width) instead of
-    repartitionByRange's sampled boundaries. Same disjoint-zone-map
-    outcome — but the file → key-range mapping is a pure function of the
-    data, so another engine can replay it exactly (the property the
-    driver's oracle gate needs; compact_sorted stays the production
-    default where sampled balance beats replayability).
+    """Rewrite `df` as key-clustered parquet files over EXPLICIT
+    fixed-width key-range buckets (bucket = (key - min) div width)
+    rather than repartitionByRange's sampled boundaries: the file →
+    key-range mapping is a pure function of the data, so another engine
+    can replay it exactly (the property the driver's oracle gate needs).
 
     Layout: one hash repartition on the bucket id co-locates each
     bucket in one task, and partitionBy splits task output by bucket
@@ -74,9 +55,9 @@ def partitioned_zone_maps(path: str, key: str) -> list[tuple[int, int, int, int]
     compact_fixed_width layout, read from parquet FOOTERS only — the
     zone map a stats-aware reader consults. Bounded by the file count
     (n_files), never the data. A bucket whose every row group lacks
-    footer min/max statistics is SKIPPED (same policy as
-    file_key_ranges: a stats-less file has no zone-map entry and can
-    never be pruned) rather than emitted with None bounds."""
+    footer min/max statistics is SKIPPED (a stats-less file has no
+    zone-map entry and can never be pruned) rather than emitted with
+    None bounds."""
     import os
 
     import pyarrow.parquet as pq
@@ -105,40 +86,3 @@ def partitioned_zone_maps(path: str, key: str) -> list[tuple[int, int, int, int]
             continue  # stats-less bucket: no zone-map entry (never prunable)
         out.append((bucket, lo, hi, n))
     return out
-
-
-def file_key_ranges(path: str, key: str) -> list[tuple[str, int, int]]:
-    """(file, min, max) of `key` from parquet footer statistics only —
-    the zone-map a reader consults; no data pages are touched."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    out = []
-    for name in sorted(os.listdir(path)):
-        if not name.endswith(".parquet"):
-            continue
-        pf = pq.ParquetFile(os.path.join(path, name))
-        idx = [f.name for f in pf.schema_arrow].index(key)
-        lo = hi = None
-        for rg in range(pf.metadata.num_row_groups):
-            st = pf.metadata.row_group(rg).column(idx).statistics
-            if st is None or not st.has_min_max:
-                continue  # stats-less row group: no zone-map entry for it
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-        out.append((name, lo, hi))
-    return out
-
-
-def files_matching_range(
-    ranges: list[tuple[str, int, int]], lo: int, hi: int
-) -> list[str]:
-    """Zone-map pruning decision: files whose [min, max] intersects
-    [lo, hi] — exactly the skip logic a stats-aware reader applies. A
-    file with no footer stats (range None) can never be skipped."""
-    return [
-        f
-        for f, mn, mx in ranges
-        if mn is None or mx is None or not (mx < lo or mn > hi)
-    ]

@@ -220,13 +220,6 @@ def simhash_from_buckets(hashes: Column, bits: int = 16) -> Column:
     return F.aggregate(bit_vals, F.lit(0).cast("bigint"), lambda a, x: a + x)
 
 
-def simhash(text: Column | str, bits: int = 16) -> Column:
-    """Convenience one-expression SimHash. Prefer staging
-    token_buckets() into a column first (see simhash_near_dup_pairs) —
-    inline, the bucket array is re-evaluated once per bit."""
-    return simhash_from_buckets(token_buckets(text), bits)
-
-
 def simhash_near_dup_pairs(
     df: DataFrame,
     *,

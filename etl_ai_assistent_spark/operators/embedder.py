@@ -8,17 +8,13 @@ property the verified pipeline needs (SURVEY.md §7 hard-parts 3/5). An
 external-model client can implement the same ``embed(text) ->
 array<float>`` contract behind pluggable_embedder().
 
-Two equivalent implementations (tested equal):
-
-- ``hash_embed_expr``    pure built-in column expression — JVM-side and
-  mirrorable in DuckDB SQL for the oracle gate. NOTE: the higher-order
-  functions (transform/filter/aggregate) run INTERPRETED, not
-  whole-stage-codegen'd, and a Column captured inside a lambda is
-  re-evaluated per array element — bind expensive inputs once with
-  functions.bind (operators/dedup.minhash_bands does the same).
-- ``hash_embed_pandas``  Arrow-batched pandas UDF (numpy bincount) — the
-  shape an external model plugs into (SCALAR batching per partition);
-  also the faster path at very high token counts.
+``hash_embed_expr`` is that embedding as a pure built-in column
+expression — JVM-side and mirrorable in DuckDB SQL for the oracle gate.
+NOTE: the higher-order functions (transform/filter/aggregate) run
+INTERPRETED, not whole-stage-codegen'd, and a Column captured inside a
+lambda is re-evaluated per array element — bind expensive inputs once
+with functions.bind (operators/dedup.minhash_bands does the same).
+``embed_text`` is its bit-exact driver-side twin.
 
 ``pluggable_embedder`` is the production seam the reference's external
 model slots into (embedder_service.py:4-9: one HTTP call per chunk, the
@@ -98,16 +94,6 @@ def embed_text(text: str, dim: int = DEFAULT_DIM) -> np.ndarray:
         n2 += x * x
     n = np.sqrt(n2)
     return tf / n if n > 0 else tf
-
-
-def hash_embed_pandas(text: Column | str, dim: int = DEFAULT_DIM) -> Column:
-    """Same embedding as an Arrow-batched pandas UDF."""
-
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def _embed(s: pd.Series) -> pd.Series:
-        return s.map(lambda t: embed_text(t, dim).tolist())
-
-    return _embed(F.col(text) if isinstance(text, str) else text)
 
 
 # --- pluggable external-model client seam --------------------------------

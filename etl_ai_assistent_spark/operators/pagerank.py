@@ -11,12 +11,11 @@ engine and any partitioning/summation order. The truncation each step
 loses < 1 ppb per edge — irrelevant at ranking granularity and, unlike
 float error, EXACTLY reproducible.
 
-Distributed shape per iteration: one equi-join of the edge list against
-the current rank vector (rank side is node-count sized — broadcastable
-until the graph is billions of nodes) and one groupBy(dst) sum with
-map-side partial aggregation. k iterations = k bounded shuffles; the
-same shape GraphX/Pregel would schedule, expressed declaratively so AQE
-still re-plans each step.
+Shape: the operator serves DIMENSION-BOUNDED graphs (node²-bounded
+edge sets, e.g. the 25-nation trade graph). It aggregates the graph to
+ONE row of arrays and runs every damped round as a row-local integer
+expression fold — no per-round shuffle or stage barrier. The edge-set
+bound is enforced in the plan (fold_edges).
 
 Dangling nodes (no out-edges) leak their mass — deterministic on both
 engines, documented; self-loops are kept as ordinary edges.
@@ -30,59 +29,10 @@ from pyspark.sql import functions as F
 SCALE = 1_000_000_000  # rank unit: ppb of total mass
 # Largest edge array the one-row folds accept. The nation graph has at
 # most 625 edges; label_propagation_fold counts votes in O(|E|²) per
-# node-round, so a larger graph belongs to the distributed forms.
+# node-round on one executor thread, so a larger graph fails loudly in
+# the plan instead of hanging a task.
 FOLD_MAX_EDGES = 4096
 D_NUM, D_DEN = 85, 100  # damping 0.85 as an integer ratio
-
-
-def pagerank_int(
-    edges: DataFrame, nodes: DataFrame, iterations: int = 5
-) -> DataFrame:
-    """(src, dst) distinct edges + (node) vertex set -> (node, rank_ppb)
-    after `iterations` damped fixed-point rounds. `nodes.count()` is the
-    one driver-side scalar (metadata-cheap); everything else is joins
-    and partial-agg sums.
-
-    Every iteration scans `edges` twice (contribution join + the degree
-    table derived from it) and `nodes` once, so CALLERS with a non-
-    trivial edge derivation must pass a cached/persisted edges plan —
-    q_pagerank_nations routes its 4-way fact-table projection through
-    the bounded per-sf substrate cache (substrates.cached_substrates),
-    the same convention as the LPA and k-core callers. The r12 version
-    persisted internally and needed an eager count() + unpersist pair
-    per call (one extra driver job, and a pinned-entry leak when the
-    caller's input was already cached); with the substrate convention
-    the operator itself stays action-free and persistence-free. The
-    rank chain references each previous round exactly once, so the
-    plan grows linearly with `iterations`."""
-    n = nodes.count()
-    base = (15 * SCALE) // (100 * n)  # (1-d)/N in ppb, floor — mirrors the SQL
-    deg = edges.groupBy("src").agg(
-        F.count("*").cast("bigint").alias("out_deg")
-    )
-    ranks = nodes.select("node", F.lit(SCALE // n).cast("bigint").alias("r"))
-    for _ in range(iterations):
-        contrib = (
-            edges.join(ranks.withColumnRenamed("node", "src"), "src")
-            .join(deg, "src")
-            .groupBy("dst")
-            .agg(F.sum(F.expr("r div out_deg")).cast("bigint").alias("contrib"))
-        )
-        ranks = (
-            nodes.join(contrib.withColumnRenamed("dst", "node"), "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.expr(
-                        f"({D_NUM} * coalesce(contrib, 0)) div {D_DEN}"
-                    )
-                )
-                .cast("bigint")
-                .alias("r"),
-            )
-        )
-    return ranks.withColumnRenamed("r", "rank_ppb")
 
 
 def fold_edges(edges: DataFrame, op: str) -> DataFrame:
@@ -102,8 +52,8 @@ def fold_edges(edges: DataFrame, op: str) -> DataFrame:
     return es.select(
         F.expr(
             f"IF(size(es) > {FOLD_MAX_EDGES}, raise_error(concat('{op}: ',"
-            f" size(es), ' edges exceed FOLD_MAX_EDGES = {FOLD_MAX_EDGES};"
-            " use the distributed form')), es)"
+            f" size(es), ' edges exceed FOLD_MAX_EDGES = {FOLD_MAX_EDGES}')),"
+            " es)"
         ).alias("es")
     )
 
@@ -111,47 +61,41 @@ def fold_edges(edges: DataFrame, op: str) -> DataFrame:
 def pagerank_fold(
     edges: DataFrame, nodes: DataFrame, iterations: int = 5
 ) -> DataFrame:
-    """pagerank_int for DIMENSION-BOUNDED graphs (node²-bounded edge
-    sets — the 25-nation trade graph stays ≤625 edges at ANY fact-table
-    scale): aggregate the graph to ONE row of arrays and run every
-    damped round as a row-local integer expression fold.
+    """(src, dst) distinct edges + (node) vertex set -> (node, rank_ppb)
+    after `iterations` damped fixed-point rounds, for DIMENSION-BOUNDED
+    graphs: aggregate the graph to ONE row of arrays and run every
+    round as a row-local integer expression fold.
 
-    Why: the distributed round shape pays one shuffle + one-or-two
-    broadcast materializations per round — with AQE each is a blocking
-    stage barrier, so a 5-round loop over kilobytes of data costs
-    ~15 sequential stage launches of pure scheduling latency (measured
-    r13: q_pagerank_nations 3.0 s warm at BOTH 8 and 32 cores while the
-    warm run read only 56 KB — the substrate served; scheduling, not
-    data, was the wall). The fold form runs the whole recurrence in one
-    projection over one row: two single-row aggregates + one tiny join,
-    ~4 barriers total regardless of round count (guide §8: decide with
-    small rows; §2.4: remove shuffles outright).
+    Why: a distributed round shape (edges ⋈ ranks, groupBy(dst) sum)
+    pays one shuffle + one-or-two broadcast materializations per round
+    — with AQE each is a blocking stage barrier, so a 5-round loop over
+    kilobytes of data costs ~15 sequential stage launches of pure
+    scheduling latency (measured r13: q_pagerank_nations 3.0 s warm at
+    BOTH 8 and 32 cores while the warm run read only 56 KB). The fold
+    runs the whole recurrence in one projection over one row: two
+    single-row aggregates + one tiny join, ~4 barriers total regardless
+    of round count (guide §8: decide with small rows; §2.4: remove
+    shuffles outright).
 
-    EXACTNESS vs pagerank_int (pinned by tests/test_pagerank_fold.py on
-    random graphs): every operation is 64-bit integer arithmetic on the
-    same operands —
-    - n, base, r0 are the same integer expressions (n = size(ns));
-    - out_deg(v) = #edges with src = v, the same count;
+    EXACTNESS (pinned by tests/test_pagerank_fold.py against a
+    pure-Python replica of the recurrence on seeded random graphs):
+    every operation is 64-bit integer arithmetic —
+    - n = size(ns), base = (15·SCALE) div (100·n), r0 = SCALE div n;
+    - out_deg(v) = #edges with src = v;
     - contrib(v) = Σ over edges e with e.dst = v of r[e.src] div
-      out_deg[e.src]: bigint sums commute, so any edge order (and any
-      collect_list order) gives the identical total — the distributed
-      groupBy(dst) computes exactly this sum;
-    - edges whose src ∉ nodes contributed nothing in pagerank_int (the
-      inner join with ranks dropped them); here element_at(rm, e.s)
-      is NULL for such src and the IF's NULL-guard contributes 0.
-    collect_list order therefore cannot affect any output value.
-
-    The input contract matches pagerank_int: (src, dst) distinct edges,
-    (node) vertex set; returns (node, rank_ppb). No driver action at
-    all (pagerank_int needs nodes.count(); here n lives in the plan).
-    At most FOLD_MAX_EDGES edges, enforced in the plan (fold_edges)."""
+      out_deg[e.src]: bigint sums commute, so any collect_list order
+      gives the identical total;
+    - edges whose src ∉ nodes contribute nothing (element_at(rm, e.s)
+      is NULL for such src and the IF's NULL-guard contributes 0).
+    No driver action at all: n lives in the plan. At most
+    FOLD_MAX_EDGES edges, enforced in the plan (fold_edges)."""
     es = fold_edges(edges, "pagerank_fold")
     ns = nodes.agg(
         F.collect_list(F.col("node").cast("bigint")).alias("ns")
     )
     row = ns.join(F.broadcast(es))
     # out-degree map over the node set; srcs outside `ns` resolve to
-    # NULL lookups below (≡ the inner-join drop in pagerank_int)
+    # NULL lookups below and contribute nothing
     row = row.withColumn(
         "dm",
         F.expr(

@@ -49,11 +49,11 @@ from pyspark.sql import functions as F
 # guard evaluates after the histogram broadcast, so a GROSSLY mis-sized
 # bucket_div (millions of buckets) fails first as a driver
 # broadcast/OOM error rather than this message — still loud, just less
-# specific. with_global_row_number_auto avoids mis-sizing entirely by
-# deriving the width from in-plan range stats.
+# specific. with_global_row_number_from_stats avoids mis-sizing entirely
+# by deriving the width from in-plan range stats.
 MAX_BUCKETS = 100_000
 
-# Bucket count with_global_row_number_auto aims for: small enough that
+# Bucket count with_global_row_number_from_stats aims for: small enough that
 # the histogram window is trivially bounded (far under MAX_BUCKETS),
 # large enough that per-bucket slices parallelize the in-bucket sort.
 TARGET_BUCKETS = 8_192
@@ -73,49 +73,10 @@ def with_global_row_number(
     DESC order); `tiebreak` must be unique within equal sort keys;
     `bucket_div` is the coarse width — pick it from key-range stats so
     span/bucket_div stays ≲ 10⁴ buckets (at 100 TB: one stats read),
-    or use with_global_row_number_auto to derive it in-plan.
+    or use with_global_row_number_from_stats to derive it in-plan.
     If `total` is given, the exact row count rides along on the same
     broadcast (no separate count() pass or 1-row cross join)."""
     b = df.withColumn("_bkt", F.expr(f"{sort_col} div {bucket_div}"))
-    return _rank_bucketed(b, sort_col, tiebreak, rn, total)
-
-
-def with_global_row_number_auto(
-    df: DataFrame,
-    sort_col: str,
-    tiebreak: str,
-    rn: str = "rn",
-    total: str | None = None,
-    target_buckets: int = TARGET_BUCKETS,
-) -> DataFrame:
-    """with_global_row_number with the bucket width derived IN-PLAN
-    from the column's own range stats: a 1-row (min, max) aggregate
-    rides a broadcast cross join and the width becomes
-    ≈ span div `target_buckets` — so the histogram cardinality is
-    ≤ ~2·target_buckets BY CONSTRUCTION on any domain, fixture-tuned
-    constants can't drift (ADVICE/verdict r9: q_rfm_segments' divisors
-    were sized to the fixture), and the MAX_BUCKETS guard becomes
-    unreachable rather than load-bearing. The width divides min/max
-    BEFORE subtracting (span itself can overflow bigint on a
-    full-range domain) and rows bucket by plain `v div width` —
-    truncating division is monotone on signed keys (the 0-straddling
-    bucket is merely wider), so no (v − min) re-base is needed. Cost:
-    one extra pass over `df` for the stats (at 100 TB: a footer/stats
-    read, or persist `df` as the callers do)."""
-    stats = df.agg(
-        F.min(sort_col).alias("_vmin"), F.max(sort_col).alias("_vmax")
-    )
-    b = (
-        df.crossJoin(F.broadcast(stats))
-        .withColumn(
-            "_bkt",
-            F.expr(
-                f"{sort_col} div greatest(_vmax div {target_buckets}"
-                f" - _vmin div {target_buckets}, 1)"
-            ),
-        )
-        .drop("_vmin", "_vmax")
-    )
     return _rank_bucketed(b, sort_col, tiebreak, rn, total)
 
 
@@ -130,13 +91,20 @@ def with_global_row_number_from_stats(
     target_buckets: int = TARGET_BUCKETS,
     group_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """with_global_row_number_auto for callers that already carry the
-    sort key's (min, max) range stats as COLUMNS on `df` — e.g. one
-    shared 1-row stats broadcast serving several rankings over the same
-    base (q_rfm_segments ranks three metrics: one combined aggregate
-    replaces three per-axis stats passes). Same in-plan width
-    derivation and overflow posture as the auto variant; the stats
-    columns are consumed and dropped.
+    """with_global_row_number with the bucket width derived IN-PLAN
+    from the sort key's (min, max) range stats, carried as COLUMNS on
+    `df` — e.g. one shared 1-row stats broadcast serving several
+    rankings over the same base (q_rfm_segments ranks three metrics:
+    one combined aggregate replaces three per-axis stats passes). The
+    width is ≈ span div `target_buckets`, so the histogram cardinality
+    is ≤ ~2·target_buckets BY CONSTRUCTION on any domain: fixture-tuned
+    constants can't drift (ADVICE/verdict r9), and the MAX_BUCKETS
+    guard becomes unreachable rather than load-bearing. The width
+    divides min/max BEFORE subtracting (span itself can overflow bigint
+    on a full-range domain) and rows bucket by plain `v div width` —
+    truncating division is monotone on signed keys (the 0-straddling
+    bucket is merely wider). The stats columns are consumed and
+    dropped.
 
     `group_cols` generalizes to exact PER-GROUP row numbers in one
     pass: the histogram keys on (group, bucket), the running sum

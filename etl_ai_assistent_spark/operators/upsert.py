@@ -47,9 +47,8 @@ class LocalParquetStoreClient(VectorStoreClient):
     append). On a cluster this shape would write executor-local or
     object storage; it exists so the verified path has zero network."""
 
-    def __init__(self, out_dir: str, *, epoch: int = 0):
+    def __init__(self, out_dir: str):
         self.out_dir = out_dir
-        self.epoch = epoch  # micro-batch id for streams; 0 for batch jobs
         self._n = 0
         os.makedirs(out_dir, exist_ok=True)
 
@@ -61,14 +60,11 @@ class LocalParquetStoreClient(VectorStoreClient):
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
         cols: dict[str, list] = {k: [p[k] for p in points] for k in points[0]}
-        # Filename carries (epoch, partition, ordinal): a REPLAY of the same
-        # micro-batch overwrites its own files (idempotent), while distinct
-        # micro-batches never collide — partition ids restart at 0 per batch.
+        # Filename carries (partition, ordinal): a retried or replayed
+        # task overwrites its own files (idempotent).
         pq.write_table(
             pa.table(cols),
-            os.path.join(
-                self.out_dir, f"e{self.epoch:05d}_part_{pid:05d}_{self._n:05d}.parquet"
-            ),
+            os.path.join(self.out_dir, f"part_{pid:05d}_{self._n:05d}.parquet"),
         )
         self._n += 1
 
@@ -139,69 +135,3 @@ def upsert_points(
             client.close()
 
     df.foreachPartition(_send)
-
-
-def stream_upsert_points(
-    df: DataFrame,
-    client_factory,
-    *,
-    checkpoint: str,
-    batch_size: int = 256,
-    max_retries: int = 3,
-) -> None:
-    """Streaming twin: foreachBatch hands each micro-batch to the same
-    batched partition writer (streaming/pipeline.stream_to_parquet is the
-    local-parquet sibling). The checkpoint's batch tracking plus the
-    store's idempotent per-id upsert give effectively-once delivery.
-    Drains the finite source to completion.
-
-    The micro-batch id is threaded into the client factory when the
-    factory EXPLICITLY opts in by declaring a parameter literally named
-    ``batch_id`` (``client_factory(batch_id)``) so adapters that key
-    output on task partition ids — which RESTART at 0 every micro-batch —
-    can disambiguate batches instead of silently overwriting the previous
-    one. A zero-arg factory still works (store-side idempotence by point
-    id makes the epoch irrelevant for true upsert stores). A factory
-    whose required parameter means something else (e.g. a client class
-    whose ``__init__`` takes a path/url) is NOT silently fed the batch
-    id — it fails with the ordinary missing-argument TypeError instead."""
-    import inspect
-
-    try:
-        params = inspect.signature(client_factory).parameters
-        # The opt-in is explicit: a parameter literally named `batch_id`
-        # that can be bound positionally or by keyword. Treating "has any
-        # required positional param" as opt-in would silently bind the
-        # batch id to an unrelated required parameter (path, url, ...)
-        # instead of failing loudly.
-        accepts_batch_id = any(
-            name == "batch_id"
-            and p.kind
-            in (
-                inspect.Parameter.POSITIONAL_OR_KEYWORD,
-                inspect.Parameter.KEYWORD_ONLY,
-            )
-            for name, p in params.items()
-        )
-    except (TypeError, ValueError):  # builtins / C callables
-        accepts_batch_id = False
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        factory = (
-            (lambda: client_factory(batch_id=batch_id))
-            if accepts_batch_id
-            else client_factory
-        )
-        upsert_points(
-            batch_df, factory, batch_size=batch_size, max_retries=max_retries
-        )
-
-    q = (
-        df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()

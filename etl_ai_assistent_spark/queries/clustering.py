@@ -398,7 +398,8 @@ def _build_ann_store(spark: SparkSession, sf_dir: str, tmp: str) -> None:
     ]
     _write_codebooks(spark, cb_rows, os.path.join(tmp, "codebooks"))
     # r13: encode via the single-projection expression form (zero
-    # exchanges) — bit-equal to PQ.encode, pinned in tests/test_pq.py
+    # exchanges) — bit-equal to per-subspace KM.assign, pinned in
+    # tests/test_pq.py
     PQ.encode_rows(emb, cb_rows, dim=DIM).write.parquet(
         os.path.join(tmp, "codes")
     )
@@ -697,22 +698,20 @@ SELECT query_id, vec_id, adc_dist, rnk FROM ranked WHERE rnk <= {PQ_TOPK}
 
 @register("q_pq_multiquery_topk", oracle=PQ_MQ_ORACLE)
 def q_pq_multiquery_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch ANN serving over PQ codes (operators/pq.probe_tables +
-    adc_topk_multi): {NQ_PQ} probes scored in ONE plan — probe lookup
-    tables are built as a DataFrame on executors (slices × broadcast
-    K-row codebooks; adc_table's driver loop generalized away), the
-    codes table unpivots via stack, one broadcast equi-join attaches
-    per-subspace distances, and a per-probe window takes
-    top-{PQ_TOPK}. All bigint, so the oracle replays the entire
-    multi-probe pipeline as CTEs.
+    """Batch ANN serving over PQ codes (operators/pq.adc_topk_multi_maps):
+    {NQ_PQ} probes scored in ONE plan — each probe's M·K lookup entries
+    are folded into one MAP row, the |batch| map rows attach to the
+    un-melted codes by one broadcast nested-loop join, the M-term ADC
+    sum is row-local, and a per-probe window takes top-{PQ_TOPK}. All
+    bigint, so the oracle replays the entire multi-probe pipeline as
+    CTEs.
 
-    Scale: this is how a serving batch of a MILLION probes runs — the
-    probe table is |probes|·M·K small rows (partitionable if it ever
-    outgrows a broadcast), the corpus contributes M code rows per
-    vector regardless of probe count, and no per-query driver work
-    exists anywhere. The trained index comes from the shared
-    _pq_index cache (training excluded from query time, as in
-    q_pq_adc_topk)."""
+    Scale: the corpus contributes one code row per vector regardless
+    of probe count, and the map rows are |probes|·M·K small entries. An
+    unbounded probe stream builds the same maps on executors per
+    trigger (queries/streaming.py's serve loop). The trained index
+    comes from the shared _pq_index cache (training excluded from
+    query time, as in q_pq_adc_topk)."""
     from ..operators import pq as PQ
 
     cb_rows, codes, _, _ = _pq_index(spark, sf_dir)
@@ -728,8 +727,8 @@ def q_pq_multiquery_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # read and quantized DRIVER-SIDE (the _probe_vector pattern —
         # zero Spark jobs; the executor build of the same 5 map rows
         # cost ~13 s of broadcast/job machinery, r13 measured);
-        # adc_table_rows replicates probe_tables' integer arithmetic
-        # exactly (pinned in tests/test_pq.py). Unbounded probe
+        # adc_table_rows replicates probe_tables_flat's integer
+        # arithmetic exactly (pinned in tests/test_pq.py). Unbounded probe
         # streams keep the executor path — queries/streaming.py's
         # serve loop builds maps from probe_tables_flat per trigger.
         entries = []

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import io
-from ..operators.pagerank import SCALE, pagerank_fold
+from ..operators.pagerank import pagerank_fold
 from ..registry import register
 from ..substrates import cached_substrates
 
@@ -290,8 +290,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     derivation; the vote rounds themselves run row-locally over the
     node²-bounded symmetric edge set
     (operators/labelprop.label_propagation_fold — exactness argument
-    there). The generic distributed operator (label_propagation) stays
-    for graphs whose edge set is NOT dimension-bounded."""
+    there)."""
     from ..operators.labelprop import label_propagation_fold
 
     nation = io.load_table(spark, sf_dir, "nation")

@@ -25,15 +25,6 @@ from ..registry import register
 from ..substrates import cached_substrates
 
 
-def _dec(c: str, prec: int = 12, scale: int = 2) -> F.Column:
-    return F.col(c).cast(f"decimal({prec},{scale})")
-
-
-def _one() -> F.Column:
-    # column expressions can't be built before a SparkContext exists
-    return F.lit(1).cast("decimal(3,2)")
-
-
 def _money_units(c: str, k: int = 2) -> F.Column:
     """Money double → exact integer units of 10^-k via floor(x·10^k +
     0.5). For POSITIVE inputs this is the same HALF_UP rounding as

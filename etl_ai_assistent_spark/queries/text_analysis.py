@@ -788,18 +788,6 @@ TRIGRAM_BUCKETS = 16
 TRIGRAM_FAMILY = "spark_graft_trigram_store_v2"
 
 
-def trigram_store_root() -> str:
-    return os.path.join(ST.store_root(), TRIGRAM_FAMILY)
-
-
-def _corpus_version(sf_dir: str) -> tuple[str, int, str]:
-    """(sf tag, documents row count, content fingerprint) — the corpus
-    version key, all from DuckDB parquet-footer reads (driver-side
-    metadata, no Spark job), so version checks cost nothing on the
-    serve path."""
-    return ST.corpus_key(sf_dir, "documents")
-
-
 def trigram_posting_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (doc_id, tri) posting table as a STORAGE artifact — what
     pg_trgm's GIN index or a code-search shard maintains as

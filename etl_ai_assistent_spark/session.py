@@ -11,6 +11,11 @@ One place to encode the engine's execution posture:
 - shuffle partitions sized to the local core count, not the 200 default
   (on a real cluster this is overridden per deployment; AQE coalescing
   makes the static number mostly a ceiling).
+- Python workers import this package: their PYTHONPATH carries the
+  package's parent directory, so the Arrow-UDF queries work when the
+  driver found the package through a ``sys.path`` insert from any cwd.
+  A session that already exists when get_spark runs keeps its own
+  worker environment (``getOrCreate`` does not apply static confs).
 
 On a 1000-executor cluster the same builder is used with
 ``master`` / memory settings supplied by the deployment, so keep every
@@ -22,6 +27,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+# The directory that holds the package, for the Python workers' import path.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_parallelism() -> int:
@@ -84,6 +93,7 @@ def get_spark(
         # parallelizes at #buckets instead of splitting files — fine
         # for index-serving tables sized by their bucket count.
         .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -185,14 +185,12 @@ def _events_stream_schema(spark: SparkSession, any_file: str) -> T.StructType:
 
 
 def _normalize_events(raw: DataFrame) -> DataFrame:
-    """Shared batch/stream normalization: replace raw `ts` with canonical
-    `ts_us` epoch-µs BIGINT (io.ts_us_col handles every physical type the
-    generator has shipped) plus `ts_ts`, the µs TIMESTAMP for window /
+    """The batch scan's normalization (io.with_ts_us: raw `ts` → canonical
+    `ts_us` epoch-µs BIGINT) plus `ts_ts`, the µs TIMESTAMP for window /
     watermark operators."""
-    ts_us = io.ts_us_col(dict(raw.dtypes)["ts"]).cast("bigint").alias("ts_us")
-    return raw.select(
-        *[ts_us if c == "ts" else F.col(c) for c in raw.columns]
-    ).withColumn("ts_ts", F.timestamp_micros(F.col("ts_us")))
+    return io.with_ts_us(raw).withColumn(
+        "ts_ts", F.timestamp_micros(F.col("ts_us"))
+    )
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -555,32 +553,6 @@ def doc_ingest(docs: DataFrame, chunk_size: int, overlap: int) -> DataFrame:
         F.sum(F.length("chunk_text")).alias("total_chars"),
         F.sum(md5_bucket(F.col("chunk_text"))).alias("checksum"),
     )
-
-
-def stream_to_parquet(
-    df: DataFrame, *, path: str, checkpoint: str, mode: str = "append"
-) -> None:
-    """K4's production sink shape: stream → foreachBatch → batched
-    parquet append. foreachBatch hands each micro-batch to ordinary
-    batch-writer code (the place an external vector-store upsert would
-    batch per partition, reference qdrant_service.py:24-42 — minus its
-    one-HTTP-call-per-chunk anti-pattern). The checkpoint's batch
-    tracking makes the sink effectively exactly-once for deterministic
-    batches: a restarted query does not rewrite committed batch ids.
-    Runs the finite source to completion."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode(mode).parquet(path)
-
-    q = (
-        df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 def stream_stream_purchase_join(

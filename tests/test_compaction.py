@@ -1,61 +1,28 @@
-"""Evidence for sorted compaction: disjoint per-file key ranges in the
-parquet footers, and a key-range predicate pruning to a strict subset
+"""Evidence for fixed-width compaction: disjoint per-bucket key ranges in
+the parquet footers, and a key-range predicate pruning to a strict subset
 of files via those stats (the zone-map skipping the rewrite buys)."""
 
 from __future__ import annotations
 
 from etl_ai_assistent_spark import io
 from etl_ai_assistent_spark.operators.compaction import (
-    compact_sorted,
-    file_key_ranges,
-    files_matching_range,
+    compact_fixed_width,
+    partitioned_zone_maps,
 )
 
 N_FILES = 8
 
 
-def test_compact_sorted_disjoint_ranges_and_pruning(spark, sf_small, tmp_path):
-    events = io.load_events(spark, sf_small).select("event_id", "ts_us", "value")
-    out = str(tmp_path / "events_by_ts")
-    compact_sorted(events, out, key="ts_us", n_files=N_FILES)
-
-    ranges = file_key_ranges(out, "ts_us")
-    assert len(ranges) == N_FILES
-    # range partitioning => pairwise disjoint [min, max] intervals
-    ordered = sorted(ranges, key=lambda r: r[1])
-    for (_, _, prev_hi), (_, nxt_lo, _) in zip(ordered, ordered[1:]):
-        assert prev_hi <= nxt_lo
-
-    # a 1-day window intersects only a strict subset of files
-    lo = min(r[1] for r in ranges)
-    day_us = 86_400_000_000
-    hit = files_matching_range(ranges, lo, lo + day_us)
-    assert 0 < len(hit) < N_FILES, (len(hit), N_FILES)
-
-    # the rewrite is lossless
-    back = spark.read.parquet(out)
-    assert back.count() == events.count()
-    assert back.selectExpr("sum(ts_us)").collect() == events.selectExpr(
-        "sum(ts_us)"
-    ).collect()
-
-    # and Spark's own scan of the window reads fewer rows than the table
-    n_window = back.filter(
-        (back["ts_us"] >= lo) & (back["ts_us"] <= lo + day_us)
-    ).count()
-    assert 0 < n_window < back.count()
+def _overlapping(zones, lo, hi):
+    """The skip decision a stats-aware reader applies: buckets whose
+    [min, max] intersects [lo, hi]."""
+    return [b for b, mn, mx, _ in zones if not (mx < lo or mn > hi)]
 
 
 def test_compact_fixed_width_one_file_per_bucket(spark, sf_small, tmp_path):
-    """The deterministic variant: explicit fixed-width buckets, exactly
-    one file per non-empty bucket, zone maps equal to data extents, and
-    fixed-width pruning behaves like the sorted variant's."""
-    from etl_ai_assistent_spark.operators.compaction import (
-        compact_fixed_width,
-        files_matching_range,
-        partitioned_zone_maps,
-    )
-
+    """Explicit fixed-width buckets, exactly one file per non-empty
+    bucket, zone maps equal to data extents, and a half-bucket probe
+    prunes to one file."""
     orders = io.load_table(spark, sf_small, "orders")
     out = str(tmp_path / "orders_fixed")
     compact_fixed_width(orders, out, key="o_orderkey", n_files=N_FILES)
@@ -76,32 +43,23 @@ def test_compact_fixed_width_one_file_per_bucket(spark, sf_small, tmp_path):
         assert (zmin - lo) // width == bucket
         assert (zmax - lo) // width == bucket
     # a half-bucket probe prunes to exactly one file
-    ranges = [(f"bucket={b}", mn, mx) for b, mn, mx, _ in zones]
-    hit = files_matching_range(ranges, lo, lo + width // 2)
-    assert len(hit) == 1
+    assert len(_overlapping(zones, lo, lo + width // 2)) == 1
 
 
-def test_zone_map_helpers_tolerate_missing_stats():
-    """ADVICE round-4: a stats-less row group/file must not crash the
-    zone-map readers, and a stats-less file is never pruned."""
+def test_zone_map_helpers_tolerate_missing_stats(tmp_path):
+    """ADVICE round-4: a stats-less bucket must not crash the zone-map
+    reader; it gets no zone-map entry, so it is never pruned."""
+    import os
+
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from etl_ai_assistent_spark.operators.compaction import (
-        file_key_ranges,
-        files_matching_range,
-    )
 
-    d = "/tmp/spark_graft_nostats_test"
-    import os, shutil
-
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d)
-    pq.write_table(
-        pa.table({"k": [1, 2, 3]}),
-        os.path.join(d, "f.parquet"),
-        write_statistics=False,
-    )
-    ranges = file_key_ranges(d, "k")
-    assert ranges == [("f.parquet", None, None)]
-    # cannot be skipped: always scanned whatever the probe range
-    assert files_matching_range(ranges, 100, 200) == ["f.parquet"]
+    for bucket, stats in ((0, False), (1, True)):
+        d = tmp_path / f"bucket={bucket}"
+        os.makedirs(d)
+        pq.write_table(
+            pa.table({"k": [10 * bucket + 1, 10 * bucket + 3]}),
+            str(d / "f.parquet"),
+            write_statistics=stats,
+        )
+    assert partitioned_zone_maps(str(tmp_path), "k") == [(1, 11, 13, 2)]

@@ -1,9 +1,9 @@
-"""Fold-form ≡ distributed-form parity for the dimension-bounded graph
-recurrences (r14 optimization): pagerank_fold vs pagerank_int and
-label_propagation_fold vs label_propagation must agree bit-for-bit on
-every (node, value) pair, for any graph within the fold's documented
-precondition (edge endpoints ⊆ nodes — the closure contract both query
-callers satisfy by construction: nation-key FKs on both endpoints).
+"""Fold-form exactness for the dimension-bounded graph recurrences:
+pagerank_fold and label_propagation_fold must agree bit-for-bit, on
+every (node, value) pair, with pure-Python replicas of the integer
+recurrences, for any graph within the folds' documented precondition
+(edge endpoints ⊆ nodes — the closure contract both query callers
+satisfy by construction: nation-key FKs on both endpoints).
 
 Random graphs are generated with a FIXED seed (deterministic tests),
 several shapes: dense, sparse, with isolated nodes, with dangling
@@ -14,17 +14,17 @@ contract only needs directed rows)."""
 from __future__ import annotations
 
 import random
+from collections import Counter
 
 from pyspark.sql import functions as F
 
-from etl_ai_assistent_spark.operators.labelprop import (
-    label_propagation,
-    label_propagation_fold,
-)
+from etl_ai_assistent_spark.operators.labelprop import label_propagation_fold
 from etl_ai_assistent_spark.operators.pagerank import (
+    D_DEN,
+    D_NUM,
     FOLD_MAX_EDGES,
+    SCALE,
     pagerank_fold,
-    pagerank_int,
 )
 
 
@@ -46,21 +46,51 @@ def _rand_edges(rng, n_nodes: int, n_edges: int) -> list[tuple[int, int]]:
     return sorted(seen)
 
 
+def _pagerank_replica(n_nodes, edges, iterations):
+    """The integer ppb PageRank recurrence: r0 = SCALE div n; each round
+    r'(v) = (15·SCALE) div (100·n) + (D_NUM · Σ_{(s, v)} r(s) div
+    out_deg(s)) div D_DEN."""
+    n = n_nodes
+    base = (15 * SCALE) // (100 * n)
+    deg = Counter(s for s, _ in edges)
+    r = {v: SCALE // n for v in range(n)}
+    for _ in range(iterations):
+        contrib = Counter()
+        for s, d in edges:
+            contrib[d] += r[s] // deg[s]
+        r = {v: base + (D_NUM * contrib[v]) // D_DEN for v in range(n)}
+    return sorted(r.items())
+
+
+def _lpa_replica(n_nodes, edges, iterations):
+    """Synchronous LPA: each node takes its in-neighbors' most frequent
+    round-(t-1) label, ties to the smallest; no in-edges keeps it."""
+    lb = {v: v for v in range(n_nodes)}
+    for _ in range(iterations):
+        new = {}
+        for v in range(n_nodes):
+            votes = Counter(lb[s] for s, d in edges if d == v)
+            new[v] = min(votes, key=lambda L: (-votes[L], L)) if votes else v
+        lb = new
+    return sorted(lb.items())
+
+
 def test_pagerank_fold_matches_int_random_graphs(spark):
     rng = random.Random(20260818)
     for n_nodes, n_edges in [(6, 12), (12, 40), (25, 200), (10, 3)]:
-        edges, nodes = _graph(spark, n_nodes, _rand_edges(rng, n_nodes, n_edges))
-        a = sorted(map(tuple, pagerank_int(edges, nodes, 4).collect()))
+        pairs = _rand_edges(rng, n_nodes, n_edges)
+        edges, nodes = _graph(spark, n_nodes, pairs)
+        a = _pagerank_replica(n_nodes, pairs, 4)
         b = sorted(map(tuple, pagerank_fold(edges, nodes, 4).collect()))
-        assert a == b, f"pagerank fold/int divergence at n={n_nodes}"
+        assert a == b, f"pagerank fold/replica divergence at n={n_nodes}"
 
 
 def test_pagerank_fold_isolated_and_dangling(spark):
-    # node 4 isolated (no edges at all); node 3 dangling (in-edges only
-    # leak nothing; its own mass leaks — identical in both forms);
-    # self-loop on 0
-    edges, nodes = _graph(spark, 5, [(0, 0), (0, 1), (1, 2), (2, 3), (1, 3)])
-    a = sorted(map(tuple, pagerank_int(edges, nodes, 5).collect()))
+    # node 4 isolated (no edges at all); node 3 dangling (in-edges only;
+    # its own mass leaks); self-loop on 0
+    pairs = [(0, 0), (0, 1), (1, 2), (2, 3), (1, 3)]
+    edges, nodes = _graph(spark, 5, pairs)
+    a = _pagerank_replica(5, pairs, 5)
     b = sorted(map(tuple, pagerank_fold(edges, nodes, 5).collect()))
     assert a == b
 
@@ -69,7 +99,7 @@ def _sym(pairs: list[tuple[int, int]]) -> list[tuple[int, int]]:
     return sorted({(a, b) for a, b in pairs} | {(b, a) for a, b in pairs})
 
 
-def test_lpa_fold_matches_distributed_random_graphs(spark):
+def test_lpa_fold_matches_replica_random_graphs(spark):
     rng = random.Random(20260818)
     for n_nodes, n_pairs in [(8, 10), (14, 30), (25, 120)]:
         pairs = [
@@ -78,13 +108,11 @@ def test_lpa_fold_matches_distributed_random_graphs(spark):
             if a != b
         ]
         edges, nodes = _graph(spark, n_nodes, _sym(pairs))
-        a = sorted(
-            map(tuple, label_propagation(edges, nodes, 3).collect())
-        )
+        a = _lpa_replica(n_nodes, _sym(pairs), 3)
         b = sorted(
             map(tuple, label_propagation_fold(edges, nodes, 3).collect())
         )
-        assert a == b, f"LPA fold/distributed divergence at n={n_nodes}"
+        assert a == b, f"LPA fold/replica divergence at n={n_nodes}"
 
 
 def test_lpa_fold_two_cliques_and_isolated(spark):
@@ -142,6 +170,7 @@ def test_folds_reject_edge_sets_over_the_bound(spark):
 def test_pagerank_fold_accepts_edge_set_at_the_bound(spark):
     edges = _grid_edges(spark, FOLD_MAX_EDGES)
     nodes = spark.range(100).select(F.col("id").alias("node"))
-    a = sorted(map(tuple, pagerank_int(edges, nodes, 1).collect()))
+    pairs = [(i % 100, i // 100) for i in range(FOLD_MAX_EDGES)]
+    a = _pagerank_replica(100, pairs, 1)
     b = sorted(map(tuple, pagerank_fold(edges, nodes, 1).collect()))
     assert a == b

@@ -20,10 +20,24 @@ def _vectors(spark, sf_small):
     )
 
 
-def test_pq_encode_deterministic_and_compact(spark, sf_small):
+def _rows(books):
+    """Trained codebook DataFrames as the driver-resident per-subspace
+    [(cid, cv), ...] lists the on-disk ANN store serves."""
+    return [
+        [(int(r["cid"]), [int(x) for x in r["cv"]]) for r in b.collect()]
+        for b in books
+    ]
+
+
+def _index(spark, sf_small, iters=2):
     v = _vectors(spark, sf_small)
-    books = PQ.train_codebooks(v, m=M, k=K, iters=2, dim=DIM)
-    codes = PQ.encode(v, books, dim=DIM)
+    books = PQ.train_codebooks(v, m=M, k=K, iters=iters, dim=DIM)
+    rows = _rows(books)
+    return v, books, rows, PQ.encode_rows(v, rows, dim=DIM)
+
+
+def test_pq_encode_deterministic_and_compact(spark, sf_small):
+    v, _, rows, codes = _index(spark, sf_small)
     assert codes.columns == ["vec_id"] + [f"code_{i}" for i in range(M)]
     assert codes.count() == v.count()
     # codes bounded by the codebook size
@@ -31,7 +45,7 @@ def test_pq_encode_deterministic_and_compact(spark, sf_small):
         mx = codes.agg(F.max(f"code_{i}")).collect()[0][0]
         assert 0 <= mx < K
     # same input repartitioned -> identical codes (integer-lattice PQ)
-    codes2 = PQ.encode(v.repartition(7), books, dim=DIM)
+    codes2 = PQ.encode_rows(v.repartition(7), rows, dim=DIM)
     assert codes.exceptAll(codes2).count() == 0
 
 
@@ -41,12 +55,10 @@ def test_pq_adc_recall_beats_random(spark, sf_small):
     structure — see test_kmeans), the hardest case for PQ: measured
     recall@10 stabilizes around 0.2 here vs 0.02 for random ordering;
     on real embedding manifolds PQ recall runs far higher."""
-    v = _vectors(spark, sf_small)
-    books = PQ.train_codebooks(v, m=M, k=K, iters=2, dim=DIM)
-    codes = PQ.encode(v, books, dim=DIM)
+    v, _, rows, codes = _index(spark, sf_small)
 
     q = v.filter(F.col("vec_id") == 0).collect()[0]["qv"]
-    tables = PQ.adc_table(list(q), books)
+    tables = PQ.adc_table_rows(list(q), rows)
     approx = {
         r["vec_id"] for r in PQ.adc_topk(codes, tables, k=TOPK).collect()
     }
@@ -72,25 +84,27 @@ def test_pq_rejects_ragged_subspaces(spark, sf_small):
 
 
 def test_multiquery_adc_matches_single_query_path(spark, sf_small):
-    """probe_tables/adc_topk_multi (executor-built tables, stack unpivot,
-    window top-k) must reproduce the single-probe adc_table/adc_topk
+    """adc_topk_multi_maps over executor-built lookup maps
+    (probe_tables_flat → probe_lookup_maps, row-local M-term sum,
+    window top-k) must reproduce the single-probe adc_table_rows/adc_topk
     map-literal path for every probe in the batch — same distances, same
     rank order, same ties."""
-    v = _vectors(spark, sf_small)
-    books = PQ.train_codebooks(v, m=M, k=K, iters=2, dim=DIM)
-    codes = PQ.encode(v, books, dim=DIM)
+    v, books, rows, codes = _index(spark, sf_small)
 
     nq = 3
     probes = v.filter(F.col("vec_id") < nq)
+    tables = PQ.probe_tables_flat(
+        probes, PQ.codebook_table(books), m=M, dim=DIM
+    )
     multi = {
         (r["query_id"], r["rnk"]): (r["vec_id"], r["adc_dist"])
-        for r in PQ.adc_topk_multi(
-            codes, PQ.probe_tables(probes, books, dim=DIM), m=M, k=TOPK
+        for r in PQ.adc_topk_multi_maps(
+            codes, PQ.probe_lookup_maps(tables), m=M, k=TOPK
         ).collect()
     }
     for qid in range(nq):
         q = probes.filter(F.col("vec_id") == qid).collect()[0]["qv"]
-        single = PQ.adc_topk(codes, PQ.adc_table(list(q), books), k=TOPK)
+        single = PQ.adc_topk(codes, PQ.adc_table_rows(list(q), rows), k=TOPK)
         for rnk, r in enumerate(single.collect(), start=1):
             assert multi[(qid, rnk)] == (r["vec_id"], r["adc_dist"])
     # every probe got exactly k results
@@ -161,19 +175,17 @@ def test_index_cache_evicts_other_sf_dirs(spark, sf_small):
 
 def test_adc_table_rows_matches_adc_table(spark, sf_small):
     """The driver-side ADC table builder (adc_table_rows — used by the
-    on-disk store adoption path, zero Spark jobs) is pinned to the
-    collect-based adc_table: identical dicts for the same query vector
-    and codebooks."""
-    v = _vectors(spark, sf_small)
-    books = PQ.train_codebooks(v, m=M, k=K, iters=1, dim=DIM)
-    rows = [
-        [(int(r["cid"]), [int(x) for x in r["cv"]]) for r in b.collect()]
-        for b in books
-    ]
+    on-disk store adoption path, zero Spark jobs) is pinned to the ADC
+    table the executors build for the same query vector and codebooks
+    (probe_tables_flat): identical dicts."""
+    v, books, rows, _ = _index(spark, sf_small, iters=1)
     q0 = [int(x) for x in v.filter(F.col("vec_id") == 0).first()["qv"]]
-    want = PQ.adc_table(q0, books)
-    got = PQ.adc_table_rows(q0, rows)
-    assert got == want
+    want = [{} for _ in range(M)]
+    for r in PQ.probe_tables_flat(
+        v.filter(F.col("vec_id") == 0), PQ.codebook_table(books), m=M, dim=DIM
+    ).collect():
+        want[r["subspace"]][int(r["cid"])] = int(r["d"])
+    assert PQ.adc_table_rows(q0, rows) == want
 
 
 def test_ann_store_adopted_without_rebuild(spark, sf_small):
@@ -236,51 +248,45 @@ def test_delta_encode_prunes_scan_and_matches_full_encode(spark, sf_small):
 
 def test_flat_probe_tables_match_per_subspace_path(spark, sf_small):
     """probe_tables_flat (single explode + one equi-join against the
-    pre-merged codebook table) must produce the identical
-    (query_id, subspace, cid, d) rows as probe_tables' M crossJoin
-    branches — the serving-loop amortization (r11 verdict #6) is a
-    pure plan change."""
-    v = _vectors(spark, sf_small)
-    books = PQ.train_codebooks(v, m=M, k=K, iters=2, dim=DIM)
+    pre-merged codebook table) must produce exactly the
+    (query_id, subspace, cid, d) rows a per-subspace Python loop gives:
+    the integer squared distance between each probe's subvector slice
+    and each centroid."""
+    v, books, rows, _ = _index(spark, sf_small)
     probes = v.filter(F.col("vec_id") < 3)
-    legacy = PQ.probe_tables(probes, books, dim=DIM)
     flat = PQ.probe_tables_flat(
         probes, PQ.codebook_table(books), m=M, dim=DIM
-    ).select(*legacy.columns)
-    assert flat.exceptAll(legacy).count() == 0
-    assert legacy.exceptAll(flat).count() == 0
-
-
-def test_melted_adc_matches_unmelted(spark, sf_small):
-    """adc_topk_multi_melted over a pre-built melt must equal
-    adc_topk_multi over raw codes — so caching the melt across
-    streaming triggers cannot change served results."""
-    v = _vectors(spark, sf_small)
-    books = PQ.train_codebooks(v, m=M, k=K, iters=2, dim=DIM)
-    codes = PQ.encode(v, books, dim=DIM)
-    probes = v.filter(F.col("vec_id") < 3)
-    tables = PQ.probe_tables_flat(
-        probes, PQ.codebook_table(books), m=M, dim=DIM
     )
-    a = PQ.adc_topk_multi(codes, tables, m=M, k=TOPK)
-    b = PQ.adc_topk_multi_melted(PQ.melt_codes(codes, M), tables, k=TOPK)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
+    w = DIM // M
+    want = sorted(
+        (int(p["vec_id"]), i, cid, sum(
+            (a - b) * (a - b)
+            for a, b in zip(p["qv"][i * w : (i + 1) * w], cv)
+        ))
+        for p in probes.collect()
+        for i, fam in enumerate(rows)
+        for cid, cv in fam
+    )
+    got = sorted(
+        tuple(r) for r in flat.select("query_id", "subspace", "cid", "d").collect()
+    )
+    assert got == want
 
 
 def test_encode_rows_matches_encode(spark, sf_small):
     """encode_rows (single-projection expression argmin over driver-
-    resident codebook rows — zero exchanges) must be bit-equal to
-    encode (broadcast crossJoin + packed-min shuffle per subspace +
-    vec_id reassembly joins) on every partitioning, including the
-    packed tie-break toward the lower centroid id."""
-    v = _vectors(spark, sf_small)
-    books = PQ.train_codebooks(v, m=M, k=K, iters=2, dim=DIM)
-    rows = [
-        [(int(r["cid"]), [int(x) for x in r["cv"]]) for r in cb.collect()]
-        for cb in books
-    ]
-    legacy = PQ.encode(v, books, dim=DIM)
+    resident codebook rows — zero exchanges) must be bit-equal to the
+    per-subspace encode built from KM.assign (broadcast crossJoin +
+    packed-min shuffle per subvector slice, vec_id reassembly joins) on
+    every partitioning, including the packed tie-break toward the lower
+    centroid id."""
+    v, books, rows, _ = _index(spark, sf_small)
+    legacy = None
+    for i, (sub, cb) in enumerate(zip(PQ.subvectors(v, M, DIM), books)):
+        a = KM.assign(sub, cb).select(
+            "vec_id", F.col("cluster").alias(f"code_{i}")
+        )
+        legacy = a if legacy is None else legacy.join(a, "vec_id")
     expr_form = PQ.encode_rows(v, rows, dim=DIM)
     assert legacy.exceptAll(expr_form).count() == 0
     assert expr_form.exceptAll(legacy).count() == 0
@@ -290,22 +296,37 @@ def test_encode_rows_matches_encode(spark, sf_small):
 
 def test_adc_maps_match_join_form(spark, sf_small):
     """adc_topk_multi_maps (per-probe lookup MAP, row-local M-term sum
-    over un-melted codes) must equal adc_topk_multi (melt + broadcast
-    equi-join + hash aggregate) — the r13 serving rewrite cannot change
-    a single served row, rank, or distance."""
-    v = _vectors(spark, sf_small)
-    books = PQ.train_codebooks(v, m=M, k=K, iters=2, dim=DIM)
-    codes = PQ.encode(v, books, dim=DIM)
-    probes = v.filter(F.col("vec_id") < 3)
+    over un-melted codes) must equal the join form of ADC serving — the
+    codes melted to (vec_id, subspace, cid), joined to the probe tables
+    and summed per (probe, vector), top-k by (distance, vec_id) — here
+    computed in Python: not a single served row, rank or distance may
+    differ."""
+    _, books, _, codes = _index(spark, sf_small)
+    probes = _vectors(spark, sf_small).filter(F.col("vec_id") < 3)
     tables = PQ.probe_tables_flat(
         probes, PQ.codebook_table(books), m=M, dim=DIM
     )
-    a = PQ.adc_topk_multi(codes, tables, m=M, k=TOPK)
-    b = PQ.adc_topk_multi_maps(
-        codes, PQ.probe_lookup_maps(tables), m=M, k=TOPK
+    got = sorted(
+        tuple(r)
+        for r in PQ.adc_topk_multi_maps(
+            codes, PQ.probe_lookup_maps(tables), m=M, k=TOPK
+        ).collect()
     )
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
+    d = {
+        (r["query_id"], r["subspace"], r["cid"]): r["d"]
+        for r in tables.collect()
+    }
+    melted = [
+        (r["vec_id"], i, r[f"code_{i}"]) for r in codes.collect() for i in range(M)
+    ]
+    want = []
+    for qid in sorted({q for q, _, _ in d}):
+        dist = {}
+        for vid, i, cid in melted:
+            dist[vid] = dist.get(vid, 0) + d[(qid, i, cid)]
+        top = sorted(dist.items(), key=lambda t: (t[1], t[0]))[:TOPK]
+        want += [(qid, vid, dd, rnk) for rnk, (vid, dd) in enumerate(top, 1)]
+    assert got == sorted(want)
 
 
 def test_driver_built_probe_maps_match_executor_path(spark, sf_small):

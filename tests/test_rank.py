@@ -101,8 +101,22 @@ def test_histogram_guard_transparent_when_bounded(spark):
     assert joined.filter(F.col("rn") != F.col("rn_w")).count() == 0
 
 
+def _rank_from_stats(df, total=None, target_buckets=RK.TARGET_BUCKETS):
+    """with_global_row_number_from_stats over `df` with its own (min, max)
+    of `v` riding a 1-row broadcast — the shape q_rfm_segments uses."""
+    stats = df.agg(
+        F.min("v").cast("bigint").alias("lo"),
+        F.max("v").cast("bigint").alias("hi"),
+    )
+    return RK.with_global_row_number_from_stats(
+        df.crossJoin(F.broadcast(stats)), "v", "id", "lo", "hi",
+        total=total, target_buckets=target_buckets,
+    )
+
+
 def test_auto_bucket_matches_window_wide_domain(spark):
-    """with_global_row_number_auto on a WIDE seeded domain (the r9
+    """Auto-derived bucket width (with_global_row_number_from_stats
+    over the input's own range stats) on a WIDE seeded domain (the r9
     verdict #5 scenario that fixture-tuned divisors drift on): range
     stats derive the width in-plan, the result equals the
     single-partition window ranking, and the histogram stays bounded
@@ -113,7 +127,7 @@ def test_auto_bucket_matches_window_wide_domain(spark):
         F.col("id"),
         (F.xxhash64(F.col("id") + 3) / 1_000_000).cast("bigint").alias("v"),
     )
-    got = RK.with_global_row_number_auto(df, "v", "id", total="n_all")
+    got = _rank_from_stats(df, total="n_all")
     want = df.withColumn(
         "rn_w",
         F.row_number().over(Window.orderBy(F.asc("v"), F.asc("id"))),
@@ -127,21 +141,21 @@ def test_auto_bucket_degenerate_domains(spark):
     """Constant column (span 0) and tiny inputs must still rank
     exactly — the width clamps to 1 and everything lands in bucket 0."""
     one = spark.range(5).select(F.col("id"), F.lit(42).cast("bigint").alias("v"))
-    got = RK.with_global_row_number_auto(one, "v", "id")
+    got = _rank_from_stats(one)
     assert [r["rn"] for r in got.orderBy("id").collect()] == [1, 2, 3, 4, 5]
 
     single = spark.range(1).select(F.col("id"), F.lit(-7).cast("bigint").alias("v"))
-    assert RK.with_global_row_number_auto(single, "v", "id").collect()[0]["rn"] == 1
+    assert _rank_from_stats(single).collect()[0]["rn"] == 1
 
 
 def test_auto_bucket_histogram_bounded_by_target(spark):
     """The histogram cardinality is ≤ ~2·target_buckets BY
     CONSTRUCTION, independent of the domain — the property that makes
-    the auto variant immune to domain drift."""
+    the stats-derived width immune to domain drift."""
     df = spark.range(5000).select(
         F.col("id"), F.xxhash64("id").cast("bigint").alias("v")
     )
-    got = RK.with_global_row_number_auto(df, "v", "id", target_buckets=64)
+    got = _rank_from_stats(df, target_buckets=64)
     # recompute the bucket column the same way and count distinct
     stats = df.agg(F.min("v").alias("lo"), F.max("v").alias("hi")).first()
     width = max(stats["hi"] // 64 - stats["lo"] // 64, 1)
@@ -164,26 +178,28 @@ def test_auto_bucket_histogram_bounded_by_target(spark):
 def test_from_stats_matches_auto(spark):
     """with_global_row_number_from_stats (caller-supplied range-stat
     columns — the shared-broadcast path q_rfm_segments uses) must equal
-    with_global_row_number_auto on the same wide seeded domain."""
+    with_global_row_number at the auto-derived width, computed here on
+    the driver from the same (min, max), on a wide seeded domain."""
     df = spark.range(2000).select(
         F.col("id"),
         (F.xxhash64(F.col("id") + 3) / 1_000_000).cast("bigint").alias("v"),
     )
-    stats = df.agg(
-        F.min("v").cast("bigint").alias("lo"),
-        F.max("v").cast("bigint").alias("hi"),
-    )
-    got = RK.with_global_row_number_from_stats(
-        df.crossJoin(F.broadcast(stats)), "v", "id", "lo", "hi",
-        total="n_all",
-    )
-    want = RK.with_global_row_number_auto(df, "v", "id", total="n_all")
+    lo, hi = df.agg(F.min("v"), F.max("v")).first()
+    t = RK.TARGET_BUCKETS
+
+    def div(a, b):  # SQL `div` truncates toward zero
+        return abs(a) // b * (1 if a >= 0 else -1)
+
+    width = max(div(hi, t) - div(lo, t), 1)
+    got = _rank_from_stats(df, total="n_all")
+    want = RK.with_global_row_number(df, "v", "id", bucket_div=width, total="n_all")
     joined = got.join(
         want.withColumnRenamed("rn", "rn_a").withColumnRenamed(
             "n_all", "n_a"
         ),
         ["id", "v"],
     )
+    assert joined.count() == 2000
     assert joined.filter(
         (F.col("rn") != F.col("rn_a")) | (F.col("n_all") != F.col("n_a"))
     ).count() == 0

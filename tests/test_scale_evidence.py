@@ -221,13 +221,14 @@ def test_trigram_index_serves_from_disk_store(spark, sf_small):
     import os
     import re
 
+    from etl_ai_assistent_spark import store as ST
     from etl_ai_assistent_spark.queries import text_analysis as TA
 
     # first use builds the artifact (or adopts a previous run's)
     TA.trigram_posting_table(spark, sf_small)
-    tag, n, fp = TA._corpus_version(sf_small)
-    path = os.path.join(
-        TA.trigram_store_root(), f"{tag}_{n}_{fp}_{TA.TRIGRAM_BUCKETS}"
+    tag, n, fp = ST.corpus_key(sf_small, "documents")
+    path = ST.corpus_path(
+        TA.TRIGRAM_FAMILY, sf_small, "documents", f"_{TA.TRIGRAM_BUCKETS}"
     )
     marker = os.path.join(path, "_SUCCESS")
     mtime = os.path.getmtime(marker)
@@ -264,6 +265,7 @@ def test_trigram_store_rebuilds_on_content_edit(spark, tmp_path):
     path and the serving query reflects the edit."""
     import duckdb
 
+    from etl_ai_assistent_spark import store as ST
     from etl_ai_assistent_spark.queries import text_analysis as TA
 
     sf = tmp_path / "sfmut"
@@ -282,12 +284,12 @@ def test_trigram_store_rebuilds_on_content_edit(spark, tmp_path):
 
     write(["the spark window opens", "nothing here", "plain filler row"])
     t1 = TA.trigram_posting_table(spark, str(sf))
-    key1 = TA._corpus_version(str(sf))
+    key1 = ST.corpus_key(str(sf), "documents")
     assert t1.filter(F.col("tri") == "spa").count() == 1
 
     # mutate ONE document, row count constant: needle now in doc 1 too
     write(["the spark window opens", "a spark window too", "plain filler row"])
-    key2 = TA._corpus_version(str(sf))
+    key2 = ST.corpus_key(str(sf), "documents")
     assert key1[:2] == key2[:2] and key1[2] != key2[2], (key1, key2)
     t2 = TA.trigram_posting_table(spark, str(sf))
     # fresh store, not the stale one: the new doc's trigrams are present

@@ -270,13 +270,11 @@ def test_ann_committed_codes_equal_full_encode(spark, sf_small):
 
     path = CL.ann_commit_delta(spark, sf_small)
     committed = CL.grow_codes(spark, path)
-    cbs = CL._literal_codebooks(
-        spark, CL._load_codebook_rows(path, "codebooks")
-    )
+    cb_rows = CL._load_codebook_rows(path, "codebooks")
     emb = io.load_table(spark, sf_small, "embeddings").select(
         "vec_id", KM.quantize("embedding").alias("qv")
     )
-    full = PQ.encode(emb, cbs, dim=CL.DIM)
+    full = PQ.encode_rows(emb, cb_rows, dim=CL.DIM)
     assert committed.exceptAll(full).count() == 0
     assert full.exceptAll(committed).count() == 0
 

@@ -158,77 +158,6 @@ def test_upsert_points_retries_transient_failures(spark, sf_small, tmp_path):
     assert back.select("point_id").distinct().count() == n
 
 
-def test_stream_upsert_points_effectively_once(spark, sf_small, tmp_path):
-    """Streaming K4: foreachBatch feeds the same batched upsert; the
-    checkpoint makes a restart a no-op (no duplicate points)."""
-    from pyspark.sql import functions as F
-
-    from etl_ai_assistent_spark.operators.upsert import (
-        LocalParquetStoreClient,
-        stream_upsert_points,
-    )
-    from etl_ai_assistent_spark.streaming import pipeline as SP
-
-    out = str(tmp_path / "stream_store")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run() -> None:
-        docs = SP.read_documents_stream(spark, sf_small).select(
-            F.col("doc_id").cast("string").alias("point_id"), "text"
-        )
-        stream_upsert_points(
-            docs, lambda: LocalParquetStoreClient(out), checkpoint=ckpt
-        )
-
-    run()
-    n_docs = spark.read.parquet(sf_small + "/documents.parquet").count()
-    back = spark.read.parquet(out)
-    assert back.count() == n_docs
-    run()  # restart with same checkpoint: committed batches not re-sent
-    assert spark.read.parquet(out).count() == n_docs
-
-
-def test_stream_upsert_points_multi_batch_no_overwrite(spark, tmp_path):
-    """Multi-batch streaming K4 (maxFilesPerTrigger=1): task partition
-    ids RESTART at 0 every micro-batch, so a filename keyed on partition
-    id alone would make batch N overwrite batch N-1's files. The batch_id
-    threaded into the client factory (epoch in the filename) must keep
-    every batch's points."""
-    from pyspark.sql import functions as F
-
-    from etl_ai_assistent_spark.operators.upsert import (
-        LocalParquetStoreClient,
-        stream_upsert_points,
-    )
-
-    src = tmp_path / "src"
-    n_files, rows_per_file = 4, 7
-    for i in range(n_files):
-        spark.range(i * rows_per_file, (i + 1) * rows_per_file).select(
-            F.col("id").cast("string").alias("point_id")
-        ).coalesce(1).write.mode("append").parquet(str(src))
-
-    out = str(tmp_path / "store")
-    docs = (
-        spark.readStream.schema("point_id string")
-        .option("maxFilesPerTrigger", 1)  # one file per micro-batch
-        .parquet(str(src))
-    )
-    stream_upsert_points(
-        docs,
-        lambda batch_id: LocalParquetStoreClient(out, epoch=batch_id),
-        checkpoint=str(tmp_path / "ckpt"),
-    )
-    back = spark.read.parquet(out)
-    assert back.count() == n_files * rows_per_file
-    assert back.select("point_id").distinct().count() == n_files * rows_per_file
-    # evidence the stream actually ran >1 micro-batch (distinct epochs)
-    import os as _os
-
-    epochs = {f.split("_")[0] for f in _os.listdir(out) if f.endswith(".parquet")}
-    assert len(epochs) > 1
-
-
 def test_orc_store_roundtrip_with_pushdown(spark, sf_small, tmp_path):
     """ORC store variant: lossless round-trip and predicate pushdown
     reaching the ORC scan (same data-skipping class as parquet)."""

@@ -27,33 +27,6 @@ def test_state_crosses_micro_batches(spark, sf_small):
     assert multi > 0
 
 
-def test_foreach_batch_parquet_sink_exactly_once(spark, sf_small, tmp_path):
-    """The foreachBatch parquet sink lands exactly the source rows across
-    4 micro-batches, and a restart with the same checkpoint does not
-    duplicate committed batches."""
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run():
-        ev = SP.read_events_stream_split(spark, sf_small, parts=4).select(
-            "event_id", "user_id", "value"
-        )
-        SP.stream_to_parquet(ev, path=out, checkpoint=ckpt)
-
-    run()
-    batch = spark.read.parquet(out)
-    n_src = (
-        spark.read.parquet(
-            SP.split_events_fixture(spark, sf_small, 4) + "/part_*.parquet"
-        ).count()
-    )
-    assert batch.count() == n_src
-    assert batch.select("event_id").distinct().count() == n_src
-    # restart with same checkpoint: no new data -> no duplicates
-    run()
-    assert spark.read.parquet(out).count() == n_src
-
-
 def test_outer_join_sentinel_filter_pushdown_starves_watermark(spark, sf_small):
     """The trap q_stream_outer_join's structure exists to avoid,
     pinned so a refactor can't reintroduce it: putting the

@@ -8,20 +8,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from etl_ai_assistent_spark.operators.caption_pairing import (
-    pair_captions_pandas,
-    pair_captions_window,
-)
+from etl_ai_assistent_spark.operators.caption_pairing import pair_captions_window
 from etl_ai_assistent_spark.operators.chunker import (
     fixed_chunks,
     recursive_chunks,
     split_text_recursive,
 )
-from etl_ai_assistent_spark.operators.embedder import (
-    embed_text,
-    hash_embed_expr,
-    hash_embed_pandas,
-)
+from etl_ai_assistent_spark.operators.embedder import embed_text, hash_embed_expr
 from etl_ai_assistent_spark.operators.sectionizer import sectionize
 
 # --- chunker ---------------------------------------------------------------
@@ -188,28 +181,54 @@ def test_caption_pairing_window_semantics(spark):
     assert _pairs(pair_captions_window(blocks)) == EXPECTED_PAIRS
 
 
-def test_caption_pairing_pandas_agrees_with_window(spark):
-    blocks = spark.createDataFrame(
-        CAP_BLOCKS,
+def _pair_captions_replica(blocks):
+    """The reference's sequential state machine (docx_parser.py:166-197)
+    over (doc, idx, text, is_caption, is_asset) tuples."""
+    out = {}
+    for doc in sorted({b[0] for b in blocks}):
+        pending = None
+        for _, idx, text, is_cap, is_asset in sorted(
+            b for b in blocks if b[0] == doc
+        ):
+            if is_cap:
+                pending = (idx, text)  # a later caption overwrites
+            elif is_asset:
+                out[(doc, idx)] = pending if pending else (None, None)
+                pending = None  # consumed
+    return out
+
+
+def test_caption_pairing_state_machine_agrees_with_window(spark):
+    """The window twin equals the literal state machine on the edge-case
+    fixture and on seeded random block sequences."""
+    import random
+
+    assert _pair_captions_replica(CAP_BLOCKS) == EXPECTED_PAIRS
+    rng = random.Random(7)
+    blocks = []
+    for doc in range(1, 9):
+        for idx in range(1, rng.randint(1, 30)):
+            kind = rng.choice(("caption", "asset", "text"))
+            blocks.append(
+                (doc, idx, f"{kind} {doc}.{idx}", kind == "caption", kind == "asset")
+            )
+    df = spark.createDataFrame(
+        blocks,
         "doc_id long, block_idx int, text string, is_caption boolean, is_asset boolean",
     )
-    assert _pairs(pair_captions_pandas(blocks)) == EXPECTED_PAIRS
+    assert _pairs(pair_captions_window(df)) == _pair_captions_replica(blocks)
 
 
 # --- embedder ------------------------------------------------------------------
 
-def test_hash_embed_expr_matches_pandas_and_local(spark, sf_small):
+def test_hash_embed_expr_matches_local(spark, sf_small):
     docs = spark.read.parquet(f"{sf_small}/documents.parquet").limit(40)
-    both = docs.select(
-        "doc_id",
-        "text",
-        hash_embed_expr("text", 32).alias("e_expr"),
-        hash_embed_pandas("text", 32).alias("e_pandas"),
+    rows = docs.select(
+        "doc_id", "text", hash_embed_expr("text", 32).alias("e_expr")
     ).collect()
-    for r in both:
+    for r in rows:
         # exact, not approx: embed_text's norm fold is left-to-right like
-        # the expression form, so the three paths are bit-identical
-        assert r["e_expr"] == r["e_pandas"]
+        # the expression form, so the two paths are bit-identical
         assert r["e_expr"] == embed_text(r["text"], 32).tolist()
         norm = sum(x * x for x in r["e_expr"])
         assert norm == pytest.approx(1.0, abs=1e-9)

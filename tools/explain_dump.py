@@ -74,6 +74,10 @@ def main() -> None:
     qs = queries()
     os.makedirs(outdir, exist_ok=True)
     for name in names:
+        # Drop what earlier queries cached, as bench.measure does, so a
+        # dump shows the query's own plan, not InMemoryRelation scans of
+        # another query's persisted intermediates.
+        spark.catalog.clearCache()
         try:
             if name in _SURROGATES:
                 df = _SURROGATES[name](spark, SF_DIR)
