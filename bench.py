@@ -23,8 +23,7 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from docbench import trace  # noqa: E402 — the one status-store reader
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+from etl_ai_assistent_spark.io import DEFAULT_SF_DIR as SF_DIR  # noqa: E402
 
 # Headline queries: the flagship + the heaviest representatives of each
 # operator family. Grows as families land.

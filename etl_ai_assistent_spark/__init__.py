@@ -8,7 +8,7 @@ required at 100 TB scale.
 
 Layout:
     session      SparkSession factory (AQE + Arrow on, UTC, tuned shuffle)
-    schemas      explicit StructType schemas for every table/record shape
+    schemas      testdata table names and the two declared schemas
     io           parquet/JSON/CSV source + sink wrappers
     functions/   column-level building blocks (vector math, text ops)
     operators/   composite dataflow operators (sectionize, chunk, embed,

@@ -18,9 +18,10 @@ TABLE_PREFIX_RE = r"^(таблица|table)"
 _c = lambda c: F.col(c) if isinstance(c, str) else c  # noqa: E731
 
 
-def is_heading(style: Column | str, prefix: str = "Heading") -> Column:
-    """P4 (docx_parser.py:72-73): style-name prefix classifies headings."""
-    return _c(style).startswith(prefix)
+def is_heading(style: Column | str) -> Column:
+    """P4 (docx_parser.py:72-73): the style-name prefix 'Heading'
+    classifies headings."""
+    return _c(style).startswith("Heading")
 
 
 def looks_like_caption(style: Column | str, text: Column | str) -> Column:
@@ -37,12 +38,12 @@ def caption_kind(text: Column | str) -> Column:
     ).otherwise(F.lit("figure"))
 
 
-def sanitize_caption(text: Column | str, max_len: int = 128) -> Column:
+def sanitize_caption(text: Column | str) -> Column:
     """P7 (docx_parser.py:114-117): whitespace->_, strip non-word chars,
-    truncate, default 'asset'."""
+    truncate to 128 chars, default 'asset'."""
     s = F.regexp_replace(F.trim(_c(text)), r"\s+", "_")
     s = F.regexp_replace(s, r"[^\w\-.]", "")
-    s = F.substring(s, 1, max_len)
+    s = F.substring(s, 1, 128)
     return F.coalesce(F.nullif(s, F.lit("")), F.lit("asset"))
 
 
@@ -85,23 +86,23 @@ def token_count(text: Column | str) -> Column:
     )
 
 
-def word_shingles(text: Column | str, n: int = 3) -> Column:
-    """Distinct word n-grams — the MinHash/Jaccard unit. Built from
+def word_shingles(text: Column | str) -> Column:
+    """Distinct word 3-grams — the MinHash/Jaccard unit. Built from
     tokens() with transform over indices; stays JVM-side.
 
     The tokenizer output is bound to a LAMBDA VARIABLE (a transform over
     a 1-element array) before the per-gram element_at references:
     inlined directly, CollapseProject would duplicate the split() into
-    every one of the n references per gram — re-tokenizing the document
-    n times per gram (the blowup fixed in queries/curation.py)."""
+    every one of the 3 references per gram — re-tokenizing the document
+    3 times per gram (the blowup fixed in queries/curation.py)."""
     toks = tokens(F.lower(_c(text)))
 
     def grams_of(t: Column) -> Column:
-        k = F.size(t) - (n - 1)
+        k = F.size(t) - 2
         grams = F.transform(
             F.sequence(F.lit(1), k),
             lambda i: F.concat_ws(
-                " ", *[F.element_at(t, i + j) for j in range(n)]
+                " ", *[F.element_at(t, i + j) for j in range(3)]
             ),
         )
         # sequence(1, k<=0) would generate a DESCENDING range — guard

@@ -162,12 +162,10 @@ def read_json_dataset(spark: SparkSession, path: str) -> DataFrame:
 # --- sinks (SURVEY.md §2.2) ----------------------------------------------
 
 
-def write_parquet(
-    df: DataFrame, path: str, *, partition_by: tuple[str, ...] = (), mode: str = "overwrite"
-) -> None:
+def write_parquet(df: DataFrame, path: str, *, partition_by: tuple[str, ...] = ()) -> None:
     """K4/K5-style native store. Partitioning keys (e.g. document_version)
     enable static + dynamic partition pruning on later scans."""
-    w = df.write.mode(mode)
+    w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
@@ -183,32 +181,26 @@ def write_csv(df: DataFrame, path: str, mode: str = "overwrite", **options) -> N
     df.write.mode(mode).option("header", True).options(**options).csv(path)
 
 
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_orc(df: DataFrame, path: str) -> None:
     """Alternative columnar store format (same pushdown/pruning class as
     parquet; the K4/K5 store shape for ORC-standardized warehouses)."""
-    df.write.mode(mode).orc(path)
+    df.write.mode("overwrite").orc(path)
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
 
 
-def write_xml(
-    df: DataFrame, path: str, *, row_tag: str = "row", mode: str = "overwrite"
-) -> None:
-    """Native XML sink (Spark 4 built-in) — the reference's document
-    domain IS XML (OOXML, docx_parser.py); this is the declarative twin
-    of its ElementTree serialization for XML-standardized exchanges."""
-    df.write.mode(mode).format("xml").option("rowTag", row_tag).save(path)
+def write_xml(df: DataFrame, path: str) -> None:
+    """Native XML sink (Spark 4 built-in), one <row> element per row —
+    the reference's document domain IS XML (OOXML, docx_parser.py);
+    this is the declarative twin of its ElementTree serialization for
+    XML-standardized exchanges."""
+    df.write.mode("overwrite").format("xml").option("rowTag", "row").save(path)
 
 
-def read_xml(
-    spark: SparkSession, path: str, *, row_tag: str = "row", schema=None
-) -> DataFrame:
-    """Native XML source: one row per `row_tag` element, attributes as
+def read_xml(spark: SparkSession, path: str) -> DataFrame:
+    """Native XML source: one row per <row> element, attributes as
     `_attr` columns, nested elements as structs/arrays — schema-on-read
-    like the JSON source (explicit schema preferred at scale)."""
-    r = spark.read.format("xml").option("rowTag", row_tag)
-    if schema is not None:
-        r = r.schema(schema)
-    return r.load(path)
+    like the JSON source."""
+    return spark.read.format("xml").option("rowTag", "row").load(path)

@@ -31,36 +31,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_M_BITS = 1 << 16
-DEFAULT_SEEDS = (41, 97)
+M_BITS = 1 << 16
+SEEDS = (41, 97)
 
 
-def _word_and_bit(key_col: str, m_bits: int, seed: int) -> tuple:
+def _word_and_bit(key_col: str, seed: int) -> tuple:
     """(word index, set-bit mask) of one hash probe, all bigint
     codegen. pmod keeps xxhash64's signed output non-negative."""
-    h = F.pmod(F.xxhash64(F.col(key_col), F.lit(seed)), F.lit(m_bits))
+    h = F.pmod(F.xxhash64(F.col(key_col), F.lit(seed)), F.lit(M_BITS))
     word = (h / 64).cast("bigint").alias("_bf_word")
     # F.shiftleft takes only literal shift amounts; SQL shiftleft
     # accepts an expression for both args
     bit = F.expr(
         f"shiftleft(CAST(1 AS BIGINT),"
-        f" CAST(pmod(xxhash64({key_col}, {seed}), {m_bits}) % 64 AS INT))"
+        f" CAST(pmod(xxhash64({key_col}, {seed}), {M_BITS}) % 64 AS INT))"
     ).alias("_bf_bit")
     return word, bit
 
 
-def bloom_words(
-    keys: DataFrame,
-    key_col: str,
-    m_bits: int = DEFAULT_M_BITS,
-    seeds: tuple = DEFAULT_SEEDS,
-) -> DataFrame:
+def bloom_words(keys: DataFrame, key_col: str) -> DataFrame:
     """Build the Bloom bitmap of `keys[key_col]` as (word, bits) rows —
-    at most m_bits/64 rows regardless of |keys|. One union of k probe
+    at most M_BITS/64 rows regardless of |keys|. One union of k probe
     passes and one bit_or aggregation (map-side combinable)."""
     parts = None
-    for seed in seeds:
-        word, bit = _word_and_bit(key_col, m_bits, seed)
+    for seed in SEEDS:
+        word, bit = _word_and_bit(key_col, seed)
         p = keys.select(word, bit)
         parts = p if parts is None else parts.unionByName(p)
     return parts.groupBy("_bf_word").agg(
@@ -68,21 +63,15 @@ def bloom_words(
     )
 
 
-def bloom_prune(
-    fact: DataFrame,
-    key_col: str,
-    words: DataFrame,
-    m_bits: int = DEFAULT_M_BITS,
-    seeds: tuple = DEFAULT_SEEDS,
-) -> DataFrame:
+def bloom_prune(fact: DataFrame, key_col: str, words: DataFrame) -> DataFrame:
     """Keep only fact rows whose key passes every hash probe. Per seed:
     one broadcast equi-join on the word index (an inner join — a word
     with no set bits is absent, so the join itself prunes) plus a
     bitmask check. Rows surviving all k probes MAY be in the build
     side; dropped rows definitely are not."""
     out = fact
-    for i, seed in enumerate(seeds):
-        word, bit = _word_and_bit(key_col, m_bits, seed)
+    for i, seed in enumerate(SEEDS):
+        word, bit = _word_and_bit(key_col, seed)
         w = F.broadcast(
             words.select(
                 F.col("_bf_word").alias(f"_w{i}"),

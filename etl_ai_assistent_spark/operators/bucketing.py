@@ -24,14 +24,10 @@ from pyspark.sql import DataFrame, SparkSession
 from .. import io
 from .. import store as ST
 
+BUCKETS = 16
 
-def bucketed_table(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str,
-    key: str,
-    buckets: int = 16,
-) -> DataFrame:
+
+def bucketed_table(spark: SparkSession, sf_dir: str, table: str, key: str) -> DataFrame:
     """Read `table` as a bucketed catalog table, publishing it on first
     use for this source-table version. sortBy(key) inside each bucket
     lets the join skip its sort too (SortMergeJoin over pre-sorted
@@ -41,7 +37,7 @@ def bucketed_table(
         "spark_graft_bucketed_v2",
         sf_dir,
         table,
-        f"_{buckets}",
+        f"_{BUCKETS}",
         name_table=True,
     )
     name = f"bkt_{os.path.basename(path)}"
@@ -55,7 +51,7 @@ def bucketed_table(
         (
             src.write.format("parquet")
             .option("path", tmp)
-            .bucketBy(buckets, key)
+            .bucketBy(BUCKETS, key)
             .sortBy(key)
             .mode("overwrite")
             .saveAsTable(tmp_name)
@@ -76,6 +72,6 @@ def bucketed_table(
     spark.sql(
         f"CREATE TABLE {name} ({cols}) USING PARQUET"
         f" CLUSTERED BY ({key}) SORTED BY ({key})"
-        f" INTO {buckets} BUCKETS LOCATION '{path}'"
+        f" INTO {BUCKETS} BUCKETS LOCATION '{path}'"
     )
     return spark.table(name)

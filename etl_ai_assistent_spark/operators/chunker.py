@@ -30,14 +30,13 @@ from pyspark.sql import types as T
 
 DEFAULT_CHUNK_SIZE = 700  # reference chunk_splitter_service.py:15
 DEFAULT_OVERLAP = 200
-DEFAULT_SEPARATORS: tuple[str, ...] = ("\n\n", "\n", " ", "")
+SEPARATORS: tuple[str, ...] = ("\n\n", "\n", " ", "")
 
 
 def split_text_recursive(
     text: str,
     chunk_size: int = DEFAULT_CHUNK_SIZE,
     overlap: int = DEFAULT_OVERLAP,
-    separators: Sequence[str] = DEFAULT_SEPARATORS,
 ) -> list[str]:
     """Pure-Python recursive character splitting; unit-testable driver
     for the pandas UDF."""
@@ -48,10 +47,6 @@ def split_text_recursive(
         if len(s) <= chunk_size:
             if s:
                 yield s
-            return
-        if not seps:
-            for i in range(0, len(s), chunk_size):
-                yield s[i : i + chunk_size]
             return
         sep, rest = seps[0], seps[1:]
         if sep == "":
@@ -69,7 +64,7 @@ def split_text_recursive(
             else:
                 yield part
 
-    pieces = list(atomize(text or "", separators))
+    pieces = list(atomize(text or "", SEPARATORS))
     if not pieces:
         return []
 

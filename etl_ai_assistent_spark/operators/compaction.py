@@ -18,9 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def compact_fixed_width(
-    df: DataFrame, path: str, key: str, n_files: int, mode: str = "overwrite"
-) -> None:
+def compact_fixed_width(df: DataFrame, path: str, key: str, n_files: int) -> None:
     """Rewrite `df` as key-clustered parquet files over EXPLICIT
     fixed-width key-range buckets (bucket = (key - min) div width)
     rather than repartitionByRange's sampled boundaries: the file →
@@ -44,7 +42,7 @@ def compact_fixed_width(
         )
         .repartition(n_files, "bucket")
         .sortWithinPartitions(key)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(path)
     )

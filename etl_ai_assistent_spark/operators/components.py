@@ -32,7 +32,6 @@ def connected_components(
     *,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iter: int = 20,
 ) -> DataFrame:
     """(node, component) for every node in `pairs`, component = min node
     id reachable through the pair graph. Deterministic.
@@ -56,7 +55,7 @@ def connected_components(
         .withColumn("component", F.col("node")),
         barrier=True,
     )
-    for _ in range(max_iter):
+    for _ in range(20):  # a cap; near-dup clusters converge in 2-4 rounds
         neighbor_min = (
             edges.join(labels, edges["v"] == labels["node"])
             .groupBy(F.col("u").alias("node"))

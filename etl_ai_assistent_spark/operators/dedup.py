@@ -45,17 +45,15 @@ def normalized_text_key(text: Column | str) -> Column:
     return F.md5(TX.normalize_ws(F.lower(c)))
 
 
-def exact_dedup(
-    df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """One row per distinct normalized text: (text_key, keeper id,
     dup_count). Map-side partial agg makes this one light shuffle of
     (key, id) pairs regardless of corpus size."""
     return (
-        df.select(normalized_text_key(text_col).alias("text_key"), F.col(id_col))
+        df.select(normalized_text_key("text").alias("text_key"), F.col("doc_id"))
         .groupBy("text_key")
         .agg(
-            F.min(id_col).alias("keeper_id"),
+            F.min("doc_id").alias("keeper_id"),
             F.count("*").alias("dup_count"),
         )
     )
@@ -273,13 +271,7 @@ def simhash_near_dup_pairs(
     )
 
 
-def jaccard_prefix_pairs(
-    docs: DataFrame,
-    num: int,
-    den: int,
-    id_col: str = "id",
-    text_col: str = "text",
-) -> DataFrame:
+def jaccard_prefix_pairs(docs: DataFrame, num: int, den: int) -> DataFrame:
     """EXACT Jaccard self-join via PREFIX FILTERING (the AllPairs/PPJoin
     family, Bayardo et al. 2007 / Xiao et al. 2008): every pair of docs
     with shingle Jaccard >= num/den is returned, deterministically —
@@ -297,7 +289,7 @@ def jaccard_prefix_pairs(
     no global sort). Rare-first ordering keeps prefix posting lists the
     SHORTEST ones; verification touches candidates only."""
     sh = docs.select(
-        F.col(id_col).alias("id"), TX.word_shingles(text_col).alias("sh")
+        F.col("id").alias("id"), TX.word_shingles("text").alias("sh")
     ).filter(F.size("sh") > 0)
     ex = sh.select("id", F.explode("sh").alias("g"))
     dfs = ex.groupBy("g").agg(F.count("*").cast("bigint").alias("df"))
@@ -342,7 +334,7 @@ def jaccard_prefix_pairs(
     )
 
 
-def fingerprint(text: Column | str, modulus: int = MERSENNE31) -> Column:
+def fingerprint(text: Column | str) -> Column:
     """Order-sensitive document fingerprint: left-to-right polynomial
     rolling hash over token buckets, h = (h*31 + bucket) mod 2^31-1.
     Unlike the set-based detectors this distinguishes permutations."""
@@ -350,7 +342,7 @@ def fingerprint(text: Column | str, modulus: int = MERSENNE31) -> Column:
     return F.aggregate(
         F.transform(toks, lambda t: md5_bucket(t)),
         F.lit(0).cast("bigint"),
-        lambda acc, t: (acc * 31 + t) % modulus,
+        lambda acc, t: (acc * 31 + t) % MERSENNE31,
     )
 
 

@@ -39,6 +39,7 @@ from ..functions import bind
 from ..functions import text as TX
 
 DEFAULT_DIM = 64  # testdata embedding dim; reference uses 1024
+MAX_RETRIES = 3  # attempts per client batch, here and in operators/upsert.py
 
 
 def token_bucket_expr(tok: Column, dim: int) -> Column:
@@ -128,19 +129,16 @@ def pluggable_embedder(
     *,
     dim: int = DEFAULT_DIM,
     batch_size: int = 64,
-    max_retries: int = 3,
-    retry_backoff_s: float = 0.0,
 ):
     """Column factory: ``pluggable_embedder(lambda: MyClient())("text")``
     returns an ARRAY<DOUBLE> column computed by the client in batches of
-    ``batch_size`` with ``max_retries`` exponential-backoff attempts per
-    batch — the knobs a production HTTP embedder needs (the reference
+    ``batch_size`` with up to MAX_RETRIES immediate attempts per batch —
+    the knobs a production HTTP embedder needs (the reference
     calls the model one chunk at a time with no retry; this is that
     seam done batch-first). The client is constructed once per executor
     task via ``client_factory`` (a picklable zero-arg callable), never
     shipped live from the driver. Vectors shorter than ``dim`` are
     padded with 0.0, longer ones truncated (P11 semantics)."""
-    import time
 
     def _fit(vec: list[float]) -> list[float]:
         if len(vec) >= dim:
@@ -154,14 +152,13 @@ def pluggable_embedder(
         texts = s.fillna("").tolist()
         for start in range(0, len(texts), batch_size):
             batch = texts[start : start + batch_size]
-            for attempt in range(max_retries):
+            for attempt in range(MAX_RETRIES):
                 try:
                     vecs = client.embed_batch(batch)
                     break
                 except Exception:
-                    if attempt == max_retries - 1:
+                    if attempt == MAX_RETRIES - 1:
                         raise
-                    time.sleep(retry_backoff_s * (2**attempt))
             out.extend(_fit(v) for v in vecs)
         return pd.Series(out, index=s.index)
 

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+WEIGHT_COL = "_w"  # a Z-relation row's signed bigint multiplicity
+
 
 def incremental_group_sums(
     base_agg: DataFrame,
@@ -39,7 +41,6 @@ def incremental_group_sums(
     key: str,
     group_col: str,
     measure_col: str,
-    op_col: str = "op",
     insert_only: bool = False,
 ) -> DataFrame:
     """Maintain (group_col, n, sum_measure) under a CDC batch.
@@ -64,7 +65,7 @@ def incremental_group_sums(
     the CDC rule anyway; callers own the every-key-is-new claim."""
     ch = changes.select(
         F.col(key).alias("_k"),
-        F.col(op_col).alias("_op"),
+        F.col("op").alias("_op"),
         F.col(group_col).alias("_new_g"),
         F.col(measure_col).cast("bigint").alias("_new_m"),
     )
@@ -152,32 +153,31 @@ def delta_join(
     b: DataFrame,
     db: DataFrame,
     key: str,
-    weight_col: str = "_w",
 ) -> DataFrame:
     """The signed delta of the join view A ⋈ B. `a`/`b` are the
     PRE-change sides (implicit weight +1 per row); `da`/`db` carry
-    `weight_col` (signed bigint). Non-key columns of the two sides must
+    `_w` (signed bigint). Non-key columns of the two sides must
     be disjoint (the join view's schema). Returns rows of the joined
-    schema plus `weight_col` — NOT normalized; feed through
+    schema plus `_w` — NOT normalized; feed through
     apply_delta (or an aggregate) to collapse weights."""
     overlap = (set(a.columns) & set(b.columns)) - {key}
     if overlap:
         raise ValueError(f"delta_join: non-key columns collide: {overlap}")
-    if set(da.columns) != set(a.columns) | {weight_col}:
+    if set(da.columns) != set(a.columns) | {WEIGHT_COL}:
         raise ValueError("delta_join: da schema must be a's + weight")
-    if set(db.columns) != set(b.columns) | {weight_col}:
+    if set(db.columns) != set(b.columns) | {WEIGHT_COL}:
         raise ValueError("delta_join: db schema must be b's + weight")
 
-    a1 = a.withColumn(weight_col, F.lit(1).cast("bigint"))
-    b1 = b.withColumn(weight_col, F.lit(1).cast("bigint"))
+    a1 = a.withColumn(WEIGHT_COL, F.lit(1).cast("bigint"))
+    b1 = b.withColumn(WEIGHT_COL, F.lit(1).cast("bigint"))
 
     def _term(left, right):
         lw = F.col(f"_lw").cast("bigint")
         rw = F.col(f"_rw").cast("bigint")
         return (
-            left.withColumnRenamed(weight_col, "_lw")
-            .join(right.withColumnRenamed(weight_col, "_rw"), key)
-            .withColumn(weight_col, (lw * rw).cast("bigint"))
+            left.withColumnRenamed(WEIGHT_COL, "_lw")
+            .join(right.withColumnRenamed(WEIGHT_COL, "_rw"), key)
+            .withColumn(WEIGHT_COL, (lw * rw).cast("bigint"))
             .drop("_lw", "_rw")
         )
 
@@ -186,20 +186,18 @@ def delta_join(
     return out.unionByName(_term(da, db))
 
 
-def apply_delta(
-    view: DataFrame, dv: DataFrame, weight_col: str = "_w"
-) -> DataFrame:
+def apply_delta(view: DataFrame, dv: DataFrame) -> DataFrame:
     """Add a signed delta to a Z-relation snapshot: union, sum weights
     per distinct row, drop zero-weight rows. With bigint weights this
     is exact and associative — apply_delta(apply_delta(v, d1), d2) ==
     apply_delta(v, d1 ∪ d2), the law tests/test_property_laws.py
     randomizes."""
-    cols = [c for c in view.columns if c != weight_col]
+    cols = [c for c in view.columns if c != WEIGHT_COL]
     return (
         view.unionByName(dv.select(*view.columns))
         .groupBy(*cols)
-        .agg(F.sum(weight_col).cast("bigint").alias(weight_col))
-        .filter(F.col(weight_col) != 0)
+        .agg(F.sum(WEIGHT_COL).cast("bigint").alias(WEIGHT_COL))
+        .filter(F.col(WEIGHT_COL) != 0)
     )
 
 

@@ -28,6 +28,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+BATCH_SIZE = 64  # rows per judge call
+
 JUDGE_SCHEMA = (
     "probe_id bigint, n_contexts int, faithfulness_ppm bigint, "
     "relevancy_ppm bigint"
@@ -94,23 +96,21 @@ class DeterministicLexicalJudge(JudgeClient):
         return out
 
 
-def judge_scores(
-    qa: DataFrame, client_factory=DeterministicLexicalJudge, *, batch_size: int = 64
-) -> DataFrame:
+def judge_scores(qa: DataFrame, client_factory=DeterministicLexicalJudge) -> DataFrame:
     """Score a QA DataFrame (probe_id, question, answer,
     contexts ARRAY<STRING>) with a judge client, Arrow-batched.
 
     mapInPandas (not a scalar pandas UDF) because a judge call is a
     BATCH RPC with its own preferred size: rows are re-chunked to
-    ``batch_size`` regardless of Arrow's batch geometry, one client per
+    BATCH_SIZE regardless of Arrow's batch geometry, one client per
     task, no shuffle introduced."""
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         client = client_factory()
         try:
             for pdf in batches:
-                for lo in range(0, len(pdf), batch_size):
-                    chunk = pdf.iloc[lo : lo + batch_size]
+                for lo in range(0, len(pdf), BATCH_SIZE):
+                    chunk = pdf.iloc[lo : lo + BATCH_SIZE]
                     rows = [
                         {
                             "probe_id": int(r.probe_id),

@@ -30,12 +30,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def merge_apply(
-    target: DataFrame, changes: DataFrame, key: str, op_col: str = "op"
-) -> DataFrame:
+def merge_apply(target: DataFrame, changes: DataFrame, key: str) -> DataFrame:
     """Apply a CDC batch to a snapshot. ``changes`` has the same columns
-    as ``target`` plus ``op_col`` ('I' insert / 'U' update / 'D'
-    delete). Returns the merged snapshot with target's column order."""
+    as ``target`` plus ``op`` ('I' insert / 'U' update / 'D' delete).
+    Returns the merged snapshot with target's column order."""
     cols = target.columns
     t = target.select(
         F.col(key).alias("_t_key"),
@@ -43,7 +41,7 @@ def merge_apply(
     )
     c = changes.select(
         F.col(key).alias("_c_key"),
-        F.col(op_col).alias("_op"),
+        F.col("op").alias("_op"),
         *[F.col(col).alias(f"_c_{col}") for col in cols if col != key],
     )
     # eqNullSafe: NULL is a real key value — a null-key change row must
@@ -71,9 +69,7 @@ def merge_apply(
     return kept.select(*merged_cols)
 
 
-def snapshot_diff(
-    old: DataFrame, new: DataFrame, key: str, op_col: str = "op"
-) -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame, key: str) -> DataFrame:
     """The INVERSE of merge_apply: derive the CDC batch that transforms
     snapshot `old` into snapshot `new` — table-diff change-feed
     generation (what a lakehouse emits as a "change data feed" between
@@ -126,7 +122,7 @@ def snapshot_diff(
     )
     out_cols = [
         F.coalesce(F.col("_n_key"), F.col("_o_key")).alias(key),
-        F.col("_op").alias(op_col),
+        F.col("_op").alias("op"),
         *[
             F.when(F.col("_op") == "D", F.col(f"_o_{c}"))
             .otherwise(F.col(f"_n_{c}"))

@@ -30,7 +30,7 @@ from pyspark.sql.window import Window
 SEQ_COL = "_seq"
 
 
-def stamp_batch(batch: DataFrame, seq: int, op_col: str = "op") -> DataFrame:
+def stamp_batch(batch: DataFrame, seq: int) -> DataFrame:
     """A log entry: the change batch with its commit sequence number.
     seq must be ≥ 1 (0 is reserved for base rows) and monotone per
     commit — derive it from the deterministic micro-batch id exactly
@@ -40,9 +40,7 @@ def stamp_batch(batch: DataFrame, seq: int, op_col: str = "op") -> DataFrame:
     return batch.withColumn(SEQ_COL, F.lit(seq).cast("bigint"))
 
 
-def resolve(
-    base: DataFrame, log: DataFrame, key: str, op_col: str = "op"
-) -> DataFrame:
+def resolve(base: DataFrame, log: DataFrame, key: str) -> DataFrame:
     """Read-time merge: latest-wins per key over base ∪ log, deletes
     dropped. Returns base's column order. Equivalent to folding
     merge_apply over the log batches in seq order (tests/test_mor.py
@@ -50,10 +48,10 @@ def resolve(
     cols = base.columns
     b = base.select(
         *cols,
-        F.lit(None).cast("string").alias(op_col),
+        F.lit(None).cast("string").alias("op"),
         F.lit(0).cast("bigint").alias(SEQ_COL),
     )
-    u = b.unionByName(log.select(*cols, op_col, SEQ_COL))
+    u = b.unionByName(log.select(*cols, "op", SEQ_COL))
     w = Window.partitionBy(key).orderBy(F.desc(SEQ_COL))
     latest = u.withColumn("_rn", F.row_number().over(w)).filter(
         F.col("_rn") == 1
@@ -61,22 +59,16 @@ def resolve(
     # NULL op marks a base row (never a delete); survivor selection must
     # not touch the key column, so all-null keys pass through untouched
     return latest.filter(
-        F.col(op_col).isNull() | (F.col(op_col) != F.lit("D"))
+        F.col("op").isNull() | (F.col("op") != F.lit("D"))
     ).select(*cols)
 
 
-def compact(
-    base: DataFrame,
-    log: DataFrame,
-    key: str,
-    out_path: str,
-    n_files: int = 8,
-    op_col: str = "op",
-) -> None:
+def compact(base: DataFrame, log: DataFrame, key: str, out_path: str) -> None:
     """Fold the log into a new base: resolve, then rewrite key-clustered
-    via compaction.compact_fixed_width (disjoint per-file key ranges —
-    the zone-map layout). Afterwards the caller truncates the log; a
-    read of (new base, empty log) equals a read of (old base, log)."""
+    into 8 files via compaction.compact_fixed_width (disjoint per-file
+    key ranges — the zone-map layout). Afterwards the caller truncates
+    the log; a read of (new base, empty log) equals a read of (old base,
+    log)."""
     from .compaction import compact_fixed_width
 
-    compact_fixed_width(resolve(base, log, key, op_col), out_path, key, n_files)
+    compact_fixed_width(resolve(base, log, key), out_path, key, 8)

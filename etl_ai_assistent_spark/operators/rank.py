@@ -64,10 +64,9 @@ def with_global_row_number(
     sort_col: str,
     tiebreak: str,
     bucket_div: int,
-    rn: str = "rn",
     total: str | None = None,
 ) -> DataFrame:
-    """Append an exact global row number ordered by
+    """Append an exact global row number `rn` ordered by
     (`sort_col` ASC, `tiebreak` ASC) — see module docstring for the
     plan shape. `sort_col` must be an integral column (negate it for
     DESC order); `tiebreak` must be unique within equal sort keys;
@@ -77,7 +76,7 @@ def with_global_row_number(
     If `total` is given, the exact row count rides along on the same
     broadcast (no separate count() pass or 1-row cross join)."""
     b = df.withColumn("_bkt", F.expr(f"{sort_col} div {bucket_div}"))
-    return _rank_bucketed(b, sort_col, tiebreak, rn, total)
+    return _rank_bucketed(b, sort_col, tiebreak, total)
 
 
 def with_global_row_number_from_stats(
@@ -86,9 +85,7 @@ def with_global_row_number_from_stats(
     tiebreak: str,
     vmin_col: str,
     vmax_col: str,
-    rn: str = "rn",
     total: str | None = None,
-    target_buckets: int = TARGET_BUCKETS,
     group_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """with_global_row_number with the bucket width derived IN-PLAN
@@ -96,8 +93,8 @@ def with_global_row_number_from_stats(
     `df` — e.g. one shared 1-row stats broadcast serving several
     rankings over the same base (q_rfm_segments ranks three metrics:
     one combined aggregate replaces three per-axis stats passes). The
-    width is ≈ span div `target_buckets`, so the histogram cardinality
-    is ≤ ~2·target_buckets BY CONSTRUCTION on any domain: fixture-tuned
+    width is ≈ span div TARGET_BUCKETS, so the histogram cardinality
+    is ≤ ~2·TARGET_BUCKETS BY CONSTRUCTION on any domain: fixture-tuned
     constants can't drift (ADVICE/verdict r9), and the MAX_BUCKETS
     guard becomes unreachable rather than load-bearing. The width
     divides min/max BEFORE subtracting (span itself can overflow bigint
@@ -108,7 +105,7 @@ def with_global_row_number_from_stats(
 
     `group_cols` generalizes to exact PER-GROUP row numbers in one
     pass: the histogram keys on (group, bucket), the running sum
-    partitions by group (still bounded — ≤ groups × ~2·target_buckets
+    partitions by group (still bounded — ≤ groups × ~2·TARGET_BUCKETS
     rows), and `total` becomes the per-group row count. Several
     rankings over the same base collapse into one plan (explode the
     axes into a `group` column, rank grouped, pivot back) instead of
@@ -119,18 +116,17 @@ def with_global_row_number_from_stats(
     b = df.withColumn(
         "_bkt",
         F.expr(
-            f"{sort_col} div greatest({vmax_col} div {target_buckets}"
-            f" - {vmin_col} div {target_buckets}, 1)"
+            f"{sort_col} div greatest({vmax_col} div {TARGET_BUCKETS}"
+            f" - {vmin_col} div {TARGET_BUCKETS}, 1)"
         ),
     ).drop(vmin_col, vmax_col)
-    return _rank_bucketed(b, sort_col, tiebreak, rn, total, group_cols)
+    return _rank_bucketed(b, sort_col, tiebreak, total, group_cols)
 
 
 def _rank_bucketed(
     b: DataFrame,
     sort_col: str,
     tiebreak: str,
-    rn: str,
     total: str | None,
     group_cols: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -161,7 +157,7 @@ def _rank_bucketed(
     out = (
         b.join(F.broadcast(cum), [*g, "_bkt"])
         .withColumn(
-            rn,
+            "rn",
             F.when(
                 F.col("_nb") > MAX_BUCKETS,
                 F.expr(

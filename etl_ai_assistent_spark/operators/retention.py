@@ -24,8 +24,10 @@ from __future__ import annotations
 import os
 import shutil
 
+PREFIX = "snap_v"
 
-def snapshot_versions(root: str, prefix: str = "snap_v") -> list[tuple[int, int]]:
+
+def snapshot_versions(root: str) -> list[tuple[int, int]]:
     """(version, n_rows) per committed snapshot under `root`, ascending.
     Row counts come from parquet footers only — O(files) metadata, no
     data pages."""
@@ -33,7 +35,7 @@ def snapshot_versions(root: str, prefix: str = "snap_v") -> list[tuple[int, int]
 
     out = []
     for d in os.listdir(root):
-        if not d.startswith(prefix):
+        if not d.startswith(PREFIX):
             continue
         path = os.path.join(root, d)
         if not os.path.exists(os.path.join(path, "_SUCCESS")):
@@ -47,7 +49,7 @@ def snapshot_versions(root: str, prefix: str = "snap_v") -> list[tuple[int, int]
             for f in files
             if f.endswith(".parquet")
         )
-        out.append((int(d[len(prefix):]), n))
+        out.append((int(d[len(PREFIX):]), n))
     return sorted(out)
 
 
@@ -65,13 +67,13 @@ def retention_plan(
     return [(v, n, v > cutoff) for v, n in versions]
 
 
-def vacuum(root: str, keep_last: int, prefix: str = "snap_v") -> list[int]:
+def vacuum(root: str, keep_last: int) -> list[int]:
     """Delete dropped version directories; returns the deleted version
     numbers. Destructive — run on owned state only."""
-    plan = retention_plan(snapshot_versions(root, prefix), keep_last)
+    plan = retention_plan(snapshot_versions(root), keep_last)
     deleted = []
     for version, _, kept in plan:
         if not kept:
-            shutil.rmtree(os.path.join(root, f"{prefix}{version}"))
+            shutil.rmtree(os.path.join(root, f"{PREFIX}{version}"))
             deleted.append(version)
     return deleted

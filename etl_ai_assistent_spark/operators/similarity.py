@@ -43,22 +43,17 @@ def topk_cosine(
     items: DataFrame,
     query: Sequence[float],
     *,
-    vec_col: str = "embedding",
     k: int = 5,
     threshold: float = 0.5,
-    score_decimals: int | None = 6,
 ) -> DataFrame:
-    """Exact top-k cosine retrieval (Q1).
+    """Exact top-k cosine retrieval (Q1) over the `embedding` column.
 
-    Emits the item columns + `score`, highest first; ties broken by the
-    first non-vector column for determinism. ``vec_col`` is SQL text
-    (see functions/vector.py): a name that needs quoting must come
-    backticked.
+    Emits the other item columns + `score` (rounded to 6 decimals),
+    highest first; ties broken by the first non-vector column for
+    determinism.
     """
-    score = V.cosine(vec_col, query)
-    if score_decimals is not None:
-        score = F.round(score, score_decimals)
-    other = [c for c in items.columns if c != vec_col]
+    score = F.round(V.cosine("embedding", query), 6)
+    other = [c for c in items.columns if c != "embedding"]
     scored = items.withColumn("score", score).filter(F.col("score") >= threshold)
     return (
         scored.select(*other, "score")
@@ -67,43 +62,29 @@ def topk_cosine(
     )
 
 
-def knn_join(
-    items: DataFrame,
-    queries: DataFrame,
-    *,
-    item_vec: str = "embedding",
-    query_vec: str = "embedding",
-    item_id: str = "vec_id",
-    query_id: str = "vec_id",
-    k: int = 3,
-    score_decimals: int | None = 6,
-) -> DataFrame:
-    """Exact brute-force kNN join: top-k items per query row.
+def knn_join(items: DataFrame, queries: DataFrame, *, k: int = 3) -> DataFrame:
+    """Exact brute-force kNN join: top-k items per query row, both sides
+    keyed by `vec_id` with vectors in `embedding`; scores are rounded to
+    6 decimals.
 
     The query side is broadcast (it is the small side by contract), so
     scoring is a map-side nested loop over each item partition; the only
     shuffle carries (query_id, item_id, score) for the per-query rank.
-    ``item_vec`` and ``query_vec`` are SQL text (see functions/vector.py):
-    a name that needs quoting must come backticked.
     """
     # norms computed once per row BEFORE the join (columns cross the join
     # materialized): dot/(ni*nq) folds one O(d) pass per pair instead of
     # three — identical doubles to the inline cosine, just hoisted
     q = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(query_vec).alias("__qvec"),
-        V.norm(query_vec).alias("__qn"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qvec"),
+        V.norm("embedding").alias("__qn"),
     )
     it = items.select(
-        F.col(item_id).alias("item_id"),
-        F.col(item_vec).alias("__ivec"),
-        V.norm(item_vec).alias("__in"),
+        F.col("vec_id").alias("item_id"),
+        F.col("embedding").alias("__ivec"),
+        V.norm("embedding").alias("__in"),
     )
-    score = V.dot("__ivec", "__qvec") / (
-        F.col("__in") * F.col("__qn")
-    )
-    if score_decimals is not None:
-        score = F.round(score, score_decimals)
+    score = F.round(V.dot("__ivec", "__qvec") / (F.col("__in") * F.col("__qn")), 6)
     pairs = (
         it.crossJoin(F.broadcast(q))
         .withColumn("score", score)
@@ -120,21 +101,22 @@ def knn_join(
     )
 
 
-def centroids(items: DataFrame, *, vec_col: str = "embedding", cluster_col: str = "label") -> DataFrame:
-    """Per-cluster mean vector via posexplode + positional average.
+def centroids(items: DataFrame) -> DataFrame:
+    """Per-`label` mean of the `embedding` vectors via posexplode +
+    positional average.
 
     Decimal-rounded so downstream comparisons are reproducible across
     aggregation orders (float sums are order-sensitive; see SURVEY.md §7
     hard-part 4).
     """
     return (
-        items.select(cluster_col, F.posexplode(V.as_double(vec_col)).alias("pos", "x"))
-        .groupBy(cluster_col, "pos")
+        items.select("label", F.posexplode(V.as_double("embedding")).alias("pos", "x"))
+        .groupBy("label", "pos")
         .agg(F.round(F.avg("x"), 9).alias("cx"))
-        .groupBy(cluster_col)
+        .groupBy("label")
         .agg(F.array_sort(F.collect_list(F.struct("pos", "cx"))).alias("pairs"))
         .select(
-            cluster_col,
+            "label",
             F.transform("pairs", lambda p: p["cx"]).alias("centroid"),
         )
     )
@@ -144,50 +126,40 @@ def ivf_topk(
     items: DataFrame,
     query: Sequence[float],
     *,
-    vec_col: str = "embedding",
-    cluster_col: str = "label",
     k: int = 5,
     nprobe: int = 1,
     threshold: float = -1.0,
-    score_decimals: int | None = 6,
     cents: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-style approximate top-k: probe the nprobe nearest centroids,
-    exact-search only their clusters.
+    exact-search only their clusters (cluster id `label`).
 
     At 100 TB the items table is written partitioned by cluster id, so the
     semi-join on cluster becomes partition pruning — the scan reads only
     nprobe/nlist of the data. Recall is tunable via nprobe. ``cents``
     lets the caller supply the (cached) centroid table — it is the IVF
     coarse index, an offline build artifact, not per-serve work.
-    ``vec_col`` is SQL text, as in ``topk_cosine``.
     """
     if cents is None:
-        cents = centroids(items, vec_col=vec_col, cluster_col=cluster_col)
+        cents = centroids(items)
     probed = (
         cents.withColumn("cscore", V.cosine("centroid", query))
         .orderBy(F.desc("cscore"))
         .limit(nprobe)
-        .select(cluster_col)
+        .select("label")
     )
-    pruned = items.join(F.broadcast(probed), on=cluster_col, how="left_semi")
-    return topk_cosine(
-        pruned,
-        query,
-        vec_col=vec_col,
-        k=k,
-        threshold=threshold,
-        score_decimals=score_decimals,
-    )
+    pruned = items.join(F.broadcast(probed), on="label", how="left_semi")
+    return topk_cosine(pruned, query, k=k, threshold=threshold)
 
 
 # --- SRP-LSH (signed random projections) ---------------------------------
 
 SRP_BITS = 16
 SRP_BANDS = 4
+SRP_DIM = 64  # the embedding width the hyperplanes span
 
 
-def srp_signs(bits: int = SRP_BITS, dim: int = 64) -> list[list[float]]:
+def srp_signs() -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes for cosine LSH: component
     (j, d) is ±1 from the parity of md5(f"{j}|{d}") — reproducible in
     any engine, here materialized as literals so signing costs zero
@@ -198,21 +170,14 @@ def srp_signs(bits: int = SRP_BITS, dim: int = 64) -> list[list[float]]:
         h = int(hashlib.md5(f"{j}|{d}".encode()).hexdigest()[:8], 16)
         return 1.0 if h % 2 == 1 else -1.0
 
-    return [[sgn(j, d) for d in range(dim)] for j in range(bits)]
+    return [[sgn(j, d) for d in range(SRP_DIM)] for j in range(SRP_BITS)]
 
 
-def srp_bands(
-    items: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    bits: int = SRP_BITS,
-    bands: int = SRP_BANDS,
-    dim: int = 64,
-) -> DataFrame:
-    """(id, band_idx, band_val) LSH bucketing table for cosine: bit j is
-    the sign of <v, h_j> (P[bits agree] = 1 - θ/π), grouped into `bands`
-    sub-signatures. Equal band => candidate.
+def srp_bands(items: DataFrame) -> DataFrame:
+    """(id, band_idx, band_val) LSH bucketing table for cosine over
+    (`vec_id`, `embedding`): bit j is the sign of <v, h_j> (P[bits
+    agree] = 1 - θ/π), grouped into SRP_BANDS sub-signatures. Equal
+    band => candidate.
 
     The signing pass is an Arrow-batched pandas UDF doing the
     (rows × dim) · (dim × bits) product as `dim` vectorized
@@ -226,8 +191,8 @@ def srp_bands(
     One narrow map, no shuffle, no runtime hashing."""
     from pyspark.sql import types as T
 
-    signs = srp_signs(bits, dim)
-    r = bits // bands
+    signs = srp_signs()
+    r = SRP_BITS // SRP_BANDS
     smat = np.array(signs, dtype=np.float64).T  # (dim, bits)
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
@@ -248,15 +213,15 @@ def srp_bands(
                     F.element_at(bits, b * r + i + 1) * (1 << (r - 1 - i))
                     for i in range(r)
                 )
-                for b in range(bands)
+                for b in range(SRP_BANDS)
             ]
         )
 
     # the signature is bound once (functions.bind), so every band
     # reads one signing result per row
-    signature = bind(_sign_bits(F.col(vec_col)), band_vals)
+    signature = bind(_sign_bits(F.col("embedding")), band_vals)
     return items.select(
-        F.col(id_col).alias("id"),
+        F.col("vec_id").alias("id"),
         F.posexplode(signature).alias("band_idx", "band_val"),
     )
 
@@ -265,13 +230,7 @@ def srp_topk(
     items: DataFrame,
     queries: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     k: int = 3,
-    bits: int = SRP_BITS,
-    bands: int = SRP_BANDS,
-    dim: int = 64,
-    score_decimals: int = 6,
     item_bands: DataFrame | None = None,
     query_bands: DataFrame | None = None,
 ) -> DataFrame:
@@ -286,12 +245,8 @@ def srp_topk(
     bounded per-sf substrate cache). Passing None keeps the inline
     build (per-row deterministic, so a cached table is value-identical
     by construction)."""
-    ib = item_bands if item_bands is not None else srp_bands(
-        items, vec_col=vec_col, id_col=id_col, bits=bits, bands=bands, dim=dim
-    )
-    qb = query_bands if query_bands is not None else srp_bands(
-        queries, vec_col=vec_col, id_col=id_col, bits=bits, bands=bands, dim=dim
-    )
+    ib = item_bands if item_bands is not None else srp_bands(items)
+    qb = query_bands if query_bands is not None else srp_bands(queries)
     cands = (
         qb.withColumnRenamed("id", "query_id")
         .join(ib.withColumnRenamed("id", "item_id"), ["band_idx", "band_val"])
@@ -299,15 +254,15 @@ def srp_topk(
         .select("query_id", "item_id")
         .distinct()
     )
-    iv = items.select(F.col(id_col).alias("item_id"), F.col(vec_col).alias("iv"))
-    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
+    iv = items.select(F.col("vec_id").alias("item_id"), F.col("embedding").alias("iv"))
+    qv = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
     scored = (
         cands.join(iv, "item_id")
         .join(qv, "query_id")
         .select(
             "query_id",
             "item_id",
-            F.round(V.cosine("iv", "qv"), score_decimals).alias("score"),
+            F.round(V.cosine("iv", "qv"), 6).alias("score"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("item_id"))
@@ -327,11 +282,8 @@ def ann_topk(
     items: DataFrame,
     queries: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     k: int = 3,
     exact_max_rows: int | None = None,
-    score_decimals: int = 6,
 ) -> DataFrame:
     """The exact-vs-approximate chooser (SURVEY.md §4 'Top-k' row):
     plain Python planning logic, not a Catalyst rule. Small corpora get
@@ -352,24 +304,8 @@ def ann_topk(
             # or exact_max_rows=0 to always take the SRP-LSH path
     """
     limit = exact_max_rows if exact_max_rows is not None else ANN_EXACT_MAX_ROWS
-    n = items.select(id_col).count()
+    n = items.select("vec_id").count()
     if n <= limit:
-        out = knn_join(
-            items,
-            queries,
-            item_vec=vec_col,
-            query_vec=vec_col,
-            item_id=id_col,
-            query_id=id_col,
-            k=k,
-            score_decimals=score_decimals,
-        )
+        out = knn_join(items, queries, k=k)
         return out.withColumn("rank", F.col("rank").cast("int"))
-    return srp_topk(
-        items,
-        queries,
-        vec_col=vec_col,
-        id_col=id_col,
-        k=k,
-        score_decimals=score_decimals,
-    )
+    return srp_topk(items, queries, k=k)

@@ -53,13 +53,13 @@ def _md5_slice_int(h: Column, start: int, length: int) -> Column:
     return F.conv(F.substring(h, start, length), 16, 10).cast("bigint")
 
 
-def hll_register_rho(key: Column, salt: str = "hll") -> tuple[Column, Column]:
+def hll_register_rho(key: Column) -> tuple[Column, Column]:
     """(register, rho) for one key: register = first-byte bucket in
     [0, 256); rho = 1 + leading zeros of the following 32-bit hash
     slice. ``conv(hex, 16, 2)`` yields the minimal binary string (same
     contract as DuckDB's bin()), so rho = 33 - length(bin); the all-zero
     slice (p = 2^-32 per key) maxes out at rho = 33 in both engines."""
-    h = F.md5(F.concat(F.lit(salt + "|"), key.cast("string")))
+    h = F.md5(F.concat(F.lit("hll|"), key.cast("string")))
     register = _md5_slice_int(h, 1, 2).cast("int")
     w = _md5_slice_int(h, 3, 8)
     bits = F.length(F.conv(F.substring(h, 3, 8), 16, 2))
@@ -67,14 +67,12 @@ def hll_register_rho(key: Column, salt: str = "hll") -> tuple[Column, Column]:
     return register, rho
 
 
-def hll_registers(
-    df: DataFrame, key: str, group_cols: list[str], salt: str = "hll"
-) -> DataFrame:
+def hll_registers(df: DataFrame, key: str, group_cols: list[str]) -> DataFrame:
     """Per-group HLL register table: (group..., register, max_rho).
     This IS the mergeable sketch state — unioning two register tables
     and re-maxing merges sketches, which is how per-partition /
     per-day sketches roll up without touching raw keys again."""
-    register, rho = hll_register_rho(F.col(key), salt)
+    register, rho = hll_register_rho(F.col(key))
     return (
         df.select(*group_cols, register.alias("register"), rho.alias("rho"))
         .groupBy(*group_cols, "register")
@@ -82,23 +80,19 @@ def hll_registers(
     )
 
 
-def hll_estimate(
-    registers: DataFrame, group_cols: list[str], corrected: bool = False
-) -> DataFrame:
+def hll_estimate(registers: DataFrame, group_cols: list[str]) -> DataFrame:
     """Raw HLL estimate per group from a register table:
     E = alpha_m * m^2 / (sum(2^-max_rho) + empty_registers). Emitted
     rounded to 6 dp (the division is the only non-exact step and both
     engines perform it on identical inputs). ``filled`` (register count)
-    rides along — it's the sketch's own saturation diagnostic.
-
-    ``corrected=True`` applies the standard small-range linear-counting
-    switch (E <= 2.5m and empty registers exist → m*ln(m/empties)).
-    The driver-gated query keeps the RAW estimate: ln() is the one
-    transcendental whose last ulp java.lang.Math and libm may disagree
-    on, and the verified corpus (~1300 distincts vs m=256) is in the raw
-    regime anyway."""
+    rides along — it's the sketch's own saturation diagnostic, and all a
+    reader needs for the small-range linear-counting switch (E <= 2.5m
+    and empty registers exist → m*ln(m/empties)). The estimate stays
+    RAW: ln() is the one transcendental whose last ulp java.lang.Math
+    and libm may disagree on, and the verified corpus (~1300 distincts
+    vs m=256) is in the raw regime anyway."""
     term = F.lit(1.0) / F.expr("shiftleft(cast(1 as bigint), max_rho)")
-    est = (
+    return (
         registers.groupBy(*group_cols)
         .agg(
             F.count("*").cast("bigint").alias("filled"),
@@ -115,16 +109,6 @@ def hll_estimate(
         )
         .drop("_s_filled")
     )
-    if corrected:
-        empties = F.lit(HLL_M) - F.col("filled")
-        est = est.withColumn(
-            "hll_estimate",
-            F.when(
-                (F.col("hll_estimate") <= F.lit(2.5 * HLL_M)) & (empties > 0),
-                F.round(F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / empties), 6),
-            ).otherwise(F.col("hll_estimate")),
-        )
-    return est
 
 
 # --- count-min sketch -------------------------------------------------------------------

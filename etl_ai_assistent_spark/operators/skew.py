@@ -26,16 +26,15 @@ def salted_join(
     on: str,
     salt_from: str | Column,
     buckets: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join `big ⋈ small` on `on`, with the big (skewed) side
+    """Inner equi-join `big ⋈ small` on `on`, with the big (skewed) side
     salted into `buckets` subkeys and the small side replicated once per
     bucket. Shuffle key becomes (on, salt): a hot key's rows spread over
     `buckets` reducers instead of one straggler.
 
     `salt_from` names a big-side column whose md5 drives the bucket
     choice — deterministic, uniform, retry-safe. Result set is
-    provably identical to big.join(small, on, how)."""
+    provably identical to big.join(small, on)."""
     salt = (
         F.conv(
             F.substring(
@@ -56,4 +55,4 @@ def salted_join(
         "__salt",
         F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)).cast("array<int>")),
     )
-    return big_s.join(small_s, [on, "__salt"], how).drop("__salt")
+    return big_s.join(small_s, [on, "__salt"]).drop("__salt")

@@ -5,10 +5,10 @@ network upsert PER CHUNK inside a Python loop — the per-row-RPC
 anti-pattern. The Spark-first shape is: executors push PARTITION-LOCAL
 BATCHES through ``foreachPartition``, with the store client constructed
 inside the task (never a live socket captured in a closure), bounded
-batch sizes, and per-batch retry with exponential backoff. Total RPC
-count is ceil(rows / batch_size), parallelized across executors — at
-100 TB the sink scales with the cluster and the store's ingest quota,
-not the driver.
+batch sizes, and per-batch retry. Total RPC count is
+ceil(rows / batch_size), parallelized across executors — at 100 TB the
+sink scales with the cluster and the store's ingest quota, not the
+driver.
 
 Like the EmbedClient seam (operators/embedder.py), the client contract
 is one batch method. The hermetic/test adapter writes parquet locally
@@ -19,9 +19,10 @@ etc.) implements the same two methods and nothing else changes.
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame
+
+from .embedder import MAX_RETRIES
 
 
 class VectorStoreClient:
@@ -70,14 +71,13 @@ class LocalParquetStoreClient(VectorStoreClient):
 
 
 class FlakyStoreClient(VectorStoreClient):
-    """Test adapter: fails the first ``fail_first`` attempts per task
-    (marker files under ``out_dir``) then delegates to the local parquet
-    adapter — exercises the retry path end to end."""
+    """Test adapter: fails the first attempt at each batch (marker dirs
+    under ``out_dir``) then delegates to the local parquet adapter —
+    exercises the retry path end to end."""
 
-    def __init__(self, out_dir: str, fail_first: int = 1):
+    def __init__(self, out_dir: str):
         self.inner = LocalParquetStoreClient(out_dir)
         self.fail_dir = os.path.join(out_dir, "_failures")
-        self.fail_first = fail_first
         os.makedirs(self.fail_dir, exist_ok=True)
 
     def upsert_batch(self, points: list[dict]) -> None:
@@ -86,10 +86,8 @@ class FlakyStoreClient(VectorStoreClient):
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
         marker = os.path.join(self.fail_dir, f"p{pid}_b{self.inner._n}")
-        tries = len(os.listdir(marker)) if os.path.isdir(marker) else 0
-        if tries < self.fail_first:
-            os.makedirs(marker, exist_ok=True)
-            open(os.path.join(marker, f"t{tries}"), "w").close()
+        if not os.path.isdir(marker):
+            os.makedirs(marker)
             raise ConnectionError("injected store failure")
         self.inner.upsert_batch(points)
 
@@ -99,12 +97,10 @@ def upsert_points(
     client_factory,
     *,
     batch_size: int = 256,
-    max_retries: int = 3,
-    retry_backoff_s: float = 0.0,
 ) -> None:
     """Batched distributed upsert: every partition opens ONE client,
-    groups its rows into ``batch_size`` point batches, and retries each
-    batch up to ``max_retries`` times with exponential backoff. Rows are
+    groups its rows into ``batch_size`` point batches, and tries each
+    batch up to MAX_RETRIES times, immediately. Rows are
     shipped as plain dicts (id / vector / payload columns — whatever the
     DataFrame carries; deterministic ids are P14's job upstream)."""
 
@@ -116,14 +112,13 @@ def upsert_points(
             def flush() -> None:
                 if not batch:
                     return
-                for attempt in range(max_retries):
+                for attempt in range(MAX_RETRIES):
                     try:
                         client.upsert_batch(batch)
                         break
                     except Exception:
-                        if attempt == max_retries - 1:
+                        if attempt == MAX_RETRIES - 1:
                             raise
-                        time.sleep(retry_backoff_s * (2**attempt))
                 batch.clear()
 
             for row in rows:

@@ -54,7 +54,6 @@ def write_zordered(
     col_b: str,
     n_files: int,
     bits: int = 16,
-    mode: str = "overwrite",
 ) -> None:
     """Rewrite `df` as ~n_files z-clustered parquet files: fixed-width
     buckets over the Morton value (deterministic file → z-range mapping,
@@ -78,7 +77,7 @@ def write_zordered(
         .repartition(n_files, "bucket")
         .sortWithinPartitions("_z")
         .drop("_z")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("bucket")  # bucket= dirs: compaction.partitioned_zone_maps reads them
         .parquet(path)
     )

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from .. import io
 from .. import store as ST
+from ..functions import text as TX
 from ..operators.sectionizer import sectionize
 from ..registry import register
 from ..sources import docx as DX
@@ -96,7 +97,7 @@ def q_docx_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         doc_col="doc_id",
         order_col="block_idx",
         text_col="text",
-        is_heading=F.col("style").startswith("Heading"),
+        is_heading=TX.is_heading("style"),
     )
 
     stats = blocks.groupBy("doc_id").agg(

@@ -25,25 +25,25 @@ from ..registry import register
 from ..substrates import cached_substrates
 
 
-def _money_units(c: str, k: int = 2) -> F.Column:
-    """Money double → exact integer units of 10^-k via floor(x·10^k +
-    0.5). For POSITIVE inputs this is the same HALF_UP rounding as
-    cast(double AS decimal(p,k)); the fixture's money columns are
-    doubles nearest to 2dp values, so ×10^k lands within 1 ulp of the
-    integer and floor(+0.5) recovers it exactly.
+def _money_units(c: str) -> F.Column:
+    """Money double → exact integer cents via floor(x·100 + 0.5). For
+    POSITIVE inputs this is the same HALF_UP rounding as cast(double AS
+    decimal(p,2)); the fixture's money columns are doubles nearest to
+    2dp values, so ×100 lands within 1 ulp of the integer and floor(+0.5)
+    recovers it exactly.
 
     Sign note (ADVICE r12): for NEGATIVE inputs floor(x+0.5) rounds
     half toward +infinity, which diverges from decimal-cast HALF_UP
     (half away from zero) at exact .5 boundaries. That divergence is
     from DECIMAL-CAST semantics, not from the oracles: every consuming
-    query's DuckDB oracle computes the IDENTICAL floor(x·10^k + 0.5)
+    query's DuckDB oracle computes the IDENTICAL floor(x·100 + 0.5)
     expression (e.g. q_profile_maintain's
     sum(CAST(floor(value*100+0.5) AS BIGINT))), so engine/oracle
     parity holds for ANY sign — which is why events.value (sign-
     unconstrained by schema) may flow through here. Do NOT "fix" the
     rounding one-sided: switching either side alone to sign-aware
     rounding breaks bit-parity at ties."""
-    return F.floor(F.col(c) * (10**k) + F.lit(0.5)).cast("bigint")
+    return F.floor(F.col(c) * 100 + F.lit(0.5)).cast("bigint")
 
 
 def _exact_unit_sums(

@@ -1,101 +1,22 @@
-"""Explicit StructType schemas for every record shape the engine handles.
+"""The testdata table names and the two schemas the engine declares.
 
-The reference's data model is schema-on-convention (plain dicts; see
-reference scripts/parsers/docx_parser.py:29-35 — class stubs, unenforced).
-Here every shape is a fixed StructType; inference is allowed only at ad-hoc
-ingest boundaries.
+Batch reads of the testdata tables infer their schemas from the parquet
+footers (`io.load_table`). The fixture timestamps `o_orderdate`,
+`l_shipdate` and `ts` are parquet timestamp[us] without a time zone, so
+Spark reads them as TIMESTAMP_NTZ; `io.ts_us_col` also accepts a legacy
+int64-nanosecond or a UTC-adjusted `ts`. A schema is declared only where
+a source cannot take one from a footer:
+
+- DOCUMENTS, for the documents file stream (a streaming source needs its
+  schema up front);
+- QA_DATASET, for the reference's QA JSON dataset (make_ragas_dataset.py:
+  61-69): JSON inference would scan the data and order the fields
+  alphabetically.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
-
-EMBEDDING_DIM = 1024  # reference default (embedder_service.py:4); testdata uses 64
-
-# --- driver testdata tables (FIXTURES.md) -------------------------------
-
-REGION = T.StructType(
-    [
-        T.StructField("r_regionkey", T.IntegerType()),
-        T.StructField("r_name", T.StringType()),
-    ]
-)
-
-NATION = T.StructType(
-    [
-        T.StructField("n_nationkey", T.IntegerType()),
-        T.StructField("n_name", T.StringType()),
-        T.StructField("n_regionkey", T.IntegerType()),
-    ]
-)
-
-CUSTOMER = T.StructType(
-    [
-        T.StructField("c_custkey", T.LongType()),
-        T.StructField("c_name", T.StringType()),
-        T.StructField("c_nationkey", T.IntegerType()),
-        T.StructField("c_acctbal", T.DoubleType()),
-        T.StructField("c_mktsegment", T.StringType()),
-    ]
-)
-
-SUPPLIER = T.StructType(
-    [
-        T.StructField("s_suppkey", T.LongType()),
-        T.StructField("s_name", T.StringType()),
-        T.StructField("s_nationkey", T.IntegerType()),
-        T.StructField("s_acctbal", T.DoubleType()),
-    ]
-)
-
-PART = T.StructType(
-    [
-        T.StructField("p_partkey", T.LongType()),
-        T.StructField("p_name", T.StringType()),
-        T.StructField("p_brand", T.StringType()),
-        T.StructField("p_type", T.StringType()),
-        T.StructField("p_size", T.IntegerType()),
-        T.StructField("p_retailprice", T.DoubleType()),
-    ]
-)
-
-ORDERS = T.StructType(
-    [
-        T.StructField("o_orderkey", T.LongType()),
-        T.StructField("o_custkey", T.LongType()),
-        T.StructField("o_orderstatus", T.StringType()),
-        T.StructField("o_totalprice", T.DoubleType()),
-        T.StructField("o_orderdate", T.TimestampType()),
-        T.StructField("o_orderpriority", T.StringType()),
-    ]
-)
-
-LINEITEM = T.StructType(
-    [
-        T.StructField("l_orderkey", T.LongType()),
-        T.StructField("l_partkey", T.LongType()),
-        T.StructField("l_suppkey", T.LongType()),
-        T.StructField("l_linenumber", T.IntegerType()),
-        T.StructField("l_quantity", T.DoubleType()),
-        T.StructField("l_extendedprice", T.DoubleType()),
-        T.StructField("l_discount", T.DoubleType()),
-        T.StructField("l_tax", T.DoubleType()),
-        T.StructField("l_returnflag", T.StringType()),
-        T.StructField("l_linestatus", T.StringType()),
-        T.StructField("l_shipdate", T.TimestampType()),
-    ]
-)
-
-EVENTS = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
 
 DOCUMENTS = T.StructType(
     [
@@ -107,105 +28,12 @@ DOCUMENTS = T.StructType(
     ]
 )
 
-EMBEDDINGS = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-        T.StructField("label", T.IntegerType()),
-    ]
-)
-
-# --- reference-native record shapes (SURVEY.md §1) -----------------------
-
-# §1.1 parsed document, nested form (docx_parser.py:42-50 dict shape)
-PARSED_DOCUMENT = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("document_name", T.StringType()),
-        T.StructField(
-            "paragraphs",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("title", T.StringType()),
-                        T.StructField("text", T.StringType()),
-                    ]
-                )
-            ),
-        ),
-    ]
-)
-
-# §1.1 exploded per-paragraph form
-PARAGRAPHS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("para_idx", T.IntegerType()),
-        T.StructField("title", T.StringType()),
-        T.StructField("text", T.StringType()),
-    ]
-)
-
-# FIXTURES.md doc_blocks — DOCX block stream (docx_parser.py:89-95)
-DOC_BLOCKS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("block_idx", T.IntegerType()),
-        T.StructField("kind", T.StringType()),  # 'paragraph' | 'table'
-        T.StructField("style", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("has_image", T.BooleanType()),
-    ]
-)
-
-# §1.2 chunk rows (chunk_splitter_service.py output, exploded)
-CHUNKS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("para_idx", T.IntegerType()),
-        T.StructField("chunk_idx", T.IntegerType()),
-        T.StructField("title", T.StringType()),
-        T.StructField("chunk_text", T.StringType()),
-    ]
-)
-
-# §1.4 vector point (qdrant_service.py:31-39 payload flattened)
-POINTS = T.StructType(
-    [
-        T.StructField("point_id", T.StringType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-        T.StructField("text", T.StringType()),
-        T.StructField("paragraph_name", T.StringType()),
-        T.StructField("document_name", T.StringType()),
-        T.StructField("document_version", T.StringType()),
-    ]
-)
-
-# §1.5 evaluation dataset (make_ragas_dataset.py:61-69)
 QA_DATASET = T.StructType(
     [
         T.StructField("question", T.StringType()),
         T.StructField("answer", T.StringType()),
         T.StructField("ground_truth", T.StringType()),
         T.StructField("contexts", T.ArrayType(T.StringType())),
-    ]
-)
-
-# §1.6 asset records (docx_etl.py:138-171)
-TABLES_ASSET = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("caption", T.StringType()),
-        T.StructField("rows", T.ArrayType(T.ArrayType(T.StringType()))),
-    ]
-)
-
-IMAGES_ASSET = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("caption", T.StringType()),
-        T.StructField("content", T.BinaryType()),
-        T.StructField("ext", T.StringType()),
     ]
 )
 

@@ -40,15 +40,12 @@ def default_parallelism() -> int:
 def get_spark(
     app_name: str = "etl_ai_assistent_spark",
     *,
-    shuffle_partitions: int | None = None,
     driver_memory: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession."""
     cpus = default_parallelism()
-    shuffle = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    )
+    shuffle = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
     mem = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEMORY", "8g")
 
     # AQE picks the FINAL partition count by coalescing down from this

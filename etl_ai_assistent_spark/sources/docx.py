@@ -247,7 +247,7 @@ def build_docx(
     return buf.getvalue()
 
 
-def docx_for_document(doc_id: int, text: str, tokens_per_para: int = 10) -> bytes:
+def docx_for_document(doc_id: int, text: str) -> bytes:
     """Deterministic fixture document for source-table row (doc_id,
     text): one 'Heading 1' section title, the text split into
     10-token body paragraphs, plus (doc_id % 5 == 0) a Caption + 2×2
@@ -258,8 +258,7 @@ def docx_for_document(doc_id: int, text: str, tokens_per_para: int = 10) -> byte
 
     toks = text.split()
     paras = [
-        " ".join(toks[i : i + tokens_per_para])
-        for i in range(0, len(toks), tokens_per_para)
+        " ".join(toks[i : i + 10]) for i in range(0, len(toks), 10)
     ]
     xml = [_p_xml(f"Section {doc_id}", style="Heading 1")]
     media: dict[str, bytes] = {}

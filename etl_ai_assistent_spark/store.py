@@ -45,6 +45,10 @@ from typing import Callable
 
 import duckdb
 
+# seconds a stranger's temp or run dir is presumed live (a racing builder
+# or a running stream) before a gc sweep may remove it
+GRACE_S = 3600.0
+
 
 def store_root() -> str:
     """Root directory for all published stores. `/tmp` in the sandbox;
@@ -169,14 +173,12 @@ def publish(
 def gc_versions(
     family_dir: str,
     keep: set[str] | list[str] | tuple[str, ...],
-    temp_grace_s: float = 3600.0,
-    now: float | None = None,
 ) -> list[str]:
     """Garbage-collect superseded artifacts under one store FAMILY root
     (e.g. `<root>/spark_graft_posting_store_v2`, whose children are
     version-keyed directories): every version directory not named in
     `keep` (the live corpus keys) is removed, as is every crashed
-    builder's `*.build-*` temp older than `temp_grace_s` seconds —
+    builder's `*.build-*` temp older than GRACE_S seconds —
     younger temps are left alone, they may belong to a build racing
     THIS process (the publish contract's loser cleans its own temp on
     every non-crash path). Returns the removed basenames.
@@ -196,14 +198,14 @@ def gc_versions(
     if not os.path.isdir(family_dir):
         return []
     keep_set = set(keep)
-    now = time.time() if now is None else now
+    now = time.time()
     removed: list[str] = []
     for name in sorted(os.listdir(family_dir)):
         path = os.path.join(family_dir, name)
         if not os.path.isdir(path):
             continue
         if ".build-" in name:
-            if now - os.path.getmtime(path) < temp_grace_s:
+            if now - os.path.getmtime(path) < GRACE_S:
                 continue  # possibly a live racing builder
         elif name in keep_set:
             continue
@@ -233,11 +235,9 @@ def run_scoped_dir(name: str) -> str:
 
 def gc_runs(
     keep: set[str] | list[str] | tuple[str, ...] = (),
-    max_age_s: float = 3600.0,
-    now: float | None = None,
 ) -> list[str]:
     """Sweep the runs family: remove every child not named in `keep`
-    whose mtime is older than `max_age_s` (younger strangers may
+    whose mtime is older than GRACE_S (younger strangers may
     belong to a concurrently running process — same grace rule as
     gc_versions' crashed-builder temps). Called from the queries that
     write run-scoped outputs, so any session that serves also vacuums;
@@ -246,14 +246,14 @@ def gc_runs(
     if not os.path.isdir(root):
         return []
     keep_set = set(keep)
-    now = time.time() if now is None else now
+    now = time.time()
     removed: list[str] = []
     for name in sorted(os.listdir(root)):
         if name in keep_set:
             continue
         path = os.path.join(root, name)
         try:
-            if now - _newest_mtime(path) < max_age_s:
+            if now - _newest_mtime(path) < GRACE_S:
                 continue
         except OSError:
             continue  # vanished under a racing sweep
@@ -266,7 +266,7 @@ def _newest_mtime(path: str) -> float:
     """Liveness timestamp of a run dir = the NEWEST mtime anywhere under
     it, not the top dir's. A live streaming checkpoint writes into
     offsets/ and commits/ subdirs without touching the top directory's
-    mtime, so a stream running longer than max_age_s in one session
+    mtime, so a stream running longer than GRACE_S in one session
     looked hour-stale to another session's sweep — which would rmtree
     the live checkpoint out from under the stream (r11 ADVICE). The
     walk costs one readdir pass over a run dir (small: checkpoints and

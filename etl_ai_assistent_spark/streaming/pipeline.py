@@ -470,9 +470,7 @@ def stream_dedup_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def stream_dedup_totals_watermarked(
-    events: DataFrame, watermark: str = "90 days"
-) -> DataFrame:
+def stream_dedup_totals_watermarked(events: DataFrame) -> DataFrame:
     """stream_dedup_totals with BOUNDED dedup state: the production
     variant, dropDuplicatesWithinWatermark — the state store evicts ids
     older than the event-time watermark instead of growing forever. The
@@ -482,7 +480,7 @@ def stream_dedup_totals_watermarked(
     below the replay span is the production trade — bounded state,
     at-most-horizon dedup."""
     return (
-        events.withWatermark("ts_ts", watermark)
+        events.withWatermark("ts_ts", "90 days")
         .dropDuplicatesWithinWatermark(["event_id"])
         .withColumn(
             "cents",
@@ -555,9 +553,12 @@ def doc_ingest(docs: DataFrame, chunk_size: int, overlap: int) -> DataFrame:
     )
 
 
-def stream_stream_purchase_join(
-    spark: SparkSession, sf_dir: str, watermark: str = "60 days"
-) -> DataFrame:
+# both stream-stream joins' watermark delay: it covers the fixture's
+# 30-day span, so no row is dropped as late mid-replay
+JOIN_WATERMARK = "60 days"
+
+
+def stream_stream_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join: the signup stream joined to the
     purchase stream per user, keeping purchases inside [signup, signup +
     24h). Both sides are REAL streaming sources over the 4-file split
@@ -580,7 +581,7 @@ def stream_stream_purchase_join(
         .select(
             F.col("user_id").alias("s_user"), F.col("ts_ts").alias("s_ts")
         )
-        .withWatermark("s_ts", watermark)
+        .withWatermark("s_ts", JOIN_WATERMARK)
     )
     purchases = (
         _src()
@@ -590,7 +591,7 @@ def stream_stream_purchase_join(
             F.col("ts_ts").alias("p_ts"),
             F.col("value"),
         )
-        .withWatermark("p_ts", watermark)
+        .withWatermark("p_ts", JOIN_WATERMARK)
     )
     joined = signups.join(
         purchases,
@@ -609,9 +610,10 @@ def stream_stream_purchase_join(
     )
 
 
-def heartbeat_split_events_fixture(
-    spark: SparkSession, sf_dir: str, parts: int = 4
-) -> str:
+HB_PARTS = 4  # real micro-batches before the heartbeat
+
+
+def heartbeat_split_events_fixture(spark: SparkSession, sf_dir: str) -> str:
     """The split fixture plus ONE final heartbeat file: a sentinel
     signup + purchase pair (user_id = -1) stamped max(ts) + 90 days.
     Outer stream-stream joins emit their unmatched rows only when the
@@ -624,7 +626,7 @@ def heartbeat_split_events_fixture(
     files by modification time — the heartbeat MUST be the last
     micro-batch or everything after it would be dropped as late."""
     out = ST.corpus_path(
-        "spark_graft_events_hb_v1", sf_dir, "events", f"_{parts}"
+        "spark_graft_events_hb_v1", sf_dir, "events", f"_{HB_PARTS}"
     )
 
     def build(tmp: str) -> None:
@@ -635,7 +637,7 @@ def heartbeat_split_events_fixture(
         import pyarrow.parquet as pq
 
         t = pq.read_table(os.path.join(sf_dir, "events.parquet"))
-        _write_mod_split(t, "event_id", parts, tmp)
+        _write_mod_split(t, "event_id", HB_PARTS, tmp)
         hb_ts = pc.max(t.column("ts")).as_py() + timedelta(days=90)
         cols = []
         for field in t.schema:
@@ -654,28 +656,26 @@ def heartbeat_split_events_fixture(
             cols.append(pa.array(vals, type=field.type))
         pq.write_table(
             pa.Table.from_arrays(cols, schema=t.schema),
-            os.path.join(tmp, f"part_{parts}_hb.parquet"),
+            os.path.join(tmp, f"part_{HB_PARTS}_hb.parquet"),
         )
         # FileStreamSource orders pending files by mtime; pin them
         # strictly increasing so the heartbeat is the LAST micro-batch
         # (os.rename of the parent preserves per-file mtimes)
         base = 1_600_000_000
-        for i in range(parts):
+        for i in range(HB_PARTS):
             p = os.path.join(tmp, f"part_{i}.parquet")
             os.utime(p, (base + 10 * i, base + 10 * i))
-        hb = os.path.join(tmp, f"part_{parts}_hb.parquet")
-        os.utime(hb, (base + 10 * parts, base + 10 * parts))
+        hb = os.path.join(tmp, f"part_{HB_PARTS}_hb.parquet")
+        os.utime(hb, (base + 10 * HB_PARTS, base + 10 * HB_PARTS))
 
-    ST.publish(out, build, validate=lambda p: ST.parquet_files(p) == parts + 1)
+    ST.publish(out, build, validate=lambda p: ST.parquet_files(p) == HB_PARTS + 1)
     return out
 
 
-def read_events_stream_hb(
-    spark: SparkSession, sf_dir: str, parts: int = 4
-) -> DataFrame:
+def read_events_stream_hb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming scan over the heartbeat fixture, one file per
-    micro-batch (parts real batches + the final heartbeat batch)."""
-    path = heartbeat_split_events_fixture(spark, sf_dir, parts)
+    micro-batch (HB_PARTS real batches + the final heartbeat batch)."""
+    path = heartbeat_split_events_fixture(spark, sf_dir)
     schema = _events_stream_schema(spark, os.path.join(path, "part_0.parquet"))
     raw = (
         spark.readStream.schema(schema)
@@ -686,9 +686,7 @@ def read_events_stream_hb(
     return _normalize_events(raw)
 
 
-def stream_stream_purchase_left_join(
-    spark: SparkSession, sf_dir: str, watermark: str = "60 days"
-) -> DataFrame:
+def stream_stream_purchase_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER stream-stream interval join: every signup, with its
     within-24h purchases OR a null-extended row if none ever arrives.
     The outer side is what makes this a different machine from
@@ -722,7 +720,7 @@ def stream_stream_purchase_left_join(
         .select(
             F.col("user_id").alias("s_user"), F.col("ts_ts").alias("s_ts")
         )
-        .withWatermark("s_ts", watermark)
+        .withWatermark("s_ts", JOIN_WATERMARK)
     )
     purchases = (
         _src()
@@ -732,7 +730,7 @@ def stream_stream_purchase_left_join(
             F.col("ts_ts").alias("p_ts"),
             F.col("value"),
         )
-        .withWatermark("p_ts", watermark)
+        .withWatermark("p_ts", JOIN_WATERMARK)
     )
     joined = signups.join(
         purchases,

@@ -6,17 +6,19 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_ai_assistent_spark.operators.bloom import bloom_prune, bloom_words
+from etl_ai_assistent_spark.operators.bloom import M_BITS, bloom_prune, bloom_words
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_no_false_negatives_and_bounded_words(spark):
-    keys = spark.range(0, 500).select((F.col("id") * 7 + 3).alias("k"))
+    # 5000 keys x 2 seeds = 10000 probes: more than the M_BITS // 64
+    # words, so the word bound below is a real one
+    keys = spark.range(0, 5000).select((F.col("id") * 7 + 3).alias("k"))
     fact = spark.range(0, 20000).select((F.col("id") % 5000).alias("k"))
-    words = bloom_words(keys, "k", m_bits=1 << 14)
-    assert words.count() <= (1 << 14) // 64
-    surv = bloom_prune(fact, "k", words, m_bits=1 << 14)
+    words = bloom_words(keys, "k")
+    assert words.count() <= M_BITS // 64
+    surv = bloom_prune(fact, "k", words)
     true_match = fact.join(keys, "k", "left_semi")
     # every true match survives pruning (no false negatives)
     assert true_match.join(surv, "k", "left_anti").count() == 0

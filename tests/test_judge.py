@@ -6,6 +6,7 @@ values vs DuckDB are covered by q_rag_judged in test_parity.py)."""
 from __future__ import annotations
 
 from etl_ai_assistent_spark.operators.judge import (
+    BATCH_SIZE,
     DeterministicLexicalJudge,
     JudgeClient,
     judge_scores,
@@ -53,13 +54,14 @@ def test_judge_rechunks_to_batch_size(spark):
                 for r in rows
             ]
 
+    n = 2 * BATCH_SIZE + 6
     qa = spark.createDataFrame(
-        [(i, "q", "a", []) for i in range(10)], QA_SCHEMA
+        [(i, "q", "a", []) for i in range(n)], QA_SCHEMA
     ).coalesce(1)
-    out = judge_scores(qa, BatchCountingJudge, batch_size=4).collect()
+    out = judge_scores(qa, BatchCountingJudge).collect()
     sizes = [r["n_contexts"] for r in out]
-    assert len(out) == 10
-    assert max(sizes) <= 4  # no call exceeded the batch bound
+    assert len(out) == n
+    assert max(sizes) <= BATCH_SIZE  # no call exceeded the batch bound
 
 
 def test_judge_client_is_pluggable(spark):

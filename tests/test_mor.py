@@ -105,7 +105,7 @@ def test_mor_compact_preserves_read(spark, sf_small, tmp_path):
 
     before = _rows(MOR.resolve(c, log, key="c_custkey"))
     out = str(tmp_path / "base_v1")
-    MOR.compact(c, log, key="c_custkey", out_path=out, n_files=4)
+    MOR.compact(c, log, key="c_custkey", out_path=out)
 
     new_base = spark.read.parquet(out).select(*c.columns)
     empty_log = log.filter(F.lit(False))

@@ -178,7 +178,7 @@ def test_mor_compaction_interleaved_vacuum_preserves_reads(
             if resolved_n == 0:
                 continue  # an empty table is not compactable (by design)
             snap = os.path.join(root, f"snap_v{seq}")
-            MOR.compact(current, log_df, key="k", out_path=snap, n_files=2)
+            MOR.compact(current, log_df, key="k", out_path=snap)
             current = spark.read.parquet(snap).select("k", "g", "v")
             log_df = None
             deleted = RET.vacuum(root, keep_last)

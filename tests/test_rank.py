@@ -101,7 +101,7 @@ def test_histogram_guard_transparent_when_bounded(spark):
     assert joined.filter(F.col("rn") != F.col("rn_w")).count() == 0
 
 
-def _rank_from_stats(df, total=None, target_buckets=RK.TARGET_BUCKETS):
+def _rank_from_stats(df, total=None):
     """with_global_row_number_from_stats over `df` with its own (min, max)
     of `v` riding a 1-row broadcast — the shape q_rfm_segments uses."""
     stats = df.agg(
@@ -109,8 +109,7 @@ def _rank_from_stats(df, total=None, target_buckets=RK.TARGET_BUCKETS):
         F.max("v").cast("bigint").alias("hi"),
     )
     return RK.with_global_row_number_from_stats(
-        df.crossJoin(F.broadcast(stats)), "v", "id", "lo", "hi",
-        total=total, target_buckets=target_buckets,
+        df.crossJoin(F.broadcast(stats)), "v", "id", "lo", "hi", total=total
     )
 
 
@@ -148,14 +147,16 @@ def test_auto_bucket_degenerate_domains(spark):
     assert _rank_from_stats(single).collect()[0]["rn"] == 1
 
 
-def test_auto_bucket_histogram_bounded_by_target(spark):
-    """The histogram cardinality is ≤ ~2·target_buckets BY
+def test_auto_bucket_histogram_bounded_by_target(spark, monkeypatch):
+    """The histogram cardinality is ≤ ~2·TARGET_BUCKETS BY
     CONSTRUCTION, independent of the domain — the property that makes
-    the stats-derived width immune to domain drift."""
+    the stats-derived width immune to domain drift. A 64-bucket target
+    keeps the bound far below the 5000 input rows."""
+    monkeypatch.setattr(RK, "TARGET_BUCKETS", 64)
     df = spark.range(5000).select(
         F.col("id"), F.xxhash64("id").cast("bigint").alias("v")
     )
-    got = _rank_from_stats(df, target_buckets=64)
+    got = _rank_from_stats(df)
     # recompute the bucket column the same way and count distinct
     stats = df.agg(F.min("v").alias("lo"), F.max("v").alias("hi")).first()
     width = max(stats["hi"] // 64 - stats["lo"] // 64, 1)

@@ -182,7 +182,7 @@ def test_gc_runs_sweeps_stale_keeps_fresh(tmp_path, monkeypatch):
     old = 1_600_000_000
     os.utime(os.path.join(root, "stale_run"), (old, old))
     os.utime(os.path.join(root, "kept_run"), (old, old))
-    removed = ST.gc_runs(keep={"kept_run"}, max_age_s=3600.0)
+    removed = ST.gc_runs(keep={"kept_run"})
     assert removed == ["stale_run"]
     assert sorted(os.listdir(root)) == ["fresh_run", "kept_run"]
 
@@ -190,7 +190,7 @@ def test_gc_runs_sweeps_stale_keeps_fresh(tmp_path, monkeypatch):
 def test_gc_runs_spares_live_stream_checkpoint(tmp_path, monkeypatch):
     """A LIVE streaming checkpoint's top dir goes mtime-stale while new
     offset files land inside offsets/ — gc must age by the newest mtime
-    found recursively, or a stream outliving max_age_s in one session
+    found recursively, or a stream outliving GRACE_S in one session
     gets its checkpoint swept by another session's gc_runs (r11
     ADVICE), crashing the stream."""
     monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path))
@@ -205,13 +205,13 @@ def test_gc_runs_spares_live_stream_checkpoint(tmp_path, monkeypatch):
     with open(os.path.join(offsets, "42"), "w") as f:
         f.write("{}")
     os.utime(ckpt, (old, old))
-    removed = ST.gc_runs(max_age_s=3600.0)
+    removed = ST.gc_runs()
     assert removed == []
     assert os.path.isdir(ckpt)
     # once the inner files age out too, the checkpoint is sweepable
     os.utime(offsets, (old, old))
     os.utime(os.path.join(offsets, "42"), (old, old))
-    assert ST.gc_runs(max_age_s=3600.0) == ["live_ckpt"]
+    assert ST.gc_runs() == ["live_ckpt"]
 
 
 def test_posting_compact_tokenizes_only_the_delta(spark, sf_small):

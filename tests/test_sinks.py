@@ -5,8 +5,39 @@ document_version — written and read back losslessly."""
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from etl_ai_assistent_spark import io, schemas
+from etl_ai_assistent_spark import io
+
+# §1.4 vector point (reference qdrant_service.py:31-39 payload flattened)
+POINTS = T.StructType(
+    [
+        T.StructField("point_id", T.StringType()),
+        T.StructField("embedding", T.ArrayType(T.FloatType())),
+        T.StructField("text", T.StringType()),
+        T.StructField("paragraph_name", T.StringType()),
+        T.StructField("document_name", T.StringType()),
+        T.StructField("document_version", T.StringType()),
+    ]
+)
+
+# §1.6 asset records (reference docx_etl.py:138-171)
+TABLES_ASSET = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("caption", T.StringType()),
+        T.StructField("rows", T.ArrayType(T.ArrayType(T.StringType()))),
+    ]
+)
+
+IMAGES_ASSET = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("caption", T.StringType()),
+        T.StructField("content", T.BinaryType()),
+        T.StructField("ext", T.StringType()),
+    ]
+)
 
 
 def test_table_asset_csv_roundtrip(spark, tmp_path):
@@ -14,7 +45,7 @@ def test_table_asset_csv_roundtrip(spark, tmp_path):
         (1, "Table 1: metrics", [["a b", "c"], ["d", "e  f"]]),
         (2, "Таблица 2", [["x", "y"]]),
     ]
-    df = spark.createDataFrame(rows, schemas.TABLES_ASSET)
+    df = spark.createDataFrame(rows, TABLES_ASSET)
     # K2 shape: one CSV row per table row, cells whitespace-normalized
     flat = df.select(
         "doc_id",
@@ -45,7 +76,7 @@ def test_table_asset_csv_roundtrip(spark, tmp_path):
 
 def test_image_asset_binary_roundtrip(spark, tmp_path):
     rows = [(1, "Рис 1", b"\x89PNG\r\n\x1a\nfakebytes", ".png")]
-    df = spark.createDataFrame(rows, schemas.IMAGES_ASSET)
+    df = spark.createDataFrame(rows, IMAGES_ASSET)
     out = str(tmp_path / "images")
     io.write_parquet(df, out)
     back = spark.read.parquet(out).collect()[0]
@@ -58,7 +89,7 @@ def test_points_store_partitioned_by_version(spark, tmp_path):
         ("p1", [0.1, 0.2], "t1", "para A", "doc.docx", "v1"),
         ("p2", [0.3, 0.4], "t2", "para B", "doc.docx", "v2"),
     ]
-    df = spark.createDataFrame(rows, schemas.POINTS)
+    df = spark.createDataFrame(rows, POINTS)
     out = str(tmp_path / "points")
     io.write_parquet(df, out, partition_by=("document_version",))
     import os
@@ -148,9 +179,8 @@ def test_upsert_points_retries_transient_failures(spark, sf_small, tmp_path):
     out = str(tmp_path / "flaky_store")
     upsert_points(
         points,
-        lambda: FlakyStoreClient(out, fail_first=1),
+        lambda: FlakyStoreClient(out),
         batch_size=128,
-        max_retries=3,
     )
     assert os.listdir(os.path.join(out, "_failures"))  # retries happened
     back = spark.read.parquet(out)
@@ -199,8 +229,8 @@ def test_xml_sink_source_roundtrip(spark, tmp_path):
         rows, "doc_id bigint, title string, paragraphs array<string>"
     )
     out = str(tmp_path / "sections_xml")
-    IO.write_xml(df, out, row_tag="section")
-    back = IO.read_xml(spark, out, row_tag="section")
+    IO.write_xml(df, out)
+    back = IO.read_xml(spark, out)
     got = {
         r["doc_id"]: (r["title"], list(r["paragraphs"] or []))
         for r in back.collect()

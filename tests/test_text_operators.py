@@ -323,7 +323,7 @@ def test_pluggable_embedder_retries_then_succeeds(spark, sf_small):
 
     docs = spark.read.parquet(f"{sf_small}/documents.parquet").limit(5).coalesce(1)
     cls = _flaky_client_factory(16, fail_first=2)
-    emb = pluggable_embedder(cls, dim=16, batch_size=100, max_retries=3)
+    emb = pluggable_embedder(cls, dim=16, batch_size=100)
     rows = docs.select(emb("text").alias("e")).collect()
     assert len(rows) == 5
     assert all(len(r["e"]) == 16 for r in rows)
@@ -334,7 +334,7 @@ def test_pluggable_embedder_exhausted_retries_raises(spark, sf_small):
 
     docs = spark.read.parquet(f"{sf_small}/documents.parquet").limit(3).coalesce(1)
     cls = _flaky_client_factory(16, fail_first=99)
-    emb = pluggable_embedder(cls, dim=16, batch_size=100, max_retries=2)
+    emb = pluggable_embedder(cls, dim=16, batch_size=100)
     with pytest.raises(Exception):
         docs.select(emb("text").alias("e")).collect()
 

@@ -24,8 +24,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from docbench import trace  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+from etl_ai_assistent_spark.io import DEFAULT_SF_DIR as SF_DIR  # noqa: E402
 
 
 def _stream_ann_lookup_surrogate(spark, sf_dir):
