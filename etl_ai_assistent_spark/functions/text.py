@@ -68,6 +68,13 @@ def tokens(text: Column | str) -> Column:
     )
 
 
+# DuckDB twin of tokens(lower(text)), spliced into the oracle SQL.
+TOKENS_SQL = """
+CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
+     ELSE string_split_regex(lower(trim(text)), '\\s+') END
+"""
+
+
 def token_count(text: Column | str) -> Column:
     """size(tokens(text)) WITHOUT materializing the token array (r14,
     guide §1.2 per-task work): after trim there are no leading/trailing

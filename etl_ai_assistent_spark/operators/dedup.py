@@ -26,17 +26,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import bind
+from ..functions import bind, md5_bucket
 from ..functions import text as TX
 
 MERSENNE31 = 2_147_483_647
-
-
-def md5_bucket(col: Column, salt: str = "") -> Column:
-    """First 8 md5 hex digits as BIGINT (< 2^32), optionally salted.
-    DuckDB twin: CAST(('0x' || substr(md5(salt || x), 1, 8)) AS BIGINT)."""
-    s = F.concat(F.lit(salt), col) if salt else col
-    return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("bigint")
 
 
 def normalized_text_key(text: Column | str) -> Column:
@@ -367,9 +360,7 @@ def shared_span_stats(docs: DataFrame, k: int) -> DataFrame:
         base.select("doc_id", gram.alias("gram"))
         .select(
             "doc_id",
-            F.conv(F.substring(F.md5("gram"), 1, 8), 16, 10)
-            .cast("bigint")
-            .alias("gram_h"),
+            md5_bucket(F.col("gram")).alias("gram_h"),
         )
         .distinct()
     )

@@ -35,18 +35,11 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions import bind
+from ..functions import bind, md5_bucket
 from ..functions import text as TX
 
 DEFAULT_DIM = 64  # testdata embedding dim; reference uses 1024
 MAX_RETRIES = 3  # attempts per client batch, here and in operators/upsert.py
-
-
-def token_bucket_expr(tok: Column, dim: int) -> Column:
-    """md5-based token bucket, reproducible across engines:
-    int(md5(tok)[:8], 16) % dim. DuckDB twin:
-    CAST(('0x' || substr(md5(tok),1,8)) AS BIGINT) % dim."""
-    return F.conv(F.substring(F.md5(tok), 1, 8), 16, 10).cast("bigint") % dim
 
 
 def hash_embed_expr(text: Column | str, dim: int = DEFAULT_DIM) -> Column:
@@ -54,7 +47,7 @@ def hash_embed_expr(text: Column | str, dim: int = DEFAULT_DIM) -> Column:
     `buckets`, `tf` and the norm are each bound once (functions.bind), so
     a row hashes each token once instead of once per (bucket, element) pair."""
     toks = TX.tokens(F.lower(F.col(text) if isinstance(text, str) else text))
-    buckets = F.transform(toks, lambda t: token_bucket_expr(t, dim))
+    buckets = F.transform(toks, lambda t: md5_bucket(t) % dim)
 
     def counts(bs: Column) -> Column:
         return F.transform(

@@ -28,7 +28,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import md5_bucket
+from ..functions import md5_bucket
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import md5_bucket
+
 # m = 2^8 registers: register index from the first 2 md5 hex chars, the
 # rho slice from the next 8 (a 32-bit window, so rho ∈ [1, 33]).
 HLL_M = 256
@@ -46,10 +48,10 @@ ALPHA_256 = 0.7213 / (1.0 + 1.079 / 256.0)
 
 
 def _md5_slice_int(h: Column, start: int, length: int) -> Column:
-    """Integer value of md5-hex substring [start, start+length) — the
-    same expression family the hash-split/sampling queries use
-    (text_analysis.SPLIT_BUCKET); DuckDB twin:
-    CAST(('0x' || substr(h, start, length)) AS BIGINT)."""
+    """Integer value of md5-hex substring [start, start+length) of one
+    digest: HLL reads two slices of the same md5, so it cannot go
+    through functions.md5_bucket (always the first 8 digits); DuckDB
+    twin: CAST(('0x' || substr(h, start, length)) AS BIGINT)."""
     return F.conv(F.substring(h, start, length), 16, 10).cast("bigint")
 
 
@@ -126,12 +128,7 @@ def cms_build(tokens: DataFrame, token_col: str) -> DataFrame:
         *[
             F.struct(
                 F.lit(i).alias("row"),
-                (
-                    _md5_slice_int(
-                        F.md5(F.concat(F.lit(f"cms{i}|"), F.col(token_col))), 1, 8
-                    )
-                    % CMS_WIDTH
-                )
+                (md5_bucket(F.col(token_col), salt=f"cms{i}|") % CMS_WIDTH)
                 .cast("int")
                 .alias("col"),
             )
@@ -158,14 +155,7 @@ def cms_point_estimates(sketch: DataFrame, candidates: DataFrame, token_col: str
                 *[
                     F.struct(
                         F.lit(i).alias("row"),
-                        (
-                            _md5_slice_int(
-                                F.md5(F.concat(F.lit(f"cms{i}|"), F.col(token_col))),
-                                1,
-                                8,
-                            )
-                            % CMS_WIDTH
-                        )
+                        (md5_bucket(F.col(token_col), salt=f"cms{i}|") % CMS_WIDTH)
                         .cast("int")
                         .alias("col"),
                     )

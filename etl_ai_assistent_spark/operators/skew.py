@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import md5_bucket
+
 
 def salted_join(
     big: DataFrame,
@@ -36,18 +38,10 @@ def salted_join(
     choice — deterministic, uniform, retry-safe. Result set is
     provably identical to big.join(small, on)."""
     salt = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    (F.col(salt_from) if isinstance(salt_from, str) else salt_from)
-                    .cast("string")
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        md5_bucket(
+            (F.col(salt_from) if isinstance(salt_from, str) else salt_from)
+            .cast("string")
+        )
         % buckets
     ).cast("int")
     big_s = big.withColumn("__salt", salt)

@@ -17,16 +17,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import io
+from ..functions import md5_bucket
 from ..functions import text as TX
-from ..operators.dedup import md5_bucket
 from ..registry import register
 from ..substrates import cached_substrates
 
 # DuckDB twins of functions.text.tokens / the md5 bucket (dedup.py)
-_TOKS = """
-CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-     ELSE string_split_regex(lower(trim(text)), '\\s+') END
-"""
 _BUCKET = "CAST(('0x' || substr(md5({x}), 1, 8)) AS BIGINT)"
 
 
@@ -49,7 +45,7 @@ HOLDOUT_MOD = 10  # doc_id % 10 == 0 stands in for the benchmark/test set
 
 _DECON_GRAMS = f"""
 tokd AS (
-  SELECT doc_id, {_TOKS} AS tok FROM documents
+  SELECT doc_id, {TX.TOKENS_SQL} AS tok FROM documents
 ),
 grams AS (
   SELECT doc_id,
@@ -130,7 +126,7 @@ REP_SHARE_THRESHOLD = 0.2
     "q_repetition_stats",
     oracle=f"""
 WITH tokd AS (
-  SELECT doc_id, {_TOKS} AS tok FROM documents
+  SELECT doc_id, {TX.TOKENS_SQL} AS tok FROM documents
 ),
 grams AS (
   SELECT doc_id,
@@ -276,7 +272,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH g AS (
   SELECT lang, source,
          CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(len({_TOKS})) AS BIGINT) AS n_tokens
+         CAST(sum(len({TX.TOKENS_SQL})) AS BIGINT) AS n_tokens
   FROM documents GROUP BY 1, 2
 ),
 tot AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS total_tokens FROM g)
@@ -472,7 +468,7 @@ _SHARD_BUCKET = (
     "q_token_shards",
     oracle=f"""
 WITH sized AS (
-  SELECT doc_id, {_SHARD_BUCKET} AS bucket, len({_TOKS}) AS n_tokens
+  SELECT doc_id, {_SHARD_BUCKET} AS bucket, len({TX.TOKENS_SQL}) AS n_tokens
   FROM documents
 ),
 packed AS (
@@ -510,16 +506,7 @@ def q_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("shard|"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % SHARD_BUCKETS
+        md5_bucket(F.col("doc_id").cast("string"), salt="shard|") % SHARD_BUCKETS
     )
     sized = docs.select(
         "doc_id",
@@ -561,7 +548,7 @@ SPAN_N = 10  # tokens per span — the docx sectionizer's paragraph unit
     "q_span_dedup",
     oracle=f"""
 WITH tokd AS (
-  SELECT doc_id, {_TOKS} AS tok FROM documents
+  SELECT doc_id, {TX.TOKENS_SQL} AS tok FROM documents
 ),
 spans AS (
   SELECT doc_id, u.i AS pos,
@@ -984,8 +971,8 @@ _SEQ_BUCKET = (
     "q_sequence_pack",
     oracle=f"""
 WITH sized AS (
-  SELECT doc_id, {_SEQ_BUCKET} AS bucket, len({_TOKS}) AS n_tokens
-  FROM documents WHERE len({_TOKS}) > 0
+  SELECT doc_id, {_SEQ_BUCKET} AS bucket, len({TX.TOKENS_SQL}) AS n_tokens
+  FROM documents WHERE len({TX.TOKENS_SQL}) > 0
 ),
 packed AS (
   SELECT doc_id, bucket, n_tokens,
@@ -1029,16 +1016,7 @@ def q_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("seq|"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % SEQ_BUCKETS
+        md5_bucket(F.col("doc_id").cast("string"), salt="seq|") % SEQ_BUCKETS
     )
     sized = docs.select(
         "doc_id",
@@ -1125,7 +1103,7 @@ def _dsir_tf(spark: SparkSession, sf_dir: str, docs: DataFrame) -> DataFrame:
     "q_importance_resample",
     oracle=f"""
 WITH tokd AS (
-  SELECT doc_id, {_TOKS} AS tok FROM documents
+  SELECT doc_id, {TX.TOKENS_SQL} AS tok FROM documents
 ),
 tf AS (
   SELECT doc_id,

@@ -16,24 +16,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import io
+from ..functions import md5_bucket
+from ..functions import text as TX
 from ..operators import dedup as D
 from ..registry import register
 from ..substrates import per_call
 
 BUCKET = "CAST(('0x' || substr(md5({x}), 1, 8)) AS BIGINT)"
 
-# DuckDB twins of functions.text.tokens / word_shingles
-_TOKS = """
-CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-     ELSE string_split_regex(lower(trim(text)), '\\s+') END
-"""
+# DuckDB twin of functions.text.word_shingles
 _SHINGLES_CTE = f"""
 shingled AS (
   SELECT id, text,
          list_distinct(
            list_transform(generate_series(1, greatest(len(tok) - 2, 0)),
              i -> tok[i] || ' ' || tok[i+1] || ' ' || tok[i+2])) AS sh
-  FROM (SELECT id, text, {_TOKS} AS tok FROM corpus)
+  FROM (SELECT id, text, {TX.TOKENS_SQL} AS tok FROM corpus)
   WHERE len(tok) >= 3
 )
 """
@@ -155,7 +153,7 @@ WITH corpus AS (
   SELECT doc_id AS id, text FROM documents WHERE doc_id < {SIM_LIMIT}
 ),
 hashed AS (
-  SELECT id, list_transform({_TOKS.strip()},
+  SELECT id, list_transform({TX.TOKENS_SQL.strip()},
                 t -> {BUCKET.format(x='t')}) AS h
   FROM corpus
 )
@@ -189,7 +187,7 @@ def q_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH {_NEAR_CORPUS_SQL},
 hashed AS (
-  SELECT id, list_transform({_TOKS.strip()},
+  SELECT id, list_transform({TX.TOKENS_SQL.strip()},
                 t -> {BUCKET.format(x='t')}) AS h
   FROM corpus
 ),
@@ -435,7 +433,7 @@ WITH corpus AS (SELECT doc_id AS id, text FROM documents)
 SELECT id AS doc_id,
        list_reduce(
          list_concat([CAST(0 AS BIGINT)],
-           list_transform({_TOKS.strip()}, t -> {BUCKET.format(x='t')})),
+           list_transform({TX.TOKENS_SQL.strip()}, t -> {BUCKET.format(x='t')})),
          (acc, t) -> (acc * 31 + t) % 2147483647) AS fingerprint
 FROM corpus
 """,
@@ -865,7 +863,7 @@ CDS_K = 8  # tokens per span; Lee et al. use 50-token substrings at web scale
     "q_cross_doc_spans",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, {_TOKS.strip()} AS tok FROM documents
+  SELECT doc_id, {TX.TOKENS_SQL.strip()} AS tok FROM documents
 ),
 grams AS (
   SELECT DISTINCT doc_id,
@@ -1284,9 +1282,7 @@ def q_linkage_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = io.load_table(spark, sf_dir, "customer").filter(
         F.col("c_custkey") < FS_MAX_KEY
     )
-    h = D.md5_bucket(
-        F.concat(F.lit("fs|"), F.col("c_custkey").cast("string"))
-    )
+    h = md5_bucket(F.col("c_custkey").cast("string"), salt="fs|")
     base = c.select(
         F.col("c_custkey").alias("id"),
         F.expr("substr(c_name, length(c_name) - 3, 4)").alias("code"),

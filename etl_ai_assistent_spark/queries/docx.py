@@ -24,11 +24,6 @@ from ..operators.sectionizer import sectionize
 from ..registry import register
 from ..sources import docx as DX
 
-_TOKS = """
-CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-     ELSE string_split_regex(lower(trim(text)), '\\s+') END
-"""
-
 
 def docx_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
     """Publish (once per documents version) the deterministic .docx
@@ -59,7 +54,7 @@ def docx_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
     "q_docx_pipeline",
     oracle=f"""
 WITH tokd AS (
-  SELECT doc_id, {_TOKS} AS tok
+  SELECT doc_id, {TX.TOKENS_SQL} AS tok
   FROM (SELECT doc_id, text FROM documents)
 )
 SELECT doc_id,

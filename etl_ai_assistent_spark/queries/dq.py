@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import io
+from ..functions import cents, md5_bucket
 from ..registry import register
 
 
@@ -261,11 +262,7 @@ def q_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "|",
         _f(F.col("o_orderkey").cast("string")),
         _f(F.col("o_orderstatus")),
-        _f(
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("bigint")
-            .cast("string")
-        ),
+        _f(cents("o_totalprice").cast("string")),
         _f(
             F.expr(
                 "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00',"
@@ -275,7 +272,7 @@ def q_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         _f(F.col("o_custkey").cast("string")),
         _f(F.col("o_orderpriority")),
     )
-    h = F.conv(F.substring(F.md5(canon), 1, 8), 16, 10).cast("bigint")
+    h = md5_bucket(canon)
     return o.select(h.alias("h")).agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.sum("h").cast("bigint").alias("sum_h"),
@@ -432,11 +429,11 @@ def q_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one partial-agg'd scan to 9 groups, a 9-row expected-table
     broadcast, a 1-row total broadcast — sketch-sized all the way."""
     orders = io.load_table(spark, sf_dir, "orders").select("o_totalprice")
-    cents = orders.filter(F.col("o_totalprice") > 0).select(
-        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint").alias("c")
+    positive = orders.filter(F.col("o_totalprice") > 0).select(
+        cents("o_totalprice").alias("c")
     )
     obs = (
-        cents.select(
+        positive.select(
             F.substring(F.col("c").cast("string"), 1, 1)
             .cast("bigint")
             .alias("digit")

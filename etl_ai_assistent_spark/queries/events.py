@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import io
-from .relational import _money_units, _units_to_double
+from ..functions import cents, units_to_double
 from ..operators.asof import asof_join
 from ..operators.sessionize import sessionize
 from ..registry import register
@@ -70,7 +70,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events"),
         F.min("ts_s").alias("start_s"),
         F.max("ts_s").alias("end_s"),
-        _units_to_double(F.sum(_money_units("value")), 2).alias("session_value"),
+        units_to_double(F.sum(cents("value")), 2).alias("session_value"),
     )
 
 
@@ -96,7 +96,7 @@ def q_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("hour_start_s", "event_type")
         .agg(
             F.count("*").alias("n"),
-            _units_to_double(F.sum(_money_units("value")), 2).alias("total_value"),
+            units_to_double(F.sum(cents("value")), 2).alias("total_value"),
             F.count_distinct("user_id").alias("n_users"),
         )
     )
@@ -336,7 +336,7 @@ def q_moving_value_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         # exact bigint cents through the range frame (no per-row
         # BigDecimal in the window buffer), widened per row
-        _units_to_double(F.sum(_money_units("value")).over(w), 2).alias(
+        units_to_double(F.sum(cents("value")).over(w), 2).alias(
             "value_24h"
         ),
     )
@@ -485,7 +485,7 @@ def q_value_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_id",
             "event_type",
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("value_cents"),
+            cents("value").alias("value_cents"),
             F.round(z, 6).alias("z"),
         )
     )
@@ -660,7 +660,7 @@ def q_group_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = io.load_events(spark, sf_dir).select(
         "event_type",
         F.expr("ts_us DIV 3600000000").alias("hour_abs"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
+        cents("value").alias("cents"),
     )
     origin = base.agg(F.min("hour_abs").alias("h0"))
     xy = base.crossJoin(F.broadcast(origin)).select(
@@ -720,7 +720,7 @@ def q_props_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         e.select(
             "event_type",
-            F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").alias("cents"),
+            cents("value").alias("cents"),
             k.alias("k"),
         )
         .select(
@@ -799,9 +799,7 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(
                     F.col("event_type") == "purchase",
-                    F.floor(F.col("value") * 100 + F.lit(0.5)).cast(
-                        "bigint"
-                    ),
+                    cents("value"),
                 ).otherwise(0)
             )
             .cast("bigint")
@@ -973,9 +971,7 @@ def q_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.struct(
                 F.col("ts_us").alias("ts"),
                 F.col("event_id").alias("id"),
-                F.floor(F.col("value") * 100 + F.lit(0.5))
-                .cast("bigint")
-                .alias("v"),
+                cents("value").alias("v"),
             )
         )
     )
@@ -1043,7 +1039,7 @@ def q_daily_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.expr("ts_us DIV 86400000000").alias("day_id"))
         .agg(
             F.count("*").cast("bigint").alias("n"),
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"))
+            F.sum(cents("value"))
             .cast("bigint")
             .alias("total_cents"),
         )

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import io
+from ..functions import md5_bucket
 from ..operators import multimodal as MM
 from ..registry import register
 
@@ -244,7 +245,7 @@ def q_multimodal_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             (
-                MM.md5_bucket(F.col("doc_id").cast("string"), salt="mshard|")
+                md5_bucket(F.col("doc_id").cast("string"), salt="mshard|")
                 % MM_SHARD_BUCKETS
             ).alias("bucket"),
             (

@@ -38,11 +38,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import io
+from ..functions import md5_bucket
 from ..functions import text as TX
 from ..operators import dedup as D
 from ..registry import ORACLES, register
 from .curation import SHARD_BUCKETS, SHARD_TOKENS, _SHARD_BUCKET
-from .text_analysis import _TOKS
 
 R_EXACT_DUP = 32
 R_SEM_DUP = 64
@@ -69,7 +69,7 @@ disp AS (
   LEFT JOIN sem s ON s.id_drop = d.doc_id
 ),
 keep_sized AS (
-  SELECT doc_id, {_SHARD_BUCKET} AS bucket, len({_TOKS}) AS n_tokens
+  SELECT doc_id, {_SHARD_BUCKET} AS bucket, len({TX.TOKENS_SQL}) AS n_tokens
   FROM (SELECT d.doc_id, d.text FROM documents d
         JOIN disp ON disp.doc_id = d.doc_id AND disp.reasons = 0)
 ),
@@ -143,16 +143,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # when() short-circuits per row, so dropped documents are never
     # tokenized (same work as the filtered form).
     bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("shard|"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % SHARD_BUCKETS
+        md5_bucket(F.col("doc_id").cast("string"), salt="shard|") % SHARD_BUCKETS
     )
     keep = F.col("reasons") == 0
     sized = disp.select(

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from .. import io
 from .. import store as ST
+from ..functions import md5_bucket
 from ..functions import text as TX
 from ..registry import register
 from ..substrates import cached_substrates
@@ -44,17 +45,12 @@ from ..substrates import cached_substrates
 N_PROBES = 150
 TOP_K = 5
 
-_TOKS = """
-CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-     ELSE string_split_regex(lower(trim(text)), '\\s+') END
-"""
-
 # Shared SQL scaffold: inverted-index TF tables (exact 32-bit token
 # hash key) for corpus and probes, posting-list equi-join dot products,
 # rounded cosine, deterministic rank.
 _SCORED_CTES = f"""
 doc_tok AS (
-  SELECT doc_id, unnest({_TOKS}) AS tok
+  SELECT doc_id, unnest({TX.TOKENS_SQL}) AS tok
   FROM (SELECT doc_id, text FROM documents)
 ),
 doc_tf AS (
@@ -67,7 +63,7 @@ doc_norm AS (
 ),
 probe_tok AS (
   SELECT doc_id AS probe_id, unnest(tok[3:12]) AS tok
-  FROM (SELECT doc_id, {_TOKS} AS tok FROM documents WHERE doc_id < {N_PROBES})
+  FROM (SELECT doc_id, {TX.TOKENS_SQL} AS tok FROM documents WHERE doc_id < {N_PROBES})
 ),
 probe_tf AS (
   SELECT probe_id, CAST(('0x' || substr(md5(tok), 1, 8)) AS BIGINT) AS tok_h,
@@ -95,18 +91,14 @@ scored AS (
 """
 
 
-def _tok_h():
-    """Exact 32-bit token hash (md5 prefix) — the inverted-index join
-    key. Identical arithmetic on DuckDB ('0x'||substr(md5,1,8) cast)."""
-    return F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10).cast("bigint")
-
-
 def _tf_all(df: DataFrame, id_out: str, tok_expr) -> DataFrame:
-    """Sparse TF at token resolution: (id, tok_h, count). Exact in
-    doubles later on because every partial product is a small integer."""
+    """Sparse TF at token resolution: (id, tok_h, count), tok_h the
+    exact 32-bit md5-prefix token hash (the inverted-index join key).
+    Exact in doubles later on because every partial product is a small
+    integer."""
     return (
         df.select(F.col("doc_id").alias(id_out), F.explode(tok_expr).alias("tok"))
-        .groupBy(id_out, _tok_h().alias("tok_h"))
+        .groupBy(id_out, md5_bucket(F.col("tok")).alias("tok_h"))
         .agg(F.count("*").alias("c"))
     )
 
@@ -216,7 +208,7 @@ def doc_tf_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_posting_delta_merge",
     oracle=f"""
 WITH doc_tok AS (
-  SELECT doc_id, unnest({_TOKS}) AS tok
+  SELECT doc_id, unnest({TX.TOKENS_SQL}) AS tok
   FROM (SELECT doc_id, text FROM documents)
 ),
 doc_tf AS (
@@ -324,7 +316,7 @@ def _probe_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_posting_index_build",
     oracle=f"""
 WITH doc_tok AS (
-  SELECT doc_id, unnest({_TOKS}) AS tok
+  SELECT doc_id, unnest({TX.TOKENS_SQL}) AS tok
   FROM (SELECT doc_id, text FROM documents)
 ),
 doc_tf AS (
@@ -435,7 +427,7 @@ def compact_posting_build_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_posting_compact",
     oracle=f"""
 WITH doc_tok AS (
-  SELECT doc_id, unnest({_TOKS}) AS tok
+  SELECT doc_id, unnest({TX.TOKENS_SQL}) AS tok
   FROM (SELECT doc_id, text FROM documents)
 ),
 doc_tf AS (
@@ -995,14 +987,14 @@ nctx AS (
 ),
 ctx_tok AS (
   SELECT DISTINCT probe_id, tok FROM (
-    SELECT t.probe_id, unnest({_TOKS}) AS tok
+    SELECT t.probe_id, unnest({TX.TOKENS_SQL}) AS tok
     FROM topk t JOIN (SELECT doc_id, text FROM documents) d
       ON d.doc_id = t.doc_id
   )
 ),
 ans_tok AS (
   SELECT DISTINCT probe_id, tok FROM (
-    SELECT doc_id AS probe_id, unnest({_TOKS}) AS tok
+    SELECT doc_id AS probe_id, unnest({TX.TOKENS_SQL}) AS tok
     FROM (SELECT doc_id, text FROM documents WHERE doc_id < {N_PROBES})
   )
 ),
@@ -1084,7 +1076,7 @@ TESTSET_EVERY = 3  # sample stride over eligible documents
     "q_testset_generate",
     oracle=f"""
 WITH tokd AS (
-  SELECT doc_id, {_TOKS} AS tok, text
+  SELECT doc_id, {TX.TOKENS_SQL} AS tok, text
   FROM (SELECT doc_id, text FROM documents)
 )
 SELECT doc_id AS source_doc_id,

@@ -21,29 +21,9 @@ from pyspark.sql import functions as F
 
 from .. import io
 from .. import store as ST
+from ..functions import cents, units_to_double
 from ..registry import register
 from ..substrates import cached_substrates
-
-
-def _money_units(c: str) -> F.Column:
-    """Money double → exact integer cents via floor(x·100 + 0.5). For
-    POSITIVE inputs this is the same HALF_UP rounding as cast(double AS
-    decimal(p,2)); the fixture's money columns are doubles nearest to
-    2dp values, so ×100 lands within 1 ulp of the integer and floor(+0.5)
-    recovers it exactly.
-
-    Sign note (ADVICE r12): for NEGATIVE inputs floor(x+0.5) rounds
-    half toward +infinity, which diverges from decimal-cast HALF_UP
-    (half away from zero) at exact .5 boundaries. That divergence is
-    from DECIMAL-CAST semantics, not from the oracles: every consuming
-    query's DuckDB oracle computes the IDENTICAL floor(x·100 + 0.5)
-    expression (e.g. q_profile_maintain's
-    sum(CAST(floor(value*100+0.5) AS BIGINT))), so engine/oracle
-    parity holds for ANY sign — which is why events.value (sign-
-    unconstrained by schema) may flow through here. Do NOT "fix" the
-    rounding one-sided: switching either side alone to sign-aware
-    rounding breaks bit-parity at ties."""
-    return F.floor(F.col(c) * 100 + F.lit(0.5)).cast("bigint")
 
 
 def _exact_unit_sums(
@@ -102,23 +82,6 @@ def _exact_unit_sums(
     )
 
 
-def _units_to_double(c: str, k: int) -> F.Column:
-    """decimal(38,0) unit total → the correctly rounded DOUBLE of
-    total·10^-k — the same value DuckDB's cast(sum(decimal) AS DOUBLE)
-    produces at every gated SF. Boundary (measured at the sf1 trend
-    fixture): once unit totals exceed 2^53, DuckDB's decimal→double
-    cast can land 1 ulp off the correctly rounded value while this
-    path stays exact (verified against Fraction-exact conversion for
-    the observed case, 50777888124.4205 vs DuckDB's …420494); at the
-    driver-gated scales totals are « 2^53 and both sides convert
-    exactly."""
-    col = F.col(c) if isinstance(c, str) else c
-    return (
-        col.cast(f"decimal(38,{k})")
-        / F.lit(10**k).cast(f"decimal({k + 1},0)")
-    ).cast("double")
-
-
 # --- aggregation: TPC-H Q1 shape -----------------------------------------
 
 @register(
@@ -155,10 +118,10 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet scan; the shuffle carries |flags|·|partitions| partial
     rows."""
     li = io.load_table(spark, sf_dir, "lineitem")
-    qty_u = _money_units("l_quantity")
-    price_u = _money_units("l_extendedprice")
-    disc_u = _money_units("l_discount")
-    tax_u = _money_units("l_tax")
+    qty_u = cents("l_quantity")
+    price_u = cents("l_extendedprice")
+    disc_u = cents("l_discount")
+    tax_u = cents("l_tax")
     base = li.filter(
         F.col("l_shipdate") <= F.lit("2001-09-01 00:00:00").cast("timestamp")
     )
@@ -178,13 +141,13 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return totals.select(
         "l_returnflag",
         "l_linestatus",
-        _units_to_double("_qty", 2).alias("sum_qty"),
-        _units_to_double("_price", 2).alias("sum_base_price"),
-        _units_to_double("_disc_price", 4).alias("sum_disc_price"),
-        _units_to_double("_charge", 6).alias("sum_charge"),
-        (_units_to_double("_qty", 2) / F.col("_n")).alias("avg_qty"),
-        (_units_to_double("_price", 2) / F.col("_n")).alias("avg_price"),
-        (_units_to_double("_disc", 2) / F.col("_n")).alias("avg_disc"),
+        units_to_double("_qty", 2).alias("sum_qty"),
+        units_to_double("_price", 2).alias("sum_base_price"),
+        units_to_double("_disc_price", 4).alias("sum_disc_price"),
+        units_to_double("_charge", 6).alias("sum_charge"),
+        (units_to_double("_qty", 2) / F.col("_n")).alias("avg_qty"),
+        (units_to_double("_price", 2) / F.col("_n")).alias("avg_price"),
+        (units_to_double("_disc", 2) / F.col("_n")).alias("avg_disc"),
         F.col("_n").alias("count_order"),
     )
 
@@ -246,7 +209,7 @@ def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # revenue rides the exact bigint-unit two-level sum (10^-4 units of
     # price_cents × (100 - disc_c)) — same BigDecimal-churn avoidance
     # as q_pricing_summary, bit-identical to the decimal-sum oracle
-    price_u, disc_u = _money_units("l_extendedprice"), _money_units(
+    price_u, disc_u = cents("l_extendedprice"), cents(
         "l_discount"
     )
     totals = _exact_unit_sums(
@@ -254,7 +217,7 @@ def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return totals.select(
         "n_name",
-        _units_to_double("_rev", 4).alias("revenue"),
+        units_to_double("_rev", 4).alias("revenue"),
         F.col("_n").alias("n_items"),
     )
 
@@ -320,8 +283,8 @@ def q_running_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return o.select(
         "o_custkey",
         "o_orderkey",
-        _units_to_double(
-            F.sum(_money_units("o_totalprice")).over(w), 2
+        units_to_double(
+            F.sum(cents("o_totalprice")).over(w), 2
         ).alias("running_spend"),
     )
 
@@ -345,7 +308,7 @@ def q_cube_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact bigint qty-cents through the Expand (≤5000/row: a long sum
     # is safe past 10^15 rows), widened once — no per-row BigDecimal
     return li.cube("l_returnflag", "l_linestatus").agg(
-        _units_to_double(F.sum(_money_units("l_quantity")), 2).alias(
+        units_to_double(F.sum(cents("l_quantity")), 2).alias(
             "sum_qty"
         ),
         F.count("*").alias("n"),
@@ -376,12 +339,12 @@ def q_rollup_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.withColumn("order_year", F.year("o_orderdate").cast("int"))
         .groupBy("order_year", "o_orderstatus", F.spark_partition_id().alias("_b"))
         .agg(
-            F.sum(_money_units("o_totalprice")).alias("_t"),
+            F.sum(cents("o_totalprice")).alias("_t"),
             F.count("*").alias("_n"),
         )
     )
     return lvl1.rollup("order_year", "o_orderstatus").agg(
-        _units_to_double(F.sum(F.col("_t").cast("decimal(38,0)")), 2).alias(
+        units_to_double(F.sum(F.col("_t").cast("decimal(38,0)")), 2).alias(
             "total"
         ),
         F.sum("_n").cast("bigint").alias("n"),
@@ -409,7 +372,7 @@ def q_pivot_linestatus(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = (
         li.groupBy("l_returnflag")
         .pivot("l_linestatus", ["O", "F"])
-        .agg(_units_to_double(F.sum(_money_units("l_quantity")), 2))
+        .agg(units_to_double(F.sum(cents("l_quantity")), 2))
     )
     return out.select(
         "l_returnflag",
@@ -708,8 +671,8 @@ def q_full_outer_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = io.load_table(spark, sf_dir, "orders")
     order_tot = orders.groupBy("o_custkey").agg(
         F.count("*").cast("bigint").alias("n_orders"),
-        _units_to_double(
-            F.sum(_money_units("o_totalprice")), 2
+        units_to_double(
+            F.sum(cents("o_totalprice")), 2
         ).alias("total"),
     )
     j = customer.join(
@@ -926,8 +889,8 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.incremental import incremental_group_sums
 
     c = io.load_table(spark, sf_dir, "customer")
-    cents = F.floor(F.col("c_acctbal") * 100 + F.lit(0.5)).cast("bigint")
-    c = c.withColumn("acct_cents", cents)
+    acct_cents = cents("c_acctbal")
+    c = c.withColumn("acct_cents", acct_cents)
     base_agg = c.groupBy("c_nationkey").agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("acct_cents").cast("bigint").alias("sum_measure"),
@@ -938,7 +901,7 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes = (
         updates.unionByName(deletes)
         .unionByName(inserts)
-        .withColumn("acct_cents", cents)
+        .withColumn("acct_cents", acct_cents)
     )
     out = incremental_group_sums(
         base_agg,
@@ -1099,8 +1062,8 @@ def q_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     # revenue through the exact bigint-unit two-level sum (10^-4
     # units) — the group count is tiny (bloc² × years) so every group
     # funnels millions of rows through what was a BigDecimal buffer
-    price_u = _money_units("l_extendedprice")
-    disc_u = _money_units("l_discount")
+    price_u = cents("l_extendedprice")
+    disc_u = cents("l_discount")
     totals = _exact_unit_sums(
         j.withColumn("l_year", F.year("l_shipdate").cast("bigint")),
         ["supp_nation", "cust_nation", "l_year"],
@@ -1110,7 +1073,7 @@ def q_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         "supp_nation",
         "cust_nation",
         "l_year",
-        _units_to_double("_rev", 4).alias("revenue"),
+        units_to_double("_rev", 4).alias("revenue"),
         F.col("_n").alias("n_items"),
     )
 
@@ -1178,8 +1141,8 @@ def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     # numerator/denominator in exact 10^-4 bigint units through the
     # two-level sum (two groups total — the worst BigDecimal funnel),
     # widened to the oracle's doubles before the share division
-    vol_u = _money_units("l_extendedprice") * (
-        100 - _money_units("l_discount")
+    vol_u = cents("l_extendedprice") * (
+        100 - cents("l_discount")
     )
     totals = _exact_unit_sums(
         j.withColumn("o_year", F.year("o_orderdate").cast("bigint")),
@@ -1194,7 +1157,7 @@ def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     return totals.select(
         "o_year",
         F.round(
-            _units_to_double("_num", 4) / _units_to_double("_den", 4), 6
+            units_to_double("_num", 4) / units_to_double("_den", 4), 6
         ).alias("mkt_share"),
         F.col("_n").alias("n_items"),
     )
@@ -1239,9 +1202,7 @@ def q_untapped_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = io.load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_nationkey",
-        F.floor(F.col("c_acctbal") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("bal_cents"),
+        cents("c_acctbal").alias("bal_cents"),
     )
     g = (
         c.filter(F.col("bal_cents") > 0)
@@ -1317,11 +1278,10 @@ def q_delta_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     and re-running the warehouse's biggest join."""
     from ..operators.incremental import delta_join
 
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
     orders = io.load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_custkey").alias("custkey"),
-        cents.alias("rev_cents"),
+        cents("o_totalprice").alias("rev_cents"),
     )
     base_a = orders.filter(F.col("o_orderkey") % LATE_MOD != 0).drop(
         "o_orderkey"
@@ -1571,7 +1531,7 @@ def q_bulk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # threshold compares in cents, exact
     bulk = (
         li.groupBy("l_orderkey")
-        .agg(F.sum(_money_units("l_quantity")).alias("_qc"))
+        .agg(F.sum(cents("l_quantity")).alias("_qc"))
         .filter(F.col("_qc") > BULK_QTY * 100)
     )
     o = io.load_table(spark, sf_dir, "orders").select(
@@ -1589,7 +1549,7 @@ def q_bulk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey",
             "o_orderdate",
             "o_totalprice",
-            _units_to_double("_qc", 2).alias("sum_qty"),
+            units_to_double("_qc", 2).alias("sum_qty"),
         )
     )
 
@@ -1646,8 +1606,8 @@ def q_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("l_suppkey")
             .agg(
                 F.sum(
-                    _money_units("l_extendedprice")
-                    * (100 - _money_units("l_discount"))
+                    cents("l_extendedprice")
+                    * (100 - cents("l_discount"))
                 ).alias("_rev_u")
             )
         )
@@ -1661,7 +1621,7 @@ def q_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "s_suppkey",
             "s_name",
-            _units_to_double("_rev_u", 4).alias("total_revenue"),
+            units_to_double("_rev_u", 4).alias("total_revenue"),
         )
     )
 
@@ -1722,10 +1682,8 @@ def q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "l_partkey",
             "p_brand",
-            F.floor(F.col("l_quantity") * 100 + 0.5).cast("bigint").alias("q_c"),
-            F.floor(F.col("l_extendedprice") * 100 + 0.5)
-            .cast("bigint")
-            .alias("price_c"),
+            cents("l_quantity").alias("q_c"),
+            cents("l_extendedprice").alias("price_c"),
         )
     )
     avgq = pli.groupBy("l_partkey").agg(
@@ -1903,9 +1861,7 @@ def q_urgent_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = io.load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit(Q3_DATE).cast("timestamp")
     ).select("l_orderkey", "l_extendedprice", "l_discount")
-    rev = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100 + 0.5
-    ).cast("bigint")
+    rev = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -1951,9 +1907,7 @@ def q_discount_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_discount") <= 0.07)
         & (F.col("l_quantity") < 24)
     )
-    disc = F.floor(
-        F.col("l_extendedprice") * F.col("l_discount") * 100 + 0.5
-    ).cast("bigint")
+    disc = cents(F.col("l_extendedprice") * F.col("l_discount"))
     return filtered.agg(
         F.count("*").cast("bigint").alias("n_items"),
         F.sum(disc).cast("bigint").alias("discount_cents"),
@@ -2000,9 +1954,7 @@ def q_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = io.load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag") == "R"
     ).select("l_orderkey", "l_extendedprice", "l_discount")
-    rev = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100 + 0.5
-    ).cast("bigint")
+    rev = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -2130,9 +2082,7 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = io.load_table(spark, sf_dir, "region").filter(
         F.col("r_name") == Q5_REGION
     )
-    rev = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100 + 0.5
-    ).cast("bigint")
+    rev = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -2238,9 +2188,7 @@ def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit(Q14_TO).cast("timestamp"))
     ).select("l_partkey", "l_extendedprice", "l_discount")
     p = io.load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100 + 0.5
-    ).cast("bigint")
+    rev = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0))
     agg = (
         li.join(p, li.l_partkey == p.p_partkey)
@@ -2309,9 +2257,7 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
             & F.col("l_quantity").between(q_lo, q_hi)
         )
         cond = branch if cond is None else (cond | branch)
-    rev = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100 + 0.5
-    ).cast("bigint")
+    rev = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     return (
         li.join(p, p.p_partkey == li.l_partkey)
         .filter(cond)

@@ -8,7 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import io
-from .relational import _money_units, _units_to_double
+from ..functions import cents, md5_bucket, units_to_double
 from ..functions import text as TX
 from ..operators import sketch as SK
 from ..operators.skew import salted_join
@@ -242,9 +242,7 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderkey", "o_orderpriority")
         .agg(
             F.count("*").cast("bigint").alias("n_items"),
-            _units_to_double(
-                F.sum(_money_units("l_extendedprice")), 2
-            ).alias("revenue"),
+            units_to_double(F.sum(cents("l_extendedprice")), 2).alias("revenue"),
         )
     )
 
@@ -411,9 +409,7 @@ def q_synthetic_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     gen = spark.range(0, SYNTH_ROWS).select(
         F.col("id"),
         (F.col("id") % SYNTH_GROUPS).alias("grp"),
-        F.conv(F.substring(F.md5(F.col("id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        .alias("val"),
+        md5_bucket(F.col("id").cast("string")).alias("val"),
     )
     return gen.groupBy("grp").agg(
         F.count("*").cast("bigint").alias("n"),
@@ -560,12 +556,9 @@ def q_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = io.load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
-        F.floor(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("rev_cents"),
+        cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+            "rev_cents"
+        ),
     )
     words = bloom_words(o, "o_orderkey")
     pruned = bloom_prune(li, "l_orderkey", words)
@@ -628,8 +621,6 @@ def q_selfjoin_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a narrow map on the scan, so the shuffle carries ~1/{JCARD_MOD}
     of the keys and the estimate costs a fraction of the join it
     sizes."""
-    from ..operators.dedup import md5_bucket
-
     per_key = (
         io.load_table(spark, sf_dir, "lineitem")
         .groupBy("l_partkey")
@@ -738,13 +729,9 @@ def q_table_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deepening to a merkle TREE (buckets of buckets) turns re-sync into
     log-depth drill-down; one level is enough to demonstrate the
     algebra."""
-    from ..operators.dedup import md5_bucket
-
     a = io.load_table(spark, sf_dir, "customer").select(
         "c_custkey",
-        F.floor(F.col("c_acctbal") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("bal"),
+        cents("c_acctbal").alias("bal"),
     )
     drift = (
         md5_bucket(F.col("c_custkey").cast("string"), salt="drift|")
@@ -833,8 +820,8 @@ def q_two_pass_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     The two single-partition windows run over BOUNDED tables (bucket
     count, within-bucket value count) — that is the point of the
     prune; the raw rows never enter a sort."""
-    cents = F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")
-    c = io.load_table(spark, sf_dir, "lineitem").select(cents.alias("cents"))
+    rounded = F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")
+    c = io.load_table(spark, sf_dir, "lineitem").select(rounded.alias("cents"))
     from pyspark.sql import Window
 
     buckets = (

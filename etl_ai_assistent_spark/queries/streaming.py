@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from .. import io
 from .. import store as ST
+from ..functions import cents
 from ..registry import register
 from ..streaming import pipeline as SP
 from .relational import CDC_MERGE_ORACLE as _CDC_ORACLE
@@ -612,11 +613,13 @@ def _dj_change_batches(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
     o = io.load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % LATE_MOD == 0
     )
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
     return [
         o.filter(
             F.expr(f"(o_orderkey div {LATE_MOD}) % {_DJ_BATCHES} = {i}")
-        ).select(F.col("o_custkey").alias("custkey"), cents.alias("rev_cents"))
+        ).select(
+            F.col("o_custkey").alias("custkey"),
+            cents("o_totalprice").alias("rev_cents"),
+        )
         for i in range(_DJ_BATCHES)
     ]
 
@@ -679,15 +682,12 @@ def q_stream_delta_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def build(tmp: str) -> None:
-        cents = F.floor(
-            F.col("o_totalprice") * 100 + F.lit(0.5)
-        ).cast("bigint")
         base_a = (
             io.load_table(spark, sf_dir, "orders")
             .filter(F.col("o_orderkey") % LATE_MOD != 0)
             .select(
                 F.col("o_custkey").alias("custkey"),
-                cents.alias("rev_cents"),
+                cents("o_totalprice").alias("rev_cents"),
             )
         )
         (
@@ -907,7 +907,7 @@ def q_stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = ST.corpus_path("spark_graft_stream_quant_v1", sf_dir, "events")
     n_parts = 4
 
-    cents = (
+    quant_cents = (
         F.round(F.col("value").cast("decimal(12,2)") * 100)
         .cast("bigint")
         .alias("cents")
@@ -916,7 +916,7 @@ def q_stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build(tmp: str) -> None:
         def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
             hist_b = (
-                batch_df.select("event_type", cents)
+                batch_df.select("event_type", quant_cents)
                 .groupBy(
                     "event_type",
                     F.expr(f"cents div {SQ_BIN_CENTS}").alias("bin"),
@@ -964,7 +964,7 @@ def q_stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg((F.min("bin") * SQ_BIN_CENTS).cast("bigint").alias("est_p50_cents"))
         .select("event_type", F.col("n").cast("bigint").alias("n"), "est_p50_cents")
     )
-    c = io.load_events(spark, sf_dir).select("event_type", cents)
+    c = io.load_events(spark, sf_dir).select("event_type", quant_cents)
     w_rank = Window.partitionBy("event_type").orderBy("cents")
     exact = (
         c.withColumn("rn", F.row_number().over(w_rank))
@@ -1023,13 +1023,12 @@ def q_stream_profile_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature table."""
     prof = SP.user_profile_table(spark, sf_dir)
     ev = SP.read_events_stream(spark, sf_dir)
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
     agg = (
         ev.join(prof, "user_id")
         .groupBy("event_type")
         .agg(
             F.count("*").cast("bigint").alias("n"),
-            F.sum(cents).cast("bigint").alias("live_cents"),
+            F.sum(cents("value")).cast("bigint").alias("live_cents"),
             F.sum("hist_events").cast("bigint").alias("hist_events_touched"),
             F.sum("hist_cents").cast("bigint").alias("hist_cents_touched"),
         )

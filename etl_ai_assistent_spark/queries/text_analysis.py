@@ -20,16 +20,12 @@ from pyspark.sql import functions as F
 
 from .. import io
 from .. import store as ST
+from ..functions import md5_bucket
 from ..functions import text as TX
 from ..registry import register
 from ..substrates import per_call
 
 # DuckDB twin of functions.text.tokens (same as queries/dedup.py)
-_TOKS = """
-CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-     ELSE string_split_regex(lower(trim(text)), '\\s+') END
-"""
-
 # BPE-ish subword tokenizer: letter runs | single digits | single
 # non-alnum marks. Same regex in Java (Spark) and RE2 (DuckDB) dialects.
 BPE_RE = "[a-z]+|[0-9]|[^a-z0-9\\s]"
@@ -51,7 +47,7 @@ SELECT doc_id,
        length(text) AS n_chars_measured,
        round(CAST(length(regexp_replace(text, '\\s', '', 'g')) AS DOUBLE)
              / greatest(len(tok), 1), 6) AS avg_token_len
-FROM (SELECT doc_id, text, {_TOKS} AS tok FROM documents)
+FROM (SELECT doc_id, text, {TX.TOKENS_SQL} AS tok FROM documents)
 """,
 )
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -91,7 +87,7 @@ WITH scored AS (
          {_hits_sql(TX.LANG_STOPWORDS["fr"])} AS s_fr,
          length(text) - length(regexp_replace(text, '[\\x{{4e00}}-\\x{{9fff}}]', '', 'g'))
            AS s_zh
-  FROM (SELECT doc_id, lang, text, {_TOKS} AS tok FROM documents)
+  FROM (SELECT doc_id, lang, text, {TX.TOKENS_SQL} AS tok FROM documents)
 )
 SELECT doc_id, s_de, s_en, s_es, s_fr, s_zh,
        substr(greatest(lpad(CAST(s_de AS VARCHAR), 6, '0') || 'de',
@@ -165,7 +161,7 @@ WITH feats AS (
          {_hits_sql(_EN_STOPS)} AS n_stop,
          length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digit,
          greatest(length(text), 1) AS n_chars_g
-  FROM (SELECT doc_id, text, {_TOKS} AS tok FROM documents)
+  FROM (SELECT doc_id, text, {TX.TOKENS_SQL} AS tok FROM documents)
 ),
 ppm AS (
   SELECT doc_id, n_tokens,
@@ -251,7 +247,7 @@ SELECT lang, source,
        CAST(sum(len(tok)) AS BIGINT) AS total_tokens,
        CAST(min(len(tok)) AS BIGINT) AS min_tokens,
        CAST(max(len(tok)) AS BIGINT) AS max_tokens
-FROM (SELECT lang, source, n_chars, text, {_TOKS} AS tok FROM documents)
+FROM (SELECT lang, source, n_chars, text, {TX.TOKENS_SQL} AS tok FROM documents)
 GROUP BY lang, source
 """,
 )
@@ -313,16 +309,7 @@ def q_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     split column becomes the write partitioning key."""
     docs = io.load_table(spark, sf_dir, "documents")
     bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("split|"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
+        md5_bucket(F.col("doc_id").cast("string"), salt="split|") % 100
     )
     assigned = docs.select(
         "doc_id",
@@ -365,16 +352,7 @@ def q_source_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.least(F.lit(1.0), F.lit(25.0) / F.count("*")).alias("rate")
     )
     bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("sample|"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 1000000
+        md5_bucket(F.col("doc_id").cast("string"), salt="sample|") % 1000000
     )
     sampled = docs.join(F.broadcast(rates), "source").filter(
         bucket < (F.col("rate") * 1000000).cast("bigint")
@@ -443,7 +421,7 @@ def q_sentence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_bpe_pairs",
     oracle=f"""
 WITH tok AS (
-  SELECT unnest({_TOKS}) AS tok
+  SELECT unnest({TX.TOKENS_SQL}) AS tok
   FROM (SELECT text FROM documents)
 ),
 pairs AS (
@@ -491,7 +469,7 @@ def q_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_doc_surprisal",
     oracle=f"""
 WITH tok AS (
-  SELECT doc_id, unnest({_TOKS}) AS tok
+  SELECT doc_id, unnest({TX.TOKENS_SQL}) AS tok
   FROM (SELECT doc_id, text FROM documents)
 ),
 df AS (
@@ -566,7 +544,7 @@ def q_doc_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_bigram_surprisal",
     oracle=f"""
 WITH arrs AS (
-  SELECT doc_id, {_TOKS} AS arr
+  SELECT doc_id, {TX.TOKENS_SQL} AS arr
   FROM (SELECT doc_id, text FROM documents)
 ),
 big AS (
@@ -657,7 +635,7 @@ PMI_MIN_AB = 2  # ignore singleton co-occurrences
     "q_token_pmi",
     oracle=f"""
 WITH tok AS (
-  SELECT DISTINCT doc_id, unnest({_TOKS}) AS tok
+  SELECT DISTINCT doc_id, unnest({TX.TOKENS_SQL}) AS tok
   FROM (SELECT doc_id, text FROM documents)
 ),
 n AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs FROM tok),
@@ -1045,7 +1023,7 @@ def q_trigram_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_bpe_merge_apply",
     oracle=f"""
 WITH tok AS (
-  SELECT unnest({_TOKS}) AS tok
+  SELECT unnest({TX.TOKENS_SQL}) AS tok
   FROM (SELECT text FROM documents)
 ),
 spaced AS (
@@ -1175,8 +1153,8 @@ VOCAB_TOP = 4096  # dense ids 1..N by (df DESC, token); everything else OOV=0
     "q_vocab_encode",
     oracle=f"""
 WITH tok AS (
-  SELECT doc_id, unnest({_TOKS}) AS tok,
-         generate_subscripts({_TOKS}, 1) AS pos
+  SELECT doc_id, unnest({TX.TOKENS_SQL}) AS tok,
+         generate_subscripts({TX.TOKENS_SQL}, 1) AS pos
   FROM documents
 ),
 vocab AS (
@@ -1222,7 +1200,7 @@ def q_vocab_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.posexplode(TXF.tokens(F.lower(F.col("text")))).alias("pos0", "tok"),
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "tok")
-    # lower() above mirrors _TOKS; tokens() already trims.
+    # lower() above mirrors TX.TOKENS_SQL; tokens() already trims.
     # TakeOrdered-limit FIRST, then rank: a bare row_number window over
     # the full vocabulary would drag every distinct token through one
     # partition — the limit bounds the single-partition sort to
@@ -1266,7 +1244,7 @@ WITH assigned AS (
   FROM documents
 ),
 tok AS (
-  SELECT split, unnest({_TOKS.strip()}) AS t
+  SELECT split, unnest({TX.TOKENS_SQL.strip()}) AS t
   FROM assigned WHERE split IN ('train', 'val')
 ),
 cnt AS (
@@ -1306,16 +1284,7 @@ def q_split_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression widens to DECIMAL(38,0)."""
     docs = io.load_table(spark, sf_dir, "documents").select("doc_id", "text")
     bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("split|"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
+        md5_bucket(F.col("doc_id").cast("string"), salt="split|") % 100
     )
     split = (
         F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
@@ -1385,7 +1354,7 @@ spaced{i} AS (
 _BPE_TRAIN_ORACLE = (
     f"""
 WITH tok AS (
-  SELECT unnest({_TOKS}) AS tok FROM (SELECT text FROM documents)
+  SELECT unnest({TX.TOKENS_SQL}) AS tok FROM (SELECT text FROM documents)
 ),
 spaced0 AS (
   SELECT ' ' || regexp_replace(tok, '(.)', '\\1 ', 'g') AS sp
@@ -1493,7 +1462,7 @@ FROM spaced{i}"""
 _BPE_COMPRESSION_ORACLE = (
     f"""
 WITH tok AS (
-  SELECT unnest({_TOKS}) AS tok FROM (SELECT text FROM documents)
+  SELECT unnest({TX.TOKENS_SQL}) AS tok FROM (SELECT text FROM documents)
 ),
 spaced0 AS (
   SELECT ' ' || regexp_replace(tok, '(.)', '\\1 ', 'g') AS sp
@@ -1607,7 +1576,7 @@ ZIPF_TOP = 256  # fit over the head ranks, where Zipf holds
     "q_zipf_fit",
     oracle=f"""
 WITH tok AS (
-  SELECT unnest({_TOKS}) AS tok FROM (SELECT text FROM documents)
+  SELECT unnest({TX.TOKENS_SQL}) AS tok FROM (SELECT text FROM documents)
 ),
 ranked AS (
   SELECT CAST(row_number() OVER (ORDER BY count(*) DESC, tok) AS BIGINT)
@@ -1697,7 +1666,7 @@ HEAPS_CHECKPOINTS = (1, 2, 4, 8)  # eighths of the doc-id range
     oracle=f"""
 WITH mx AS (SELECT max(doc_id) + 1 AS m FROM documents),
 tok AS (
-  SELECT doc_id, unnest({_TOKS}) AS tok FROM documents
+  SELECT doc_id, unnest({TX.TOKENS_SQL}) AS tok FROM documents
 ),
 cp AS (
   SELECT k.k AS eighths,

@@ -31,8 +31,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import io, schemas
-from ..queries.relational import _money_units, _units_to_double
 from .. import store as ST
+from ..functions import cents, md5_bucket, units_to_double
 
 _qname_counter = itertools.count()
 
@@ -51,7 +51,7 @@ def user_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev = io.load_table(spark, sf_dir, "events")
         prof = ev.groupBy("user_id").agg(
             F.count("*").cast("bigint").alias("hist_events"),
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"))
+            F.sum(cents("value"))
             .cast("bigint")
             .alias("hist_cents"),
         )
@@ -78,10 +78,6 @@ def user_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 PROFILE_BATCH_MOD, PROFILE_BATCH_REM = 10, 7  # the arriving event batch
 
 
-def _profile_cents():
-    return F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
-
-
 def profile_base_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRE-BATCH profile artifact: per-user rollup of the events
     history MINUS the arriving batch (event_id % 10 == 7) — yesterday's
@@ -100,7 +96,7 @@ def profile_base_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         prof = ev.groupBy("user_id").agg(
             F.count("*").cast("bigint").alias("hist_events"),
-            F.sum(_profile_cents()).cast("bigint").alias("hist_cents"),
+            F.sum(cents("value")).cast("bigint").alias("hist_cents"),
         )
         prof.write.mode("overwrite").parquet(tmp)
 
@@ -147,7 +143,7 @@ def maintain_profile_table(spark: SparkSession, sf_dir: str) -> str:
         batch = ev.filter(is_batch).select(
             "event_id",
             "user_id",
-            _profile_cents().alias("cents"),
+            cents("value").alias("cents"),
             F.lit("I").alias("op"),
         )
         maintained = incremental_group_sums(
@@ -207,6 +203,20 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _normalize_events(raw)
 
 
+def _read_landing_events(spark: SparkSession, path: str) -> DataFrame:
+    """Streaming scan over a landing dir of part_*.parquet files, one
+    file per micro-batch. Normalized like read_events_stream (ts_us +
+    ts_ts)."""
+    schema = _events_stream_schema(spark, os.path.join(path, "part_0.parquet"))
+    raw = (
+        spark.readStream.schema(schema)
+        .format("parquet")
+        .option("maxFilesPerTrigger", 1)
+        .load(path + "/part_*.parquet")
+    )
+    return _normalize_events(raw)
+
+
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming scan of the documents table — the Auto-Loader-shaped
     ingest edge of the document pipeline (reference app.py:17-33's HTTP
@@ -251,7 +261,7 @@ def tumbling_hourly(events: DataFrame) -> DataFrame:
             F.count("*").alias("n"),
             # exact bigint cents in the state store (a long slot, not
             # a per-update BigDecimal allocation), widened on output
-            _units_to_double(F.sum(_money_units("value")), 2).alias(
+            units_to_double(F.sum(cents("value")), 2).alias(
                 "total_value"
             ),
         )
@@ -279,7 +289,7 @@ def sliding_windows(events: DataFrame) -> DataFrame:
             F.count("*").alias("n"),
             # exact bigint cents in the state store (a long slot, not
             # a per-update BigDecimal allocation), widened on output
-            _units_to_double(F.sum(_money_units("value")), 2).alias(
+            units_to_double(F.sum(cents("value")), 2).alias(
                 "total_value"
             ),
         )
@@ -302,7 +312,7 @@ def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
         .groupBy(F.session_window("ts_ts", gap).alias("w"), "user_id")
         .agg(
             F.count("*").alias("n_events"),
-            _units_to_double(F.sum(_money_units("value")), 2).alias(
+            units_to_double(F.sum(cents("value")), 2).alias(
                 "session_value"
             ),
         )
@@ -361,17 +371,8 @@ def split_events_fixture(spark: SparkSession, sf_dir: str, parts: int = 4) -> st
 def read_events_stream_split(
     spark: SparkSession, sf_dir: str, parts: int = 4
 ) -> DataFrame:
-    """Streaming scan over the split fixture, one file per micro-batch.
-    Normalized like read_events_stream (ts_us + ts_ts)."""
-    path = split_events_fixture(spark, sf_dir, parts)
-    schema = _events_stream_schema(spark, os.path.join(path, "part_0.parquet"))
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(path + "/part_*.parquet")
-    )
-    return _normalize_events(raw)
+    """Streaming scan over the split fixture, one file per micro-batch."""
+    return _read_landing_events(spark, split_events_fixture(spark, sf_dir, parts))
 
 
 def split_embeddings_fixture(
@@ -434,15 +435,7 @@ def dup_events_fixture(spark: SparkSession, sf_dir: str) -> str:
 def read_events_stream_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming scan over the duplicated fixture, one file per
     micro-batch (4 batches, every event arriving exactly twice)."""
-    path = dup_events_fixture(spark, sf_dir)
-    schema = _events_stream_schema(spark, os.path.join(path, "part_0.parquet"))
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(path + "/part_*.parquet")
-    )
-    return _normalize_events(raw)
+    return _read_landing_events(spark, dup_events_fixture(spark, sf_dir))
 
 
 def stream_dedup_totals(events: DataFrame) -> DataFrame:
@@ -458,10 +451,7 @@ def stream_dedup_totals(events: DataFrame) -> DataFrame:
     retention knob is the only difference."""
     return (
         events.dropDuplicates(["event_id"])
-        .withColumn(
-            "cents",
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"),
-        )
+        .withColumn("cents", cents("value"))
         .groupBy("event_type")
         .agg(
             F.count("*").alias("n_events"),
@@ -482,10 +472,7 @@ def stream_dedup_totals_watermarked(events: DataFrame) -> DataFrame:
     return (
         events.withWatermark("ts_ts", "90 days")
         .dropDuplicatesWithinWatermark(["event_id"])
-        .withColumn(
-            "cents",
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"),
-        )
+        .withColumn("cents", cents("value"))
         .groupBy("event_type")
         .agg(
             F.count("*").alias("n_events"),
@@ -538,7 +525,6 @@ def doc_ingest(docs: DataFrame, chunk_size: int, overlap: int) -> DataFrame:
     fixed chunking (narrow flatMap) → per-doc chunk stats + md5-bucket
     content checksum. Stateless except the final aggregation."""
     from ..operators.chunker import fixed_chunks
-    from ..operators.dedup import md5_bucket
 
     chunks = docs.select(
         "doc_id",
@@ -558,25 +544,11 @@ def doc_ingest(docs: DataFrame, chunk_size: int, overlap: int) -> DataFrame:
 JOIN_WATERMARK = "60 days"
 
 
-def stream_stream_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream interval join: the signup stream joined to the
-    purchase stream per user, keeping purchases inside [signup, signup +
-    24h). Both sides are REAL streaming sources over the 4-file split
-    fixture (maxFilesPerTrigger=1), so matches routinely pair rows from
-    DIFFERENT micro-batches — the join state store is doing real work.
-
-    Watermarks + the event-time range predicate are what BOUND that
-    state: each side can evict rows older than (max event time -
-    watermark - range). The fixture splits by event_id hash, not time,
-    so every micro-batch spans the whole month and a short watermark
-    would *drop* late rows mid-replay — the 60-day setting covers the
-    fixture's 30-day span, trading state size for zero drops, which is
-    exactly the knob a production deployment tunes the other way."""
-    def _src() -> DataFrame:
-        return read_events_stream_split(spark, sf_dir)
-
+def _purchase_interval_join(spark: SparkSession, path: str, how: str) -> DataFrame:
+    """Signups joined to purchases of the same user within [signup,
+    signup + 24h), each side its own stream over the landing dir."""
     signups = (
-        _src()
+        _read_landing_events(spark, path)
         .filter(F.col("event_type") == "signup")
         .select(
             F.col("user_id").alias("s_user"), F.col("ts_ts").alias("s_ts")
@@ -584,7 +556,7 @@ def stream_stream_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("s_ts", JOIN_WATERMARK)
     )
     purchases = (
-        _src()
+        _read_landing_events(spark, path)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user"),
@@ -599,14 +571,32 @@ def stream_stream_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s_user = p_user AND p_ts >= s_ts"
             " AND p_ts < s_ts + INTERVAL 24 HOURS"
         ),
+        how,
     )
     return joined.select(
         F.col("s_user").alias("user_id"),
         F.unix_micros("s_ts").alias("signup_us"),
         F.unix_micros("p_ts").alias("purchase_us"),
-        F.floor(F.col("value") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("purchase_cents"),
+        cents("value").alias("purchase_cents"),
+    )
+
+
+def stream_stream_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream interval join: the signup stream joined to the
+    purchase stream per user, keeping purchases inside [signup, signup +
+    24h). Both sides are REAL streaming sources over the 4-file split
+    fixture (maxFilesPerTrigger=1), so matches routinely pair rows from
+    DIFFERENT micro-batches — the join state store is doing real work.
+
+    Watermarks + the event-time range predicate are what BOUND that
+    state: each side can evict rows older than (max event time -
+    watermark - range). The fixture splits by event_id hash, not time,
+    so every micro-batch spans the whole month and a short watermark
+    would *drop* late rows mid-replay — the 60-day setting covers the
+    fixture's 30-day span, trading state size for zero drops, which is
+    exactly the knob a production deployment tunes the other way."""
+    return _purchase_interval_join(
+        spark, split_events_fixture(spark, sf_dir), "inner"
     )
 
 
@@ -672,20 +662,6 @@ def heartbeat_split_events_fixture(spark: SparkSession, sf_dir: str) -> str:
     return out
 
 
-def read_events_stream_hb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming scan over the heartbeat fixture, one file per
-    micro-batch (HB_PARTS real batches + the final heartbeat batch)."""
-    path = heartbeat_split_events_fixture(spark, sf_dir)
-    schema = _events_stream_schema(spark, os.path.join(path, "part_0.parquet"))
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(path + "/part_*.parquet")
-    )
-    return _normalize_events(raw)
-
-
 def stream_stream_purchase_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER stream-stream interval join: every signup, with its
     within-24h purchases OR a null-extended row if none ever arrives.
@@ -711,42 +687,8 @@ def stream_stream_purchase_left_join(spark: SparkSession, sf_dir: str) -> DataFr
     watermark tracker and the outer state never expires. The sentinel
     must ride through the streaming plan and be dropped AFTER the
     sink drains (see q_stream_outer_join)."""
-    def _src() -> DataFrame:
-        return read_events_stream_hb(spark, sf_dir)
-
-    signups = (
-        _src()
-        .filter(F.col("event_type") == "signup")
-        .select(
-            F.col("user_id").alias("s_user"), F.col("ts_ts").alias("s_ts")
-        )
-        .withWatermark("s_ts", JOIN_WATERMARK)
-    )
-    purchases = (
-        _src()
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts_ts").alias("p_ts"),
-            F.col("value"),
-        )
-        .withWatermark("p_ts", JOIN_WATERMARK)
-    )
-    joined = signups.join(
-        purchases,
-        F.expr(
-            "s_user = p_user AND p_ts >= s_ts"
-            " AND p_ts < s_ts + INTERVAL 24 HOURS"
-        ),
-        "left_outer",
-    )
-    return joined.select(
-        F.col("s_user").alias("user_id"),
-        F.unix_micros("s_ts").alias("signup_us"),
-        F.unix_micros("p_ts").alias("purchase_us"),
-        F.floor(F.col("value") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("purchase_cents"),
+    return _purchase_interval_join(
+        spark, heartbeat_split_events_fixture(spark, sf_dir), "left_outer"
     )
 
 
@@ -802,12 +744,4 @@ def late_events_fixture(spark: SparkSession, sf_dir: str) -> str:
 def read_events_stream_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming scan over the late fixture, one file per micro-batch
     (2 batches: on-time bulk, then the weeks-late stragglers)."""
-    path = late_events_fixture(spark, sf_dir)
-    schema = _events_stream_schema(spark, os.path.join(path, "part_0.parquet"))
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(path + "/part_*.parquet")
-    )
-    return _normalize_events(raw)
+    return _read_landing_events(spark, late_events_fixture(spark, sf_dir))

@@ -196,13 +196,14 @@ def test_lambda_capture_guard_catches_reinlined_buckets(spark):
     form is not."""
     from pyspark.sql import functions as F
 
+    from etl_ai_assistent_spark.functions import md5_bucket
     from etl_ai_assistent_spark.functions import text as TX
     from etl_ai_assistent_spark.operators import embedder as E
 
     df = spark.createDataFrame([("a b a",)], "text string")
     assert not lambda_captures(df.select(E.hash_embed_expr("text", 8)))
     buckets = F.transform(
-        TX.tokens(F.lower(F.col("text"))), lambda t: E.token_bucket_expr(t, 8)
+        TX.tokens(F.lower(F.col("text"))), lambda t: md5_bucket(t) % 8
     )
     tf = F.transform(
         F.sequence(F.lit(0), F.lit(7)),
