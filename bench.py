@@ -466,10 +466,10 @@ def measure(spark, builders: dict, runs: int) -> dict[str, dict]:
     builder) as the min of `runs` noop-write runs, the last one traced.
 
     Returns the artifact's per-query sections, each keyed by query name:
-    queries, runs_min_mean_max, runs_actual, cold, layers,
-    storm_telemetry, storm_residual and errors. A failed traced run is
-    re-run once untraced, so a measurement failure leaves only `layers`
-    missing; a query that fails untraced too lands in `errors`."""
+    queries, runs_min_mean_max, runs_actual, cold (the first run),
+    layers, storm_telemetry, storm_residual and errors. A failed traced
+    run is re-run once untraced, so a measurement failure leaves only
+    `layers` missing; a query that fails untraced too lands in `errors`."""
     out: dict[str, dict] = {
         k: {} for k in ("queries", "runs_min_mean_max", "runs_actual", "cold",
                         "layers", "storm_telemetry", "storm_residual", "errors")
@@ -560,8 +560,7 @@ def measure(spark, builders: dict, runs: int) -> dict[str, dict]:
                 round(max(run_times), 3),
             ]
             out["runs_actual"][name] = len(run_times)
-            if name in INDEX_COLD:
-                out["cold"][name] = round(run_times[0], 3)
+            out["cold"][name] = round(run_times[0], 3)
             if layers is not None:
                 out["layers"][name] = layers
         except Exception as exc:  # noqa: BLE001 — report, don't crash
@@ -633,7 +632,8 @@ def main() -> None:
     except Exception:  # noqa: BLE001 — reconciliation is best-effort
         ref_queries = {}
     m = measure(spark, {n: functools.partial(qs[n], spark, SF_DIR) for n in names}, runs)
-    timings, cold, storm_residual = m["queries"], m["cold"], m["storm_residual"]
+    timings, storm_residual = m["queries"], m["storm_residual"]
+    cold = {n: t for n, t in m["cold"].items() if n in INDEX_COLD}
 
     out = {
         "metric": "headline_query_total",

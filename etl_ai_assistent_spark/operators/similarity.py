@@ -126,22 +126,20 @@ def ivf_topk(
     items: DataFrame,
     query: Sequence[float],
     *,
+    cents: DataFrame,
     k: int = 5,
     nprobe: int = 1,
     threshold: float = -1.0,
-    cents: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-style approximate top-k: probe the nprobe nearest centroids,
     exact-search only their clusters (cluster id `label`).
 
     At 100 TB the items table is written partitioned by cluster id, so the
     semi-join on cluster becomes partition pruning — the scan reads only
-    nprobe/nlist of the data. Recall is tunable via nprobe. ``cents``
-    lets the caller supply the (cached) centroid table — it is the IVF
-    coarse index, an offline build artifact, not per-serve work.
+    nprobe/nlist of the data. Recall is tunable via nprobe. ``cents`` is
+    the caller's (cached) centroid table, e.g. `centroids(items)` — the
+    IVF coarse index, an offline build artifact, not per-serve work.
     """
-    if cents is None:
-        cents = centroids(items)
     probed = (
         cents.withColumn("cscore", V.cosine("centroid", query))
         .orderBy(F.desc("cscore"))

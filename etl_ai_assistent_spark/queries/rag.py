@@ -29,7 +29,6 @@ integers, and hit@5 / MRR match exactly.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -144,43 +143,19 @@ def _publish_bucketed_tf(
     spark: SparkSession, path: str, build_tf
 ) -> DataFrame:
     """Publish a (doc_id, tok_h, c) posting table bucketed+sorted by
-    doc_id under the store contract (atomic temp-dir publish, validated
-    adoption) and register it as a bucketed catalog table named after
-    the store key. `build_tf` is a thunk returning the DataFrame to
-    materialize — called only when this process actually builds (an
-    adopting app pays catalog DDL, never the tf lineage). The name
-    carries a hash of the family dir, so a session whose store root
-    changes publishes and registers the new root's table instead of
-    serving the old one."""
-    root_h = hashlib.md5(os.path.dirname(path).encode()).hexdigest()[:8]
-    name = f"doc_tf_{os.path.basename(path)}_{root_h}"
-    if spark.catalog.tableExists(name):
-        return spark.table(name)
-
-    def build(tmp: str) -> None:
-        tf = build_tf().repartition(POSTING_BUCKETS, F.col("doc_id"))
-        tmp_name = f"{name}_build_{os.path.basename(tmp).split('-')[-1]}"
-        (
-            tf.write.format("parquet")
-            .option("path", tmp)
-            .bucketBy(POSTING_BUCKETS, "doc_id")
-            .sortBy("doc_id")
-            .mode("overwrite")
-            .saveAsTable(tmp_name)
-        )
-        spark.sql(f"DROP TABLE {tmp_name}")  # external: files stay
-
-    ST.publish(
+    doc_id under the store contract and serve it as a bucketed catalog
+    table (store.publish_bucketed). `build_tf` is a thunk returning the
+    DataFrame to materialize."""
+    return ST.publish_bucketed(
+        spark,
         path,
-        build,
-        validate=lambda p: ST.has_success(p) and ST.parquet_rows(p) > 0,
+        "doc_tf",
+        lambda: build_tf().repartition(POSTING_BUCKETS, F.col("doc_id")),
+        "doc_id BIGINT, tok_h BIGINT, c BIGINT",
+        "doc_id",
+        POSTING_BUCKETS,
+        lambda p: ST.has_success(p) and ST.parquet_rows(p) > 0,
     )
-    spark.sql(
-        f"CREATE TABLE {name} (doc_id BIGINT, tok_h BIGINT, c BIGINT)"
-        f" USING PARQUET CLUSTERED BY (doc_id) SORTED BY (doc_id)"
-        f" INTO {POSTING_BUCKETS} BUCKETS LOCATION '{path}'"
-    )
-    return spark.table(name)
 
 
 def posting_store_path(sf_dir: str) -> str:

@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import io
+from .. import store as ST
 from ..functions import cents, md5_bucket, units_to_double
 from ..functions import text as TX
 from ..operators import sketch as SK
@@ -210,7 +211,17 @@ def q_countmin_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- bucketed co-located join (operators/bucketing.py) ----------------------------------
+# --- bucketed co-located join -----------------------------------------------------------
+
+# bucketBy(n, key) writes each table pre-hash-partitioned on the join
+# key; two tables bucketed the same way join with ZERO exchange. The
+# write pays the shuffle once per source-table version (store contract:
+# fingerprinted key, atomic publish, validated adoption); a fresh
+# session re-registers the published files via DDL, no rewrite.
+JOIN_BUCKETS = 16
+# _v2: fingerprinted key + atomic publish (FIXTURES.md rule)
+BUCKETED_FAMILY = "spark_graft_bucketed_v2"
+
 
 @register(
     "q_bucketed_join",
@@ -230,11 +241,27 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (asserted by tests/test_partitioning.py::test_bucketed_join_no_exchange).
     At 100 TB this is the difference between re-shuffling both fact
     tables nightly and reading co-located buckets. The oracle is the
-    plain unbucketed join — physical design must not change a row."""
-    from ..operators.bucketing import bucketed_table
+    plain unbucketed join — physical design must not change a row.
+    sortBy(key) inside each bucket lets the join skip its sort too."""
 
-    o = bucketed_table(spark, sf_dir, "orders", "o_orderkey")
-    li = bucketed_table(spark, sf_dir, "lineitem", "l_orderkey")
+    def bucketed(table: str, key: str) -> DataFrame:
+        path = ST.corpus_path(
+            BUCKETED_FAMILY, sf_dir, table, f"_{JOIN_BUCKETS}", name_table=True
+        )
+        return ST.publish_bucketed(
+            spark,
+            path,
+            "bkt",
+            lambda: io.load_table(spark, sf_dir, table),
+            None,
+            key,
+            JOIN_BUCKETS,
+            lambda p: ST.has_success(p)
+            and ST.parquet_rows(p) == ST.table_rows(sf_dir, table),
+        )
+
+    o = bucketed("orders", "o_orderkey")
+    li = bucketed("lineitem", "l_orderkey")
     return (
         o.select("o_orderkey", "o_orderpriority")
         .join(li.select("l_orderkey", "l_extendedprice"),

@@ -784,26 +784,20 @@ def trigram_posting_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Docs shorter than 3 chars carry no trigrams and can't contain a
     ≥3-char needle, so excluding them keeps pruning lossless.
 
-    Publication follows the store contract (store.publish): the
-    bucketed write lands in a temp directory (via a throwaway external
-    table whose DROP leaves the files) and one atomic rename publishes
+    Publication follows the store contract (store.publish_bucketed):
+    the build lands in a temp directory and one atomic rename publishes
     it — racing builders converge on one artifact, readers never see a
     half-replaced directory (r9 verdict #2). Adoption re-validates the
     marker + a footer row count before the DDL registers the files."""
-    import os
-
     path = ST.corpus_path(
         TRIGRAM_FAMILY, sf_dir, "documents", f"_{TRIGRAM_BUCKETS}"
     )
-    name = f"trigram_posting_{os.path.basename(path)}"
-    if spark.catalog.tableExists(name):
-        return spark.table(name)
 
-    def build(tmp: str) -> None:
+    def build() -> DataFrame:
         docs = io.load_table(spark, sf_dir, "documents").select(
             "doc_id", F.lower(F.col("text")).alias("t")
         )
-        posting = (
+        return (
             docs.filter(F.length("t") >= 3)
             .select(
                 "doc_id",
@@ -819,30 +813,17 @@ def trigram_posting_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             # bucket's rows → one file per bucket, not files × tasks
             .repartition(TRIGRAM_BUCKETS, F.col("tri"))
         )
-        tmp_name = f"{name}_build_{os.path.basename(tmp).split('-')[-1]}"
-        (
-            posting.write.format("parquet")
-            .option("path", tmp)
-            .bucketBy(TRIGRAM_BUCKETS, "tri")
-            .sortBy("tri")
-            .mode("overwrite")
-            .saveAsTable(tmp_name)
-        )
-        # external table (explicit path): DROP unregisters the name but
-        # leaves the files for publish()'s atomic rename
-        spark.sql(f"DROP TABLE {tmp_name}")
 
-    ST.publish(
+    return ST.publish_bucketed(
+        spark,
         path,
+        "trigram_posting",
         build,
-        validate=lambda p: ST.has_success(p) and ST.parquet_rows(p) > 0,
+        "doc_id BIGINT, tri STRING",
+        "tri",
+        TRIGRAM_BUCKETS,
+        lambda p: ST.has_success(p) and ST.parquet_rows(p) > 0,
     )
-    spark.sql(
-        f"CREATE TABLE {name} (doc_id BIGINT, tri STRING) USING PARQUET"
-        f" CLUSTERED BY (tri) SORTED BY (tri)"
-        f" INTO {TRIGRAM_BUCKETS} BUCKETS LOCATION '{path}'"
-    )
-    return spark.table(name)
 
 
 @register(

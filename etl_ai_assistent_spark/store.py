@@ -36,14 +36,18 @@ adopted (FIXTURES.md "Materialized artifacts"):
 from __future__ import annotations
 
 import glob
+import hashlib
 import os
 import re
 import shutil
 import time
 import uuid
-from typing import Callable
+from typing import TYPE_CHECKING, Callable
 
 import duckdb
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
 
 # seconds a stranger's temp or run dir is presumed live (a racing builder
 # or a running stream) before a gc sweep may remove it
@@ -168,6 +172,58 @@ def publish(
             raise
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def publish_bucketed(
+    spark: SparkSession,
+    path: str,
+    prefix: str,
+    build: Callable[[], DataFrame],
+    columns: str | None,
+    key: str,
+    buckets: int,
+    validate: Callable[[str], bool],
+) -> DataFrame:
+    """Publish the DataFrame `build()` returns at `path`, bucketed and
+    sorted by `key` into `buckets` buckets, and serve it as a bucketed
+    catalog table with the DDL `columns`, or with the published files'
+    own schema when `columns` is None (a schema-read job on first
+    registration). `build` is called only
+    when this process builds: an adopting app pays catalog DDL, never
+    the build lineage. The write lands in `publish`'s temp dir through
+    a throwaway external table whose DROP leaves the files. The table
+    name is `prefix`, the store key and a hash of the family dir, so a
+    session whose store root moves publishes and registers the new
+    root's table instead of serving the old one."""
+    root_h = hashlib.md5(os.path.dirname(path).encode()).hexdigest()[:8]
+    name = f"{prefix}_{os.path.basename(path)}_{root_h}"
+    if spark.catalog.tableExists(name):
+        return spark.table(name)
+
+    def write(tmp: str) -> None:
+        tmp_name = f"{name}_build_{os.path.basename(tmp).split('-')[-1]}"
+        (
+            build().write.format("parquet")
+            .option("path", tmp)
+            .bucketBy(buckets, key)
+            .sortBy(key)
+            .mode("overwrite")
+            .saveAsTable(tmp_name)
+        )
+        spark.sql(f"DROP TABLE {tmp_name}")  # external: files stay
+
+    publish(path, write, validate=validate)
+    if columns is None:
+        columns = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}"
+            for f in spark.read.parquet(path).schema.fields
+        )
+    spark.sql(
+        f"CREATE TABLE {name} ({columns}) USING PARQUET"
+        f" CLUSTERED BY ({key}) SORTED BY ({key})"
+        f" INTO {buckets} BUCKETS LOCATION '{path}'"
+    )
+    return spark.table(name)
 
 
 def gc_versions(

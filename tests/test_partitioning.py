@@ -102,23 +102,12 @@ def test_bucketed_join_no_exchange(spark, sf_small):
     bucket-keyed aggregation must run with ZERO shuffle exchanges (and
     no explicit sort for the SMJ — buckets are pre-sorted). Broadcast is
     disabled so the plan can't dodge the claim."""
-    from etl_ai_assistent_spark.operators.bucketing import bucketed_table
-    from pyspark.sql import functions as F
+    from etl_ai_assistent_spark.queries.scale import q_bucketed_join
 
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        o = bucketed_table(spark, sf_small, "orders", "o_orderkey")
-        li = bucketed_table(spark, sf_small, "lineitem", "l_orderkey")
-        agg = (
-            o.select("o_orderkey", "o_orderpriority")
-            .join(
-                li.select("l_orderkey", "l_extendedprice"),
-                F.col("o_orderkey") == F.col("l_orderkey"),
-            )
-            .groupBy("o_orderkey", "o_orderpriority")
-            .agg(F.count("*").alias("n_items"))
-        )
+        agg = q_bucketed_join(spark, sf_small)
         agg.collect()
         plan = agg._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan

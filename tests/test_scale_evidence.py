@@ -249,9 +249,8 @@ def test_trigram_index_serves_from_disk_store(spark, sf_small):
         assert "sequence(1," not in plan, plan
 
     # catalog loss (fresh app) adopts the files via DDL — no rewrite
-    spark.sql(
-        f"DROP TABLE trigram_posting_{tag}_{n}_{fp}_{TA.TRIGRAM_BUCKETS}"
-    )
+    table = re.search(rf"trigram_posting_{tag}_{n}_{fp}_\w+", plan).group(0)
+    spark.sql(f"DROP TABLE {table}")
     TA.q_trigram_search(spark, sf_small).count()
     assert os.path.getmtime(marker) == mtime, "store was rebuilt"
 
@@ -333,18 +332,21 @@ def test_trend_gate_catches_seeded_violation():
 
 
 @pytest.mark.trend
-def test_scale_trend_decade1_ratios_hold(spark):
+def test_scale_trend_decade1_ratios_hold(spark, monkeypatch):
     """Re-measure the decade-1 ratio for the three cheapest trend
     queries against the replicated sf1 fixture (built on first use,
-    marker-cached). min-of-2 per point, same session, clearCache
-    between — the scale_trend.py protocol in miniature.
+    marker-cached). Each point is bench.measure's min-of-2 in one
+    session, clearCache between — the scale_trend.py protocol in
+    miniature.
 
     Marked `trend` (wall-clock assertions + a 10× fixture build on
     first run): it RUNS by default so the gate stays in-round, but a
     loaded CI host can deselect it with `-m "not trend"` (ADVICE r9)."""
+    import functools
     import os as _os
     import sys
-    import time
+
+    import bench
 
     sys.path.insert(
         0,
@@ -355,21 +357,17 @@ def test_scale_trend_decade1_ratios_hold(spark):
     )
     import scale_trend as ST
 
-    ST.build_fixture()  # idempotent (marker file)
+    # the quiet gate waits on the host's CPU, not on this code
+    monkeypatch.setattr(bench, "_quiet_gate", lambda: 0.0)
+    ST.build_fixture(ST.DECADES[1])  # idempotent (marker file)
 
     from etl_ai_assistent_spark.registry import queries
 
     qs = queries()
     for name in TREND_GATE_BOUNDS:
-        times = {}
+        times = []
         for sf_dir in (ST.SRC, ST.FIXTURE):
-            ts = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                qs[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                ts.append(time.perf_counter() - t0)
-            times[sf_dir] = min(ts)
-            spark.catalog.clearCache()
-        assert_trend_ratio_within(name, times[ST.SRC], times[ST.FIXTURE])
+            m = bench.measure(spark, {name: functools.partial(qs[name], spark, sf_dir)}, runs=2)
+            assert m["errors"] == {}
+            times.append(m["queries"][name])
+        assert_trend_ratio_within(name, *times)

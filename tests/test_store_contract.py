@@ -179,3 +179,25 @@ def test_store_root_holds_every_fixture(
     families = {os.path.basename(os.path.dirname(p)) for p in published}
     assert FIXTURE_FAMILIES <= families, FIXTURE_FAMILIES - families
     assert all(os.path.isdir(p) for p in published)
+
+
+def test_bucketed_tables_follow_a_store_root_move(
+    spark, sf_small, tmp_path, monkeypatch
+):
+    """The bucketed catalog tables are named per store root: after
+    SPARK_GRAFT_STORE_ROOT moves within one session, the bucketed join
+    and the trigram search publish their stores under the new root and
+    read no file from the old one."""
+    old, new = f"{tmp_path}/a/", f"{tmp_path}/b/"
+    qs = queries()
+    for root in (old, new):
+        monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", root)
+        files = [
+            f
+            for q in ("q_bucketed_join", "q_trigram_search")
+            for f in qs[q](spark, sf_small).inputFiles()
+        ]
+        for family in ("spark_graft_bucketed_v2", "spark_graft_trigram_store_v2"):
+            assert os.listdir(os.path.join(root, family)), family
+    assert any(new in f for f in files), files
+    assert not any(old in f for f in files), files

@@ -3,7 +3,9 @@
 Usage: python tools/explain_dump.py <outdir> <suffix> q_a,q_b,...
 Builds each query DataFrame at $SPARK_GRAFT_SF_DIR (default sf0.1), writes
 the formatted physical plan under <outdir> (outside the repo: plans are
-diffed, not committed) and prints one JSON line per query with its
+diffed, not committed; `plan_id=<n>` is masked, since plan ids count
+every plan the session built and differ between two runs of one
+commit) and prints one JSON line per query with its
 docbench.trace.plan_shape counts (Exchanges, SortMergeJoins,
 BroadcastHashJoins) — the plan-shape evidence for a change.
 
@@ -17,6 +19,7 @@ from __future__ import annotations
 import io
 import json
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -92,7 +95,7 @@ def main() -> None:
                 df.explain("formatted")
             path = os.path.join(outdir, f"{name}_{suffix}.txt")
             with open(path, "w") as f:
-                f.write(note + buf.getvalue())
+                f.write(note + re.sub(r"plan_id=\d+", "plan_id=<n>", buf.getvalue()))
             rec = {"query": name, **trace.plan_shape(df), "path": path}
         except Exception as exc:  # noqa: BLE001 — keep dumping the rest
             rec = {"query": name, "error": f"{type(exc).__name__}: {exc}"[:500]}

@@ -7,7 +7,9 @@ builds an sf1-equivalent dataset by replicating the sf0.1 tables 10×
 with per-replica key offsets (DuckDB, one-time, a fixture under the
 store root with a marker file), then times a family-spanning subset of the headline
 queries at all three scales and writes SCALE_TREND.json, committed
-beside the bench artifact BENCH_LOCAL.json.
+beside the bench artifact BENCH_LOCAL.json. bench.measure times every
+point: the min of RUNS runs, the first as `cold_<sf>`, and per sf label
+the runs' [min, mean, max], storm flags and the traced run's `layers`.
 
 Replication preserves per-entity cardinality (orders per customer,
 events per user, text per doc): every key column gets +rep·STRIDE, so
@@ -22,27 +24,34 @@ fixture's pathology, not the plan. Their scale evidence is the measured
 candidate-fraction tests. q_curation_pipeline embeds semdedup; same
 exclusion.
 
-Usage: python tools/scale_trend.py   (writes SCALE_TREND.json; ~10 min)
+Usage: python tools/scale_trend.py [--sf10 | --sf100] [--only q_a,q_b,...]
+(decade 1, ~10 min, unless a flag names a higher one). Rows and sf
+labels a run does not time carry over in SCALE_TREND.json.
 Must not run concurrently with another Spark session on this host.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import sys
-import time
+from typing import NamedTuple
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+import bench  # noqa: E402
 from etl_ai_assistent_spark.store import store_root  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
+SF001 = os.path.join(os.path.dirname(SRC), "sf0.01")
 SCALE_ROOT = os.path.join(store_root(), "spark_graft_scale")
 FIXTURE = os.path.join(SCALE_ROOT, "sf1_v1")
 FIXTURE10 = os.path.join(SCALE_ROOT, "sf10_v1")
+FIXTURE100 = os.path.join(SCALE_ROOT, "sf100_v1")
 REPS = 10
+RUNS = 3  # bench.py's default run count
 STRIDE = 10_000_000  # > every key's max at sf0.1 (100 reps stay < 1e9)
 
 # (table, [key columns to offset per replica])
@@ -208,12 +217,6 @@ TREND = [
     "q_importance_resample",
 ]
 
-SF_DIRS = {
-    "0.01": "/root/testdata/sf0.01",
-    "0.1": SRC,
-    "1.0": FIXTURE,
-}
-
 # The second decade up (sf10-equivalent, 100 replicas — 60M lineitem /
 # 10M events / 500k docs / 200k vectors): a scan/retrieval/serving
 # subset, timed with --sf10 after the base trend exists. Two measured
@@ -248,98 +251,6 @@ TREND10 = [
     "q_importance_resample",
 ]
 
-
-def build_fixture(
-    dst_dir: str = FIXTURE, reps: int = REPS, tables=None
-) -> None:
-    marker = os.path.join(dst_dir, "_SUCCESS")
-    if os.path.exists(marker):
-        return
-    import duckdb
-
-    os.makedirs(dst_dir, exist_ok=True)
-    con = duckdb.connect()
-    for table, keys in tables if tables is not None else TABLES:
-        src = os.path.join(SRC, f"{table}.parquet")
-        dst = os.path.join(dst_dir, f"{table}.parquet")
-        if not keys:  # fixed-size dims: shared across replicas
-            con.execute(
-                f"COPY (SELECT * FROM read_parquet('{src}'))"
-                f" TO '{dst}' (FORMAT PARQUET)"
-            )
-            continue
-        rel = con.sql(f"SELECT * FROM read_parquet('{src}') LIMIT 0")
-        cols = ", ".join(
-            f"(t.{c} + r.rep * {STRIDE})::BIGINT AS {c}" if c in keys else f"t.{c}"
-            for c in rel.columns
-        )
-        con.execute(
-            f"COPY (SELECT {cols}"
-            f" FROM read_parquet('{src}') t"
-            f" CROSS JOIN (SELECT unnest(range({reps})) AS rep) r)"
-            f" TO '{dst}' (FORMAT PARQUET)"
-        )
-    con.close()
-    open(marker, "w").write("ok\n")
-
-
-def run_sf10(only: list[str] | None = None) -> None:
-    """Append the 100×-of-sf0.1 point to an existing SCALE_TREND.json.
-    `only` restricts to a subset of TREND10 (e.g. newly added queries)
-    so existing measured points aren't re-timed."""
-    path = os.path.join(REPO, "SCALE_TREND.json")
-    with open(path) as f:
-        trend = json.load(f)
-    build_fixture(FIXTURE10, reps=100)
-
-    from etl_ai_assistent_spark.registry import queries
-    from etl_ai_assistent_spark.session import get_spark
-
-    # shuffle width scales with the data, as a cluster submit would:
-    # 256 initial partitions keeps the 60M-row posting/join shuffles
-    # from spilling through the local 32-wide default (measured:
-    # q_rag_fusion 240 s → 79 s, restoring exact linearity)
-    spark = get_spark(
-        "scale-trend-sf10",
-        driver_memory="64g",
-        extra_conf={
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "256"
-        },
-    )
-    # same warmup as bench.py: JVM + parquet footers + python workers,
-    # so the first trend query doesn't absorb session spin-up
-    spark.read.parquet(os.path.join(FIXTURE10, "region.parquet")).count()
-    qs = queries()
-    runs = int(os.environ.get("SPARK_GRAFT_TREND_RUNS", "2"))
-    for name in only if only else TREND10:
-        row = trend["queries"].setdefault(name, {})
-        ts = []
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            qs[name](spark, FIXTURE10).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            ts.append(time.perf_counter() - t0)
-        row["10.0"] = round(min(ts), 3)
-        if "1.0" in row:
-            row["ratio_10x_decade2"] = round(
-                row["10.0"] / max(row["1.0"], 1e-9), 2
-            )
-        # freshly measured at the current code — clear any carry-over
-        # staleness stamp main() may have set (ADVICE r9)
-        row.pop("decade2_carried_forward", None)
-        spark.catalog.clearCache()
-        print(name, row, flush=True)
-    trend["sf_rows_lineitem"]["10.0"] = 60_000_000
-    trend["findings"] = FINDINGS
-    with open(path, "w") as f:
-        json.dump(trend, f, indent=1)
-    print("appended sf10 points to SCALE_TREND.json", flush=True)
-    spark.stop()
-
-
-FIXTURE100 = os.path.join(SCALE_ROOT, "sf100_v1")
-
 # The THIRD decade (sf100-equivalent: 1000 replicas of sf0.1 — 2M
 # vectors / 5M documents; the 600M-lineitem scale point, r10 verdict
 # #8). Only the serving ladder runs here — the headline scale claim is
@@ -355,146 +266,157 @@ TREND100 = [
 ]
 TABLES100 = [("documents", ["doc_id"]), ("embeddings", ["vec_id"])]
 
+# ratio key -> (numerator, denominator) sf labels. Linear plans land at
+# ≤ ~10–12 for 10× rows (fixed per-query overhead amortizes away);
+# anything well above has a named cause in FINDINGS or is a regression.
+RATIOS = {
+    "ratio_mid": ("0.1", "0.01"),
+    "ratio_10x": ("1.0", "0.1"),
+    "ratio_10x_decade2": ("10.0", "1.0"),
+    "ratio_10x_decade3": ("100.0", "10.0"),
+}
 
-def run_sf100(only: list[str] | None = None) -> None:
-    """Append the 1000×-of-sf0.1 serving point to SCALE_TREND.json.
-    Run 1 of each query pays the once-per-corpus store build (ANN
-    codebooks/codes, trigram postings) — recorded separately as
-    `cold_100.0` so the build-vs-serve split at this scale is evidence
-    too; the timed point is the warm store-served run."""
-    path = os.path.join(REPO, "SCALE_TREND.json")
-    with open(path) as f:
-        trend = json.load(f)
-    build_fixture(FIXTURE100, reps=1000, tables=TABLES100)
+# bench.measure's per-query sections a row keeps, each keyed by sf label
+SECTIONS = ("runs_min_mean_max", "runs_actual", "layers", "storm_telemetry",
+            "storm_residual", "errors")
+
+EXCLUDED = (
+    "near-dup/semdedup/curation: replica texts are exact copies —"
+    " candidate density inflates quadratically with replication"
+    " (fixture pathology, not plan shape); their scale evidence is"
+    " tests/test_scale_evidence.py's measured candidate fractions"
+)
+
+
+class Decade(NamedTuple):
+    points: dict[str, str]  # sf label -> data dir; the last is the fixture
+    replicas: int  # copies of the sf0.1 tables in the fixture
+    tables: list[tuple[str, list[str]]]
+    queries: list[str]
+    shuffle: str | None  # AQE initialPartitionNum (FINDINGS shuffle_width)
+
+
+# --sf10 and --sf100 time their fixture alone; its ratio is taken
+# against the decade below's committed point.
+DECADES = {
+    1: Decade({"0.01": SF001, "0.1": SRC, "1.0": FIXTURE}, REPS, TABLES, TREND, None),
+    2: Decade({"10.0": FIXTURE10}, 100, TABLES, TREND10, "256"),
+    3: Decade({"100.0": FIXTURE100}, 1000, TABLES100, TREND100, "256"),
+}
+
+
+def build_fixture(d: Decade) -> None:
+    """Replicate the sf0.1 tables d.replicas× into the decade's fixture
+    dir, once (marker file)."""
+    dst_dir = list(d.points.values())[-1]
+    marker = os.path.join(dst_dir, "_SUCCESS")
+    if os.path.exists(marker):
+        return
+    import duckdb
+
+    os.makedirs(dst_dir, exist_ok=True)
+    con = duckdb.connect()
+    for table, keys in d.tables:
+        src = os.path.join(SRC, f"{table}.parquet")
+        dst = os.path.join(dst_dir, f"{table}.parquet")
+        reps = d.replicas if keys else 1  # fixed-size dims: shared across replicas
+        rel = con.sql(f"SELECT * FROM read_parquet('{src}') LIMIT 0")
+        cols = ", ".join(
+            f"(t.{c} + r.rep * {STRIDE})::BIGINT AS {c}" if c in keys else f"t.{c}"
+            for c in rel.columns
+        )
+        con.execute(
+            f"COPY (SELECT {cols}"
+            f" FROM read_parquet('{src}') t"
+            f" CROSS JOIN (SELECT unnest(range({reps})) AS rep) r)"
+            f" TO '{dst}' (FORMAT PARQUET)"
+        )
+    con.close()
+    open(marker, "w").write("ok\n")
+
+
+def _record(row: dict, label: str, m: dict, name: str) -> None:
+    """Store `name`'s point at `label` from bench.measure's result `m`:
+    the min under the label, the first run under cold_<label>, and each
+    of SECTIONS keyed by label. A failed query keeps only its error."""
+    for key, section in ((label, "queries"), (f"cold_{label}", "cold")):
+        row.pop(key, None)
+        if name in m[section]:
+            row[key] = m[section][name]
+    for section in SECTIONS:
+        by_label = row.pop(section, {})
+        by_label.pop(label, None)
+        if name in m[section]:
+            by_label[label] = m[section][name]
+        if by_label:
+            row[section] = by_label
+
+
+def run(decade: int, only: list[str] | None = None) -> None:
+    """Time the decade's queries (or `only`) at each of its sf labels
+    and merge the points into SCALE_TREND.json."""
+    d = DECADES[decade]
+    build_fixture(d)
 
     from etl_ai_assistent_spark.registry import queries
     from etl_ai_assistent_spark.session import get_spark
 
-    spark = get_spark(
-        "scale-trend-sf100",
-        driver_memory="64g",
-        extra_conf={
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "256"
-        },
-    )
-    spark.read.parquet(os.path.join(FIXTURE100, "documents.parquet")).count()
-    qs = queries()
-    runs = int(os.environ.get("SPARK_GRAFT_TREND_RUNS", "2"))
-    for name in only if only else TREND100:
-        row = trend["queries"].setdefault(name, {})
-        ts = []
-        for i in range(runs + 1):  # +1: run 0 pays the store build
-            t0 = time.perf_counter()
-            qs[name](spark, FIXTURE100).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            dt = time.perf_counter() - t0
-            if i == 0:
-                row["cold_100.0"] = round(dt, 3)
-            else:
-                ts.append(dt)
-        row["100.0"] = round(min(ts), 3)
-        if "10.0" in row:
-            row["ratio_10x_decade3"] = round(
-                row["100.0"] / max(row["10.0"], 1e-9), 2
-            )
-        spark.catalog.clearCache()
-        print(name, row, flush=True)
-    trend.setdefault("sf_rows_lineitem", {})["100.0"] = 600_000_000
-    trend["d3_fixture"] = (
-        "partial by design: 1000 replicas of documents+embeddings only"
-        " (2M vectors / 5M docs, the sf100-equivalent corpus); the"
-        " serving queries measured at this decade touch no other table"
-    )
-    trend["findings"] = FINDINGS
-    with open(path, "w") as f:
-        json.dump(trend, f, indent=1)
-    print("appended sf100 points to SCALE_TREND.json", flush=True)
-    spark.stop()
-
-
-def main(only: list[str] | None = None) -> None:
-    build_fixture()
-
-    from etl_ai_assistent_spark.registry import queries
-    from etl_ai_assistent_spark.session import get_spark
-
-    spark = get_spark("scale-trend", driver_memory="64g")
+    # bench.py's stage retention, so the traced run's window fits
+    spark = get_spark("scale-trend", driver_memory="64g",
+                      extra_conf={"spark.ui.retainedStages": "2000"})
+    if d.shuffle:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", d.shuffle)
     # schema sanity: the DuckDB-written fixture must read back with the
     # ORIGINAL Spark schema (TIMESTAMP_NTZ etc.) or timings measure a
     # different query
-    for table, _ in TABLES:
-        a = spark.read.parquet(os.path.join(SRC, f"{table}.parquet")).schema
-        b = spark.read.parquet(os.path.join(FIXTURE, f"{table}.parquet")).schema
-        assert [
-            (f.name, f.dataType.simpleString()) for f in a
-        ] == [
-            (f.name, f.dataType.simpleString()) for f in b
-        ], f"{table}: fixture schema drifted: {a} vs {b}"
+    fixture = list(d.points.values())[-1]
+    for table, _ in d.tables:
+        a, b = (
+            [(f.name, f.dataType.simpleString())
+             for f in spark.read.parquet(os.path.join(p, f"{table}.parquet")).schema]
+            for p in (SRC, fixture)
+        )
+        assert a == b, f"{table}: fixture schema drifted: {a} vs {b}"
+    # warm the JVM and parquet footers: the first point skips spin-up
+    spark.read.parquet(os.path.join(fixture, "documents.parquet")).count()
 
+    path = os.path.join(REPO, "SCALE_TREND.json")
+    trend: dict = {}
+    if os.path.exists(path):
+        with open(path) as f:
+            trend = json.load(f)
+    rows = trend.setdefault("queries", {})
     qs = queries()
-    runs = int(os.environ.get("SPARK_GRAFT_TREND_RUNS", "2"))
-    # keep previously measured decade-2 points: re-running decade 1
-    # must not silently drop the sf10 evidence
-    prior: dict[str, dict] = {}
-    trend_path = os.path.join(REPO, "SCALE_TREND.json")
-    if os.path.exists(trend_path):
-        with open(trend_path) as f:
-            prior = json.load(f).get("queries", {})
-    # --only re-measures a subset (e.g. after a plan rewrite) without
-    # re-timing — or dropping — the rest; untouched queries carry over
-    result: dict[str, dict] = {n: dict(r) for n, r in prior.items()} if only else {}
-    for name in only if only else TREND:
-        row: dict[str, float] = {}
-        for sf_label, sf_dir in SF_DIRS.items():
-            ts = []
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                qs[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                ts.append(time.perf_counter() - t0)
-            row[sf_label] = round(min(ts), 3)
-            spark.catalog.clearCache()
-        # the headline ratio: 10× rows from sf0.1 → sf1. Linear plans
-        # land ≤ ~10–12 (fixed per-query overhead amortizes away);
-        # anything well above has a named cause or is a regression.
-        row["ratio_10x"] = round(row["1.0"] / max(row["0.1"], 1e-9), 2)
-        row["ratio_mid"] = round(row["0.1"] / max(row["0.01"], 1e-9), 2)
-        old = prior.get(name, {})
-        if "10.0" in old:
-            # decade-2 points are expensive (run_sf10) and re-used
-            # across decade-1 refreshes — stamp the carry-over so a
-            # reader can tell the sf10 timing may predate the current
-            # code (ADVICE r9; run_sf10 clears the flag on re-measure)
-            row["10.0"] = old["10.0"]
-            row["ratio_10x_decade2"] = round(
-                row["10.0"] / max(row["1.0"], 1e-9), 2
-            )
+    names = only or d.queries
+    for n in names:
+        row = rows.setdefault(n, {})
+        for label, sf_dir in d.points.items():
+            m = bench.measure(spark, {n: functools.partial(qs[n], spark, sf_dir)}, RUNS)
+            _record(row, label, m, n)
+        for ratio, (num, den) in RATIOS.items():
+            row.pop(ratio, None)
+            if num in row and den in row:
+                row[ratio] = round(row[num] / max(row[den], 1e-9), 2)
+        # a decade-2 point kept across a decade-1 re-time may predate
+        # the current code; re-timing decade 2 clears the stamp
+        if "1.0" in d.points and "10.0" in row:
             row["decade2_carried_forward"] = True
-        result[name] = row
-        print(name, row, flush=True)
-
-    out = {
-        "built_from": SRC,
-        "replicas": REPS,
-        "runs_per_point": runs,
-        "findings": FINDINGS,
-        "sf_rows_lineitem": (
-            {"0.01": 60_000, "0.1": 600_000, "1.0": 6_000_000, "10.0": 60_000_000}
-            if any("10.0" in r for r in result.values())
-            else {"0.01": 60_000, "0.1": 600_000, "1.0": 6_000_000}
-        ),
-        "excluded": (
-            "near-dup/semdedup/curation: replica texts are exact copies —"
-            " candidate density inflates quadratically with replication"
-            " (fixture pathology, not plan shape); their scale evidence is"
-            " tests/test_scale_evidence.py's measured candidate fractions"
-        ),
-        "queries": result,
-    }
-    with open(os.path.join(REPO, "SCALE_TREND.json"), "w") as f:
-        json.dump(out, f, indent=1)
+        if "10.0" in d.points:
+            row.pop("decade2_carried_forward", None)
+        print(n, {k: v for k, v in row.items() if k not in SECTIONS}, flush=True)
+    # lineitem rows per timed scale (the label names the scale: the
+    # partial sf100 fixture holds no lineitem)
+    labels = [label for dec in DECADES.values() for label in dec.points]
+    trend.update(
+        built_from=SRC, replicas=REPS, runs_per_point=RUNS, findings=FINDINGS,
+        sf_rows_lineitem={
+            label: round(float(label) * 6_000_000)
+            for label in labels if any(label in r for r in rows.values())
+        },
+        excluded=EXCLUDED,
+    )
+    with open(path, "w") as f:
+        json.dump(trend, f, indent=1)
     print("wrote SCALE_TREND.json", flush=True)
     spark.stop()
 
@@ -503,9 +425,4 @@ if __name__ == "__main__":
     only = None
     if "--only" in sys.argv:
         only = sys.argv[sys.argv.index("--only") + 1].split(",")
-    if "--sf100" in sys.argv:
-        run_sf100(only)
-    elif "--sf10" in sys.argv:
-        run_sf10(only)
-    else:
-        main(only)
+    run(3 if "--sf100" in sys.argv else 2 if "--sf10" in sys.argv else 1, only)
