@@ -35,6 +35,11 @@ Exactness: results are bit-identical to the Column form's.
   (BIGINT), the type of the integer-lattice vectors it meets
   (operators/kmeans.py).
 
+The ``*_duckdb`` functions return the DuckDB oracle text of the same
+folds over SQL operands (an ``*_sql`` name here is Spark SQL text):
+the double products summed left to right by ``list_reduce``, the
+integer squared L2 by ``list_sum``.
+
 Higher-order functions (zip_with/aggregate lambdas) evaluate
 INTERPRETED on the JVM — they are not whole-stage-codegen'd — and a
 Column captured inside a lambda is evaluated again per array element.
@@ -107,6 +112,31 @@ def dist2_sql(a: Operand, b: Operand) -> str:
         f"aggregate(zip_with({_operand(a)}, {_operand(b)},"
         " (x, y) -> (x - y) * (x - y)),"
         " CAST(0 AS BIGINT), (acc, d) -> acc + d)"
+    )
+
+
+def dot_duckdb(a: str, b: str) -> str:
+    """DuckDB twin of dot: DOUBLE products folded left to right."""
+    return (
+        f"list_reduce(list_transform(generate_series(1, len({a})),"
+        f" i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (x, y) -> x + y)"
+    )
+
+
+def cosine_duckdb(a: str, b: str) -> str:
+    """DuckDB twin of cosine."""
+    return (
+        f"{dot_duckdb(a, b)} / (sqrt({dot_duckdb(a, a)}) * sqrt({dot_duckdb(b, b)}))"
+    )
+
+
+def dist2_duckdb(a: str, b: str, n: int, var: str = "i") -> str:
+    """DuckDB twin of dist2 over the first `n` elements, `var` naming
+    the lambda's index variable."""
+    d = f"({a}[{var}] - {b}[{var}])"
+    return (
+        f"CAST(list_sum(list_transform(generate_series(1, {n}),"
+        f" {var} -> {d} * {d})) AS BIGINT)"
     )
 
 

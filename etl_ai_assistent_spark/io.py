@@ -133,19 +133,6 @@ def with_ts_us(df: DataFrame) -> DataFrame:
     )
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {
-        t: load_events(spark, sf_dir) if t == "events" else load_table(spark, sf_dir, t)
-        for t in schemas.TESTDATA_TABLES
-    }
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql paths."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 # --- sources (SURVEY.md §2.1) -------------------------------------------
 
 

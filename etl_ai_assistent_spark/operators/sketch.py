@@ -50,9 +50,41 @@ ALPHA_256 = 0.7213 / (1.0 + 1.079 / 256.0)
 def _md5_slice_int(h: Column, start: int, length: int) -> Column:
     """Integer value of md5-hex substring [start, start+length) of one
     digest: HLL reads two slices of the same md5, so it cannot go
-    through functions.md5_bucket (always the first 8 digits); DuckDB
-    twin: CAST(('0x' || substr(h, start, length)) AS BIGINT)."""
+    through functions.md5_bucket (always the first 8 digits). DuckDB
+    twin: the slices inside hll_register_rho_sql."""
     return F.conv(F.substring(h, start, length), 16, 10).cast("bigint")
+
+
+# DuckDB twins of the HLL rules, for the oracles: the key hash and the
+# (register, rho) pair of hll_register_rho, and the estimate of
+# hll_estimate.
+
+
+def hll_hash_sql(x: str) -> str:
+    """The md5 hex digest hll_register_rho hashes a key to, over the
+    SQL expression `x`."""
+    return f"md5('hll|' || CAST({x} AS VARCHAR))"
+
+
+def hll_register_rho_sql(h: str) -> str:
+    """`register` and `rho` select items over the digest column `h`
+    (an hll_hash_sql value)."""
+    w = f"CAST(('0x' || substr({h}, 3, 8)) AS BIGINT)"
+    return (
+        f"CAST(CAST(('0x' || substr({h}, 1, 2)) AS BIGINT) AS INT) AS register,"
+        f" CAST(CASE WHEN {w} = 0 THEN 33 ELSE 33 - length(bin({w}))"
+        " END AS INT) AS rho"
+    )
+
+
+def hll_estimate_sql(max_rho: str) -> str:
+    """The raw estimate hll_estimate computes, as an aggregate over the
+    register rows of one group, `max_rho` naming their rho column."""
+    return (
+        f"round(CAST({ALPHA_256!r} AS DOUBLE) * {float(HLL_M * HLL_M)!r} /"
+        f" (sum(1.0 / CAST(CAST(1 AS BIGINT) << {max_rho} AS DOUBLE))"
+        f" + ({HLL_M} - count(*)) * 1.0), 6)"
+    )
 
 
 def hll_register_rho(key: Column) -> tuple[Column, Column]:

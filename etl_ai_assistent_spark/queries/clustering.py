@@ -28,10 +28,6 @@ _QUANT = (
     f"list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * {KM.Q_SCALE})"
     f" AS BIGINT) + {KM.Q_OFFSET})"
 )
-_D2 = (
-    "CAST(list_sum(list_transform(generate_series(1, {dim}),"
-    " i -> (v.qv[i] - c.cv[i]) * (v.qv[i] - c.cv[i]))) AS BIGINT)"
-).format(dim=DIM)
 
 
 @register(
@@ -44,7 +40,7 @@ c0 AS (
   SELECT CAST(vec_id AS BIGINT) AS cid, qv AS cv FROM q WHERE vec_id < {K}
 ),
 d1 AS (
-  SELECT v.vec_id, {_D2} * {KM.PACK} + c.cid AS p
+  SELECT v.vec_id, {V.dist2_duckdb('v.qv', 'c.cv', DIM)} * {KM.PACK} + c.cid AS p
   FROM q v, c0 c
 ),
 a1 AS (
@@ -64,7 +60,7 @@ c1 AS (
   GROUP BY cluster
 ),
 d2 AS (
-  SELECT v.vec_id, {_D2} * {KM.PACK} + c.cid AS p
+  SELECT v.vec_id, {V.dist2_duckdb('v.qv', 'c.cv', DIM)} * {KM.PACK} + c.cid AS p
   FROM q v, c1 c
 ),
 a2 AS (SELECT vec_id, min(p) AS p FROM d2 GROUP BY vec_id)
@@ -102,10 +98,6 @@ PQ_K = 8  # codebook entries per subspace
 PQ_W = DIM // M_SUB
 PQ_TOPK = 10
 
-_D2W = (
-    "CAST(list_sum(list_transform(generate_series(1, {w}),"
-    " j -> (v.qv[j] - c.cv[j]) * (v.qv[j] - c.cv[j]))) AS BIGINT)"
-).format(w=PQ_W)
 
 
 def _pq_sub_ctes(
@@ -131,7 +123,7 @@ def _pq_sub_ctes(
   WHERE vec_id < {PQ_K}
 ),
 {p}d1_{i} AS (
-  SELECT v.vec_id, {_D2W} * {KM.PACK} + c.cid AS p
+  SELECT v.vec_id, {V.dist2_duckdb('v.qv', 'c.cv', PQ_W, var='j')} * {KM.PACK} + c.cid AS p
   FROM {p}s{i} v, {p}c0_{i} c
 ),
 {p}a1_{i} AS (
@@ -149,7 +141,7 @@ def _pq_sub_ctes(
   GROUP BY cluster
 ),
 {p}d2_{i} AS (
-  SELECT v.vec_id, {_D2W} * {KM.PACK} + c.cid AS p
+  SELECT v.vec_id, {V.dist2_duckdb('v.qv', 'c.cv', PQ_W, var='j')} * {KM.PACK} + c.cid AS p
   FROM {p}s{i} v, {p}c1_{i} c
 ),
 {p}code_{i} AS (
@@ -159,7 +151,8 @@ def _pq_sub_ctes(
         return base
     return base + f""",
 qs_{i} AS (SELECT qv FROM s{i} WHERE vec_id = 0),
-tab_{i} AS (SELECT c.cid, {_D2W} AS d FROM c1_{i} c, qs_{i} v),
+tab_{i} AS (SELECT c.cid, {V.dist2_duckdb('v.qv', 'c.cv', PQ_W, var='j')} AS d
+    FROM c1_{i} c, qs_{i} v),
 ad_{i} AS (
   SELECT k.vec_id, t.d FROM code_{i} k JOIN tab_{i} t ON t.cid = k.code
 )"""
@@ -489,7 +482,8 @@ _KM_CTES = f"""
 k0 AS (
   SELECT CAST(vec_id AS BIGINT) AS cid, qv AS cv FROM q WHERE vec_id < {K}
 ),
-kd1 AS (SELECT v.vec_id, {_D2} * {KM.PACK} + c.cid AS p FROM q v, k0 c),
+kd1 AS (SELECT v.vec_id, {V.dist2_duckdb('v.qv', 'c.cv', DIM)} * {KM.PACK} + c.cid AS p
+    FROM q v, k0 c),
 ka1 AS (SELECT vec_id, min(p) % {KM.PACK} AS cluster FROM kd1 GROUP BY vec_id),
 kdims AS (
   SELECT a.cluster, u.i AS dim, q.qv[u.i] AS val
@@ -502,10 +496,12 @@ k1 AS (
         FROM kdims GROUP BY 1, 2)
   GROUP BY cluster
 ),
-kd2 AS (SELECT v.vec_id, {_D2} * {KM.PACK} + c.cid AS p FROM q v, k1 c),
+kd2 AS (SELECT v.vec_id, {V.dist2_duckdb('v.qv', 'c.cv', DIM)} * {KM.PACK} + c.cid AS p
+    FROM q v, k1 c),
 ka2 AS (SELECT vec_id, min(p) % {KM.PACK} AS cluster FROM kd2 GROUP BY vec_id),
 qfull AS (SELECT qv FROM q WHERE vec_id = 0),
-cd AS (SELECT c.cid, {_D2} * {KM.PACK} + c.cid AS p FROM k1 c, qfull v),
+cd AS (SELECT c.cid, {V.dist2_duckdb('v.qv', 'c.cv', DIM)} * {KM.PACK} + c.cid AS p
+    FROM k1 c, qfull v),
 probes AS (SELECT cid FROM cd ORDER BY p LIMIT {NPROBE}),
 cand AS (
   SELECT vec_id FROM ka2 WHERE cluster IN (SELECT cid FROM probes)
@@ -580,10 +576,6 @@ def _ivfpq_pipeline(spark: SparkSession, sf_dir: str):
     return PQ.adc_topk(codes.join(cand, "vec_id"), tables, k=PQ_TOPK), q0
 
 
-_EXACT_D2 = (
-    "CAST(list_sum(list_transform(generate_series(1, {dim}),"
-    " i -> (v.qv[i] - f.qv[i]) * (v.qv[i] - f.qv[i]))) AS BIGINT)"
-).format(dim=DIM)
 
 
 @register(
@@ -605,7 +597,7 @@ ivf_k AS (
 exact_k AS (
   SELECT v.vec_id
   FROM q v, qfull f
-  ORDER BY {_EXACT_D2}, v.vec_id
+  ORDER BY {V.dist2_duckdb('v.qv', 'f.qv', DIM)}, v.vec_id
   LIMIT {PQ_TOPK}
 )
 SELECT CAST(0 AS BIGINT) AS query_id,
@@ -663,7 +655,8 @@ def _pq_mq_ctes(i: int) -> str:
     distances — builds on _pq_sub_ctes' s{i}/c1_{i}/code_{i}."""
     return f"""
 mq_{i} AS (SELECT vec_id AS query_id, qv FROM s{i} WHERE vec_id < {NQ_PQ}),
-mtab_{i} AS (SELECT v.query_id, c.cid, {_D2W} AS d FROM c1_{i} c, mq_{i} v),
+mtab_{i} AS (SELECT v.query_id, c.cid, {V.dist2_duckdb('v.qv', 'c.cv', PQ_W, var='j')} AS d
+    FROM c1_{i} c, mq_{i} v),
 mad_{i} AS (
   SELECT t.query_id, k.vec_id, t.d
   FROM code_{i} k JOIN mtab_{i} t ON t.cid = k.code
@@ -808,7 +801,8 @@ def _res_query_ctes(i: int) -> str:
     lo, hi = i * PQ_W + 1, (i + 1) * PQ_W
     return f"""
 qrs_{i} AS (SELECT pcell, qv[{lo}:{hi}] AS qv FROM qres),
-rtab_{i} AS (SELECT v.pcell, c.cid, {_D2W} AS d FROM rc1_{i} c, qrs_{i} v),
+rtab_{i} AS (SELECT v.pcell, c.cid, {V.dist2_duckdb('v.qv', 'c.cv', PQ_W, var='j')} AS d
+    FROM rc1_{i} c, qrs_{i} v),
 rad_{i} AS (
   SELECT k.vec_id, t.d
   FROM rcode_{i} k
@@ -912,7 +906,7 @@ res_k AS (
 exact_k AS (
   SELECT v.vec_id
   FROM q v, qfull f
-  ORDER BY {_EXACT_D2}, v.vec_id
+  ORDER BY {V.dist2_duckdb('v.qv', 'f.qv', DIM)}, v.vec_id
   LIMIT {PQ_TOPK}
 )
 SELECT CAST(0 AS BIGINT) AS query_id,
@@ -1263,7 +1257,7 @@ def _pq_full_encode_ctes(i: int) -> str:
     return f"""
 fe_s{i} AS (SELECT vec_id, qv[{lo}:{hi}] AS qv FROM q),
 fe_d{i} AS (
-  SELECT v.vec_id, {_D2W} * {KM.PACK} + c.cid AS p
+  SELECT v.vec_id, {V.dist2_duckdb('v.qv', 'c.cv', PQ_W, var='j')} * {KM.PACK} + c.cid AS p
   FROM fe_s{i} v, gc1_{i} c
 ),
 fe_code_{i} AS (
@@ -1347,7 +1341,8 @@ def q_ann_codes_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _GROW_Q_CTES = ",".join(
     f"""
 gqs_{i} AS (SELECT qv FROM fe_s{i} WHERE vec_id = 0),
-gtab_{i} AS (SELECT c.cid, {_D2W} AS d FROM gc1_{i} c, gqs_{i} v),
+gtab_{i} AS (SELECT c.cid, {V.dist2_duckdb('v.qv', 'c.cv', PQ_W, var='j')} AS d
+    FROM gc1_{i} c, gqs_{i} v),
 gad_{i} AS (
   SELECT k.vec_id, t.d FROM fe_code_{i} k JOIN gtab_{i} t ON t.cid = k.code
 )"""

@@ -17,13 +17,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import io
-from ..functions import md5_bucket
+from ..functions import md5_bucket, md5_bucket_sql
 from ..functions import text as TX
 from ..registry import register
 from ..substrates import cached_substrates
-
-# DuckDB twins of functions.text.tokens / the md5 bucket (dedup.py)
-_BUCKET = "CAST(('0x' || substr(md5({x}), 1, 8)) AS BIGINT)"
 
 
 def _ngrams(toks: Column, n: int) -> Column:
@@ -51,7 +48,7 @@ grams AS (
   SELECT doc_id,
          unnest(list_distinct(
            list_transform(generate_series(1, greatest(len(tok) - {DECON_N - 1}, 0)),
-             i -> {_BUCKET.format(x=f"list_aggregate(tok[i:i+{DECON_N - 1}], 'string_agg', ' ')")}))) AS gh
+             i -> {md5_bucket_sql(f"list_aggregate(tok[i:i+{DECON_N - 1}], 'string_agg', ' ')")}))) AS gh
   FROM tokd WHERE len(tok) >= {DECON_N}
 )
 """
@@ -222,7 +219,7 @@ SELECT doc_id,
        len(regexp_extract_all(text, '{EMAIL_RE}')) AS n_emails,
        len(regexp_extract_all(text, '{DIGITRUN_RE}')) AS n_digit_runs,
        length(text) - length(clean) AS chars_removed,
-       {_BUCKET.format(x="clean")} AS clean_checksum
+       {md5_bucket_sql('clean')} AS clean_checksum
 FROM scrubbed
 """,
 )
@@ -459,8 +456,7 @@ def q_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 SHARD_TOKENS = 2000  # token budget per training shard
 SHARD_BUCKETS = 16  # parallel packing units (scale knob)
 _SHARD_BUCKET = (
-    "CAST(('0x' || substr(md5('shard|' || CAST(doc_id AS VARCHAR)), 1, 8))"
-    f" AS BIGINT) % {SHARD_BUCKETS}"
+    f"{md5_bucket_sql('CAST(doc_id AS VARCHAR)', salt='shard|')} % {SHARD_BUCKETS}"
 )
 
 
@@ -633,7 +629,7 @@ EN_MOD = 4
     oracle=f"""
 WITH s AS (
   SELECT lang, doc_id,
-         {_BUCKET.format(x="CAST(doc_id AS VARCHAR)")}
+         {md5_bucket_sql('CAST(doc_id AS VARCHAR)')}
            % (CASE WHEN lang = 'en' THEN {EN_MOD} ELSE 1 END) = 0 AS keep
   FROM documents
 )
@@ -688,7 +684,7 @@ FORGET_MOD = 64  # the forget-list: customers with salted hash bucket 0
     oracle=f"""
 WITH forget AS (
   SELECT c_custkey FROM customer
-  WHERE {_BUCKET.format(x="'forget|' || CAST(c_custkey AS VARCHAR)")}
+  WHERE {md5_bucket_sql('CAST(c_custkey AS VARCHAR)', salt='forget|')}
         % {FORGET_MOD} = 0
 ),
 del_o AS (
@@ -805,7 +801,7 @@ W_CAP = 200_000  # chars at/above this are kept with probability 1
     oracle=f"""
 WITH s AS (
   SELECT lang, doc_id, n_chars,
-         {_BUCKET.format(x="'wsamp|' || CAST(doc_id AS VARCHAR)")}
+         {md5_bucket_sql('CAST(doc_id AS VARCHAR)', salt='wsamp|')}
            * {W_CAP} < CAST(n_chars AS BIGINT) * 4294967296 AS keep
   FROM documents
 )
@@ -961,17 +957,14 @@ def q_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SEQ_LEN = 512    # tokens per training context window
 SEQ_BUCKETS = 8  # parallel packing units (scale knob)
-_SEQ_BUCKET = (
-    "CAST(('0x' || substr(md5('seq|' || CAST(doc_id AS VARCHAR)), 1, 8))"
-    f" AS BIGINT) % {SEQ_BUCKETS}"
-)
 
 
 @register(
     "q_sequence_pack",
     oracle=f"""
 WITH sized AS (
-  SELECT doc_id, {_SEQ_BUCKET} AS bucket, len({TX.TOKENS_SQL}) AS n_tokens
+  SELECT doc_id, {md5_bucket_sql('CAST(doc_id AS VARCHAR)', salt='seq|')} % {SEQ_BUCKETS} AS bucket,
+         len({TX.TOKENS_SQL}) AS n_tokens
   FROM documents WHERE len({TX.TOKENS_SQL}) > 0
 ),
 packed AS (
@@ -1107,7 +1100,7 @@ WITH tokd AS (
 ),
 tf AS (
   SELECT doc_id,
-         CAST(('0x' || substr(md5(tok), 1, 8)) AS BIGINT) % {DSIR_BUCKETS}
+         {md5_bucket_sql('tok')} % {DSIR_BUCKETS}
            AS tok_b,
          count(*) AS c
   FROM (SELECT doc_id, unnest(tok) AS tok FROM tokd)

@@ -6,8 +6,8 @@ copies (id+100000) for exact dedup, token-appended copies for near-dup —
 with the identical derivation in the DuckDB oracle. The operators under
 test are the real engine operators from operators/dedup.py.
 
-Shared hash vocabulary (identical across engines):
-  md5_bucket(x) = CAST(('0x' || substr(md5(x),1,8)) AS BIGINT)
+Shared hash vocabulary (identical across engines): functions.md5_bucket
+and its DuckDB twin functions.md5_bucket_sql.
 """
 
 from __future__ import annotations
@@ -16,13 +16,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import io
-from ..functions import md5_bucket
+from ..functions import md5_bucket, md5_bucket_sql
 from ..functions import text as TX
+from ..functions import vector as V
 from ..operators import dedup as D
 from ..registry import register
 from ..substrates import per_call
-
-BUCKET = "CAST(('0x' || substr(md5({x}), 1, 8)) AS BIGINT)"
 
 # DuckDB twin of functions.text.word_shingles
 _SHINGLES_CTE = f"""
@@ -85,7 +84,7 @@ corpus AS (
 WITH {_NEAR_CORPUS_SQL},
 {_SHINGLES_CTE},
 sb AS (
-  SELECT id, sh, list_transform(sh, s -> {BUCKET.format(x='s')}) AS sb
+  SELECT id, sh, list_transform(sh, s -> {md5_bucket_sql('s')}) AS sb
   FROM shingled
 ),
 mh AS (
@@ -154,7 +153,7 @@ WITH corpus AS (
 ),
 hashed AS (
   SELECT id, list_transform({TX.TOKENS_SQL.strip()},
-                t -> {BUCKET.format(x='t')}) AS h
+                t -> {md5_bucket_sql('t')}) AS h
   FROM corpus
 )
 SELECT id AS doc_id,
@@ -188,7 +187,7 @@ def q_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH {_NEAR_CORPUS_SQL},
 hashed AS (
   SELECT id, list_transform({TX.TOKENS_SQL.strip()},
-                t -> {BUCKET.format(x='t')}) AS h
+                t -> {md5_bucket_sql('t')}) AS h
   FROM corpus
 ),
 sigs AS (
@@ -290,10 +289,6 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- embedding-cosine near-dup -------------------------------------------------
 
 COS_THRESHOLD = 0.35
-_DOT = (
-    "list_reduce(list_transform(generate_series(1, len({a})), "
-    "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (x, y) -> x + y)"
-)
 
 
 def _embedding_near_dup_oracle() -> str:
@@ -324,12 +319,12 @@ cands AS (
 ),
 normed AS (
   SELECT vec_id, embedding,
-         sqrt({_DOT.format(a='embedding', b='embedding')}) AS nrm
+         sqrt({V.dot_duckdb('embedding', 'embedding')}) AS nrm
   FROM embeddings
 ),
 scored AS (
   SELECT c.id_a, c.id_b,
-         round({_DOT.format(a='a.embedding', b='b.embedding')}
+         round({V.dot_duckdb('a.embedding', 'b.embedding')}
                / (a.nrm * b.nrm), 6) AS cos
   FROM cands c
   JOIN normed a ON a.vec_id = c.id_a
@@ -344,7 +339,6 @@ def embedding_near_dup_allpairs(
 ) -> DataFrame:
     """The exact O(n²) form — NOT registered; tests use it as the
     small-fixture recall cross-check for the banded plan below."""
-    from ..functions import vector as V
 
     # norms hoisted out of the pair loop: one O(d) pass per vector, not
     # 3 per pair
@@ -394,7 +388,6 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id_a", "id_b")
         .distinct()
     )
-    from ..functions import vector as V
 
     normed = emb.select(
         "vec_id",
@@ -433,7 +426,7 @@ WITH corpus AS (SELECT doc_id AS id, text FROM documents)
 SELECT id AS doc_id,
        list_reduce(
          list_concat([CAST(0 AS BIGINT)],
-           list_transform({TX.TOKENS_SQL.strip()}, t -> {BUCKET.format(x='t')})),
+           list_transform({TX.TOKENS_SQL.strip()}, t -> {md5_bucket_sql('t')})),
          (acc, t) -> (acc * 31 + t) % 2147483647) AS fingerprint
 FROM corpus
 """,
@@ -456,7 +449,7 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH RECURSIVE {_NEAR_CORPUS_SQL},
 {_SHINGLES_CTE},
 sb AS (
-  SELECT id, sh, list_transform(sh, s -> {BUCKET.format(x='s')}) AS sb
+  SELECT id, sh, list_transform(sh, s -> {md5_bucket_sql('s')}) AS sb
   FROM shingled
 ),
 mh AS (
@@ -685,7 +678,7 @@ def _sem_assign_ctes() -> str:
     argmin) shared by the q_semdedup result oracle and the
     q_semdedup_balance diagnostic oracle — one definition so the two
     can never drift apart."""
-    from .clustering import _D2, _QUANT
+    from .clustering import DIM, _QUANT
 
     return f"""q AS (
   SELECT vec_id, {_QUANT} AS qv FROM embeddings
@@ -694,7 +687,7 @@ c0 AS (
   SELECT CAST(vec_id AS BIGINT) AS cid, qv AS cv FROM q WHERE vec_id < {SEM_K}
 ),
 d1 AS (
-  SELECT v.vec_id, {_D2} * 1000000 + c.cid AS p FROM q v, c0 c
+  SELECT v.vec_id, {V.dist2_duckdb('v.qv', 'c.cv', DIM)} * 1000000 + c.cid AS p FROM q v, c0 c
 ),
 a1 AS (
   SELECT vec_id, CAST(min(p) % 1000000 AS BIGINT) AS cluster
@@ -748,7 +741,6 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster key — no all-pairs nested loop exists in the plan. Cosine
     folds left-to-right over FLOAT→DOUBLE promotion, rounded to 6 on
     both engines (the q_embedding_near_dup discipline)."""
-    from ..functions import vector as V
     from ..operators import kmeans as KM
 
     emb, a1 = _sem_assign(spark, sf_dir)
@@ -867,7 +859,7 @@ WITH toks AS (
 ),
 grams AS (
   SELECT DISTINCT doc_id,
-         CAST(('0x' || substr(md5(gram), 1, 8)) AS BIGINT) AS gram_h
+         {md5_bucket_sql('gram')} AS gram_h
   FROM (
     SELECT doc_id,
            unnest(list_transform(generate_series(1, len(tok) - {CDS_K} + 1),
@@ -986,7 +978,7 @@ truth AS (
         >= {MHR_NUM} * (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
 ),
 sb AS (
-  SELECT id, sh, list_transform(sh, s -> {BUCKET.format(x='s')}) AS sb
+  SELECT id, sh, list_transform(sh, s -> {md5_bucket_sql('s')}) AS sb
   FROM shingled
 ),
 mh AS (
@@ -1202,7 +1194,6 @@ FS_W_BAL, FS_W_BAL_DIS = 6, -4
 FS_W_SEG, FS_W_SEG_DIS = 5, -5
 FS_T_MATCH, FS_T_REVIEW = 30, 10
 
-_FS_BUCKET = "CAST(('0x' || substr(md5('fs|' || CAST(c_custkey AS VARCHAR)), 1, 8)) AS BIGINT)"
 _FS_HAM = """list_sum(list_transform(generate_series(1, 4),
       i -> CASE WHEN substr(a.code, i, 1) <> substr(b.code, i, 1)
                 THEN 1 ELSE 0 END))"""
@@ -1217,7 +1208,7 @@ WITH base AS (
          c_nationkey AS nation,
          c_mktsegment AS seg,
          CAST(floor(c_acctbal / 1000) AS BIGINT) AS bal_band,
-         {_FS_BUCKET} AS h
+         {md5_bucket_sql('CAST(c_custkey AS VARCHAR)', salt='fs|')} AS h
   FROM customer WHERE c_custkey < {FS_MAX_KEY}
 ),
 a AS (SELECT id, code, nation, seg, bal_band FROM base),

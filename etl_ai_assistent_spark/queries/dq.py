@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import io
-from ..functions import cents, md5_bucket
+from ..functions import cents, cents_sql, md5_bucket, md5_bucket_sql
 from ..registry import register
 
 
@@ -213,20 +213,25 @@ def q_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- order-insensitive table fingerprint (replication verification) --------
 
+# The oracle's canonical row text: q_table_fingerprint's `canon`.
+_FP_CANON = " || '|' || ".join(
+    f"COALESCE({c}, '<NULL>')"
+    for c in (
+        "CAST(o_orderkey AS VARCHAR)",
+        "o_orderstatus",
+        f"CAST({cents_sql('o_totalprice')} AS VARCHAR)",
+        "CAST(epoch_us(o_orderdate) AS VARCHAR)",
+        "CAST(o_custkey AS VARCHAR)",
+        "o_orderpriority",
+    )
+)
+
 
 @register(
     "q_table_fingerprint",
-    oracle="""
+    oracle=f"""
 WITH canon AS (
-  SELECT CAST(('0x' || substr(md5(
-           COALESCE(CAST(o_orderkey AS VARCHAR), '<NULL>') || '|' ||
-           COALESCE(o_orderstatus, '<NULL>') || '|' ||
-           COALESCE(CAST(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)
-                         AS VARCHAR), '<NULL>') || '|' ||
-           COALESCE(CAST(epoch_us(o_orderdate) AS VARCHAR), '<NULL>') || '|' ||
-           COALESCE(CAST(o_custkey AS VARCHAR), '<NULL>') || '|' ||
-           COALESCE(o_orderpriority, '<NULL>')
-         ), 1, 8)) AS BIGINT) AS h
+  SELECT {md5_bucket_sql(_FP_CANON)} AS h
   FROM orders
 )
 SELECT CAST(count(*) AS BIGINT) AS n_rows,
@@ -396,7 +401,7 @@ _BENFORD_VALUES = ", ".join(f"({d}, {p})" for d, p in BENFORD_PPM.items())
     "q_benford_audit",
     oracle=f"""
 WITH cents AS (
-  SELECT CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS c
+  SELECT {cents_sql('o_totalprice')} AS c
   FROM orders WHERE o_totalprice > 0
 ),
 digits AS (

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import io
-from ..functions import cents, units_to_double
+from ..functions import cents, cents_sql, units_to_double
 from ..operators.asof import asof_join
 from ..operators.sessionize import sessionize
 from ..registry import register
@@ -435,7 +435,7 @@ def q_event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_value_anomalies",
-    oracle="""
+    oracle=f"""
 WITH stats AS (
   SELECT event_type,
          CAST(count(*) AS BIGINT) AS n,
@@ -450,7 +450,7 @@ mom AS (
   FROM stats
 )
 SELECT e.event_id, e.event_type,
-       CAST(floor(e.value * 100 + 0.5) AS BIGINT) AS value_cents,
+       {cents_sql('e.value')} AS value_cents,
        round((e.value - m.mu) / m.sigma, 6) AS z
 FROM events e JOIN mom m ON e.event_type = m.event_type
 WHERE abs((e.value - m.mu) / m.sigma) > 3.0
@@ -615,11 +615,11 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_group_regression",
-    oracle="""
+    oracle=f"""
 WITH base AS (
   SELECT event_type,
          epoch_us(ts) // 3600000000 AS hour_abs,
-         CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
+         {cents_sql('value')} AS cents
   FROM events
 ),
 origin AS (SELECT min(hour_abs) AS h0 FROM base),
@@ -696,11 +696,11 @@ def q_group_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_props_variant",
-    oracle="""
+    oracle=f"""
 SELECT CAST(CAST(props->>'k' AS BIGINT) // 10 AS BIGINT) AS k_decile,
        count(*) AS n,
        count(DISTINCT event_type) AS n_types,
-       CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+       CAST(sum({cents_sql('value')}) AS BIGINT)
          AS total_cents
 FROM events
 GROUP BY 1
@@ -739,13 +739,13 @@ def q_props_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_rfm_segments",
-    oracle="""
+    oracle=f"""
 WITH base AS (
   SELECT user_id,
          max(epoch_us(ts)) AS last_us,
          CAST(count(*) AS BIGINT) AS frequency,
          CAST(sum(CASE WHEN event_type = 'purchase'
-                       THEN CAST(floor(value * 100 + 0.5) AS BIGINT)
+                       THEN {cents_sql('value')}
                        ELSE 0 END) AS BIGINT) AS monetary_cents
   FROM events GROUP BY user_id
 ),
@@ -939,12 +939,12 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_ewma_user_value",
-    oracle="""
+    oracle=f"""
 WITH seq AS (
   SELECT user_id,
          list_transform(
-           list_sort(list({'ts': epoch_us(ts), 'id': event_id,
-                           'v': CAST(floor(value * 100 + 0.5) AS BIGINT)})),
+           list_sort(list({{'ts': epoch_us(ts), 'id': event_id,
+                           'v': {cents_sql('value')}}})),
            s -> s.v) AS xs
   FROM events GROUP BY user_id
 )
@@ -997,11 +997,11 @@ def q_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_daily_gapfill",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT epoch_us(ts) // 86400000000 AS day_id,
          CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+         CAST(sum({cents_sql('value')}) AS BIGINT)
            AS total_cents
   FROM events WHERE event_type = 'error' GROUP BY 1
 ),

@@ -15,17 +15,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import io
-from ..functions import md5_bucket
+from ..functions import md5_bucket, md5_bucket_sql
 from ..operators import multimodal as MM
 from ..registry import register
 
-_ASSETS_CTE = """
+_ASSETS_CTE = f"""
 assets AS (
   SELECT doc_id AS asset_id,
          ['image', 'audio', 'video'][CAST(doc_id % 3 AS INT) + 1] AS kind,
          text,
-         CAST(('0x' || substr(md5('w|' || text), 1, 8)) AS BIGINT) AS b1,
-         CAST(('0x' || substr(md5('h|' || text), 1, 8)) AS BIGINT) AS b2
+         {md5_bucket_sql('text', salt='w|')} AS b1,
+         {md5_bucket_sql('text', salt='h|')} AS b2
   FROM documents
 )
 """
@@ -195,8 +195,8 @@ MM_SHARD_BUCKETS = 8
 WITH {_ASSETS_CTE},
 costed AS (
   SELECT a.asset_id AS doc_id,
-         CAST(CAST(('0x' || substr(md5('mshard|' || CAST(a.asset_id AS VARCHAR)), 1, 8))
-              AS BIGINT) % {MM_SHARD_BUCKETS} AS BIGINT) AS bucket,
+         CAST({md5_bucket_sql('CAST(a.asset_id AS VARCHAR)', salt='mshard|')}
+              % {MM_SHARD_BUCKETS} AS BIGINT) AS bucket,
          len(string_split_regex(trim(a.text), '\\s+')) +
          CASE a.kind
            WHEN 'image' THEN (16 * (1 + b1 % 120) * 16 * (1 + b2 % 68)) // 4096

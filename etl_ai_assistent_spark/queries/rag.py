@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from .. import io
 from .. import store as ST
-from ..functions import md5_bucket
+from ..functions import md5_bucket, md5_bucket_sql
 from ..functions import text as TX
 from ..registry import register
 from ..substrates import cached_substrates
@@ -44,19 +44,22 @@ from ..substrates import cached_substrates
 N_PROBES = 150
 TOP_K = 5
 
-# Shared SQL scaffold: inverted-index TF tables (exact 32-bit token
-# hash key) for corpus and probes, posting-list equi-join dot products,
-# rounded cosine, deterministic rank.
-_SCORED_CTES = f"""
+# Shared SQL scaffold: the corpus's inverted-index TF table (exact
+# 32-bit token hash key), the posting table every oracle below reads.
+_DOC_TF_CTES = f"""
 doc_tok AS (
   SELECT doc_id, unnest({TX.TOKENS_SQL}) AS tok
   FROM (SELECT doc_id, text FROM documents)
 ),
 doc_tf AS (
-  SELECT doc_id, CAST(('0x' || substr(md5(tok), 1, 8)) AS BIGINT) AS tok_h,
+  SELECT doc_id, {md5_bucket_sql('tok')} AS tok_h,
          count(*) AS c
   FROM doc_tok GROUP BY 1, 2
-),
+)"""
+
+# On top of it: the probes' TF table, posting-list equi-join dot
+# products, rounded cosine, deterministic rank.
+_SCORED_CTES = f"""{_DOC_TF_CTES},
 doc_norm AS (
   SELECT doc_id, sqrt(sum(CAST(c * c AS DOUBLE))) AS nrm FROM doc_tf GROUP BY 1
 ),
@@ -65,7 +68,7 @@ probe_tok AS (
   FROM (SELECT doc_id, {TX.TOKENS_SQL} AS tok FROM documents WHERE doc_id < {N_PROBES})
 ),
 probe_tf AS (
-  SELECT probe_id, CAST(('0x' || substr(md5(tok), 1, 8)) AS BIGINT) AS tok_h,
+  SELECT probe_id, {md5_bucket_sql('tok')} AS tok_h,
          count(*) AS c
   FROM probe_tok GROUP BY 1, 2
 ),
@@ -182,15 +185,7 @@ def doc_tf_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_posting_delta_merge",
     oracle=f"""
-WITH doc_tok AS (
-  SELECT doc_id, unnest({TX.TOKENS_SQL}) AS tok
-  FROM (SELECT doc_id, text FROM documents)
-),
-doc_tf AS (
-  SELECT doc_id, CAST(('0x' || substr(md5(tok), 1, 8)) AS BIGINT) AS tok_h,
-         count(*) AS c
-  FROM doc_tok GROUP BY 1, 2
-),
+WITH {_DOC_TF_CTES},
 seg AS (
   SELECT tok_h, c,
          CASE WHEN doc_id % 10 = 7 THEN 1 ELSE 0 END AS is_delta
@@ -290,15 +285,7 @@ def _probe_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_posting_index_build",
     oracle=f"""
-WITH doc_tok AS (
-  SELECT doc_id, unnest({TX.TOKENS_SQL}) AS tok
-  FROM (SELECT doc_id, text FROM documents)
-),
-doc_tf AS (
-  SELECT doc_id, CAST(('0x' || substr(md5(tok), 1, 8)) AS BIGINT) AS tok_h,
-         count(*) AS c
-  FROM doc_tok GROUP BY 1, 2
-)
+WITH {_DOC_TF_CTES}
 SELECT CAST(count(*) AS BIGINT) AS n_postings,
        CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
        CAST(count(DISTINCT tok_h) AS BIGINT) AS n_terms,
@@ -401,15 +388,7 @@ def compact_posting_build_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_posting_compact",
     oracle=f"""
-WITH doc_tok AS (
-  SELECT doc_id, unnest({TX.TOKENS_SQL}) AS tok
-  FROM (SELECT doc_id, text FROM documents)
-),
-doc_tf AS (
-  SELECT doc_id, CAST(('0x' || substr(md5(tok), 1, 8)) AS BIGINT) AS tok_h,
-         count(*) AS c
-  FROM doc_tok GROUP BY 1, 2
-)
+WITH {_DOC_TF_CTES}
 SELECT CAST(count(*) AS BIGINT) AS n_postings,
        CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
        CAST(count(DISTINCT tok_h) AS BIGINT) AS n_terms,
@@ -795,11 +774,9 @@ def q_rag_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rescale S or widen to DECIMAL(38,0).
 BM25_SCALE = 1_000_000
 
-
-@register(
-    "q_bm25_retrieval",
-    oracle=f"""
-WITH {_SCORED_CTES},
+# The full BM25 ranking over _SCORED_CTES's TF tables: q_bm25_retrieval
+# keeps its top 5, q_rag_fusion and q_hard_negatives read deeper.
+_BM25_RANKED_CTES = f"""
 dl AS (
   SELECT doc_id, CAST(sum(c) AS BIGINT) AS dl FROM doc_tf GROUP BY 1
 ),
@@ -808,7 +785,7 @@ stats AS (
          CAST(sum(dl) // count(*) AS BIGINT) AS avgdl
   FROM dl
 ),
-df AS (
+dfr AS (
   SELECT tok_h, CAST(count(*) AS BIGINT) AS dfb FROM doc_tf GROUP BY 1
 ),
 term_scores AS (
@@ -818,22 +795,26 @@ term_scores AS (
               AS BIGINT) AS ts
   FROM probe_tf p
   JOIN doc_tf d ON d.tok_h = p.tok_h
-  JOIN df f ON f.tok_h = p.tok_h
+  JOIN dfr f ON f.tok_h = p.tok_h
   JOIN dl l ON l.doc_id = d.doc_id
   CROSS JOIN stats s
 ),
-bm AS (
-  SELECT probe_id, doc_id, CAST(sum(ts) AS BIGINT) AS score_scaled
-  FROM term_scores GROUP BY 1, 2
-),
-ranked AS (
-  SELECT probe_id, doc_id, score_scaled,
+bm_ranked AS (
+  SELECT probe_id, doc_id, CAST(sum_ts AS BIGINT) AS score_scaled,
          row_number() OVER (PARTITION BY probe_id
-                            ORDER BY score_scaled DESC, doc_id) AS rank
-  FROM bm
-)
+                            ORDER BY sum_ts DESC, doc_id) AS rank
+  FROM (SELECT probe_id, doc_id, CAST(sum(ts) AS BIGINT) AS sum_ts
+        FROM term_scores GROUP BY 1, 2)
+)"""
+
+
+@register(
+    "q_bm25_retrieval",
+    oracle=f"""
+WITH {_SCORED_CTES},
+{_BM25_RANKED_CTES}
 SELECT probe_id, CAST(rank AS INT) AS rank, doc_id, score_scaled
-FROM ranked WHERE rank <= {TOP_K}
+FROM bm_ranked WHERE rank <= {TOP_K}
 """,
 )
 def q_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1098,37 +1079,6 @@ def q_testset_generate(spark: SparkSession, sf_dir: str) -> DataFrame:
 RRF_K = 60          # the standard RRF dampening constant
 RRF_DEPTH = 20      # fuse the top-20 from each ranker
 RRF_SCALE = 10_000_000  # integer 1/(k+rank): floor(SCALE/(RRF_K+rank))
-
-_BM25_RANKED_CTES = f"""
-dl AS (
-  SELECT doc_id, CAST(sum(c) AS BIGINT) AS dl FROM doc_tf GROUP BY 1
-),
-stats AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(dl) // count(*) AS BIGINT) AS avgdl
-  FROM dl
-),
-dfr AS (
-  SELECT tok_h, CAST(count(*) AS BIGINT) AS dfb FROM doc_tf GROUP BY 1
-),
-term_scores AS (
-  SELECT p.probe_id, d.doc_id,
-         CAST(({BM25_SCALE}::BIGINT * (s.n_docs + 1) * 44 * p.c * d.c * s.avgdl)
-              // ((f.dfb + 1) * (20 * d.c * s.avgdl + 6 * s.avgdl + 18 * l.dl))
-              AS BIGINT) AS ts
-  FROM probe_tf p
-  JOIN doc_tf d ON d.tok_h = p.tok_h
-  JOIN dfr f ON f.tok_h = p.tok_h
-  JOIN dl l ON l.doc_id = d.doc_id
-  CROSS JOIN stats s
-),
-bm_ranked AS (
-  SELECT probe_id, doc_id, CAST(sum_ts AS BIGINT) AS score_scaled,
-         row_number() OVER (PARTITION BY probe_id
-                            ORDER BY sum_ts DESC, doc_id) AS rank
-  FROM (SELECT probe_id, doc_id, CAST(sum(ts) AS BIGINT) AS sum_ts
-        FROM term_scores GROUP BY 1, 2)
-)"""
 
 
 @register(

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from .. import io
 from .. import store as ST
-from ..functions import cents, units_to_double
+from ..functions import cents, cents_sql, units_to_double
 from ..registry import register
 from ..substrates import cached_substrates
 
@@ -518,7 +518,7 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (finer than cube/rollup): chosen set list
     with grouping_id disambiguating the all-rows stratum from real NULL
     keys. Catalyst expands to a single Expand+hash-agg — one shuffle."""
-    io.register_views(spark, sf_dir)
+    io.load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
         """
         SELECT o_orderpriority, o_orderstatus,
@@ -627,7 +627,7 @@ def q_orders_above_cust_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the same aggregate+join the oracle states explicitly — the
     rewrite is the point: no per-row subquery execution ever happens.
     DECIMAL comparison keeps the boundary exact."""
-    io.register_views(spark, sf_dir)
+    io.load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
         """
         SELECT o_orderkey, o_custkey,
@@ -863,7 +863,7 @@ def q_cdc_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT c_nationkey,
        CAST(count(*) AS BIGINT) AS n_customers,
-       CAST(sum(CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)) AS BIGINT)
+       CAST(sum({cents_sql('c_acctbal')}) AS BIGINT)
          AS sum_acctbal_cents
 FROM ({CDC_MERGE_ORACLE.strip()})
 GROUP BY 1
@@ -1165,10 +1165,10 @@ def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_untapped_customers",
-    oracle="""
+    oracle=f"""
 WITH cents AS (
   SELECT c_custkey, c_nationkey,
-         CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bal_cents
+         {cents_sql('c_acctbal')} AS bal_cents
   FROM customer
 ),
 pos AS (SELECT * FROM cents WHERE bal_cents > 0),
@@ -1248,7 +1248,7 @@ WITH mod_cust AS (
 )
 SELECT c.c_nationkey,
        CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum(CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
+       CAST(sum({cents_sql('o.o_totalprice')}) AS BIGINT)
          AS revenue_cents
 FROM orders o JOIN mod_cust c ON o.o_custkey = c.c_custkey
 GROUP BY 1
@@ -1640,8 +1640,8 @@ WITH pp AS (
 ),
 pli AS (
   SELECT l.l_partkey, pp.p_brand,
-         CAST(floor(l.l_quantity * 100 + 0.5) AS BIGINT) AS q_c,
-         CAST(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT) AS price_c
+         {cents_sql('l.l_quantity')} AS q_c,
+         {cents_sql('l.l_extendedprice')} AS price_c
   FROM lineitem l JOIN pp ON l.l_partkey = pp.p_partkey
 ),
 avgq AS (
@@ -1820,9 +1820,7 @@ def q_interval_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q3_SEGMENT = "BUILDING"
 Q3_DATE = "1997-06-01 00:00:00"
-_REV_CENTS = (
-    "CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)"
-)
+_REV_CENTS = cents_sql("l_extendedprice * (1 - l_discount)")
 
 
 @register(
@@ -1880,8 +1878,7 @@ Q6_YEAR = 1997
     "q_discount_revenue",
     oracle=f"""
 SELECT CAST(count(*) AS BIGINT) AS n_items,
-       CAST(sum(CAST(floor(l_extendedprice * l_discount * 100 + 0.5)
-                     AS BIGINT)) AS BIGINT) AS discount_cents
+       CAST(sum({cents_sql('l_extendedprice * l_discount')}) AS BIGINT) AS discount_cents
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '{Q6_YEAR}-01-01 00:00:00'
   AND l_shipdate <  TIMESTAMP '{Q6_YEAR + 1}-01-01 00:00:00'

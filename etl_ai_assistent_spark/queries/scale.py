@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from .. import io
 from .. import store as ST
-from ..functions import cents, md5_bucket, units_to_double
+from ..functions import cents, cents_sql, md5_bucket, md5_bucket_sql, units_to_double
 from ..functions import text as TX
 from ..operators import sketch as SK
 from ..operators.skew import salted_join
@@ -51,19 +51,13 @@ def q_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- distributed sketches (operators/sketch.py) -----------------------------------------
 
-# DuckDB twins of the sketch hash primitives (same md5-slice family as
-# text_analysis.SPLIT_BUCKET).
-_HLL_H = "md5('hll|' || CAST(o_custkey AS VARCHAR))"
 _HLL_REGS = f"""
 regs AS (
   SELECT o_orderpriority, register, max(rho) AS max_rho
   FROM (
     SELECT o_orderpriority,
-           CAST(CAST(('0x' || substr(h, 1, 2)) AS BIGINT) AS INT) AS register,
-           CAST(CASE WHEN CAST(('0x' || substr(h, 3, 8)) AS BIGINT) = 0 THEN 33
-                     ELSE 33 - length(bin(CAST(('0x' || substr(h, 3, 8)) AS BIGINT)))
-                END AS INT) AS rho
-    FROM (SELECT o_orderpriority, {_HLL_H} AS h FROM orders)
+           {SK.hll_register_rho_sql('h')}
+    FROM (SELECT o_orderpriority, {SK.hll_hash_sql('o_custkey')} AS h FROM orders)
   )
   GROUP BY 1, 2
 )
@@ -100,9 +94,7 @@ WITH {_HLL_REGS},
 est AS (
   SELECT o_orderpriority,
          CAST(count(*) AS BIGINT) AS filled,
-         round(CAST({SK.ALPHA_256!r} AS DOUBLE) * 65536.0 /
-               (sum(1.0 / CAST(CAST(1 AS BIGINT) << max_rho AS DOUBLE))
-                + (256 - count(*)) * 1.0), 6) AS hll_estimate
+         {SK.hll_estimate_sql('max_rho')} AS hll_estimate
   FROM regs GROUP BY 1
 ),
 exact AS (
@@ -165,8 +157,7 @@ tok1 AS (
 WITH {_CMS_TOKS},
 cells AS (
   SELECT i.k AS row,
-         CAST(('0x' || substr(md5('cms' || CAST(i.k AS VARCHAR) || '|' || token), 1, 8))
-              AS BIGINT) % 1024 AS col
+         {md5_bucket_sql("'cms' || CAST(i.k AS VARCHAR) || '|' || token")} % 1024 AS col
   FROM tok1, (SELECT unnest([0, 1, 2, 3]) AS k) i
 ),
 sketch AS (
@@ -177,8 +168,7 @@ exact AS (
 ),
 probes AS (
   SELECT e.token, e.exact_n, i.k AS row,
-         CAST(('0x' || substr(md5('cms' || CAST(i.k AS VARCHAR) || '|' || e.token), 1, 8))
-              AS BIGINT) % 1024 AS col
+         {md5_bucket_sql("'cms' || CAST(i.k AS VARCHAR) || '|' || e.token")} % 1024 AS col
   FROM exact e, (SELECT unnest([0, 1, 2, 3]) AS k) i
 )
 SELECT p.token, p.exact_n, min(s.cnt) AS cms_est,
@@ -409,8 +399,7 @@ SYNTH_GROUPS = 100
 WITH gen AS (
   SELECT t.id,
          t.id % {SYNTH_GROUPS} AS grp,
-         CAST(('0x' || substr(md5(CAST(t.id AS VARCHAR)), 1, 8)) AS BIGINT)
-           AS val
+         {md5_bucket_sql('CAST(t.id AS VARCHAR)')} AS val
   FROM generate_series(0, {SYNTH_ROWS - 1}) t(id)
 )
 SELECT grp,
@@ -448,9 +437,6 @@ def q_synthetic_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- sketch merge rollup: nation sketches -> region estimates ---------------
 
-_HLL_CH = "md5('hll|' || CAST(c_custkey AS VARCHAR))"
-
-
 @register(
     "q_hll_merge_rollup",
     oracle=f"""
@@ -458,11 +444,8 @@ WITH nregs AS (
   SELECT c_nationkey, register, max(rho) AS max_rho
   FROM (
     SELECT c_nationkey,
-           CAST(CAST(('0x' || substr(h, 1, 2)) AS BIGINT) AS INT) AS register,
-           CAST(CASE WHEN CAST(('0x' || substr(h, 3, 8)) AS BIGINT) = 0 THEN 33
-                     ELSE 33 - length(bin(CAST(('0x' || substr(h, 3, 8)) AS BIGINT)))
-                END AS INT) AS rho
-    FROM (SELECT c_nationkey, {_HLL_CH} AS h FROM customer)
+           {SK.hll_register_rho_sql('h')}
+    FROM (SELECT c_nationkey, {SK.hll_hash_sql('c_custkey')} AS h FROM customer)
   )
   GROUP BY 1, 2
 ),
@@ -474,9 +457,7 @@ rregs AS (
 est AS (
   SELECT n_regionkey,
          CAST(count(*) AS BIGINT) AS filled,
-         round(CAST({SK.ALPHA_256!r} AS DOUBLE) * 65536.0 /
-               (sum(1.0 / CAST(CAST(1 AS BIGINT) << max_rho AS DOUBLE))
-                + (256 - count(*)) * 1.0), 6) AS hll_estimate
+         {SK.hll_estimate_sql('max_rho')} AS hll_estimate
   FROM rregs GROUP BY 1
 ),
 exact AS (
@@ -546,11 +527,10 @@ def q_hll_merge_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_bloom_join",
-    oracle="""
+    oracle=f"""
 SELECT o.o_orderpriority,
        count(*) AS n_items,
-       CAST(sum(CAST(floor(l.l_extendedprice * (1 - l.l_discount) * 100
-                           + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents
+       CAST(sum({cents_sql('l.l_extendedprice * (1 - l.l_discount)')}) AS BIGINT) AS revenue_cents
 FROM lineitem l
 JOIN orders o ON l.l_orderkey = o.o_orderkey
 WHERE o.o_totalprice > 490000
@@ -609,8 +589,7 @@ JCARD_MOD = 64  # sample keys whose salted md5 bucket ≡ 0 (mod this)
     oracle=f"""
 WITH per_key AS (
   SELECT l_partkey, CAST(count(*) AS BIGINT) AS c,
-         CAST(('0x' || substr(md5('jcard|' || CAST(l_partkey AS VARCHAR)),
-                              1, 8)) AS BIGINT) % {JCARD_MOD} = 0 AS sampled
+         {md5_bucket_sql('CAST(l_partkey AS VARCHAR)', salt='jcard|')} % {JCARD_MOD} = 0 AS sampled
   FROM lineitem GROUP BY 1
 ),
 tot AS (
@@ -692,42 +671,34 @@ RB_BUCKETS = 64    # fingerprint granularity: repair ships whole buckets
 RB_DRIFT = 128     # 1/RB_DRIFT of replica B's rows carry a drifted balance
 RB_DROP = 131      # 1/RB_DROP of replica B's rows are missing entirely
 
-_RB_B = (
-    "CAST(('0x' || substr(md5('rb|' || CAST(c_custkey AS VARCHAR)), 1, 8))"
-    " AS BIGINT) % 64"
-)
-_RB_ROWHASH = (
-    "CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR) || '|' ||"
-    " CAST({bal} AS VARCHAR)), 1, 8)) AS BIGINT)"
-)
+_RB_B = f"{md5_bucket_sql('CAST(c_custkey AS VARCHAR)', salt='rb|')} % {RB_BUCKETS}"
+_RB_ROWHASH = md5_bucket_sql("CAST(c_custkey AS VARCHAR) || '|' || CAST(bal AS VARCHAR)")
 
 
 @register(
     "q_table_repair",
     oracle=f"""
 WITH a AS (
-  SELECT c_custkey, CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bal
+  SELECT c_custkey, {cents_sql('c_acctbal')} AS bal
   FROM customer
 ),
 b AS (  -- the drifted replica: some rows corrupted, some missing
   SELECT c_custkey,
-         CASE WHEN CAST(('0x' || substr(md5('drift|' ||
-                    CAST(c_custkey AS VARCHAR)), 1, 8)) AS BIGINT)
+         CASE WHEN {md5_bucket_sql('CAST(c_custkey AS VARCHAR)', salt='drift|')}
                    % {RB_DRIFT} = 0
               THEN bal + 1 ELSE bal END AS bal
   FROM a
-  WHERE CAST(('0x' || substr(md5('drop|' || CAST(c_custkey AS VARCHAR)),
-              1, 8)) AS BIGINT) % {RB_DROP} <> 0
+  WHERE {md5_bucket_sql('CAST(c_custkey AS VARCHAR)', salt='drop|')} % {RB_DROP} <> 0
 ),
 fa AS (
   SELECT {_RB_B} AS bucket, CAST(count(*) AS BIGINT) AS n_a,
-         CAST(coalesce(bit_xor({_RB_ROWHASH.format(bal="bal")}), 0)
+         CAST(coalesce(bit_xor({_RB_ROWHASH}), 0)
               AS BIGINT) AS h_a
   FROM a GROUP BY 1
 ),
 fb AS (
   SELECT {_RB_B} AS bucket, CAST(count(*) AS BIGINT) AS n_b,
-         CAST(coalesce(bit_xor({_RB_ROWHASH.format(bal="bal")}), 0)
+         CAST(coalesce(bit_xor({_RB_ROWHASH}), 0)
               AS BIGINT) AS h_b
   FROM b GROUP BY 1
 )
@@ -901,11 +872,8 @@ seg_regs AS (
   SELECT o_orderpriority, register, max(rho) AS max_rho
   FROM (
     SELECT o_orderpriority,
-           CAST(CAST(('0x' || substr(h, 1, 2)) AS BIGINT) AS INT) AS register,
-           CAST(CASE WHEN CAST(('0x' || substr(h, 3, 8)) AS BIGINT) = 0 THEN 33
-                     ELSE 33 - length(bin(CAST(('0x' || substr(h, 3, 8)) AS BIGINT)))
-                END AS INT) AS rho
-    FROM (SELECT o_orderpriority, {_HLL_H} AS h FROM orders
+           {SK.hll_register_rho_sql('h')}
+    FROM (SELECT o_orderpriority, {SK.hll_hash_sql('o_custkey')} AS h FROM orders
           WHERE o_orderpriority IN ('{HLL_SEG_A}', '{HLL_SEG_B}'))
   )
   GROUP BY 1, 2
@@ -919,15 +887,11 @@ seg_regs AS (
 WITH {_HLL_SEGS},
 est AS (
   SELECT o_orderpriority,
-         round(CAST({SK.ALPHA_256!r} AS DOUBLE) * 65536.0 /
-               (sum(1.0 / CAST(CAST(1 AS BIGINT) << max_rho AS DOUBLE))
-                + (256 - count(*)) * 1.0), 6) AS e
+         {SK.hll_estimate_sql('max_rho')} AS e
   FROM seg_regs GROUP BY 1
 ),
 u AS (
-  SELECT round(CAST({SK.ALPHA_256!r} AS DOUBLE) * 65536.0 /
-               (sum(1.0 / CAST(CAST(1 AS BIGINT) << mr AS DOUBLE))
-                + (256 - count(*)) * 1.0), 6) AS e_union
+  SELECT {SK.hll_estimate_sql('mr')} AS e_union
   FROM (SELECT register, max(max_rho) AS mr FROM seg_regs GROUP BY 1)
 ),
 wide AS (

@@ -22,7 +22,8 @@ from pyspark.sql import functions as F
 
 from .. import io
 from .. import store as ST
-from ..functions import cents
+from ..functions import cents, cents_sql, md5_bucket_sql
+from ..operators import sketch as SK
 from ..registry import register
 from ..streaming import pipeline as SP
 from .relational import CDC_MERGE_ORACLE as _CDC_ORACLE
@@ -137,10 +138,10 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stream_stateful_totals",
-    oracle="""
+    oracle=f"""
 SELECT user_id,
        count(*) AS n_events,
-       CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS total_cents
+       CAST(sum({cents_sql('value')}) AS BIGINT) AS total_cents
 FROM events
 GROUP BY user_id
 """,
@@ -176,10 +177,10 @@ def q_stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stream_dedup",
-    oracle="""
+    oracle=f"""
 SELECT event_type,
        count(*) AS n_events,
-       CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS total_cents
+       CAST(sum({cents_sql('value')}) AS BIGINT) AS total_cents
 FROM events
 GROUP BY event_type
 """,
@@ -207,10 +208,10 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stream_dedup_watermarked",
-    oracle="""
+    oracle=f"""
 SELECT event_type,
        count(*) AS n_events,
-       CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS total_cents
+       CAST(sum({cents_sql('value')}) AS BIGINT) AS total_cents
 FROM events
 GROUP BY event_type
 """,
@@ -249,7 +250,7 @@ WITH chunks AS (
 SELECT doc_id,
        count(*) AS n_chunks,
        CAST(sum(length(chunk_text)) AS BIGINT) AS total_chars,
-       CAST(sum(CAST(('0x' || substr(md5(chunk_text), 1, 8)) AS BIGINT)) AS BIGINT)
+       CAST(sum({md5_bucket_sql('chunk_text')}) AS BIGINT)
          AS checksum
 FROM chunks
 GROUP BY doc_id
@@ -268,12 +269,12 @@ def q_stream_doc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stream_join",
-    oracle="""
+    oracle=f"""
 WITH e AS (
   SELECT user_id, event_type, epoch_us(ts) AS us, value FROM events
 )
 SELECT s.user_id, s.us AS signup_us, p.us AS purchase_us,
-       CAST(floor(p.value * 100 + 0.5) AS BIGINT) AS purchase_cents
+       {cents_sql('p.value')} AS purchase_cents
 FROM e s JOIN e p ON s.user_id = p.user_id
 WHERE s.event_type = 'signup' AND p.event_type = 'purchase'
   AND p.us >= s.us AND p.us < s.us + 86400000000
@@ -504,9 +505,6 @@ def q_snapshot_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- streaming mergeable-sketch maintenance (HLL over a stream) -------------
 
-_SHLL_H = "md5('hll|' || CAST(user_id AS VARCHAR))"
-from ..operators.sketch import ALPHA_256 as _ALPHA_256  # noqa: E402
-
 
 @register(
     "q_stream_hll",
@@ -515,20 +513,15 @@ WITH regs AS (
   SELECT event_type, register, max(rho) AS max_rho
   FROM (
     SELECT event_type,
-           CAST(CAST(('0x' || substr(h, 1, 2)) AS BIGINT) AS INT) AS register,
-           CAST(CASE WHEN CAST(('0x' || substr(h, 3, 8)) AS BIGINT) = 0 THEN 33
-                     ELSE 33 - length(bin(CAST(('0x' || substr(h, 3, 8)) AS BIGINT)))
-                END AS INT) AS rho
-    FROM (SELECT event_type, {_SHLL_H} AS h FROM events)
+           {SK.hll_register_rho_sql('h')}
+    FROM (SELECT event_type, {SK.hll_hash_sql('user_id')} AS h FROM events)
   )
   GROUP BY 1, 2
 ),
 est AS (
   SELECT event_type,
          CAST(count(*) AS BIGINT) AS filled,
-         round(CAST({_ALPHA_256!r} AS DOUBLE) * 65536.0 /
-               (sum(1.0 / CAST(CAST(1 AS BIGINT) << max_rho AS DOUBLE))
-                + (256 - count(*)) * 1.0), 6) AS hll_estimate
+         {SK.hll_estimate_sql('max_rho')} AS hll_estimate
   FROM regs GROUP BY 1
 ),
 exact AS (
@@ -556,7 +549,6 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained state's raw estimate is bit-equal to the BATCH sketch over
     the whole table (merge associativity), which is what the shared
     oracle construction checks, alongside the exact per-type distinct."""
-    from ..operators import sketch as SK
 
     root = ST.corpus_path("spark_graft_stream_hll_v1", sf_dir, "events")
     n_parts = 4
@@ -642,10 +634,10 @@ def _delta_join_fixture(spark: SparkSession, sf_dir: str) -> str:
 
 @register(
     "q_stream_delta_join",
-    oracle="""
+    oracle=f"""
 SELECT c.c_nationkey,
        CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum(CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
+       CAST(sum({cents_sql('o.o_totalprice')}) AS BIGINT)
          AS revenue_cents
 FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
 GROUP BY 1
@@ -750,12 +742,12 @@ def q_stream_delta_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stream_outer_join",
-    oracle="""
+    oracle=f"""
 WITH e AS (
   SELECT user_id, event_type, epoch_us(ts) AS us, value FROM events
 )
 SELECT s.user_id, s.us AS signup_us, p.us AS purchase_us,
-       CAST(floor(p.value * 100 + 0.5) AS BIGINT) AS purchase_cents
+       {cents_sql('p.value')} AS purchase_cents
 FROM (SELECT * FROM e WHERE event_type = 'signup') s
 LEFT JOIN (SELECT * FROM e WHERE event_type = 'purchase') p
   ON p.user_id = s.user_id
@@ -985,17 +977,17 @@ def q_stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stream_profile_lookup",
-    oracle="""
+    oracle=f"""
 WITH prof AS (
   SELECT user_id,
          count(*) AS hist_events,
-         sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS hist_cents
+         sum({cents_sql('value')}) AS hist_cents
   FROM events
   GROUP BY 1
 )
 SELECT e.event_type,
        CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(floor(e.value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+       CAST(sum({cents_sql('e.value')}) AS BIGINT)
          AS live_cents,
        CAST(sum(p.hist_events) AS BIGINT) AS hist_events_touched,
        CAST(sum(p.hist_cents) AS BIGINT) AS hist_cents_touched
@@ -1038,10 +1030,10 @@ def q_stream_profile_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_profile_maintain",
-    oracle="""
+    oracle=f"""
 SELECT user_id,
        CAST(count(*) AS BIGINT) AS hist_events,
-       CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+       CAST(sum({cents_sql('value')}) AS BIGINT)
          AS hist_cents
 FROM events
 GROUP BY 1
@@ -1071,6 +1063,47 @@ def q_profile_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from .clustering import PQ_MQ_ORACLE as _PQ_MQ_ORACLE  # noqa: E402
+
+
+def ann_probes(emb: DataFrame) -> DataFrame:
+    """q_stream_ann_lookup's probe cohort, quantized: (vec_id, qv) of the
+    embeddings rows `emb` (a stream or a batch) below NQ_PQ."""
+    from ..operators import kmeans as KM
+    from .clustering import NQ_PQ
+
+    return emb.filter(F.col("vec_id") < NQ_PQ).select(
+        "vec_id", KM.quantize("embedding").alias("qv")
+    )
+
+
+def ann_lookup_plan(spark: SparkSession, sf_dir: str):
+    """q_stream_ann_lookup's per-trigger plan: a function from one batch
+    of ann_probes rows to its top-k against the published ANN store.
+
+    The batch-INDEPENDENT half is built here, once, outside foreachBatch
+    (per-trigger cost was dominated by re-running this fixed machinery
+    every micro-batch): the M codebooks pre-merge into ONE broadcastable
+    table so probe scoring is a single equi-join, not M crossJoin
+    branches. Serving folds each probe's lookup entries into one MAP row
+    and computes the ADC sum row-locally over the un-melted (already
+    persisted) codes table (operators/pq.adc_topk_multi_maps), so a
+    trigger touches |codes| rows instead of |codes|·M join outputs and
+    skips the per-trigger hash aggregate entirely.
+    tools/explain_dump.py dumps this plan over the whole cohort as one
+    batch."""
+    from ..operators import pq as PQ
+    from .clustering import DIM, M_SUB, PQ_TOPK, _literal_codebooks, _pq_index
+
+    cb_rows, codes, _, _ = _pq_index(spark, sf_dir)
+    cb_table = PQ.codebook_table(_literal_codebooks(spark, cb_rows))
+
+    def plan(batch: DataFrame) -> DataFrame:
+        tables = PQ.probe_tables_flat(batch, cb_table, m=M_SUB, dim=DIM)
+        return PQ.adc_topk_multi_maps(
+            codes, PQ.probe_lookup_maps(tables), m=M_SUB, k=PQ_TOPK
+        )
+
+    return plan
 
 
 @register("q_stream_ann_lookup", oracle=_PQ_MQ_ORACLE)
@@ -1105,36 +1138,8 @@ def q_stream_ann_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     store.gc_runs on the way in."""
     import shutil
 
-    from ..operators import kmeans as KM
-    from ..operators import pq as PQ
-    from .clustering import (
-        DIM,
-        M_SUB,
-        NQ_PQ,
-        PQ_TOPK,
-        _literal_codebooks,
-        _pq_index,
-    )
-
-    cb_rows, codes, _, _ = _pq_index(spark, sf_dir)
-    cbs = _literal_codebooks(spark, cb_rows)
-    # the batch-INDEPENDENT half of the per-trigger ADC plan, built
-    # once outside foreachBatch (r11 verdict #6 — per-trigger cost was
-    # dominated by re-running this fixed machinery every micro-batch):
-    # the M codebooks pre-merge into ONE broadcastable table so probe
-    # scoring is a single equi-join, not M crossJoin branches. r13:
-    # the corpus-sized codes MELT substrate is gone — serving now
-    # folds each probe's lookup entries into one MAP row and computes
-    # the ADC sum row-locally over the un-melted (already persisted)
-    # codes table (operators/pq.adc_topk_multi_maps), so a trigger
-    # touches |codes| rows instead of |codes|·M join outputs and skips
-    # the per-trigger hash aggregate entirely.
-    cb_table = PQ.codebook_table(cbs)
-    probes = (
-        SP.read_embeddings_stream_split(spark, sf_dir, parts=4)
-        .filter(F.col("vec_id") < NQ_PQ)
-        .select("vec_id", KM.quantize("embedding").alias("qv"))
-    )
+    plan = ann_lookup_plan(spark, sf_dir)
+    probes = ann_probes(SP.read_embeddings_stream_split(spark, sf_dir, parts=4))
     app = spark.sparkContext.applicationId
     out = ST.run_scoped_dir(f"annserve_{app}")
     ckpt = ST.run_scoped_dir(f"annserve_{app}_ckpt")
@@ -1145,13 +1150,9 @@ def q_stream_ann_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     def serve(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        tables = PQ.probe_tables_flat(batch, cb_table, m=M_SUB, dim=DIM)
-        res = PQ.adc_topk_multi_maps(
-            codes, PQ.probe_lookup_maps(tables), m=M_SUB, k=PQ_TOPK
-        )
         # ≤ |batch probes|·k rows: one sink file per trigger, not one
         # per shuffle partition
-        res.coalesce(1).write.mode("append").parquet(out)
+        plan(batch).coalesce(1).write.mode("append").parquet(out)
 
     _drain_foreach(probes, serve, ckpt)
     return spark.read.parquet(out)

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from .. import io
 from .. import store as ST
-from ..functions import md5_bucket
+from ..functions import md5_bucket, md5_bucket_sql
 from ..functions import text as TX
 from ..registry import register
 from ..substrates import per_call
@@ -282,7 +282,7 @@ def q_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- dataset splitting / sampling (training-data pipeline staples) -----------
 
-SPLIT_BUCKET = "CAST(('0x' || substr(md5('split|' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100"
+SPLIT_BUCKET = f"{md5_bucket_sql('CAST(doc_id AS VARCHAR)', salt='split|')} % 100"
 
 
 @register(
@@ -334,7 +334,7 @@ WITH rates AS (
 sampled AS (
   SELECT d.doc_id, d.source
   FROM documents d JOIN rates r ON r.source = d.source
-  WHERE CAST(('0x' || substr(md5('sample|' || CAST(d.doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 1000000
+  WHERE {md5_bucket_sql('CAST(d.doc_id AS VARCHAR)', salt='sample|')} % 1000000
         < CAST(r.rate * 1000000 AS BIGINT)
 )
 SELECT source, count(*) AS n_sampled

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import io
+from ..functions import md5_bucket_sql
 from ..functions import text as TX
 from ..operators.caption_pairing import pair_captions_window
 from ..operators.chunker import fixed_chunks, recursive_chunks
@@ -381,7 +382,7 @@ tf AS (
          list_transform(generate_series(0, {EMBED_DIM - 1}),
            b -> CAST(len(list_filter(
                   list_transform(tok, t ->
-                    CAST(('0x' || substr(md5(t), 1, 8)) AS BIGINT) % {EMBED_DIM}),
+                    {md5_bucket_sql('t')} % {EMBED_DIM}),
                   x -> x = b)) AS DOUBLE)) AS v
   FROM toks
 ),

@@ -21,29 +21,11 @@ from pyspark.sql import functions as F
 
 from .. import io
 from .. import store as ST
-from ..functions import bind
+from ..functions import bind, md5_bucket_sql
 from ..functions import vector as V
 from ..operators import similarity
 from ..registry import register
 from ..substrates import cached_substrates, per_call
-
-# DuckDB fragment: dot(a, b) with the same DOUBLE left-to-right fold Spark
-# uses in functions.vector.dot (zip_with + aggregate from 0.0).
-_DOT = (
-    "list_reduce(list_transform(generate_series(1, len({a})), "
-    "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (x, y) -> x + y)"
-)
-
-
-def _dot(a: str, b: str) -> str:
-    return _DOT.format(a=a, b=b)
-
-
-def _cosine(a: str, b: str) -> str:
-    return (
-        f"{_dot(a, b)} / (sqrt({_dot(a, a)}) * sqrt({_dot(b, b)}))"
-    )
-
 
 QUERY_VEC_ID = 0
 TOP_K = 5
@@ -62,7 +44,7 @@ def _query_row(emb: DataFrame) -> DataFrame:
 WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID}),
 scored AS (
   SELECT e.vec_id, e.label,
-         round({_cosine('e.embedding', 'q.qv')}, 6) AS score
+         round({V.cosine_duckdb('e.embedding', 'q.qv')}, 6) AS score
   FROM embeddings e CROSS JOIN q
 )
 SELECT vec_id, label, score
@@ -99,7 +81,7 @@ WITH queries AS (
 ),
 pairs AS (
   SELECT q.query_id, e.vec_id AS item_id,
-         round({_cosine('e.embedding', 'q.qv')}, 6) AS score
+         round({V.cosine_duckdb('e.embedding', 'q.qv')}, 6) AS score
   FROM embeddings e CROSS JOIN queries q
   WHERE e.vec_id <> q.query_id
 ),
@@ -140,12 +122,12 @@ cent AS (
 best AS (
   SELECT c.label
   FROM cent c CROSS JOIN q
-  ORDER BY {_cosine('c.centroid', 'q.qv')} DESC, c.label
+  ORDER BY {V.cosine_duckdb('c.centroid', 'q.qv')} DESC, c.label
   LIMIT 1
 ),
 scored AS (
   SELECT e.vec_id, e.label,
-         round({_cosine('e.embedding', 'q.qv')}, 6) AS score
+         round({V.cosine_duckdb('e.embedding', 'q.qv')}, 6) AS score
   FROM embeddings e
   JOIN best b ON e.label = b.label
   CROSS JOIN q
@@ -265,7 +247,7 @@ cands AS (
 ),
 scored AS (
   SELECT c.query_id, c.item_id,
-         round({_cosine('ie.embedding', 'qe.embedding')}, 6) AS score
+         round({V.cosine_duckdb('ie.embedding', 'qe.embedding')}, 6) AS score
   FROM cands c
   JOIN embeddings ie ON ie.vec_id = c.item_id
   JOIN embeddings qe ON qe.vec_id = c.query_id
@@ -389,7 +371,7 @@ tf AS (
   SELECT line, t,
          list_transform(generate_series(0, 63),
            g -> CAST(len(list_filter(
-                  list_transform(t, x -> CAST(('0x' || substr(md5(x), 1, 8)) AS BIGINT) % 64),
+                  list_transform(t, x -> {md5_bucket_sql('x')} % 64),
                   b -> b = g)) AS DOUBLE)) AS tf
   FROM tok
 ),
@@ -667,7 +649,7 @@ sel{r} AS (
     FROM (
       SELECT c.probe_id AS probe_id, c.item_id AS item_id,
              c.rel_ppm AS rel_ppm, c.vec AS vec,
-             max({_PPM_COS.format(c=_cosine('c.vec', 's.vec'))}) AS maxsim_ppm
+             max({_PPM_COS.format(c=V.cosine_duckdb('c.vec', 's.vec'))}) AS maxsim_ppm
       FROM cand c JOIN {prev} s ON c.probe_id = s.probe_id
       WHERE NOT EXISTS (SELECT 1 FROM {prev} x
                         WHERE x.probe_id = c.probe_id
@@ -688,9 +670,9 @@ WITH probes AS (
 cand AS (
   SELECT probe_id, item_id, rel_ppm, vec FROM (
     SELECT p.probe_id, e.vec_id AS item_id, e.embedding AS vec,
-           {_PPM_COS.format(c=_cosine('e.embedding', 'p.pv'))} AS rel_ppm,
+           {_PPM_COS.format(c=V.cosine_duckdb('e.embedding', 'p.pv'))} AS rel_ppm,
            row_number() OVER (PARTITION BY p.probe_id
-             ORDER BY {_PPM_COS.format(c=_cosine('e.embedding', 'p.pv'))} DESC,
+             ORDER BY {_PPM_COS.format(c=V.cosine_duckdb('e.embedding', 'p.pv'))} DESC,
                       e.vec_id) AS rn
     FROM embeddings e CROSS JOIN probes p
     WHERE e.vec_id <> p.probe_id
@@ -818,7 +800,7 @@ topk{np_} AS (
   SELECT probe_id, item_id FROM (
     SELECT p.probe_id, e.vec_id AS item_id,
            row_number() OVER (PARTITION BY p.probe_id
-             ORDER BY round({_cosine('e.embedding', 'p.pv')}, 6) DESC,
+             ORDER BY round({V.cosine_duckdb('e.embedding', 'p.pv')}, 6) DESC,
                       e.vec_id) AS rk
     FROM embeddings e
     JOIN (SELECT probe_id, label FROM crank WHERE rk <= {np_}) pl
@@ -845,7 +827,7 @@ WITH probes AS (
 crank AS (
   SELECT p.probe_id, c.label,
          row_number() OVER (PARTITION BY p.probe_id
-           ORDER BY round({_cosine('c.centroid', 'p.pv')}, 6) DESC,
+           ORDER BY round({V.cosine_duckdb('c.centroid', 'p.pv')}, 6) DESC,
                     c.label) AS rk
   FROM cent c CROSS JOIN probes p
 ),

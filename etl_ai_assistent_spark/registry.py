@@ -66,46 +66,10 @@ _loaded = False
 DRIVER_FIRST: tuple[str, ...] = (
     # plan/semantics changed this round
     "q_bm25_retrieval",  # last r13
-    "q_rag_fusion",  # last r13
-    "q_hard_negatives",  # last r13
-    "q_pq_adc_topk",  # last r10
-    "q_ivfpq_topk",  # last r10
-    "q_ivfpq_recall",  # last r10
-    "q_ivfpq_residual_topk",  # last r10
-    "q_ivfpq_residual_recall",  # last r10
-    "q_ann_grown_topk",  # last r13
-    "q_pagerank_nations",  # last r14
-    "q_label_propagation",  # last r14
-    "q_vectorize_lines",  # last r14
-    "q_hash_embed_profile",  # last r9
-    "q_ann_recall",  # last r10
-    "q_bigram_surprisal",  # last r10
-    "q_bpe_merge_apply",  # last r13
-    "q_containment_join",  # last r11
-    "q_cross_doc_spans",  # last r11
-    "q_curation_pipeline",  # last r14
-    "q_doc_surprisal",  # last r14
-    "q_embedding_near_dup",  # last r11
-    "q_grouped_median",  # last r11
-    "q_heaps_fit",  # last r12
-    "q_histogram_quantiles",  # last r13
-    "q_hll_intersection",  # last r12
-    "q_interval_join",  # last r12
-    "q_jaccard_prefix_join",  # last r12
-    "q_linkage_score",  # last r12
-    "q_minhash_near_dup",  # last r14
-    "q_minhash_recall",  # last r13
-    "q_order_waiters",  # last r12
-    "q_semdedup",  # last r11
-    "q_small_qty_revenue",  # last r13
-    "q_split_drift",  # last r13
-    "q_srp_topk",  # last r13
-    "q_token_pmi",  # last r11
-    "q_two_pass_median",  # last r13
-    "q_int8_quantize",  # last r12
     # stalest driver verdicts first
     "q_fuzzy_match_names",  # last r9
     "q_grouping_sets",  # last r9
+    "q_hash_embed_profile",  # last r9
     "q_hash_split",  # last r9
     "q_nation_intersect",  # last r9
     "q_ngram_jaccard_pairs",  # last r9
@@ -116,6 +80,42 @@ DRIVER_FIRST: tuple[str, ...] = (
     "q_priority_stats",  # last r9
     "q_sanitized_asset_names",  # last r9
     "q_schema_evolution",  # last r9
+    "q_simhash_near_dup",  # last r9
+    "q_simhash_signatures",  # last r9
+    "q_sink_roundtrip",  # last r9
+    "q_skew_stats",  # last r9
+    "q_stream_dedup_watermarked",  # last r9
+    "q_stream_join",  # last r9
+    "q_table_stats",  # last r9
+    "q_top_orders_per_customer",  # last r9
+    "q_unpivot_part_metrics",  # last r9
+    "q_ann_recall",  # last r10
+    "q_asset_catalog",  # last r10
+    "q_bigram_surprisal",  # last r10
+    "q_bloom_join",  # last r10
+    "q_byte_features",  # last r10
+    "q_cdc_mor",  # last r10
+    "q_chunk_recursive",  # last r10
+    "q_client_embed_profile",  # last r10
+    "q_compaction_stats",  # last r10
+    "q_countmin_heavy",  # last r10
+    "q_ivfpq_recall",  # last r10
+    "q_ivfpq_residual_recall",  # last r10
+    "q_ivfpq_residual_topk",  # last r10
+    "q_ivfpq_topk",  # last r10
+    "q_posting_index_build",  # last r10
+    "q_pq_adc_topk",  # last r10
+    "q_rag_judged",  # last r10
+    "q_rfm_segments",  # last r10
+    "q_source_sample",  # last r10
+    "q_stream_profile_lookup",  # last r10
+    "q_synthetic_source",  # last r10
+    "q_table_fingerprint",  # last r10
+    "q_testset_generate",  # last r10
+    "q_title_text",  # last r10
+    "q_trigram_index_build",  # last r10
+    "q_trigram_multi_search",  # last r10
+    "q_trigram_search",  # last r10
 )
 # --- END DRIVER_FIRST ---
 

@@ -31,31 +31,14 @@ from etl_ai_assistent_spark.io import DEFAULT_SF_DIR as SF_DIR  # noqa: E402
 
 
 def _stream_ann_lookup_surrogate(spark, sf_dir):
-    """The per-trigger ADC plan of q_stream_ann_lookup: the probe cohort
-    as one batch through the same serve-path operators the foreachBatch
-    closure calls. The streaming wrapper itself only adds the sink."""
-    from pyspark.sql import functions as F
-
-    from etl_ai_assistent_spark.operators import kmeans as KM
-    from etl_ai_assistent_spark.operators import pq as PQ
+    """The per-trigger ADC plan of q_stream_ann_lookup, over the probe
+    cohort as one batch: the same function its foreachBatch closure
+    calls. The streaming wrapper itself only adds the sink."""
     from etl_ai_assistent_spark import io as eio
-    from etl_ai_assistent_spark.queries.clustering import (
-        DIM, M_SUB, NQ_PQ, PQ_TOPK, _literal_codebooks, _pq_index,
-    )
+    from etl_ai_assistent_spark.queries.streaming import ann_lookup_plan, ann_probes
 
-    cb_rows, codes, _, _ = _pq_index(spark, sf_dir)
-    cbs = _literal_codebooks(spark, cb_rows)
-    cb_table = PQ.codebook_table(cbs)
-    batch = (
-        eio.load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < NQ_PQ)
-        .select("vec_id", KM.quantize("embedding").alias("qv"))
-    )
-    tables = PQ.probe_tables_flat(batch, cb_table, m=M_SUB, dim=DIM)
-    # mirror queries/streaming.py serve(): the r13 lookup-map form
-    return PQ.adc_topk_multi_maps(
-        codes, PQ.probe_lookup_maps(tables), m=M_SUB, k=PQ_TOPK
-    )
+    plan = ann_lookup_plan(spark, sf_dir)
+    return plan(ann_probes(eio.load_table(spark, sf_dir, "embeddings")))
 
 
 _SURROGATES = {
